@@ -4,6 +4,8 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
@@ -14,24 +16,35 @@ import org.apache.spark.sql.SparkSession
   *  - stdout gets exactly one line — `{"metric":"total","value":…,
   *    "unit":"sec","queries":{name: min sec},"cpu":{name: executor
   *    cpu sec},"cpu_total_sec":…,"sf":…,"runs":N}` plus
-  *    the composed/incremental scalars (`composed_build_sec`,
-  *    `composed_serve_sec`, `ingest_boot_sec`, `ingest_delivery_sec`,
-  *    `ingest_recal_sec`, `ingest_takedown_sec`)
+  *    `composed_build_sec` (the six warehouse family builds),
+  *    the incremental scalars (`ingest_boot_sec`,
+  *    `ingest_delivery_sec`, `ingest_recal_sec`,
+  *    `ingest_takedown_sec`), `failed_n` + `failed` (the names of
+  *    every query, build leg or ingest leg that threw)
   *    and, when the budget elides sub-threshold queries from the
   *    dict, `omitted_n` + `min_printed_sec` (no silent caps) — kept
   *    well under 2 KB (the driver captures a bounded tail of the
   *    process output; rounds 1-4 lost their wall-clock numbers because
   *    the old single line carried medians + cpu + gc for 42 queries
   *    and the capture window started mid-telemetry);
-  *  - the full telemetry (per-query medians, executor cpu, GC) goes to
-  *    a FILE — bench_detail.json, path overridable via
-  *    SPARK_GRAFT_BENCH_DETAIL — where no capture window can cut it.
+  *  - the full telemetry (per-query medians, executor cpu, GC, the
+  *    `composed` and `incremental` per-leg seconds, and each failure's
+  *    message under `failed`) goes to a FILE — bench_detail.json, path
+  *    overridable via SPARK_GRAFT_BENCH_DETAIL — where no capture
+  *    window can cut it;
+  *  - the process exits 1, after printing, if anything failed: a
+  *    failure is never a smaller total.
   *
   * Methodology:
   *  - warmup pass at sf0.001 first: JIT-compiles Spark's scan/shuffle/
   *    codegen paths and populates the whole-stage-codegen cache (the
   *    generated class for a plan is data-independent, so the timed runs
   *    measure execution, not Janino compilation);
+  *  - the warehouse families are then built at the bench SF, one timed
+  *    `<family>_build` leg each, through [[ComposedArtifacts]] — the
+  *    same build every consumer entry serves from, so no query's first
+  *    pass carries a build. A durable `SPARK_GRAFT_WAREHOUSE` would
+  *    turn those legs into cache hits, so Bench refuses to run with it;
   *  - the WHOLE suite runs SPARK_GRAFT_BENCH_RUNS (default 3) times,
   *    passes interleaved (pass 1 of every query, then pass 2, ...);
   *    the headline number per query is the MIN across passes — host
@@ -52,7 +65,44 @@ import org.apache.spark.sql.SparkSession
   *  - queries run in name order (stable timings across rounds).
   */
 object Bench {
+  /** One timed leg: its wall seconds, or the message it failed with. */
+  private[graft] final case class Leg(name: String, sec: Either[String, Double])
+
+  /** Times `body` under job group `name` (executor cpu attributes to
+    * the leg); cache teardown is outside the span. Never throws: a
+    * failure is reported on stderr and recorded as `Left(message)`.
+    */
+  private[graft] def timed(spark: SparkSession, name: String)(body: => Unit): Leg = {
+    spark.sparkContext.setJobGroup(name, name)
+    val t0 = System.nanoTime()
+    try { body; Leg(name, Right((System.nanoTime() - t0) / 1e9)) }
+    catch { case NonFatal(e) =>
+      val msg = s"${e.getClass.getName}: ${e.getMessage}"
+      System.err.println(s"[bench] $name failed: $msg")
+      Leg(name, Left(msg))
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sharedState.cacheManager.clearCache()
+    }
+  }
+
+  /** Seconds summed over the legs that succeeded — a failed leg adds
+    * nothing to any total.
+    */
+  private[graft] def seconds(legs: Seq[Leg]): Double =
+    legs.flatMap(_.sec.toOption).sum
+
+  /** Failed legs as (name, first message), in leg order. */
+  private[graft] def failures(legs: Seq[Leg]): Seq[(String, String)] =
+    legs.collect { case Leg(n, Left(m)) => n -> m }.distinctBy(_._1)
+
+  /** The warehouse families, in build order. */
+  private val Families = Seq("pair", "ann", "tok", "decon", "lr", "suffix")
+
   def main(args: Array[String]): Unit = {
+    require(sys.env.get("SPARK_GRAFT_WAREHOUSE").isEmpty,
+      "SPARK_GRAFT_WAREHOUSE is set: a durable warehouse would turn the " +
+        "<family>_build legs into timed cache hits; unset it to bench")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val repeats = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
@@ -153,10 +203,6 @@ object Bench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      // bucketed-table scratch for the composed sg legs — never the
-      // repo working dir
-      .config("spark.sql.warehouse.dir", Files
-        .createTempDirectory("graft-bench-wh").toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -185,470 +231,32 @@ object Bench {
 
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
 
-    // one timed execution under the query's job group; cache teardown
-    // (for queries that persist intermediates, e.g. dedup's shingle
-    // index) is outside the span
-    def run(dir: String, name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double =
-      try {
-        spark.sparkContext.setJobGroup(name, name)
-        val t0 = System.nanoTime()
-        fn(spark, dir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed on $dir: ${e.getMessage}")
-        -1.0
-      } finally {
-        spark.sparkContext.clearJobGroup()
-        spark.sharedState.cacheManager.clearCache()
-      }
+    def noop(df: org.apache.spark.sql.DataFrame): Unit =
+      df.write.format("noop").mode("overwrite").save()
 
     val warmDir = "/root/testdata/sf0.001"
     if (new java.io.File(warmDir).isDirectory && warmDir != sfDir)
-      ordered.foreach { case (n, f) => run(warmDir, n, f) }
-    // pre-resolve the warehouse families at the BENCH SF outside the
-    // timed spans: the once-per-corpus-version builds are priced by
-    // the composed *_build legs, not by whichever consumer entry
-    // happens to run first (round 18 — q230's pass-1 cpu otherwise
-    // carries the whole suffix-family build)
-    try {
-      ComposedArtifacts.pairs(spark, sfDir).count()
-      ComposedArtifacts.cells(spark, sfDir).count()
-      ComposedArtifacts.saLcp(spark, sfDir).count()
-      ComposedArtifacts.lrWeights(spark, sfDir).count()
-      ComposedArtifacts.shingles8(spark, sfDir).count()
-      ComposedArtifacts.bpeMerges(spark, sfDir).count()
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] warehouse pre-resolve failed: ${e.getMessage}")
-    }
+      ordered.foreach { case (n, f) =>
+        timed(spark, s"$n warmup")(noop(f(spark, warmDir)))
+      }
     // warmup work must not count toward the timed-pass cpu/GC totals
     cpuNsByQ.clear(); gcMsByQ.clear()
 
-    val samples = collection.mutable.Map.empty[String, List[Double]]
-      .withDefaultValue(Nil)
-    for (_ <- 1 to repeats; (name, fn) <- ordered) {
-      val t = run(sfDir, name, fn)
-      if (t >= 0) samples(name) = t :: samples(name)
+    // the warehouse families at the BENCH SF, each timed through the
+    // build every consumer entry serves from; they run before the
+    // query passes, so no consumer's pass 1 carries a build
+    val composed: Seq[Leg] = Families.map { family =>
+      timed(spark, s"${family}_build") {
+        ComposedArtifacts.receipt(spark, sfDir, family).count()
+      }
     }
 
-    // ---- pair-graph composition mode ----
-    // The dedup family's expensive artifact is the near-dup pair graph
-    // (and the signature/candidate tables behind it). A real pipeline
-    // materializes them ONCE and feeds every consumer (PLANS.md
-    // "pair-graph reuse"); the per-query suite above deliberately
-    // charges each query its full standalone cost. This section proves
-    // the composition claim with numbers: build the artifacts once
-    // (timed), then run the q51/q72/q75/q89/q98 semantics off the
-    // parquet artifacts via the *From APIs — marginal cost collapses
-    // to pair-proportional work. Reported under "composed" in the
-    // detail file; disable with SPARK_GRAFT_BENCH_COMPOSED=0.
-    // shared by the composed and incremental sections below
-    def timedSection(tag: String)(name: String)(body: => Unit): (String, Double) = {
-      spark.sparkContext.setJobGroup(name, name)
-      val t0 = System.nanoTime()
-      val sec =
-        try { body; (System.nanoTime() - t0) / 1e9 }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $tag $name failed: ${e.getMessage}")
-          -1.0
-        } finally {
-          spark.sparkContext.clearJobGroup()
-          spark.sharedState.cacheManager.clearCache()
-        }
-      name -> sec
-    }
-    // bench artifacts are scratch: delete so repeated local runs
-    // don't accumulate temp dirs' worth of parquet
-    def rmTree(f: java.io.File): Unit = FsUtil.rmTree(f)
-    // Run independent artifact chains of ONE timed leg concurrently
-    // (guide §2.6 "overlap independent jobs" — the IngestDemo
-    // .inParallel discipline applied to the composed build legs): the
-    // pool is created inside the timed body so its threads inherit
-    // the leg's job group (Spark local properties are
-    // InheritableThreadLocal) and executor cpu keeps attributing to
-    // the leg. Each chain is internally sequential and deterministic;
-    // only the interleaving moves, so every artifact is byte-wise the
-    // work it was sequentially.
-    def overlap(work: (() => Unit)*): Unit = {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(work.size)
-      try {
-        val futs = work.map { w =>
-          pool.submit(new java.util.concurrent.Callable[Unit] {
-            def call(): Unit = w()
-          })
-        }
-        futs.foreach { f =>
-          try f.get()
-          catch { case e: java.util.concurrent.ExecutionException =>
-            throw e.getCause
-          }
-        }
-      } finally pool.shutdown()
-    }
-    val composed: Seq[(String, Double)] =
-      if (sys.env.getOrElse("SPARK_GRAFT_BENCH_COMPOSED", "1") == "0") Nil
-      else {
-        import graft.operators.Dedup
-        import org.apache.spark.sql.functions.col
-        val tmp = Files.createTempDirectory("graft-bench-composed")
-        def timedAt(name: String)(body: => Unit): (String, Double) = {
-          timedSection("composed")(name)(body)
-        }
-        val tables = graft.sources.Tables(spark, sfDir)
-        val docs = tables.documents
-        // three artifacts: the signature store (k BIGINTs per doc),
-        // the SCORED candidate table (exact-Jaccard detail per LSH
-        // candidate), and the distinct 5-gram SHINGLE index. The
-        // near-dup pair graph is a filter view of the scored table,
-        // so the pair-family consumers — including the q98
-        // calibration — run with zero corpus access; the shingle
-        // index feeds the exact-Jaccard family (q27's semantics)
-        // without re-deriving the corpus-wide explode + distinct.
-        val (sigsP, scoredP, shP) = (s"$tmp/sigs", s"$tmp/scored", s"$tmp/shingles")
-        def rd(p: String) = spark.read.parquet(p)
-        def pairs() = rd(scoredP).filter(col("jaccard") >= 0.7)
-          .select("id1", "id2")
-        def noop(df: org.apache.spark.sql.DataFrame): Unit =
-          df.write.format("noop").mode("overwrite").save()
-        val out = Seq(
-          timedAt("artifacts_build") {
-            val sigs = Dedup.minhashSignatures(docs)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              // rebalance-on-write mirrors the warehouse build shape
-              // (see ComposedArtifacts — guide §6 file sizing); the
-              // signature chain (write + LSH candidates off the
-              // persisted sigs) and the shingle-index write share no
-              // data, so they overlap
-              var cands: org.apache.spark.sql.DataFrame = null
-              overlap(
-                () => {
-                  sigs.hint("rebalance").write.mode("overwrite")
-                    .parquet(sigsP)
-                  cands = Dedup.lshCandidates(sigs).localCheckpoint(true)
-                },
-                () => Dedup.shingles(docs).hint("rebalance")
-                  .write.mode("overwrite").parquet(shP))
-              // the verify leg reads the just-written shingle index
-              // (duplicate-tolerant, so the distinct table is a valid
-              // input) instead of re-exploding the corpus
-              Dedup.jaccardDetailFor(cands, rd(shP))
-                .hint("rebalance")
-                .write.mode("overwrite").parquet(scoredP)
-            } finally sigs.unpersist(false)
-          },
-          timedAt("q27_from_shingles") {
-            noop(Dedup.ngramJaccardFromShingles(rd(shP))) },
-          timedAt("q140_from_shingles") {
-            noop(Dedup.ngramContainmentFromShingles(rd(shP))) },
-          timedAt("containment_pairs_build") {
-            Dedup.ngramContainmentFromShingles(rd(shP))
-              .hint("rebalance")
-              .write.mode("overwrite").parquet(s"$tmp/cont_pairs") },
-          timedAt("q147_from_pairs") {
-            noop(Dedup.sourceContainmentMatrixFromPairs(
-              rd(s"$tmp/cont_pairs"), docs)) },
-          timedAt("q51_from_pairs") {
-            noop(Dedup.componentsOf(pairs())) },
-          timedAt("q72_from_pairs") {
-            noop(Dedup.clusterKeepsFromPairs(pairs(), docs)) },
-          timedAt("q75_from_pairs") {
-            noop(Dedup.sourceOverlapFromPairs(pairs(), docs)) },
-          timedAt("q89_from_pairs") {
-            noop(Dedup.pairDegreeHistogram(pairs())) },
-          timedAt("q128_from_pairs") {
-            noop(Dedup.pairPageRank(pairs())) },
-          timedAt("q133_from_pairs") {
-            noop(Dedup.canonicalByRank(pairs())) },
-          timedAt("q98_from_artifacts") {
-            noop(Dedup.estimatorCalibrationFromScored(rd(scoredP), rd(sigsP))) },
-          // within-cell ANN family "assign once, consume thrice":
-          // q49/q141/q146 share one IVF training + (two-level)
-          // assignment pass standalone; the (vec_id, cell) artifact
-          // collapses each to its bounded within-cell join
-          timedAt("cells_artifact_build") {
-            import graft.operators.Similarity
-            Similarity.cellAssignments(tables.embeddings)
-              .hint("rebalance")
-              .write.mode("overwrite").parquet(s"$tmp/cells")
-          },
-          timedAt("q49_from_cells") {
-            noop(graft.operators.Similarity.semanticDupPairsFromCells(
-              rd(s"$tmp/cells"), tables.embeddings)) },
-          timedAt("q141_from_cells") {
-            noop(graft.operators.Similarity.hardNegativesFromCells(
-              rd(s"$tmp/cells"), tables.embeddings)) },
-          timedAt("q146_from_cells") {
-            noop(graft.operators.Similarity.labelNoiseFromCells(
-              rd(s"$tmp/cells"), tables.embeddings)) },
-          // IVF serve-time index: centroids + flat cells persisted
-          // once, queries pay probe + cell-pruned join only (q34's
-          // standalone retrains per call)
-          timedAt("ivf_index_build") {
-            import graft.operators.Similarity
-            Similarity.ivfCentroidsDf(tables.embeddings)
-              .write.mode("overwrite").parquet(s"$tmp/ivf_centroids")
-            Similarity.cellsFromCentroids(
-              rd(s"$tmp/ivf_centroids"), tables.embeddings)
-              .hint("rebalance")
-              .write.mode("overwrite").parquet(s"$tmp/ivf_cells")
-          },
-          timedAt("q34_from_index") {
-            noop(graft.operators.Similarity.ivfTopKFrom(
-              rd(s"$tmp/ivf_centroids"), rd(s"$tmp/ivf_cells"),
-              tables.embeddings)) },
-          // PQ family "train once, serve many": q117/q118/q119/q122
-          // each retrain the same codebook standalone; a pipeline
-          // persists codebook + codes once per corpus version and
-          // serve-time ADC pays only LUT + one code-table pass
-          timedAt("pq_artifacts_build") {
-            import graft.operators.Similarity
-            val emb = tables.embeddings
-            // codebook table and self-training encode are independent
-            // deterministic chains — overlapped (guide §2.6)
-            overlap(
-              () => Similarity.pqCodebookDf(emb).write.mode("overwrite")
-                .parquet(s"$tmp/pq_codebook"),
-              () => Similarity.pqEncode(emb).write.mode("overwrite")
-                .parquet(s"$tmp/pq_codes"))
-          },
-          timedAt("q118_from_codes") {
-            noop(graft.operators.Similarity.pqAdcFromCodes(
-              rd(s"$tmp/pq_codes"), rd(s"$tmp/pq_codebook"),
-              tables.embeddings)) },
-          // SQ8 family "train once, serve many" (round-18 ANN serve
-          // wave): stats + code table persisted once; q205/q206/q210/
-          // q212's serve paths read them
-          timedAt("sq_artifacts_build") {
-            import graft.operators.Similarity
-            val emb = tables.embeddings
-            Similarity.sqStats(emb).write.mode("overwrite")
-              .parquet(s"$tmp/sq_stats")
-            Similarity.sqEncodeFrom(rd(s"$tmp/sq_stats"), emb)
-              .hint("rebalance")
-              .write.mode("overwrite").parquet(s"$tmp/sq_codes")
-          },
-          // BPE tokenizer "train once, segment/price many" (round-18
-          // tok family): merge table + segmented vocabulary persisted
-          // once per corpus version; q124/q125/q134 serve from them
-          timedAt("tok_model_build") {
-            import graft.operators.Bpe
-            Bpe.bpeTrain(docs).write.mode("overwrite")
-              .parquet(s"$tmp/bpe_merges")
-            val merges = rd(s"$tmp/bpe_merges").orderBy("rank")
-              .collect().map(r => (r.getString(1), r.getString(2))).toSeq
-            Bpe.segmentSymbols(docs, merges)
-              .write.mode("overwrite").parquet(s"$tmp/bpe_vocab")
-          },
-          // logistic-quality family build (prices the warehouse 'lr'
-          // family the q227-q229/q238-q240 entries serve from: two
-          // feature passes + two 32-round trainings)
-          timedAt("lr_model_build") {
-            import graft.operators.Logistic
-            val pos = Seq("src0", "src1", "src2")
-            val neg = Seq("src3", "src4", "src5")
-            // the surface-LR and extended-LR chains (features →
-            // 32-round training) share no data — overlapped so the
-            // second chain's feature scan back-fills the first's
-            // sequential training rounds (guide §2.6)
-            overlap(
-              () => {
-                Logistic.features(docs, pos, neg)
-                  .hint("rebalance")
-                  .write.mode("overwrite").parquet(s"$tmp/lr_feats")
-                Logistic.weightsDfFor(rd(s"$tmp/lr_feats"),
-                    Logistic.FeatureNames)
-                  .write.mode("overwrite").parquet(s"$tmp/lr_weights")
-              },
-              () => {
-                Logistic.featuresExtended(docs, pos, neg)
-                  .hint("rebalance")
-                  .write.mode("overwrite").parquet(s"$tmp/lrx_feats")
-                Logistic.weightsDfFor(rd(s"$tmp/lrx_feats"),
-                    Logistic.FeatureNamesExtended)
-                  .write.mode("overwrite").parquet(s"$tmp/lrx_weights")
-              })
-          },
-          // decontamination family build (prices the warehouse
-          // 'decon' 8-gram shingle index q43/q76/q93/q143 serve from)
-          timedAt("decon_index_build") {
-            Dedup.shingles(docs, 8).write.mode("overwrite")
-              .parquet(s"$tmp/shingles8")
-          },
-          // NB quality classifier "train once, score every delivery":
-          // q156's standalone retrains per call; the persisted LM +
-          // constants score deliveries with zero training-corpus
-          // access (the streaming twin runs the same join at ingest)
-          timedAt("nb_model_build") {
-            import graft.operators.TextAnalysis
-            val (lm, consts) = TextAnalysis.nbModel(docs,
-              posSources = Seq("src0", "src1", "src2"),
-              negSources = Seq("src3", "src4", "src5"))
-            lm.write.mode("overwrite").parquet(s"$tmp/nb_lm")
-            consts.write.mode("overwrite").parquet(s"$tmp/nb_consts")
-          },
-          timedAt("q156_from_model") {
-            noop(graft.operators.TextAnalysis.nbScoreFrom(
-              rd(s"$tmp/nb_lm"), rd(s"$tmp/nb_consts"), docs)) },
-          timedAt("nb_scores_build") {
-            graft.operators.TextAnalysis.nbScoreFrom(
-                rd(s"$tmp/nb_lm"), rd(s"$tmp/nb_consts"), docs)
-              .select(col("doc_id"), col("llr_micro").as("score"))
-              .write.mode("overwrite").parquet(s"$tmp/nb_scores") },
-          // label-store family "maintain, don't rebuild": the
-          // q207/q208/q213/q220 contract entries rebuild pair graph +
-          // closure in-entry for the hash gate; production maintains
-          // a persisted LABEL STORE. The build leg prices the base
-          // closures once; the fold/retract legs price ONE delivery /
-          // ONE takedown of touched-component work off the persisted
-          // store, and the split/keeps consumers read it with zero
-          // closure cost — the measured touched-slice numbers for the
-          // components family
-          timedAt("labels_store_build") {
-            val b = graft.operators.Curation.hashBucket(col("id1"), 10)
-            Dedup.componentsOf(pairs().filter(b =!= 3))
-              .write.mode("overwrite").parquet(s"$tmp/labels_base")
-            Dedup.componentsOf(pairs())
-              .write.mode("overwrite").parquet(s"$tmp/labels_full")
-          },
-          timedAt("q207_fold_from_store") {
-            val b = graft.operators.Curation.hashBucket(col("id1"), 10)
-            noop(Dedup.componentsFold(rd(s"$tmp/labels_base"),
-              pairs().filter(b === 3)))
-          },
-          timedAt("q208_retract_from_store") {
-            val rm = docs.select(col("doc_id")).filter(
-              graft.operators.Curation.hashBucket(col("doc_id"), 7) === 3)
-            val surviving = pairs()
-              .join(rm.withColumnRenamed("doc_id", "id1"), Seq("id1"),
-                "left_anti")
-              .join(rm.withColumnRenamed("doc_id", "id2"), Seq("id2"),
-                "left_anti")
-            noop(Dedup.componentsRetract(rd(s"$tmp/labels_full"), pairs(),
-              surviving, rm))
-          },
-          timedAt("q213_split_from_store") {
-            noop(graft.operators.Curation.clusterAwareSplit(docs,
-              rd(s"$tmp/labels_full")))
-          },
-          timedAt("q220_keeps_from_store") {
-            noop(Dedup.clusterKeepsByScore(rd(s"$tmp/labels_full"),
-              rd(s"$tmp/nb_scores")))
-          },
-          // suffix-array family "build once, read the arrays": the
-          // q230/q231 contract entries rebuild the full SA+LCP
-          // in-entry for the hash gate (~16 s each at sf0.1);
-          // production persists the arrays once per corpus version
-          // (q232's output IS the artifact) and the repeat consumers
-          // pay one filtered pass each
-          timedAt("suffix_arrays_build") {
-            graft.operators.SuffixArray.suffixArrayWithLcp(docs)
-              .hint("rebalance")
-              .write.mode("overwrite").parquet(s"$tmp/sa_lcp")
-          },
-          timedAt("q230_from_arrays") {
-            noop(graft.operators.SuffixArray.repeatedSpansFromLcp(
-              rd(s"$tmp/sa_lcp")))
-          },
-          timedAt("q231_from_arrays") {
-            noop(graft.operators.SuffixArray.docRepeatProfileFromLcp(
-              rd(s"$tmp/sa_lcp")))
-          },
-          // span-group store maintenance (round-17): the suffix-repeat
-          // family's fold/retract path — build the doc-local group
-          // store + pair artifact once (base = buckets != 3, full =
-          // everything), then price ONE delivery fold and ONE 1-in-7
-          // takedown at touched-group cost off the persisted artifacts
-          // the sg stores + pair artifacts are written BUCKETED BY fp
-          // (round-18 verdict #6): fold/retract's carried anti-join
-          // and member join then need no exchange on the store side
-          // when the touched set outgrows a broadcast — the price is
-          // one bucket shuffle paid here at write time
-          timedAt("suffix_groups_build") {
-            import graft.engine.Bucketing
-            import graft.operators.SuffixArray
-            val b = graft.operators.Curation.hashBucket(col("doc_id"), 10)
-            val baseDocs = docs.filter(b =!= 3)
-            val nb = cpus.toInt
-            // the base-corpus chain (store → maintained pairs) and
-            // the full-corpus chain are independent — overlapped
-            // (guide §2.6); each chain stays internally sequential
-            overlap(
-              () => {
-                Bucketing.writeBucketed(SuffixArray.spanGroupStore(baseDocs),
-                  "sg_base_store", "fp", nb)
-                Bucketing.writeBucketed(SuffixArray.repeatedSpansWithKey(
-                  spark.table("sg_base_store"), baseDocs),
-                  "sg_base_pairs", "fp", nb)
-              },
-              () => {
-                Bucketing.writeBucketed(SuffixArray.spanGroupStore(docs),
-                  "sg_full_store", "fp", nb)
-                Bucketing.writeBucketed(SuffixArray.repeatedSpansWithKey(
-                  spark.table("sg_full_store"), docs),
-                  "sg_full_pairs", "fp", nb)
-              })
-          },
-          timedAt("q241_fold_from_store") {
-            import graft.operators.SuffixArray
-            val b = graft.operators.Curation.hashBucket(col("doc_id"), 10)
-            val delivery = docs.filter(b === 3)
-            val folded = spark.table("sg_base_store")
-              .unionByName(SuffixArray.spanGroupStore(delivery))
-            noop(SuffixArray.repeatedSpansFold(
-              spark.table("sg_base_pairs"), folded, delivery, docs))
-          },
-          timedAt("q242_retract_from_store") {
-            import graft.operators.SuffixArray
-            val rm = col("doc_id") % 7 === 3
-            val removed = docs.filter(rm)
-            val survivingStore = spark.table("sg_full_store")
-              .join(removed.select(col("doc_id")), Seq("doc_id"),
-                "left_anti")
-            noop(SuffixArray.repeatedSpansRetract(
-              spark.table("sg_full_pairs"), survivingStore, removed,
-              docs.filter(!rm)))
-          },
-          // maintained small-k window stores + the profile served
-          // ENTIRELY from artifacts (round-18 verdict #5): zero
-          // corpus scans in the q243 leg — n_tokens reads the k=1
-          // store, short-k dups read k=2..4, >=minLen reads the
-          // maintained pair table
-          timedAt("suffix_kwin_build") {
-            import graft.operators.SuffixArray
-            // the four k-window stores are independent single-scan
-            // derivations — overlapped (guide §2.6)
-            overlap((1 to 4).map { k => () =>
-              SuffixArray.spanGroupStore(docs, k)
-                .hint("rebalance")
-                .write.mode("overwrite").parquet(s"$tmp/win_k$k")
-            }: _*)
-          },
-          timedAt("q243_from_stores") {
-            import graft.operators.SuffixArray
-            noop(SuffixArray.docRepeatProfileFromArtifacts(
-              spark.table("sg_full_store"), spark.table("sg_full_pairs"),
-              (1L to 4L).map(k => k -> rd(s"$tmp/win_k$k"))))
-          },
-          // the q248 hot-fixture base store/pairs (prices the
-          // warehouse hot_base_* artifacts its fold reads)
-          timedAt("suffix_hotbase_build") {
-            import graft.operators.SuffixArray
-            val hotBase = docs.filter(col("doc_id") % 50 === 0)
-              .select(col("doc_id"), col("text"))
-            SuffixArray.spanGroupStore(hotBase)
-              .hint("rebalance")
-              .write.mode("overwrite").parquet(s"$tmp/hot_base_store")
-            SuffixArray.repeatedSpansWithKey(
-                rd(s"$tmp/hot_base_store"), hotBase)
-              .hint("rebalance")
-              .write.mode("overwrite").parquet(s"$tmp/hot_base_pairs")
-          })
-        rmTree(tmp.toFile)
-        Seq("sg_base_store", "sg_base_pairs", "sg_full_store",
-          "sg_full_pairs").foreach(graft.engine.Bucketing.drop(spark, _))
-        out
-      }
+    val passes: Seq[Leg] =
+      for (_ <- 1 to repeats; (name, fn) <- ordered)
+        yield timed(spark, name)(noop(fn(spark, sfDir)))
+    val samples: Map[String, Seq[Double]] = passes
+      .collect { case Leg(n, Right(t)) => n -> t }
+      .groupMap(_._1)(_._2)
 
     // ---- incremental-ingest mode ----
     // IngestDemo's per-delivery pipeline, timed stage by stage at the
@@ -659,21 +267,22 @@ object Bench {
     // Fold==from-scratch equality is asserted by IngestDemo.checks /
     // IngestSpec, not re-paid here. Disable with
     // SPARK_GRAFT_BENCH_INCREMENTAL=0.
-    val incremental: Seq[(String, Double)] =
+    val incremental: Seq[Leg] =
       if (sys.env.getOrElse("SPARK_GRAFT_BENCH_INCREMENTAL", "1") == "0") Nil
       else {
         val tmp = Files.createTempDirectory("graft-bench-ingest")
         val out = IngestDemo.stages(spark, sfDir, tmp.toString)
-          .map { case (n, f) => timedSection("incremental")(n)(f()) }
+          .map { case (n, f) => timed(spark, n)(f()) }
         // tdn_* legs price ONE takedown (a content-stable ~1/7th of
         // corpus v1 retracted from every persisted store) — the
         // compliance-removal marginal cost, priced against the _v1
         // generation the stages above produced
         val tdn = IngestDemo.takedownStages(spark, sfDir, tmp.toString)
-          .map { case (n, f) => timedSection("incremental")(n)(f()) }
-        rmTree(tmp.toFile)
+          .map { case (n, f) => timed(spark, n)(f()) }
+        FsUtil.rmTree(tmp.toFile)
         out ++ tdn
       }
+    val failed = failures(composed ++ passes ++ incremental)
 
     // drain the async listener bus before reading the counters: wait
     // until no event has arrived for 3 consecutive 100 ms polls.
@@ -691,21 +300,22 @@ object Bench {
     def ctr(m: ConcurrentHashMap[String, AtomicLong], k: String): Long =
       Option(m.get(k)).map(_.get()).getOrElse(0L)
 
-    val results: Seq[(String, Stat)] = ordered.map { case (name, _) =>
-      val s = samples(name).sorted
-      // cpu/gc average over SUCCESSFUL passes only — dividing by
-      // `repeats` would understate per-run cost when a pass failed
-      val stat =
-        if (s.isEmpty) Stat(-1.0, -1.0, -1.0, -1.0)
-        else Stat(s.head, s(s.size / 2),
+    // a query with no successful pass has no stat at all (it is listed
+    // under failed); cpu/gc average over SUCCESSFUL passes only —
+    // dividing by `repeats` would understate per-run cost when a pass
+    // failed
+    val results: Seq[(String, Stat)] = ordered.flatMap { case (name, _) =>
+      samples.get(name).map { found =>
+        val s = found.sorted
+        name -> Stat(s.head, s(s.size / 2),
           ctr(cpuNsByQ, name) / 1e9 / s.size, ctr(gcMsByQ, name) / 1e3 / s.size)
-      name -> stat
+      }
     }
 
     def obj(f: Stat => Double, digits: Int = 4): String =
       results.map { case (k, st) => "\"" + k + "\":" + fmt(f(st), digits) }
         .mkString("{", ",", "}")
-    val total = results.map(_._2.min).filter(_ >= 0).sum
+    val total = results.map(_._2.min).sum
 
     // self-adjudicating regression flag (round-16 verdict #8,
     // tightened round 18 after q72 slipped both thresholds): a
@@ -724,8 +334,8 @@ object Bench {
     // Prior wall > 0.5 s (sub-half-second queries are startup-noise-
     // dominated), and the joint rule additionally needs >= 1 s of
     // ABSOLUTE wall movement: a 1.0 -> 1.7 s query trips the ratio
-    // thresholds on pure scheduler jitter (round-18 flags q166/q126,
-    // both sub-2 s, both reproduced at baseline solo) — a real
+    // thresholds on pure scheduler jitter (round 18 flagged two
+    // sub-2 s queries that both reproduced at baseline solo) — a real
     // regression of the q72 class moves seconds, not fractions.
     // reg_n always prints when any baseline parsed; the per-query
     // ratios print for the worst 5 in the headline (full list in the
@@ -735,7 +345,7 @@ object Bench {
       for {
         pw <- wallBase.get(n)
         pc <- cpuBase.get(n)
-        if pw > 0.5 && pc > 0 && st.min >= 0 && st.cpuSec >= 0
+        if pw > 0.5 && pc > 0
         wr = st.min / pw
         cr = st.cpuSec / pc
         if (wr > 1.5 && cr > 1.25 && st.min - pw >= 1.0) ||
@@ -753,20 +363,22 @@ object Bench {
         "\"" + n + "\":[" + fmt(wr, 2) + "," + fmt(cr, 2) + "]" }
       .mkString("{", ",", "}")
 
-    val composedJson = composed
-      .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
+    def legsJson(legs: Seq[Leg]): String = legs
+      .collect { case Leg(k, Right(v)) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
-    val incrementalJson = incremental
-      .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
+    val failedJson = failed
+      .map { case (n, m) => Verify.jsonString(n) + ":" + Verify.jsonString(m) }
       .mkString("{", ",", "}")
-    // full telemetry to a file (never truncated by output capture)
+    // full telemetry to a file (never truncated by output capture);
+    // the failure messages go last, after every dict prevDict reads
     Files.writeString(Paths.get(detailPath),
       s"""{"metric":"total","value":${fmt(total, 6)},"unit":"sec",""" +
         s""""sf":"$sfDir","runs":$repeats,"queries":${obj(_.min)},""" +
         s""""medians":${obj(_.med)},"cpu_sec":${obj(_.cpuSec)},""" +
-        s""""gc_sec":${obj(_.gcSec)},"composed":$composedJson,""" +
-        s""""incremental":$incrementalJson,""" +
-        s""""regressions":${regJson(regressions)}}""")
+        s""""gc_sec":${obj(_.gcSec)},"composed":${legsJson(composed)},""" +
+        s""""incremental":${legsJson(incremental)},""" +
+        s""""regressions":${regJson(regressions)},""" +
+        s""""failed":$failedJson}""")
     // the one stdout line: compact, driver-parseable. The driver
     // captures a bounded tail (~2000 chars) of process output, so the
     // line must FIT — round 6's 108-query map exceeded the window even
@@ -775,60 +387,40 @@ object Bench {
     // queries (the ones a reader of the headline wants) at 1 decimal,
     // shrinking until the line fits; full precision always lives in
     // the detail file. Printed after spark.stop() so nothing trails it.
-    // the composed-mode totals ride the headline as two scalars: the
-    // artifact build cost and the consumers' marginal cost — the
-    // production-path numbers (PipelineDemo) a reader should weigh
-    // against the standalone per-query map
-    val composedBuild = composed
-      .filter(_._1.endsWith("_build")).map(_._2).filter(_ >= 0).sum
-    val composedServe = composed
-      .filterNot(_._1.endsWith("_build")).map(_._2).filter(_ >= 0).sum
-    val composedTag =
-      if (composed.isEmpty) ""
-      else s""","composed_build_sec":${fmt(composedBuild, 2)}""" +
-        s""","composed_serve_sec":${fmt(composedServe, 2)}"""
+    // the warehouse build cost rides the headline as one scalar (per
+    // family in bench_detail.json under "composed")
+    val composedTag = s""","composed_build_sec":${fmt(seconds(composed), 2)}"""
     // incremental-ingest headline scalars: the once-per-warehouse
     // bootstrap and the marginal one-delivery cost (stage detail in
     // bench_detail.json under "incremental")
-    val ingestBoot = incremental
-      .filter(_._1.startsWith("boot_")).map(_._2).filter(_ >= 0).sum
-    val ingestDelivery = incremental
-      .filter(_._1.startsWith("inc_")).map(_._2).filter(_ >= 0).sum
+    def ingestSec(prefix: String): String =
+      fmt(seconds(incremental.filter(_.name.startsWith(prefix))), 2)
     // cal_* = recalibration-cadence stages (gate-threshold re-derive,
     // artifact receipts): corpus-version-proportional by nature, so
     // they get their own scalar instead of inflating the marginal
-    // delivery number
-    val ingestRecal = incremental
-      .filter(_._1.startsWith("cal_")).map(_._2).filter(_ >= 0).sum
-    // tdn_* = one compliance takedown retracted from every store
-    val ingestTakedown = incremental
-      .filter(_._1.startsWith("tdn_")).map(_._2).filter(_ >= 0).sum
+    // delivery number; tdn_* = one compliance takedown retracted from
+    // every store
     val ingestTag =
       if (incremental.isEmpty) ""
-      else s""","ingest_boot_sec":${fmt(ingestBoot, 2)}""" +
-        s""","ingest_delivery_sec":${fmt(ingestDelivery, 2)}""" +
-        s""","ingest_recal_sec":${fmt(ingestRecal, 2)}""" +
-        s""","ingest_takedown_sec":${fmt(ingestTakedown, 2)}"""
+      else s""","ingest_boot_sec":${ingestSec("boot_")}""" +
+        s""","ingest_delivery_sec":${ingestSec("inc_")}""" +
+        s""","ingest_recal_sec":${ingestSec("cal_")}""" +
+        s""","ingest_takedown_sec":${ingestSec("tdn_")}"""
+    // every failure by name (messages in the detail file)
+    val failedTag = s""","failed_n":${failed.size}""" +
+      (if (failed.isEmpty) ""
+       else failed.map(f => Verify.jsonString(f._1))
+         .mkString(""","failed":[""", ",", "]"))
     // carried-vs-new split against the previous round's query set (see
-    // prevQueries above); absent when no prior detail file parsed
-    val carriedTotal = results
-      .filter { case (n, st) => prevQueries.contains(n) && st.min >= 0 }
-      .map(_._2.min).sum
-    // carried_n counts the queries INSIDE carried_total_sec (min >= 0)
-    // so the pair stays internally consistent; a carried query that
-    // failed every repeat is surfaced separately as carried_failed_n
-    // instead of silently deflating the per-query average
-    val carriedN = results.count(r =>
-      prevQueries.contains(r._1) && r._2.min >= 0)
-    val carriedFailed = results.count(r =>
-      prevQueries.contains(r._1) && r._2.min < 0)
+    // prevQueries above); absent when no prior detail file parsed.
+    // A query that failed every pass is in neither count (failed_n
+    // names it)
+    val carried = results.filter { case (n, _) => prevQueries.contains(n) }
     val carriedTag =
       if (prevQueries.isEmpty) ""
-      else s""","carried_total_sec":${fmt(carriedTotal, 2)}""" +
-        s""","carried_n":$carriedN""" +
-        (if (carriedFailed > 0) s""","carried_failed_n":$carriedFailed"""
-         else "") +
-        s""","new_n":${results.size - carriedN - carriedFailed}"""
+      else s""","carried_total_sec":${fmt(carried.map(_._2.min).sum, 2)}""" +
+        s""","carried_n":${carried.size}""" +
+        s""","new_n":${results.size - carried.size}"""
     val regTag =
       if (prevQueries.isEmpty && roundWall.isEmpty) ""
       else s""","reg_n":${regressions.size}""" +
@@ -845,7 +437,7 @@ object Bench {
     // driver artifact alone distinguishes them without cross-
     // referencing BASELINE.md. cpu_total_sec always prints even when
     // the budget elides the dicts.
-    val cpuTotal = results.map(_._2.cpuSec).filter(_ >= 0).sum
+    val cpuTotal = results.map(_._2.cpuSec).sum
     def lineFor(subset: Seq[(String, Stat)], digits: Int): String = {
       val qs = subset.map { case (k, st) => "\"" + k + "\":" + fmt(st.min, digits) }
         .mkString("{", ",", "}")
@@ -862,7 +454,7 @@ object Bench {
       s"""{"metric":"total","value":${fmt(total, 6)},"unit":"sec",""" +
         s""""queries":$qs,"cpu":$cpu,""" +
         s""""cpu_total_sec":${fmt(cpuTotal, 2)},"sf":"$sfDir","runs":$repeats""" +
-        s"""$composedTag$ingestTag$carriedTag$regTag$omitTag}"""
+        s"""$composedTag$ingestTag$failedTag$carriedTag$regTag$omitTag}"""
     }
     val bySlowest = results.sortBy(-_._2.min)
     val budget = 1900
@@ -878,5 +470,6 @@ object Bench {
       .getOrElse(lineFor(Nil, 1))
     spark.stop()
     println(headline)
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

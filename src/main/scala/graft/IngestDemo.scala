@@ -10,8 +10,8 @@ import graft.sources.Tables
 
 /** The PRODUCTION entry point for CONTINUOUS ingest — one corpus
   * delivery driven end-to-end against persisted indexes, the way a
-  * continuously-crawled corpus actually grows. [[PipelineDemo]] is
-  * the batch story (build artifacts once, consumers collapse);
+  * continuously-crawled corpus actually grows. [[ComposedArtifacts]]
+  * is the batch story (build artifacts once, consumers collapse);
   * this is the per-delivery story its incremental family
   * (q92/q96/q154/q161/q163 + the streaming twins) was built for:
   *
@@ -77,7 +77,8 @@ import graft.sources.Tables
   *        LM), so their receipts re-derive).
   *
   * Every fold is ASSERTED equal to the from-scratch build over
-  * corpus v1 (the PipelineDemo discipline): incremental maintenance
+  * corpus v1 (the discipline the `*From` specs hold for the batch
+  * warehouse): incremental maintenance
   * must be a cost change, never a semantics change. Stages
   * communicate through parquet under `work` — each reads the
   * persisted artifacts exactly as a scheduled production job would,
@@ -1209,7 +1210,7 @@ object IngestDemo {
       "ann v1 serve == from-scratch index over v1" -> { () =>
         // the recalibrated (model, store) pair, read back off parquet,
         // must serve exactly what a from-scratch index build over
-        // corpus v1 serves — the q173/q174 composed==standalone
+        // corpus v1 serves — the q34/q118 served==retrained
         // equality at the ingest boundary
         val embV1 = embBase.unionByName(
             embDelivery.join(rd("admitted_vecs"), Seq("vec_id")))

@@ -201,7 +201,7 @@ object ScaleRehearsal {
       // the materialized containment pair table (shingle index →
       // ngramContainmentFromShingles), built ONCE outside the timed
       // spans — the from-pairs leg measures the composed consumer's
-      // marginal cost the way PipelineDemo serves it
+      // marginal cost the way the warehouse serves q147
       lazy val contPairs: DataFrame =
         Dedup.ngramContainmentFromShingles(Dedup.shingles(docs))
           .localCheckpoint(true)

@@ -38,9 +38,9 @@ object TrainingEntries {
     "q30_knn_brute"      -> q(t => Similarity.bruteForceTopK(t.embeddings)),
     "q31_knn_lsh"        -> q(t => Similarity.lshTopK(t.embeddings)),
     // serves the persisted IVF index (centroids + cells) from the
-    // warehouse — q173's gated from-artifact path; the in-entry
-    // training form stays spec-pinned (TrainingOpsSpec) and priced
-    // by the composed ivf_index_build leg
+    // warehouse 'ann' family (Bench's ann_build leg prices the
+    // build); the in-entry training form stays spec-pinned
+    // (TrainingOpsSpec)
     "q34_knn_ivf"        -> ((s: SparkSession, d: String) =>
       Similarity.ivfTopKFrom(ComposedArtifacts.ivfCentroids(s, d),
         ComposedArtifacts.ivfCells(s, d), Tables(s, d).embeddings)),
@@ -116,7 +116,7 @@ object TrainingEntries {
     // SemDeDup-style: cluster with the deterministic IVF k-means, pair
     // within cells; threshold matches q35 (fixture max cosine ~0.51)
     // serves the shared (vec_id, cell) assignment from the warehouse
-    // — q172's gated from-artifact path (round-18 ANN serve wave)
+    // (round-18 ANN serve wave)
     "q49_semantic_dups"  -> ((s: SparkSession, d: String) =>
       Similarity.semanticDupPairsFromCells(ComposedArtifacts.cells(s, d),
         Tables(s, d).embeddings)),
@@ -126,9 +126,9 @@ object TrainingEntries {
     // recursive-CTE transitive closure — an independent algorithm).
     // SERVED from the suite-shared pair artifact (round-18 verdict
     // #8): the pair-graph build is gated standalone by q26 and the
-    // from-artifact path by q165's byte-identical oracle, so this
-    // entry — like every pair consumer below — reads the warehouse
-    // store instead of re-deriving the corpus-wide LSH pass per gate
+    // from-artifact path by this entry's oracle, so it — like every
+    // pair consumer below — reads the warehouse store instead of
+    // re-deriving the corpus-wide LSH pass per gate
     "q51_dup_clusters"   -> ((s: SparkSession, d: String) =>
       Dedup.componentsOf(ComposedArtifacts.pairs(s, d))),
     "q52_length_quantiles" -> q(t => Curation.lengthQuantiles(t.documents)),
@@ -180,8 +180,8 @@ object TrainingEntries {
         DistributionFit.rankTable(StarQueries.q02ExplodeCount(t)))),
     // Dup-cluster KEEP/DROP resolution: hash-agg argmax winner per
     // component (longest doc, ties to the smallest doc_id); pair
-    // graph from the warehouse artifact (q26 gates the build, q166
-    // the artifact path)
+    // graph from the warehouse artifact (q26 gates the build, this
+    // entry the artifact path)
     "q72_cluster_keep"   -> ((s: SparkSession, d: String) =>
       Dedup.clusterKeepsFromPairs(
         ComposedArtifacts.pairs(s, d), Tables(s, d).documents)),
@@ -192,7 +192,7 @@ object TrainingEntries {
     // dataset-pruning score table
     "q74_prototypicality" -> q(t => Similarity.prototypicality(t.embeddings)),
     // Cross-source duplication matrix over the q26 near-dup pairs
-    // (pair graph from the warehouse artifact, q167's path)
+    // (pair graph from the warehouse artifact)
     "q75_source_overlap" -> ((s: SparkSession, d: String) =>
       Dedup.sourceOverlapFromPairs(
         ComposedArtifacts.pairs(s, d), Tables(s, d).documents)),
@@ -241,7 +241,7 @@ object TrainingEntries {
     "q88_quality_gate"   -> q(t => Curation.qualityGate(t.documents)),
     // Dup-pair-graph degree histogram: near-dup partners per node →
     // node count per degree (graph health before clustering; pair
-    // graph from the warehouse artifact, q168's path)
+    // graph from the warehouse artifact)
     "q89_pair_degrees"   -> ((s: SparkSession, d: String) =>
       Dedup.pairDegreeHistogram(ComposedArtifacts.pairs(s, d))),
     // Pairwise cosine between per-label centroid embeddings
@@ -285,7 +285,7 @@ object TrainingEntries {
     "q97_vocab_coverage" -> q(t => TextAnalysis.vocabCoverage(t.documents)),
     // Estimator-calibration report: per agreement count, the mean
     // EXACT Jaccard of the LSH candidates scoring there (scored
-    // candidates + signature store from the warehouse, q181's path)
+    // candidates + signature store from the warehouse 'pair' family)
     "q98_est_calibration" -> ((s: SparkSession, d: String) =>
       Dedup.estimatorCalibrationFromScored(
         ComposedArtifacts.scored(s, d), ComposedArtifacts.sigs(s, d))),
@@ -479,9 +479,9 @@ object TrainingEntries {
     "q117_pq_encode"     -> q(t => Similarity.pqEncode(t.embeddings)),
     // ADC top-k over the PQ codes: queries keep exact subvectors,
     // corpus vectors are scored as m LUT entries
-    // serves the persisted code table + codebook — q174's gated
-    // from-artifact path; q117 above keeps the standalone training
-    // gated and the composed pq_artifacts_build leg prices the build
+    // serves the persisted code table + codebook from the warehouse
+    // 'ann' family; q117 above keeps the standalone training gated
+    // and Bench's ann_build leg prices the build
     "q118_pq_ann"        -> ((s: SparkSession, d: String) =>
       Similarity.pqAdcFromCodes(ComposedArtifacts.pqCodes(s, d),
         ComposedArtifacts.pqCodebook(s, d), Tables(s, d).embeddings)),
@@ -519,8 +519,8 @@ object TrainingEntries {
     // BPE merge training (Sennrich et al. 2016): 6 greedy merges over
     // the word-frequency table, whole training replayed by the oracle
     // serves the trained merge table from the warehouse 'tok'
-    // family (built once per corpus version; the composed
-    // tok_model_build leg prices it) — the oracle replays the WHOLE
+    // family (built once per corpus version; Bench's tok_build leg
+    // prices it) — the oracle replays the WHOLE
     // training in SQL, so the artifact round trip stays gated; the
     // in-entry training form stays pinned by BpeSpec
     "q124_bpe_merges"    -> ((s: SparkSession, d: String) =>
@@ -706,9 +706,9 @@ object TrainingEntries {
     // vs src3-5 (class 0), score the WHOLE corpus with integer
     // micro-nat log-likelihood ratios (the CCNet-style wiki-vs-crawl
     // filter, relationally)
-    // serves the persisted LM + constants — q175's gated
-    // from-artifact path; the composed nb_model_build leg prices the
-    // training (pos/neg source lists pinned by the oracle literals)
+    // serves the persisted LM + constants from the warehouse 'ann'
+    // family; Bench's ann_build leg prices the training (pos/neg
+    // source lists pinned by the oracle literals)
     "q156_nb_classifier" -> ((s: SparkSession, d: String) =>
       TextAnalysis.nbScoreFrom(ComposedArtifacts.nbLm(s, d),
         ComposedArtifacts.nbConsts(s, d), Tables(s, d).documents)),
@@ -816,21 +816,22 @@ object TrainingEntries {
     "q148_two_level_assign" -> q(t => Similarity.twoLevelAssign(t.embeddings)),
     // kNN label-noise audit: per vector, the disagreement rate of its
     // 5 nearest same-cell neighbors' labels (mislabel detector)
-    // q177's gated from-artifact path (round-18 ANN serve wave)
+    // served off the persisted cell assignment (round-18 ANN serve
+    // wave)
     "q146_label_noise"   -> ((s: SparkSession, d: String) =>
       Similarity.labelNoiseFromCells(ComposedArtifacts.cells(s, d),
         Tables(s, d).embeddings)),
     // Hard-negative mining: per anchor, the 5 most-similar same-cell
     // vectors still under the q49 positive threshold — the
-    // contrastive-training complement of semanticDupPairs; q176's
-    // gated from-artifact path
+    // contrastive-training complement of semanticDupPairs; served
+    // off the persisted cell assignment
     "q141_hard_negatives" -> ((s: SparkSession, d: String) =>
       Similarity.hardNegativesFromCells(ComposedArtifacts.cells(s, d),
         Tables(s, d).embeddings)),
     // Directed cross-source containment matrix: which crawl QUOTES
     // which (the directed sibling of q75's symmetric overlap;
-    // containment pairs from the warehouse artifact, q171's path —
-    // q140 gates the build)
+    // containment pairs from the warehouse artifact — q140 gates the
+    // build)
     "q147_source_containment" -> ((s: SparkSession, d: String) =>
       Dedup.sourceContainmentMatrixFromPairs(
         ComposedArtifacts.contPairs(s, d), Tables(s, d).documents)),
@@ -906,53 +907,6 @@ object TrainingEntries {
     "q164_composite_gate" -> q(t => Curation.compositeGate(t.documents,
       keepPermille = 900, minEntropyMilli = 3900L,
       maxEntropyMilli = 4500L)),
-    // Composed-path twins (q165-q171): the SAME pair-graph consumers
-    // as their standalone siblings, but consuming ComposedArtifacts'
-    // persisted parquet pair tables via the *From APIs — the
-    // production path under the production oracle (each twin's SQL is
-    // byte-identical to its sibling's, so a hash match proves the
-    // artifact round-trip changed nothing)
-    "q165_components_composed" -> ((s: SparkSession, d: String) =>
-      Dedup.componentsOf(ComposedArtifacts.pairs(s, d))),
-    "q166_cluster_keep_composed" -> ((s: SparkSession, d: String) =>
-      Dedup.clusterKeepsFromPairs(
-        ComposedArtifacts.pairs(s, d), Tables(s, d).documents)),
-    "q167_source_overlap_composed" -> ((s: SparkSession, d: String) =>
-      Dedup.sourceOverlapFromPairs(
-        ComposedArtifacts.pairs(s, d), Tables(s, d).documents)),
-    "q168_pair_degrees_composed" -> ((s: SparkSession, d: String) =>
-      Dedup.pairDegreeHistogram(ComposedArtifacts.pairs(s, d))),
-    "q169_pagerank_composed" -> ((s: SparkSession, d: String) =>
-      Dedup.pairPageRank(ComposedArtifacts.pairs(s, d))),
-    "q170_canonical_composed" -> ((s: SparkSession, d: String) =>
-      Dedup.canonicalByRank(ComposedArtifacts.pairs(s, d))),
-    "q171_containment_composed" -> ((s: SparkSession, d: String) =>
-      Dedup.sourceContainmentMatrixFromPairs(
-        ComposedArtifacts.contPairs(s, d), Tables(s, d).documents)),
-    // Composed-path twins, ANN/model family (q172-q177): the
-    // within-cell consumers off the persisted (vec_id, cell)
-    // assignment, ANN serving off the persisted IVF index and PQ
-    // codebook+codes, and quality scoring off the persisted NB model
-    // — PipelineDemo's remaining artifact stores, each gated by its
-    // standalone sibling's SQL verbatim
-    "q172_semantic_dups_composed" -> ((s: SparkSession, d: String) =>
-      Similarity.semanticDupPairsFromCells(
-        ComposedArtifacts.cells(s, d), Tables(s, d).embeddings)),
-    "q173_ivf_composed" -> ((s: SparkSession, d: String) =>
-      Similarity.ivfTopKFrom(ComposedArtifacts.ivfCentroids(s, d),
-        ComposedArtifacts.ivfCells(s, d), Tables(s, d).embeddings)),
-    "q174_pq_adc_composed" -> ((s: SparkSession, d: String) =>
-      Similarity.pqAdcFromCodes(ComposedArtifacts.pqCodes(s, d),
-        ComposedArtifacts.pqCodebook(s, d), Tables(s, d).embeddings)),
-    "q175_nb_score_composed" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.nbScoreFrom(ComposedArtifacts.nbLm(s, d),
-        ComposedArtifacts.nbConsts(s, d), Tables(s, d).documents)),
-    "q176_hard_negatives_composed" -> ((s: SparkSession, d: String) =>
-      Similarity.hardNegativesFromCells(
-        ComposedArtifacts.cells(s, d), Tables(s, d).embeddings)),
-    "q177_label_noise_composed" -> ((s: SparkSession, d: String) =>
-      Similarity.labelNoiseFromCells(
-        ComposedArtifacts.cells(s, d), Tables(s, d).embeddings)),
     // Incremental hierarchical manifest: even docs = the persisted
     // unit store + sub-manifest, odd docs folded in via
     // updatedSubManifest (ONLY the touched cells recompute) — the
@@ -987,19 +941,12 @@ object TrainingEntries {
       Curation.manifestFromSub(
         Curation.retractedSubManifest(sub0, store, removed))
     }),
-    // Composed twins for the shingle/signature artifacts' remaining
-    // heavy consumers: exact-Jaccard verify off the persisted shingle
-    // index (q27's dominant cost is re-deriving it) and the estimator
-    // calibration off the scored candidates + signature store
-    // ... now the pure SERVE gate of the persisted jac_pairs store:
-    // the from-shingles compute runs once in the warehouse build and
-    // this oracle hash proves the published store equals q27's
+    // The pure SERVE gate of the persisted jac_pairs store: the
+    // from-shingles compute runs once in the warehouse build and this
+    // oracle hash proves the published store equals q27's
     // from-scratch rebuild bit for bit
     "q180_jaccard_composed" -> ((s: SparkSession, d: String) =>
       ComposedArtifacts.jacPairs(s, d)),
-    "q181_calibration_composed" -> ((s: SparkSession, d: String) =>
-      Dedup.estimatorCalibrationFromScored(
-        ComposedArtifacts.scored(s, d), ComposedArtifacts.sigs(s, d))),
     // The gate SERVED from its persisted artifacts: gateThresholds'
     // K-row per-source cut table + the NB model, applied windowless
     // (broadcast threshold join). On the training corpus the served
@@ -1334,8 +1281,9 @@ object TrainingEntries {
     // from star edges + new pairs, everything else carries over; the
     // oracle is q51's closure over the FULL pair set verbatim
     // the pair graph is the suite-shared artifact (scored-table
-    // filter view — q165's gate proves it equals the standalone
-    // minhashDupPairs); no in-entry LSH sweep + localCheckpoint
+    // filter view — q51's gate and TrainingOpsSpec prove it equals
+    // the standalone minhashDupPairs); no in-entry LSH sweep +
+    // localCheckpoint
     "q207_components_fold" -> ((s: SparkSession, d: String) => {
       val pairs = ComposedArtifacts.pairs(s, d)
       Dedup.componentsFold(
@@ -1459,25 +1407,11 @@ object TrainingEntries {
     }),
   )
 
-  /** Composed twin → standalone sibling; the twin's oracle SQL is the
-    * sibling's, verbatim (same semantics, different physical path).
+  /** Entry → sibling whose oracle SQL gates it verbatim (same
+    * semantics, different physical path).
     */
   private val composedTwinOf: Map[String, String] = Map(
-    "q165_components_composed"     -> "q51_dup_clusters",
-    "q166_cluster_keep_composed"   -> "q72_cluster_keep",
-    "q167_source_overlap_composed" -> "q75_source_overlap",
-    "q168_pair_degrees_composed"   -> "q89_pair_degrees",
-    "q169_pagerank_composed"       -> "q128_pagerank",
-    "q170_canonical_composed"      -> "q133_canonical_rank",
-    "q171_containment_composed"    -> "q147_source_containment",
-    "q172_semantic_dups_composed"  -> "q49_semantic_dups",
-    "q173_ivf_composed"            -> "q34_knn_ivf",
-    "q174_pq_adc_composed"         -> "q118_pq_ann",
-    "q175_nb_score_composed"       -> "q156_nb_classifier",
-    "q176_hard_negatives_composed" -> "q141_hard_negatives",
-    "q177_label_noise_composed"    -> "q146_label_noise",
-    // not a composed *From twin but the same SQL-reuse contract: the
-    // incremental fold's exact oracle IS the batch hierarchical
+    // the incremental fold's exact oracle IS the batch hierarchical
     // manifest (the q161/q92/q154 additivity pattern)
     "q178_incremental_manifest"    -> "q162_manifest_hier",
     // takedown: retract(full index, odd) == from-scratch(even), so
@@ -1495,7 +1429,6 @@ object TrainingEntries {
     // the profile path scores exactly what the end-to-end classifier
     // scores — q156's SQL gates the narrow projection verbatim
     "q190_nb_from_profiles"        -> "q156_nb_classifier",
-    "q181_calibration_composed"    -> "q98_est_calibration",
     // both probes served off the FOLDED bucket-stats store instead of
     // re-aggregating the signature store — q192's scenario and SQL
     // gate the composed serve path verbatim
@@ -1937,8 +1870,8 @@ object TrainingEntries {
 
   /** The exact n-gram Jaccard pipeline (df≤100 candidate cut, full-set
     * verify, threshold 0.5) over the `docFilter` slice of `documents` —
-    * "TRUE" is q27's batch oracle and, verbatim, the q180/q186
-    * composed/incremental twins' gate; "doc_id % 2 = 0" gates q187's
+    * "TRUE" is q27's batch oracle and, verbatim, the q180 serve and
+    * q186 fold gates; "doc_id % 2 = 0" gates q187's
     * takedown of the verified-pair store.
     */
   private def jaccardSql(docFilter: String): String =
@@ -6770,7 +6703,7 @@ object TrainingEntries {
   )
 
   /** The driver-facing oracle map: every standalone SQL plus the
-    * composed twins, whose SQL is their sibling's verbatim.
+    * entries that reuse a sibling's SQL verbatim.
     */
   val oracleSql: Map[String, String] =
     baseOracleSql ++

@@ -881,7 +881,7 @@ object Dedup {
     * (explode + corpus-wide distinct) the same table that q43/q93's
     * decontamination legs also derive; a session that runs more than
     * one shingle consumer should materialize [[shingles]] once
-    * (parquet at warehouse scale — Bench's composed mode measures
+    * (parquet at warehouse scale — the warehouse 'pair' family does
     * exactly this) and feed them all.
     *
     * ROLE (round-14): this from-scratch build is the OFFLINE REBUILD
@@ -1102,8 +1102,8 @@ object Dedup {
   /** [[ngramContainmentPairs]] over a PRECOMPUTED distinct (doc_id,
     * shingle) table — the [[ngramJaccardFromShingles]] pattern: a
     * session materializing the shingle index feeds Jaccard AND
-    * containment from the same artifact (Bench composed mode measures
-    * both).
+    * containment from the same artifact (the warehouse 'pair' family
+    * builds both).
     */
   def ngramContainmentFromShingles(shingleSet: DataFrame,
       threshold: Double = 0.6, maxDf: Int = 100): DataFrame = {
@@ -1142,7 +1142,7 @@ object Dedup {
     * the composed-pipeline form: derive the pairs once
     * ([[ngramContainmentFromShingles]] off the materialized shingle
     * index), then both the pair report and this matrix are
-    * pair-sliver-priced (Bench composed mode measures it).
+    * pair-sliver-priced (q147 serves it from the warehouse).
     */
   def sourceContainmentMatrixFromPairs(pairs: DataFrame,
       documents: DataFrame): DataFrame = {
@@ -1272,7 +1272,7 @@ object Dedup {
     *
     * Scale: both consumers (closure, rank) read the same
     * localCheckpointed pair sliver — the materialize-once discipline
-    * of the composed bench mode; the winner election is a
+    * of the warehouse consumers; the winner election is a
     * component-keyed max_by hash aggregate, no window sort.
     */
   def canonicalByRank(pairs: DataFrame, maxRounds: Int = 30): DataFrame = {
@@ -1710,7 +1710,7 @@ object Dedup {
     * threshold)`), and with common/sizes already present the
     * calibration touches NO corpus data at all — one signature probe
     * join plus a k-bounded aggregate. Caller owns the artifact
-    * lifecycle (parquet reads in the bench's composed mode; nothing
+    * lifecycle (q98 reads the warehouse 'pair' family; nothing
     * persisted here).
     */
   def estimatorCalibrationFromScored(scored: DataFrame, sigs: DataFrame,

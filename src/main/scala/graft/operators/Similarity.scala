@@ -411,8 +411,8 @@ object Similarity {
     * pipeline materializes it ONCE per corpus version and drives the
     * three consumers off the parquet via the `*FromCells` forms —
     * the ANN-family twin of the pair-graph/PQ-code artifacts
-    * (PipelineDemo asserts composed == standalone; Bench's composed
-    * section measures the collapse).
+    * (TrainingOpsSpec pins composed == standalone; the warehouse
+    * 'ann' family persists it).
     */
   def cellAssignments(embeddings: DataFrame, nCentroids: Int = 16,
       lloydIters: Int = 2, trainFraction: Double = 1.0,
@@ -529,7 +529,7 @@ object Similarity {
     * no training and no corpus re-assignment; queries probe their
     * `nprobe` cells against the broadcast centroid table and join the
     * cell-pruned corpus. Same output contract as [[ivfTopK]]
-    * (spec-pinned equal); Bench composed mode measures the collapse.
+    * (spec-pinned equal); q34 serves it from the warehouse.
     */
   def ivfTopKFrom(centroids: DataFrame, cells: DataFrame,
       embeddings: DataFrame, maxQueryId: Long = 10, k: Int = 5,
@@ -1359,8 +1359,8 @@ object Similarity {
   /** The trained codebook as a (sub, c_id, cv) DataFrame — the
     * artifact form a pipeline persists next to the code table
     * ([[pqEncode]]'s output) so every downstream searcher loads both
-    * instead of retraining ([[pqAdcFromCodes]]; Bench's composed mode
-    * measures the collapse).
+    * instead of retraining ([[pqAdcFromCodes]]; the warehouse 'ann'
+    * family persists both).
     */
   def pqCodebookDf(embeddings: DataFrame, m: Int = 4, dim: Int = 64,
       ksub: Int = 16, iters: Int = 2,

@@ -884,6 +884,24 @@ class TrainingOpsSpec extends SparkSpec {
     assert(
       Dedup.estimatorCalibrationFromScored(scored, sigs).collect().toSet ===
         Dedup.estimatorCalibration(docs).collect().toSet)
+    // the warehouse 'pair' family's derivations: the scored table
+    // (over the distinct shingle index) filtered at 0.7 is
+    // minhashDupPairs (q89/q128/q133 apply the same operator to
+    // either), its closure is dupClusters (q51), and the matrix off
+    // the containment pair store is sourceContainmentMatrix (q147)
+    val shingleIdx = Dedup.shingles(docs).localCheckpoint(true)
+    val warehousePairs = Dedup.jaccardDetailFor(Dedup.lshCandidates(sigs), shingleIdx)
+      .filter($"jaccard" >= 0.7).select($"id1", $"id2").localCheckpoint(true)
+    val pairSet = warehousePairs.as[(Long, Long)].collect().toSet
+    assert(pairSet.nonEmpty)
+    assert(pairSet === Dedup.minhashDupPairs(docs, threshold = 0.7)
+      .select($"id1", $"id2").as[(Long, Long)].collect().toSet)
+    assert(Dedup.componentsOf(warehousePairs).collect().toSet ===
+      Dedup.dupClusters(docs, threshold = 0.7).collect().toSet)
+    val matrix = Dedup.sourceContainmentMatrixFromPairs(
+      Dedup.ngramContainmentFromShingles(shingleIdx), docs).collect().toSet
+    assert(matrix.nonEmpty)
+    assert(matrix === Dedup.sourceContainmentMatrix(docs).collect().toSet)
   }
 
   test("FromCells variants == the direct calls on a shared cell artifact") {
