@@ -84,7 +84,11 @@ object ComposedArtifacts {
   // tokenizer family (merge table + segmented vocabulary) and the
   // q248 hot-fixture base store/pairs join the warehouse, and the
   // ANN searcher/retract/curve gates serve from artifacts
-  private val LayoutVersion = 5
+  // v6: sa_lcp is derived from the span-group order (one window-keyed
+  // sort) instead of prefix doubling — output-identical by the
+  // prefix-interval property, but a doubling-built sa_lcp must not
+  // serve unaudited
+  private val LayoutVersion = 6
 
   /** The q26-family near-dup threshold shared by every pair consumer. */
   private val JaccardThreshold = 0.7
@@ -528,39 +532,30 @@ object ComposedArtifacts {
       import graft.operators.SuffixArray
       val docs = Tables(spark, sfDir).documents
       def rd(p: String) = spark.read.parquet(s"$work/$p")
-      SuffixArray.suffixArrayWithLcp(docs)
-        .hint("rebalance")
-        .write.mode("overwrite").parquet(s"$work/sa_lcp")
+      def write(df: DataFrame, name: String): Unit =
+        df.hint("rebalance").write.mode("overwrite").parquet(s"$work/$name")
+      def storeThenPairs(corpus: DataFrame, name: String): () => Unit =
+        () => {
+          write(SuffixArray.spanGroupStore(corpus), s"${name}_store")
+          write(SuffixArray.repeatedSpansWithKey(rd(s"${name}_store"),
+            corpus), s"${name}_pairs")
+        }
       val baseDocs = docs.filter(Curation.hashBucket(col("doc_id"), 10) =!= 3)
-      SuffixArray.spanGroupStore(baseDocs)
-        .hint("rebalance")
-        .write.mode("overwrite").parquet(s"$work/sg_base_store")
-      SuffixArray.repeatedSpansWithKey(rd("sg_base_store"), baseDocs)
-        .hint("rebalance")
-        .write.mode("overwrite").parquet(s"$work/sg_base_pairs")
-      SuffixArray.spanGroupStore(docs)
-        .hint("rebalance")
-        .write.mode("overwrite").parquet(s"$work/sg_full_store")
-      SuffixArray.repeatedSpansWithKey(rd("sg_full_store"), docs)
-        .hint("rebalance")
-        .write.mode("overwrite").parquet(s"$work/sg_full_pairs")
-      (1 to 4).foreach { k =>
-        SuffixArray.spanGroupStore(docs, k)
-          .hint("rebalance")
-          .write.mode("overwrite").parquet(s"$work/win_k$k")
-      }
       // the q248 hot-group gate's "before" state (the persisted
       // warehouse a delivery folds into, like sg_base_* for q241):
       // base = every 50th doc — derived solely from documents, so
       // the corpus fingerprint keys it correctly
       val hotBase = docs.filter(col("doc_id") % 50 === 0)
         .select(col("doc_id"), col("text"))
-      SuffixArray.spanGroupStore(hotBase)
-        .hint("rebalance")
-        .write.mode("overwrite").parquet(s"$work/hot_base_store")
-      SuffixArray.repeatedSpansWithKey(rd("hot_base_store"), hotBase)
-        .hint("rebalance")
-        .write.mode("overwrite").parquet(s"$work/hot_base_pairs")
+      // the chains share no data: overlapped, each one sequential
+      Overlap.inParallel(
+        () => write(SuffixArray.suffixArrayWithLcp(docs), "sa_lcp"),
+        storeThenPairs(baseDocs, "sg_base"),
+        storeThenPairs(docs, "sg_full"),
+        storeThenPairs(hotBase, "hot_base"),
+        () => (1 to 4).foreach { k =>
+          write(SuffixArray.spanGroupStore(docs, k), s"win_k$k")
+        })
       Seq("sa_lcp" -> "sa_lcp", "sg_base_store" -> "sg_base_store",
         "sg_base_pairs" -> "sg_base_pairs",
         "sg_full_store" -> "sg_full_store",

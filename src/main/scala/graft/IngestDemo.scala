@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
+import graft.Overlap.inParallel
 import graft.operators.{Curation, Dedup, NgramLm, Similarity, SubstringDedup, SuffixArray, TextAnalysis}
 import graft.sources.Tables
 
@@ -193,34 +194,6 @@ object IngestDemo {
     // the last store family to join the fold/retract lifecycle
     "sg_store" -> "sg_store", "sg_pairs" -> "sg_pairs")
 
-  /** Run independent store-build chains concurrently from a driver
-    * thread pool (optimization round 18, guide §2.6 "overlap
-    * independent jobs"): inside one ingest stage the IVF, PQ and SQ
-    * chains share no data, and running them sequentially leaves the
-    * cluster idle through each chain's Lloyd-round driver latency and
-    * write-commit tail. The pool is created INSIDE the stage body so
-    * its threads inherit the caller's job group (Spark local
-    * properties are InheritableThreadLocal) and cpu keeps attributing
-    * to the stage. Results are unchanged — each chain is internally
-    * sequential and deterministic; only the interleaving moves.
-    */
-  private def inParallel(work: (() => Unit)*): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(work.size)
-    try {
-      val futs = work.map { w =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = w()
-        })
-      }
-      futs.foreach { f =>
-        try f.get()
-        catch { case e: java.util.concurrent.ExecutionException =>
-          throw e.getCause
-        }
-      }
-    } finally pool.shutdown()
-  }
-
   /** [[stages]] with the corpus-v0/delivery split supplied as
     * DataFrames — the rehearsal entry point (ScaleRehearsal inflates
     * the base while holding the delivery fixed); [[stages]] itself
@@ -324,7 +297,7 @@ object IngestDemo {
         // write-index, relationally. Models train once per corpus
         // version; the stores are row-local derivations under them,
         // which is what makes their fold/retract exact. The three
-        // chains are independent — they overlap via [[inParallel]]
+        // chains are independent — they overlap via [[Overlap.inParallel]]
         inParallel(
           () => {
             wr(Similarity.ivfCentroidsDf(embBase), "ivf_centroids")

@@ -2304,17 +2304,20 @@ object TrainingEntries {
        |          FROM ugpr p LEFT JOIN uge3cnt c USING (piece)
        |          JOIN ugs3 s ON s.piece = p.piece)""".stripMargin
 
-  /** Suffix-array CTEs — mirrors graft.operators.SuffixArray: token
-    * positions per doc, dense-rank prefix doubling (OracleDoubling
-    * levels, −1 past-end padding), the suffix array as row_number
-    * over (final rank, doc_id, pos), the adjacent-pair LCP descent
-    * down the SAME levels, and the remainder clamp. Callers read
-    * `slcp(idx, l, a_doc, a_pos, b_doc, b_pos)` and
-    * `sfull(idx, doc_id, pos, lcp_prev)`. The engine derives its
-    * level count from the corpus (exact at any doc length); this
-    * static unroll is exact only up to 2^OracleDoubling-token docs,
-    * so `sguard` ERRORS (never silently truncates) past that bound —
-    * consumers must keep `WHERE (SELECT ok FROM sguard) = 0` (or
+  /** Suffix-array CTEs — an INDEPENDENT construction of the arrays
+    * graft.operators.SuffixArray builds: token positions per doc,
+    * Manber–Myers dense-rank prefix doubling (OracleDoubling levels,
+    * −1 past-end padding), the suffix array as row_number over
+    * (final rank, doc_id, pos), the adjacent-pair LCP descent down
+    * the SAME levels, and the remainder clamp. The engine does not
+    * double (it sorts on 5-token windows plus the span-group member
+    * order), so a hash match checks one algorithm against another.
+    * Callers read `slcp(idx, l, a_doc, a_pos, b_doc, b_pos)` and
+    * `sfull(idx, doc_id, pos, lcp_prev)`. The engine is exact at any
+    * doc length; this static unroll is exact only up to
+    * 2^OracleDoubling-token docs, so `sguard` ERRORS (never silently
+    * truncates) past that bound — consumers must keep
+    * `WHERE (SELECT ok FROM sguard) = 0` (or
     * equivalent) so the guard is evaluated.
     */
   private def suffixCtesWhere(docFilter: String): String =
@@ -3323,7 +3326,8 @@ object TrainingEntries {
          |WHERE (SELECT ok FROM sguard) = 0
          |GROUP BY f.doc_id ORDER BY f.doc_id""".stripMargin,
 
-    // Mirrors SuffixArray.suffixArrayWithLcp: the complete arrays
+    // Gates SuffixArray.suffixArrayWithLcp: the complete arrays, by
+    // prefix doubling (the engine sorts span groups instead)
     "q232_suffix_array" ->
       s"""WITH $suffixCtes
          |SELECT idx, doc_id, pos, lcp_prev FROM sfull

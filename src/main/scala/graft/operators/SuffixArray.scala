@@ -15,42 +15,37 @@ import graft.operators.OrderedOut.SmallOrderOps
   * Models Better" — public literature) build their exact
   * substring-dedup on.
   *
-  * Construction is token-level PREFIX DOUBLING (Manber–Myers, the
-  * standard distributed suffix-sort: Flick & Aluru 2015 describe the
-  * same shape for MPI — public literature): suffixes live WITHIN a
+  * Construction rests on the PREFIX-INTERVAL property proved for
+  * span groups below, not on prefix doubling. Suffixes live WITHIN a
   * document (the corpus-concatenation separators of the paper are
-  * exactly doc boundaries), rank 0 is the dense rank of the first
-  * token, and level m re-ranks by the pair (rank_m at pos, rank_m at
-  * pos + 2^m, −1 beyond the doc end) until 2^m covers the longest
-  * document. The suffix ARRAY is the total order (final rank,
-  * doc_id, pos); the LCP between order-adjacent suffixes descends
-  * the SAME doubling tables (add 2^m when the level-m ranks at the
-  * current offset agree), so every number is exact integer
-  * comparison — no hashing, no probabilistic anything — and the
-  * DuckDB oracle replays construction and LCP bit-for-bit (q230).
+  * exactly doc boundaries). A suffix's sort key is its first
+  * [[SaKeyLen]] tokens (`slice`: a shorter array sorts first, so an
+  * ending suffix precedes its extensions); members of a duplicated
+  * window add their in-group order from the span-group machinery
+  * ([[memberOrder]]). ONE global range sort then orders every
+  * suffix, and the LCP of adjacent suffixes is the common prefix of
+  * their windows across groups and the exact member LCP within one —
+  * exact token comparison throughout (the md5 group key only routes
+  * members). The DuckDB oracle (q232) still replays Manber–Myers
+  * prefix doubling: engine and oracle are independent algorithms
+  * that must agree bit-for-bit.
   *
-  * Scale: each doubling level is one equi-join (suffix table against
-  * itself shifted) plus one distributed dense rank — log(maxDocLen)
-  * corpus-sized shuffles, the textbook suffix-array cost. Dense
-  * ranking and the final array order use sort + zipWithIndex
-  * (range-partitioned global sort, per-partition offset scan) —
-  * NEVER a global single-partition window. The LCP descent is
-  * log(maxDocLen) equi-joins over the ADJACENT-PAIR table (n rows).
+  * Scale: no loop depth depends on document length. Suffix content
+  * ships only for duplicated windows (what the `sg_*_pairs` builds
+  * already ship); the rest is one (doc_id, pos) join and one
+  * range-partitioned sort + per-partition offset scan — never a
+  * global single-partition window, so a hot group spreads over
+  * partitions at every step.
   */
 object SuffixArray {
 
   private def $(name: String): Column = col(name)
 
-  /** (doc_id, pos, token): 1-based token positions of the normalized
-    * text — the suffix universe (empty docs contribute nothing).
-    */
-  def tokenPositions(documents: DataFrame): DataFrame =
-    documents.spread()
-      .select($("doc_id"),
-        posexplode(split(TextAnalysis.normText($("text")), " "))
-          .as(Seq("p0", "token")))
-      .filter(length($("token")) > 0)
-      .select($("doc_id"), ($("p0") + 1).cast("long").as("pos"), $("token"))
+  /** The SA's sort-key width: the warehouse's span-group width. */
+  private val SaKeyLen = 5
+
+  /** Span groups past this many members take the hot path. */
+  private val HotThreshold = 1024
 
   /** Append an order-preserving DENSE rank (1-based) over `keys` to
     * EVERY row of `df`, materialized (localCheckpoint): ONE global
@@ -59,16 +54,10 @@ object SuffixArray {
     * per partition — partitions-sized driver data, never rows) whose
     * prefix sums become each partition's rank offset (a key group
     * split across a partition boundary continues the previous
-    * partition's last rank), and one cached scan assigns ranks.
-    *
-    * This replaces round-16's distinct → sort → zipWithIndex → join-
-    * back construction: the distinct table, its own sort, AND the
-    * n-row join-back shuffle are gone — per doubling level the data
-    * now crosses the wire once (the sort) instead of four times,
-    * which was the chattiest computation in the repo (round-16
-    * audit). Rank values are identical by construction (dense,
-    * 1-based, key-order-preserving), so every downstream gate is
-    * bit-for-bit unchanged.
+    * partition's last rank), and one cached scan assigns ranks. The
+    * hot path's per-level block renumbering ([[hotGroup]]) rides it:
+    * the data crosses the wire once (the sort), and no key group is
+    * ever funnelled into one partition.
     */
   private def withDenseRank(df: DataFrame, keys: Seq[String],
       rankCol: String): DataFrame = {
@@ -147,134 +136,95 @@ object SuffixArray {
     } finally rdd.unpersist(false)
   }
 
-  /** Doubling levels the ORACLE unrolls (the SQL is a static string,
-    * so its level count cannot be data-derived): 2^OracleDoubling =
-    * 128 tokens, above every fixture's longest document. The ENGINE's
-    * level count is data-derived per corpus ([[doublingsFor]]) — past
-    * the corpus's longest doc extra levels are provably no-ops (past-
-    * end positions rank as −1, content-identical suffixes stay tied),
-    * so engine-at-derived-depth equals oracle-at-any-depth ≥ derived.
-    * The oracle SQL guards its own bound with an error() CTE: a
+  /** Doubling levels the ORACLE unrolls: the q230-q232 oracle SQL
+    * replays Manber–Myers prefix doubling as a static string, so its
+    * level count cannot be data-derived — 2^OracleDoubling = 128
+    * tokens, above every fixture's longest document. The engine does
+    * not double at all ([[suffixArrayWithLcp]]) and is exact at any
+    * length. The oracle guards its own bound with an error() CTE: a
     * fixture that outgrows 128 tokens fails LOUDLY instead of
     * hash-matching a silently truncated comparison.
     */
   val OracleDoubling = 7
 
-  /** Levels needed for EXACT suffix comparison of documents up to
-    * `maxDocLen` tokens: the least d with 2^d ≥ maxDocLen. Derived
-    * from the corpus at build time (one tiny aggregate), so suffix
-    * order is exact for ANY corpus — no fixed-depth footgun.
-    */
-  private[operators] def doublingsFor(maxDocLen: Long): Int = {
-    require(maxDocLen >= 1, s"maxDocLen=$maxDocLen must be >= 1")
-    var d = 0
-    while ((1L << d) < maxDocLen) d += 1
-    d
-  }
-
-  /** All prefix-doubling levels: element m of the result holds
-    * (doc_id, pos, r) where r is the dense rank of the length-2^m
-    * prefix of the suffix at (doc_id, pos) (−1-padded past the doc
-    * end). Exactly `doublings`+1 levels, each a narrow projection of
-    * a localCheckpointed ranked table — the LCP descent re-reads
-    * every one from cache. Each level costs ONE wide exchange (the
-    * [[withDenseRank]] sort); the distinct/join-back shuffles of the
-    * round-16 construction are gone.
-    */
-  private[operators] def doublingLevels(positions: DataFrame,
-      doublings: Int): Seq[DataFrame] = {
-    val r0 = withDenseRank(positions, Seq("token"), "r")
-      .select($("doc_id"), $("pos"), $("r"))
-    val levels = collection.mutable.ArrayBuffer(r0)
-    for (m <- 1 to doublings) {
-      val shift = 1L << (m - 1)
-      val cur = levels.last
-      val shifted = cur.select($("doc_id"),
-        ($("pos") - shift).as("pos"), $("r").as("r2"))
-      val paired = cur.join(shifted, Seq("doc_id", "pos"), "left")
-        .na.fill(-1L, Seq("r2"))
-      levels += withDenseRank(paired, Seq("r", "r2"), "rn")
-        .select($("doc_id"), $("pos"), $("rn").as("r"))
-    }
-    levels.toSeq
-  }
-
   /** The suffix array with its LCP array: (idx, doc_id, pos,
-    * lcp_prev) — idx is the suffix's 1-based position in (final
-    * rank, doc_id, pos) order and lcp_prev the exact longest common
+    * lcp_prev) — idx is the suffix's 1-based position in (suffix
+    * tokens, doc_id, pos) order and lcp_prev the exact longest common
     * token prefix with the suffix at idx−1 (0 at idx = 1). The two
-    * classic arrays, relationally.
+    * classic arrays, relationally, materialized (localCheckpoint).
+    *
+    * Every suffix carries its first [[SaKeyLen]] tokens as `key`;
+    * members of a duplicated full window also carry `sub`, their
+    * order inside the window's span group, and `lcp`, their exact
+    * common prefix with the member before them ([[memberOrder]]).
+    * One range sort on (key, sub, doc_id, pos) orders all suffixes;
+    * a partitions-sized stats collect ((row count, last key) per
+    * partition) gives each partition its idx offset and its
+    * predecessor's key, and one scan assigns idx and lcp_prev —
+    * the member `lcp` inside a group, else the common prefix of the
+    * adjacent keys. Correct by the prefix-interval property (see the
+    * span-group section): suffixes with different windows are
+    * ordered, and their LCP decided, by the windows alone.
     */
   def suffixArrayWithLcp(documents: DataFrame): DataFrame = {
-    val positions = tokenPositions(documents).localCheckpoint(true)
-    // lens is the clamp table below AND the depth driver: the level
-    // count derives from the corpus's longest document (one tiny
-    // aggregate), so suffix comparison is exact for ANY corpus
-    val lens = positions.groupBy($("doc_id"))
-      .agg(count(lit(1)).cast("long").as("n")).localCheckpoint(true)
-    val maxLen = lens.agg(max($("n"))).head() match {
-      case r if r.isNullAt(0) => 1L
-      case r => math.max(1L, r.getLong(0))
-    }
-    val levels = doublingLevels(positions, doublingsFor(maxLen))
-    val last = levels.last
-    val saSorted = last.orderBy($("r").asc, $("doc_id").asc, $("pos").asc)
     val spark = documents.sparkSession
-    val saSchema = StructType(
-      StructField("idx", LongType, nullable = false) +:
-        saSorted.schema.fields.toIndexedSeq)
-    val saRdd = saSorted.rdd
+    val keyed = documents.spread()
+      .select($("doc_id"), TextAnalysis.normText($("text")).as("norm"))
+      .where(length($("norm")) > 0)
+      .select($("doc_id"), split($("norm"), " ").as("toks"))
+      .select($("doc_id"), posexplode(transform(
+        sequence(lit(1), size($("toks"))),
+        i => slice($("toks"), i, lit(SaKeyLen)))).as(Seq("p0", "key")))
+      .select($("doc_id"), ($("p0") + 1).cast("long").as("pos"), $("key"))
+    val order = memberOrder(spanGroupStore(documents, SaKeyLen), documents,
+      SaKeyLen, HotThreshold)
+    val sorted = keyed.join(order, Seq("doc_id", "pos"), "left")
+      .orderBy($("key").asc, $("sub").asc, $("doc_id").asc, $("pos").asc)
+      .select($("doc_id"), $("pos"), $("key"), $("lcp"))
+    val schema = StructType(Seq(
+      StructField("idx", LongType, nullable = false),
+      sorted.schema("doc_id"),
+      StructField("pos", LongType, nullable = false),
+      StructField("lcp_prev", LongType, nullable = false)))
+    val rdd = sorted.rdd
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sa =
-      try spark.createDataFrame(
-          saRdd.zipWithIndex().map { case (row, i) =>
-            Row.fromSeq((i + 1L) +: row.toSeq) }, saSchema)
-        .select($("idx"), $("doc_id"), $("pos"))
-        .localCheckpoint(true)
-      finally saRdd.unpersist(false)
-    // adjacent pairs in suffix order; LCP by descending the levels
-    var pairs = sa
-      .join(sa.select(($("idx") - 1).as("idx"), $("doc_id").as("b_doc"),
-        $("pos").as("b_pos")), Seq("idx"))
-      .select($("idx"), $("doc_id").as("a_doc"), $("pos").as("a_pos"),
-        $("b_doc"), $("b_pos"), lit(0L).as("l"))
-    for (m <- levels.indices.reverse) {
-      val shift = 1L << m
-      val ra = levels(m).select($("doc_id").as("a_doc"),
-        $("pos").as("a_at"), $("r").as("ra"))
-      val rb = levels(m).select($("doc_id").as("b_doc"),
-        $("pos").as("b_at"), $("r").as("rb"))
-      pairs = pairs
-        .withColumn("a_at", $("a_pos") + $("l"))
-        .withColumn("b_at", $("b_pos") + $("l"))
-        .join(ra, Seq("a_doc", "a_at"), "left")
-        .join(rb, Seq("b_doc", "b_at"), "left")
-        // a missing rank means the suffix has ended — distinct
-        // sentinels so ended sides can never extend the match
-        .withColumn("l",
-          when(coalesce($("ra"), lit(-1L)) === coalesce($("rb"), lit(-2L)),
-            $("l") + shift).otherwise($("l")))
-        .select($("idx"), $("a_doc"), $("a_pos"), $("b_doc"), $("b_pos"),
-          $("l"))
-        .localCheckpoint(true)
-    }
-    // clamp to the shorter remaining suffix: identical-to-end
-    // suffixes match through their −1 padding at every level, so the
-    // descent's sum can exceed the true common length — the true LCP
-    // of padded-equal suffixes is exactly the shorter remainder
-    val clamped = pairs
-      .join(lens.select($("doc_id").as("a_doc"), $("n").as("a_n")),
-        Seq("a_doc"))
-      .join(lens.select($("doc_id").as("b_doc"), $("n").as("b_n")),
-        Seq("b_doc"))
-      .select($("idx"), least($("l"), $("a_n") - $("a_pos") + 1,
-        $("b_n") - $("b_pos") + 1).as("l"))
-    // lcp_prev keyed on the HIGHER index: row idx+1 carries the lcp
-    // between suffixes idx and idx+1
-    sa.join(clamped.select(($("idx") + 1).as("idx"), $("l").as("lcp_prev")),
-        Seq("idx"), "left")
-      .na.fill(0L, Seq("lcp_prev"))
-      .select($("idx"), $("doc_id"), $("pos"), $("lcp_prev"))
+    try {
+      // (rows, last key) per partition, in partition order
+      val stats = rdd.mapPartitions { it =>
+        var n = 0L
+        var last: Seq[String] = null
+        it.foreach { r => n += 1L; last = r.getSeq[String](2) }
+        Iterator((n, Option(last)))
+      }.collect()
+      // partition i starts after every row before it, and its first
+      // suffix's predecessor is the last key of the nearest non-empty
+      // partition before it (rows are range-sorted)
+      val offsets = stats.scanLeft(0L)(_ + _._1)
+      val carry = stats.scanLeft(Option.empty[Seq[String]])(
+        (prev, s) => s._2.orElse(prev))
+      val indexed = rdd.mapPartitionsWithIndex { (i, it) =>
+        var idx = offsets(i)
+        var prev = carry(i).orNull
+        it.map { r =>
+          val key = r.getSeq[String](2)
+          idx += 1L
+          val lcp =
+            if (!r.isNullAt(3)) r.getLong(3)
+            else if (prev == null) 0L
+            else prev.zip(key).takeWhile(p => p._1 == p._2).size.toLong
+          prev = key
+          Row(idx, r.get(0), r.getLong(1), lcp)
+        } ++ {
+          // the [[withDenseRank]] tie-back: a partition recomputed
+          // with resampled range bounds fails loudly
+          if (idx != offsets(i + 1)) throw new IllegalStateException(
+            s"suffixArrayWithLcp: partition $i ended at idx $idx, not " +
+              s"${offsets(i + 1)} — the sorted RDD was recomputed; rerun")
+          Iterator.empty
+        }
+      }
+      spark.createDataFrame(indexed, schema).localCheckpoint(true)
+    } finally rdd.unpersist(false)
   }
 
   /** Maximal repeated token spans of length ≥ `minLen`: every
@@ -340,7 +290,7 @@ object SuffixArray {
   // SPAN-GROUP maintenance — fold/retract for the suffix-repeat family
   //
   // The arrays themselves are corpus-global (a delivery shifts every
-  // dense rank), but the repeat PRODUCTS thresholded at minLen
+  // idx), but the repeat PRODUCTS thresholded at minLen
   // decompose exactly by the suffixes' first minLen tokens:
   //
   //   Two suffixes are SA-adjacent with clamped LCP >= minLen
@@ -356,7 +306,10 @@ object SuffixArray {
   // contradicting group adjacency) or is a strict prefix of p (then
   // c < a, not between). So the sets coincide, and each pair's LCP is
   // the plain common-prefix length of the two member suffixes —
-  // computable group-locally with NO prefix doubling.
+  // computable group-locally with NO prefix doubling. The same
+  // property builds the arrays themselves ([[suffixArrayWithLcp]]):
+  // windows order and separate the groups, [[memberOrder]] orders
+  // each group.
   //
   // That turns the family incremental: the STORE is (doc_id, pos, fp)
   // with fp = md5 of the position's minLen-token window — doc-local
@@ -376,7 +329,7 @@ object SuffixArray {
   // (license headers, boilerplate — the NORM in web-scale dedup)
   // would make one window partition hold every member's full
   // remaining suffix — so groups past `hotThreshold` members take
-  // the HOT PATH ([[hotGroupPairs]]): iterative bounded-slice
+  // the HOT PATH ([[hotGroup]]): iterative bounded-slice
   // refinement that keeps O(1) state per member per level and sorts
   // full token content only over each block's DISTINCT extension
   // slices (for repeated boilerplate: one). Both paths are
@@ -414,28 +367,62 @@ object SuffixArray {
     * groups read only their own docs).
     */
   def repeatedSpansWithKey(store: DataFrame, documents: DataFrame,
-      minLen: Long = 5L, hotThreshold: Int = 1024): DataFrame = {
+      minLen: Long = 5L, hotThreshold: Int = HotThreshold): DataFrame = {
     require(minLen >= 1, s"minLen=$minLen must be >= 1")
+    byHeat(store, hotThreshold)(
+      fps => windowMembers(store, fps, documents)
+        .filter($("doc1").isNotNull)
+        .select($("fp"), $("doc1"), $("pos1"),
+          $("doc_id").as("doc2"), $("pos").as("pos2"), $("lcp")),
+      members => hotGroup(members, documents, minLen)._2)
+  }
+
+  /** Every member of a duplicated span group with its place in the
+    * group's suffix order — (doc_id, pos, sub, lcp): (sub, doc_id,
+    * pos) orders one group's members as their suffixes sort, and lcp
+    * is the exact common prefix with the member before (null for the
+    * group's first). The in-group key of [[suffixArrayWithLcp]], from
+    * the same two paths as [[repeatedSpansWithKey]]: the window sort's
+    * row number, or the hot path's final block.
+    */
+  private def memberOrder(store: DataFrame, documents: DataFrame,
+      minLen: Long, hotThreshold: Int): DataFrame =
+    byHeat(store, hotThreshold)(
+      fps => windowMembers(store, fps, documents)
+        .select($("doc_id"), $("pos").cast("long").as("pos"), $("sub"),
+          $("lcp")),
+      members => {
+        val (state, pairs) = hotGroup(members, documents, minLen)
+        state.select($("doc_id"), $("pos").cast("long").as("pos"),
+            $("block").as("sub"))
+          .join(pairs.select($("doc2").as("doc_id"),
+            $("pos2").cast("long").as("pos"), $("lcp")),
+            Seq("doc_id", "pos"), "left")
+      })
+
+  /** Split a store's duplicated (≥ 2-member) groups by size: `cool`
+    * gets the fp list of groups with at most `hotThreshold` members,
+    * `hot` the member rows of the larger ones, and the two results
+    * union. One cheap store-scan probe first: the overwhelmingly
+    * common no-hot-group call keeps the round-17 single-plan shape
+    * verbatim.
+    */
+  private def byHeat(store: DataFrame, hotThreshold: Int)(
+      cool: DataFrame => DataFrame, hot: DataFrame => DataFrame): DataFrame = {
     require(hotThreshold >= 2, s"hotThreshold=$hotThreshold must be >= 2")
     val counts = store.groupBy($("fp"))
       .agg(count(lit(1)).as("n_occ"))
       .filter($("n_occ") >= 2)
-    // one cheap store-scan probe: the overwhelmingly common no-hot-
-    // group call keeps the round-17 single-plan shape verbatim
     val hasHot = !counts.filter($("n_occ") > hotThreshold).isEmpty
-    if (!hasHot)
-      windowSortPairs(store, counts.select($("fp")), documents)
+    if (!hasHot) cool(counts.select($("fp")))
     else {
-      val cool = counts.filter($("n_occ") <= hotThreshold).select($("fp"))
-      val hot = counts.filter($("n_occ") > hotThreshold).select($("fp"))
+      val hotFps = counts.filter($("n_occ") > hotThreshold).select($("fp"))
       // broadcast the hot-fp list (tiny by definition: <= members /
       // hotThreshold rows): a hash join keyed on fp would funnel a
       // hot group's entire membership into one task — the exact
       // pattern this path exists to avoid
-      windowSortPairs(store, cool, documents)
-        .unionByName(
-          hotGroupPairs(store.join(broadcast(hot), Seq("fp")), documents,
-            minLen))
+      cool(counts.filter($("n_occ") <= hotThreshold).select($("fp")))
+        .unionByName(hot(store.join(broadcast(hotFps), Seq("fp"))))
     }
   }
 
@@ -493,12 +480,15 @@ object SuffixArray {
   }
 
   /** The member-sized-group path of [[repeatedSpansWithKey]]: sort
-    * each duplicated group's member suffixes in one window. Partition
-    * memory is member-count × remaining-suffix length — right up to
-    * [[repeatedSpansWithKey]]'s `hotThreshold`, past which
-    * [[hotGroupPairs]] takes over.
+    * each duplicated group's member suffixes in one window — (fp,
+    * doc_id, pos, sub, doc1, pos1, lcp) per member, sub its row
+    * number in (suffix, doc_id, pos) order and (doc1, pos1, lcp) the
+    * member before it with their exact common prefix (null for the
+    * first). Partition memory is member-count × remaining-suffix
+    * length — right up to [[repeatedSpansWithKey]]'s `hotThreshold`,
+    * past which [[hotGroup]] takes over.
     */
-  private def windowSortPairs(store: DataFrame, dupFps: DataFrame,
+  private def windowMembers(store: DataFrame, dupFps: DataFrame,
       documents: DataFrame): DataFrame = {
     val members = store.join(dupFps, Seq("fp"))
     val toks = documents.spread()
@@ -513,13 +503,12 @@ object SuffixArray {
       .orderBy($("suf").asc, $("doc_id").asc, $("pos").asc)
     sufs
       .select($("fp"), $("doc_id"), $("pos"), $("suf"),
+        row_number().over(w).cast("long").as("sub"),
         lag($("doc_id"), 1).over(w).as("doc1"),
         lag($("pos"), 1).over(w).as("pos1"),
         lag($("suf"), 1).over(w).as("suf1"))
-      .filter($("doc1").isNotNull)
-      .select($("fp"), $("doc1"), $("pos1"),
-        $("doc_id").as("doc2"), $("pos").as("pos2"),
-        commonPrefixLen($("suf1"), $("suf")).as("lcp"))
+      .select($("fp"), $("doc_id"), $("pos"), $("sub"), $("doc1"),
+        $("pos1"), commonPrefixLen($("suf1"), $("suf")).as("lcp"))
   }
 
   /** HOT-GROUP path (round-17 verdict #2): group-local suffix
@@ -557,7 +546,9 @@ object SuffixArray {
     * so final (block, doc_id, pos) order IS (suffix, doc_id, pos)
     * order — pinned by the HotGroup differential spec and the q246
     * oracle gate. Adjacent members then pair with a row-local exact
-    * common-prefix fold, O(LCP) per output row.
+    * common-prefix fold, O(LCP) per output row. Returns the final
+    * member state (fp, doc_id, pos, rem, block) — [[memberOrder]]'s
+    * in-group order — and the pairs (fp, doc1, pos1, doc2, pos2, lcp).
     *
     * NO per-group single-partition step remains on this path: the
     * two rank assignments ride [[withDenseRank]]'s global range sort
@@ -568,8 +559,8 @@ object SuffixArray {
     * 18) — which is why the hot path is an above-threshold escape,
     * not the default.
     */
-  private def hotGroupPairs(members: DataFrame, documents: DataFrame,
-      minLen: Long): DataFrame = {
+  private def hotGroup(members: DataFrame, documents: DataFrame,
+      minLen: Long): (DataFrame, DataFrame) = {
     val toksAll = documents.spread()
       .select($("doc_id"),
         split(TextAnalysis.normText($("text")), " ").as("toks"))
@@ -651,8 +642,7 @@ object SuffixArray {
         off *= 2L
       }
     }
-    val adj = adjacentWithinFp(state)
-    adj
+    val pairs = adjacentWithinFp(state)
       .join(toksAll.select($("doc_id").as("doc1"), $("toks").as("toks1")),
         Seq("doc1"))
       .join(toksAll.select($("doc_id").as("doc2"), $("toks").as("toks2")),
@@ -661,6 +651,7 @@ object SuffixArray {
         commonPrefixLen(
           expr("slice(toks1, pos1, size(toks1) - pos1 + 1)"),
           expr("slice(toks2, pos2, size(toks2) - pos2 + 1)")).as("lcp"))
+    (state, pairs)
   }
 
   /** [[repeatedSpansWithKey]] in [[repeatedSpans]]' exact column
@@ -683,7 +674,7 @@ object SuffixArray {
     */
   def repeatedSpansFold(basePairs: DataFrame, foldedStore: DataFrame,
       delivery: DataFrame, documents: DataFrame,
-      minLen: Long = 5L, hotThreshold: Int = 1024): DataFrame = {
+      minLen: Long = 5L, hotThreshold: Int = HotThreshold): DataFrame = {
     val touched = spanGroupStore(delivery, minLen.toInt)
       .select($("fp")).distinct().localCheckpoint(true)
     val carried = basePairs.join(touched, Seq("fp"), "left_anti")
@@ -709,7 +700,7 @@ object SuffixArray {
     */
   def repeatedSpansRetract(basePairs: DataFrame, survivingStore: DataFrame,
       removed: DataFrame, documents: DataFrame,
-      minLen: Long = 5L, hotThreshold: Int = 1024): DataFrame = {
+      minLen: Long = 5L, hotThreshold: Int = HotThreshold): DataFrame = {
     val touched = spanGroupStore(removed, minLen.toInt)
       .select($("fp")).distinct().localCheckpoint(true)
     val carried = basePairs.join(touched, Seq("fp"), "left_anti")

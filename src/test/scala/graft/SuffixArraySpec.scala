@@ -5,7 +5,8 @@ import graft.operators.SuffixArray
 /** Semantic tests of the distributed suffix-array construction: the
   * q230-q232 oracles pin engine parity; these pin the arrays against
   * an INDEPENDENT in-memory suffix sort (plain Scala collections, no
-  * prefix doubling) on planted fixtures AND the full real fixture.
+  * span groups) on planted fixtures, a hot span group AND the full
+  * real fixture.
   */
 class SuffixArraySpec extends SparkSpec {
   import spark.implicits._
@@ -37,7 +38,9 @@ class SuffixArraySpec extends SparkSpec {
       (2L, "a shared phrase of six exact tokens here ends"),
       (3L, "prefix a shared phrase of six exact tokens differs after"),
       (4L, "the quick brown fox jumps over the lazy dog"), // exact dup of 1
-      (5L, "zz zz zz zz")                                  // self-repetition
+      (5L, "zz zz zz zz"),                                 // self-repetition
+      (6L, "   "),                                         // no tokens at all
+      (7L, "the quick brown")                              // shorter than a window
     )
     val got = SuffixArray.suffixArrayWithLcp(docs.toDF("doc_id", "text"))
       .as[(Long, Long, Long, Long)].collect().sortBy(_._1)
@@ -91,10 +94,10 @@ class SuffixArraySpec extends SparkSpec {
 
   test("long docs (> 128 tokens) compare exactly at the derived depth") {
     // two ~200-token docs sharing a 150-token span: a fixed 7-level
-    // unroll (the retired MaxDoubling) compared only 128-token
-    // prefixes and mis-ties these suffixes; the data-derived depth
-    // (8 levels for 200-token docs) must match the brute reference
-    // and surface the long repeat with its exact length
+    // doubling unroll (the oracle's OracleDoubling) compares only
+    // 128-token prefixes and mis-ties these suffixes; the engine's
+    // group-ordered construction must match the brute reference at
+    // any length and surface the long repeat with its exact length
     def words(seed: Int, n: Int): Seq[String] =
       (0 until n).map(i => s"w${(seed + i * 37) % 1000}x$i")
     val shared = (0 until 150).map(i => s"shared$i")
@@ -220,6 +223,59 @@ class SuffixArraySpec extends SparkSpec {
     // 10^4-member groups -> 9,999 adjacent pairs each, lcp = 6 and 5
     assert(hot.count(_._6 === 6L) === 9999)
     assert(hot.count(_._6 === 5L) === 9999)
+    // the arrays order both planted groups (70k suffixes) through the
+    // hot path's blocks
+    val got = SuffixArray.suffixArrayWithLcp(docs)
+      .as[(Long, Long, Long, Long)].collect().sortBy(_._1)
+    val want = brute(docs.as[(Long, String)].collect().toSeq)
+    assert(got.length === want.length)
+    got.zip(want).foreach { case (g, w) =>
+      assert(g === w, s"arrays diverge at idx ${g._1}") }
+  }
+
+  test("suffix array job count does not grow with document length") {
+    // the same 30 docs at ~20 and ~400 tokens, each with a shared
+    // 6-token phrase so both have duplicated windows: any loop whose
+    // depth follows document length (prefix doubling: 5 vs 9 levels)
+    // shows up as extra jobs
+    def docsOf(len: Int) = (1 to 30).map { d =>
+      val own = (0 until len - 6).map(i => s"d${d}w${(i * 7 + d) % 97}")
+      (d.toLong, (own.take(len / 2) ++ "one shared phrase of six words"
+        .split(" ") ++ own.drop(len / 2)).mkString(" "))
+    }.toDF("doc_id", "text")
+    // jobs are counted by job group, so events still queued from
+    // earlier work never leak into a count
+    def jobsFor(docs: org.apache.spark.sql.DataFrame, group: String): Int = {
+      val sc = spark.sparkContext
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (Option(e.properties).exists(
+              _.getProperty("spark.jobGroup.id") == group))
+            jobs.incrementAndGet()
+      }
+      val in = docs.localCheckpoint(true)
+      sc.addSparkListener(l)
+      sc.setJobGroup(group, "suffix array job count")
+      try {
+        SuffixArray.suffixArrayWithLcp(in).count()
+        // the bus delivers asynchronously: wait until the count settles
+        val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
+        var last = -1; var stable = 0
+        while (stable < 3 && System.nanoTime() < deadline) {
+          Thread.sleep(100)
+          val c = jobs.get()
+          if (c == last) stable += 1 else { stable = 0; last = c }
+        }
+      } finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
+      jobs.get
+    }
+    val short = jobsFor(docsOf(20), "sa-short")
+    val long = jobsFor(docsOf(400), "sa-long")
+    assert(short > 0)
+    assert(long === short, s"$long jobs at ~400 tokens vs $short at ~20")
+    info(s"$short suffix-array jobs at both lengths")
   }
 
   test("construction is shard-order invariant") {
