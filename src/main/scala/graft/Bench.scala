@@ -1,13 +1,12 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicLong
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.json4s._
+import org.json4s.jackson.JsonMethods.parse
 
 /** Benchmark main (driver contract): times every SparkEntry query at
   * SPARK_GRAFT_SF_DIR, prints ONE COMPACT JSON line.
@@ -53,11 +52,10 @@ import org.apache.spark.sql.SparkSession
   *    runs of one query only taints one pass when runs are minutes
   *    apart. Medians and executor cpu/GC ride along for cross-checking;
   *  - executor cpu/GC are attributed per query via the job-group id
-  *    set around each timed run: stages are mapped to their group by
-  *    the job-start event, so attribution is exact no matter how late
-  *    the async listener bus delivers task-end events (the previous
-  *    global delta-window charged late events to whichever query ran
-  *    next — r4 showed 2.5x swings on identical code);
+  *    set around each timed run ([[JobGroupMetrics]]), so attribution
+  *    is exact no matter how late the async listener bus delivers
+  *    task-end events (a global delta window showed 2.5x swings on
+  *    identical code);
   *  - timed pass materializes via the noop sink — full execution
   *    including final sorts (a bare count() lets Catalyst elide
   *    orderBys) with zero sink cost;
@@ -99,6 +97,69 @@ object Bench {
   /** The warehouse families, in build order. */
   private val Families = Seq("pair", "ann", "tok", "decon", "lr", "suffix")
 
+  /** One query's min and median wall over its successful passes, and
+    * its executor cpu and GC seconds per successful pass.
+    */
+  private[graft] final case class Stat(min: Double, med: Double, cpuSec: Double, gcSec: Double)
+
+  private def fmt(d: Double, digits: Int = 4): String =
+    s"%.${digits}f".formatLocal(java.util.Locale.ROOT, d)
+
+  private def regJson(rs: Seq[(String, Double, Double)]): String = rs
+    .map { case (n, wr, cr) =>
+      "\"" + n + "\":[" + fmt(wr, 2) + "," + fmt(cr, 2) + "]" }
+    .mkString("{", ",", "}")
+
+  /** bench_detail.json: the full telemetry, per query and per leg,
+    * and each failure's message.
+    */
+  private[graft] def detailJson(sfDir: String, repeats: Int,
+      results: Seq[(String, Stat)], composed: Seq[Leg], incremental: Seq[Leg],
+      regressions: Seq[(String, Double, Double)],
+      failed: Seq[(String, String)]): String = {
+    def obj(f: Stat => Double): String =
+      results.map { case (k, st) => "\"" + k + "\":" + fmt(f(st)) }
+        .mkString("{", ",", "}")
+    def legsJson(legs: Seq[Leg]): String = legs
+      .collect { case Leg(k, Right(v)) => "\"" + k + "\":" + fmt(v) }
+      .mkString("{", ",", "}")
+    val failedJson = failed
+      .map { case (n, m) => Verify.jsonString(n) + ":" + Verify.jsonString(m) }
+      .mkString("{", ",", "}")
+    s"""{"metric":"total","value":${fmt(results.map(_._2.min).sum, 6)},"unit":"sec",""" +
+      s""""sf":"$sfDir","runs":$repeats,"queries":${obj(_.min)},""" +
+      s""""medians":${obj(_.med)},"cpu_sec":${obj(_.cpuSec)},""" +
+      s""""gc_sec":${obj(_.gcSec)},"composed":${legsJson(composed)},""" +
+      s""""incremental":${legsJson(incremental)},""" +
+      s""""regressions":${regJson(regressions)},""" +
+      s""""failed":$failedJson}"""
+  }
+
+  /** A prior run's (wall, cpu) dicts, read from its JSON object `run`
+    * (the detail file, or a headline) with the cpu dict under
+    * `cpuKey`; None when that run was at another scale factor.
+    */
+  private[graft] def priorDicts(run: JValue, sfDir: String,
+      cpuKey: String): Option[(Map[String, Double], Map[String, Double])] = {
+    def numbers(v: JValue): Map[String, Double] = v match {
+      case JObject(fs) => fs.collect { case (k, JDouble(d)) => k -> d }.toMap
+      case _ => Map.empty
+    }
+    if (run \ "sf" != JString(sfDir)) None
+    else Some((numbers(run \ "queries"), numbers(run \ cpuKey)))
+  }
+
+  /** The headline a driver artifact (BENCH_r<N>.json) wraps: the last
+    * line of its captured output `tail` that holds one.
+    */
+  private[graft] def wrappedHeadline(artifact: JValue): JValue = {
+    val tail = artifact \ "tail" match { case JString(t) => t; case _ => "" }
+    val head = "{\"metric\""
+    tail.split('\n').reverseIterator
+      .collectFirst { case l if l.contains(head) => parse(l.substring(l.indexOf(head))) }
+      .getOrElse(throw new IllegalArgumentException("no headline in its tail"))
+  }
+
   def main(args: Array[String]): Unit = {
     require(sys.env.get("SPARK_GRAFT_WAREHOUSE").isEmpty,
       "SPARK_GRAFT_WAREHOUSE is set: a durable warehouse would turn the " +
@@ -107,6 +168,25 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val repeats = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "bench_detail.json")
+    // a prior run at this SF that yields no wall dict would silently
+    // collapse its baseline to empty (round-17 ADVICE): say so, once
+    def baseline(what: String, run: => JValue,
+        cpuKey: String): (Map[String, Double], Map[String, Double]) =
+      try priorDicts(run, sfDir, cpuKey) match {
+        case None => (Map.empty, Map.empty)
+        case Some((w, c)) =>
+          if (w.isEmpty) System.err.println(s"[bench] WARNING: $what is " +
+            "at this SF but has no queries dict — its regression " +
+            "baseline starts empty this run")
+          (w, c)
+      } catch {
+        case _: java.nio.file.NoSuchFileException => (Map.empty, Map.empty)
+        case e: Throwable =>
+          System.err.println(s"[bench] WARNING: $what could not be read " +
+            s"(${e.getMessage}) — its regression baseline starts empty " +
+            "this run")
+          (Map.empty, Map.empty)
+      }
     // the PREVIOUS round's detail file (about to be overwritten below):
     // its query set splits this round's total into carried vs new cost,
     // so a round-over-round headline jump self-describes as surface
@@ -118,51 +198,16 @@ object Bench {
     // self-adjudicating regression flag below: wall up with cpu flat
     // is host noise (this box swings 10-200x), wall up AND cpu up is
     // a plan regression — only the latter flags.
-    def prevDict(txt: String, tag: String): Map[String, Double] = {
-      val t = "\"" + tag + "\":{"
-      val start = txt.indexOf(t)
-      val end = if (start < 0) -1 else txt.indexOf('}', start)
-      if (start < 0 || end < 0) Map.empty
-      else "\"([^\"]+)\":(-?[0-9.eE+]+)".r
-        .findAllMatchIn(txt.substring(start + t.length, end))
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    }
-    val (prevWall, prevCpu): (Map[String, Double], Map[String, Double]) =
-      try {
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          Paths.get(detailPath)), "UTF-8")
-        val prevSf = "\"sf\":\"([^\"]+)\"".r.findFirstMatchIn(txt)
-          .map(_.group(1))
-        if (!prevSf.contains(sfDir)) (Map.empty, Map.empty)
-        else {
-          val w = prevDict(txt, "queries")
-          // a present-but-unparseable detail file silently collapsed
-          // the carried/regression baselines to empty (round-17
-          // ADVICE) — say so, once, instead of hiding it
-          if (w.isEmpty) System.err.println(
-            s"[bench] WARNING: prior detail file $detailPath exists " +
-              "at this SF but its queries dict failed to parse — " +
-              "carried/regression tracking starts empty this run")
-          (w, prevDict(txt, "cpu_sec"))
-        }
-      } catch {
-        case _: java.nio.file.NoSuchFileException => (Map.empty, Map.empty)
-        case e: Throwable =>
-          System.err.println(
-            s"[bench] WARNING: prior detail file $detailPath could not " +
-              s"be read (${e.getMessage}) — carried/regression tracking " +
-              "starts empty this run")
-          (Map.empty, Map.empty)
-      }
+    val (prevWall, prevCpu) = baseline(s"prior detail file $detailPath",
+      parse(Files.readString(Paths.get(detailPath))), "cpu_sec")
     val prevQueries: Set[String] = prevWall.keySet
     // SECOND regression baseline (round-17 verdict #3): the prior
     // round's DRIVER artifact (BENCH_r{N}.json in the working dir,
     // highest N wins). The detail file alone let a regression slip
     // when it was overwritten mid-round by a run that had already
     // inflated — the driver artifact is the round boundary. The file
-    // wraps the headline JSON inside a "tail" string, so unescape
-    // before the same regex scan; its sf field gates it like the
-    // detail file's.
+    // wraps the headline inside a "tail" string of captured output;
+    // the headline's sf field gates it like the detail file's.
     val (roundWall, roundCpu): (Map[String, Double], Map[String, Double]) = {
       val rx = "^BENCH_r(\\d+)\\.json$".r
       val files = Option(new java.io.File(".").listFiles).toSeq.flatten
@@ -172,27 +217,8 @@ object Bench {
         })
       files.sortBy(-_._1).headOption match {
         case None => (Map.empty, Map.empty)
-        case Some((n, f)) =>
-          try {
-            val txt = new String(java.nio.file.Files.readAllBytes(
-              f.toPath), "UTF-8").replace("\\\"", "\"")
-            val sfOk = ("\"sf\":\"?" + java.util.regex.Pattern.quote(sfDir))
-              .r.findFirstIn(txt).isDefined
-            if (!sfOk) (Map.empty, Map.empty)
-            else {
-              val w = prevDict(txt, "queries")
-              if (w.isEmpty) System.err.println(
-                s"[bench] WARNING: driver artifact ${f.getName} parsed " +
-                  "to an empty queries dict — round-boundary regression " +
-                  "baseline unavailable")
-              (w, prevDict(txt, "cpu"))
-            }
-          } catch { case e: Throwable =>
-            System.err.println(
-              s"[bench] WARNING: driver artifact ${f.getName} could not " +
-                s"be read (${e.getMessage})")
-            (Map.empty, Map.empty)
-          }
+        case Some((_, f)) => baseline(s"driver artifact ${f.getName}",
+          wrappedHeadline(parse(Files.readString(f.toPath))), "cpu")
       }
     }
     val spark = SparkSession.builder()
@@ -206,28 +232,7 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // stage → job-group mapping + per-group counters (see Scaladoc).
-    val stageGroup = new ConcurrentHashMap[Integer, String]()
-    val cpuNsByQ = new ConcurrentHashMap[String, AtomicLong]()
-    val gcMsByQ = new ConcurrentHashMap[String, AtomicLong]()
-    val eventsSeen = new AtomicLong(0L)
-    def bump(m: ConcurrentHashMap[String, AtomicLong], k: String, v: Long): Unit =
-      m.computeIfAbsent(k, _ => new AtomicLong(0L)).addAndGet(v)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        val g = Option(j.properties).map(_.getProperty("spark.jobGroup.id")).orNull
-        if (g != null) j.stageIds.foreach(sid => stageGroup.put(sid, g))
-      }
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        eventsSeen.incrementAndGet()
-        val m = t.taskMetrics
-        val g = stageGroup.get(t.stageId)
-        if (m != null && g != null) {
-          bump(cpuNsByQ, g, m.executorCpuTime)
-          bump(gcMsByQ, g, m.jvmGCTime)
-        }
-      }
-    })
+    val metrics = JobGroupMetrics.attach(spark.sparkContext)
 
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
 
@@ -237,10 +242,9 @@ object Bench {
     val warmDir = "/root/testdata/sf0.001"
     if (new java.io.File(warmDir).isDirectory && warmDir != sfDir)
       ordered.foreach { case (n, f) =>
+        // its own `<name> warmup` group: no timed-pass total reads it
         timed(spark, s"$n warmup")(noop(f(spark, warmDir)))
       }
-    // warmup work must not count toward the timed-pass cpu/GC totals
-    cpuNsByQ.clear(); gcMsByQ.clear()
 
     // the warehouse families at the BENCH SF, each timed through the
     // build every consumer entry serves from; they run before the
@@ -284,21 +288,7 @@ object Bench {
       }
     val failed = failures(composed ++ passes ++ incremental)
 
-    // drain the async listener bus before reading the counters: wait
-    // until no event has arrived for 3 consecutive 100 ms polls.
-    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-    var lastCount = -1L; var stable = 0
-    while (stable < 3 && System.nanoTime() < deadline) {
-      Thread.sleep(100)
-      val c = eventsSeen.get()
-      if (c == lastCount) stable += 1 else { stable = 0; lastCount = c }
-    }
-
-    final case class Stat(min: Double, med: Double, cpuSec: Double, gcSec: Double)
-    def fmt(d: Double, digits: Int = 4): String =
-      s"%.${digits}f".formatLocal(java.util.Locale.ROOT, d)
-    def ctr(m: ConcurrentHashMap[String, AtomicLong], k: String): Long =
-      Option(m.get(k)).map(_.get()).getOrElse(0L)
+    metrics.drain()
 
     // a query with no successful pass has no stat at all (it is listed
     // under failed); cpu/gc average over SUCCESSFUL passes only —
@@ -307,14 +297,12 @@ object Bench {
     val results: Seq[(String, Stat)] = ordered.flatMap { case (name, _) =>
       samples.get(name).map { found =>
         val s = found.sorted
+        val m = metrics(name)
         name -> Stat(s.head, s(s.size / 2),
-          ctr(cpuNsByQ, name) / 1e9 / s.size, ctr(gcMsByQ, name) / 1e3 / s.size)
+          m.cpuNs / 1e9 / s.size, m.gcMs / 1e3 / s.size)
       }
     }
 
-    def obj(f: Stat => Double, digits: Int = 4): String =
-      results.map { case (k, st) => "\"" + k + "\":" + fmt(f(st), digits) }
-        .mkString("{", ",", "}")
     val total = results.map(_._2.min).sum
 
     // self-adjudicating regression flag (round-16 verdict #8,
@@ -358,27 +346,9 @@ object Bench {
         if (hits.isEmpty) None
         else Some((n, hits.map(_._1).max, hits.map(_._2).max))
     }.sortBy(-_._2)
-    def regJson(rs: Seq[(String, Double, Double)]): String = rs
-      .map { case (n, wr, cr) =>
-        "\"" + n + "\":[" + fmt(wr, 2) + "," + fmt(cr, 2) + "]" }
-      .mkString("{", ",", "}")
-
-    def legsJson(legs: Seq[Leg]): String = legs
-      .collect { case Leg(k, Right(v)) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    val failedJson = failed
-      .map { case (n, m) => Verify.jsonString(n) + ":" + Verify.jsonString(m) }
-      .mkString("{", ",", "}")
-    // full telemetry to a file (never truncated by output capture);
-    // the failure messages go last, after every dict prevDict reads
-    Files.writeString(Paths.get(detailPath),
-      s"""{"metric":"total","value":${fmt(total, 6)},"unit":"sec",""" +
-        s""""sf":"$sfDir","runs":$repeats,"queries":${obj(_.min)},""" +
-        s""""medians":${obj(_.med)},"cpu_sec":${obj(_.cpuSec)},""" +
-        s""""gc_sec":${obj(_.gcSec)},"composed":${legsJson(composed)},""" +
-        s""""incremental":${legsJson(incremental)},""" +
-        s""""regressions":${regJson(regressions)},""" +
-        s""""failed":$failedJson}""")
+    // full telemetry to a file (never truncated by output capture)
+    Files.writeString(Paths.get(detailPath), detailJson(sfDir, repeats,
+      results, composed, incremental, regressions, failed))
     // the one stdout line: compact, driver-parseable. The driver
     // captures a bounded tail (~2000 chars) of process output, so the
     // line must FIT — round 6's 108-query map exceeded the window even

@@ -35,8 +35,8 @@ import graft.sources.Tables
   * `<family>-v<LayoutVersion>-<corpus fingerprint>`, where the corpus
   * fingerprint is an md5 over the input tables' file listing
   * (name, length, mtime — the Spark file-index identity). So:
-  *  - within one JVM, Bench's build legs, every consumer entry and
-  *    the demos SHARE one build — how a warehouse amortizes artifact
+  *  - within one JVM, Bench's build legs and every consumer entry
+  *    SHARE one build — how a warehouse amortizes artifact
   *    cost across jobs — and rebuild happens ONLY when the corpus
   *    content changes (a regenerated fixture gets fresh mtimes →
   *    new key);

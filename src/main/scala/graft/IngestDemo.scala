@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -9,7 +7,7 @@ import graft.Overlap.inParallel
 import graft.operators.{Curation, Dedup, NgramLm, Similarity, SubstringDedup, SuffixArray, TextAnalysis}
 import graft.sources.Tables
 
-/** The PRODUCTION entry point for CONTINUOUS ingest — one corpus
+/** The PRODUCTION pipeline for CONTINUOUS ingest — one corpus
   * delivery driven end-to-end against persisted indexes, the way a
   * continuously-crawled corpus actually grows. [[ComposedArtifacts]]
   * is the batch story (build artifacts once, consumers collapse);
@@ -85,9 +83,9 @@ import graft.sources.Tables
   * persisted artifacts exactly as a scheduled production job would,
   * so the measured marginal cost includes the artifact IO.
   *
-  * `runMain graft.IngestDemo [sfDir] [workDir]`. Bench runs
-  * [[stages]] (not [[checks]]) at the bench SF and reports the
-  * marginal delivery cost under "incremental".
+  * Bench runs [[stages]] (not [[checks]]) at the bench SF and
+  * reports the marginal delivery cost under "incremental";
+  * `IngestSpec` runs the stages and every check.
   */
 object IngestDemo {
   /** Fixture defaults for the NB supervision labels — parameters of
@@ -1267,67 +1265,5 @@ object IngestDemo {
               "non-empty vector delivery")
         }
       })
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val work = args.drop(1).headOption.getOrElse(
-      Files.createTempDirectory("graft-ingest").toString)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-ingest-demo")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    var bootSec = 0.0; var incSec = 0.0; var calSec = 0.0
-    for ((name, fn) <- stages(spark, sfDir, work)) {
-      val t0 = System.nanoTime()
-      fn()
-      val sec = (System.nanoTime() - t0) / 1e9
-      if (name.startsWith("boot_")) bootSec += sec
-      else if (name.startsWith("cal_")) calSec += sec
-      else incSec += sec
-      println(f"[ingest] $name%-28s $sec%7.2f s")
-      spark.sharedState.cacheManager.clearCache()
-    }
-    // the delivery's funnel, for the log: crawled -> admitted
-    def n(p: String) = spark.read.parquet(s"$work/$p").count()
-    println(s"[ingest] funnel: delivery=${n("delivery_status")} " +
-      s"exact=${n("admit_exact")} near=${n("admit_near")} " +
-      s"span=${n("admit_span")} admitted=${n("admitted")}")
-    for ((name, fn) <- checks(spark, sfDir, work)) {
-      fn()
-      println(s"[ingest] check ok: $name")
-      spark.sharedState.cacheManager.clearCache()
-    }
-    // one takedown against the v1 generation: retract a removal slice
-    // from every store, then prove v2 == rebuild over the survivors
-    var tdnSec = 0.0
-    for ((name, fn) <- takedownStages(spark, sfDir, work)) {
-      val t0 = System.nanoTime()
-      fn()
-      val sec = (System.nanoTime() - t0) / 1e9
-      tdnSec += sec
-      println(f"[ingest] $name%-28s $sec%7.2f s")
-      spark.sharedState.cacheManager.clearCache()
-    }
-    println(s"[ingest] takedown: removed=${n("removed_docs")} docs " +
-      s"from a v1 corpus of ${n("fp_store_v1")}")
-    for ((name, fn) <- takedownChecks(spark, sfDir, work)) {
-      fn()
-      println(s"[ingest] check ok: $name")
-      spark.sharedState.cacheManager.clearCache()
-    }
-    println(f"[ingest] bootstrap $bootSec%7.2f s; " +
-      f"marginal delivery $incSec%7.2f s; " +
-      f"recalibration $calSec%7.2f s; " +
-      f"takedown $tdnSec%7.2f s " +
-      "(every fold asserted == from-scratch over the surviving corpus)")
-    spark.stop()
   }
 }

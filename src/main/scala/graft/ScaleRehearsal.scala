@@ -1,9 +1,7 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicLong
+import scala.util.control.NonFatal
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -34,7 +32,9 @@ import graft.sources.Tables
   * of query-name substrings to rehearse a single family member fast.
   * Each factor runs the selection once (cold plans, no warmup: the
   * comparison is factor-vs-factor under identical conditions, not
-  * absolute).
+  * absolute). A leg that throws prints no row; the run then ends with
+  * one `{"failed_n":…,"failed":[…]}` line naming every failed leg and
+  * exits 1.
   */
 object ScaleRehearsal {
 
@@ -118,47 +118,12 @@ object ScaleRehearsal {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // per-job-group counters (the Bench attribution pattern) + a
-    // PER-TASK shuffle-read sample per group, for the skew legs'
-    // straggler diagnostic (max ≫ p50 = one task ate the hot key)
-    val stageGroup = new ConcurrentHashMap[Integer, String]()
-    def counter() = new ConcurrentHashMap[String, AtomicLong]()
-    val cpuNs = counter(); val shWr = counter(); val shRd = counter()
-    val taskShRd = new ConcurrentHashMap[String,
-      java.util.concurrent.ConcurrentLinkedQueue[Long]]()
-    def bump(m: ConcurrentHashMap[String, AtomicLong], k: String, v: Long): Unit =
-      m.computeIfAbsent(k, _ => new AtomicLong(0L)).addAndGet(v)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        val g = Option(j.properties).map(_.getProperty("spark.jobGroup.id")).orNull
-        if (g != null) j.stageIds.foreach(sid => stageGroup.put(sid, g))
-      }
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        val g = stageGroup.get(t.stageId)
-        if (m != null && g != null) {
-          bump(cpuNs, g, m.executorCpuTime)
-          bump(shWr, g, m.shuffleWriteMetrics.bytesWritten)
-          bump(shRd, g, m.shuffleReadMetrics.totalBytesRead)
-          val rd = m.shuffleReadMetrics.totalBytesRead
-          if (rd > 0) taskShRd.computeIfAbsent(g,
-            _ => new java.util.concurrent.ConcurrentLinkedQueue[Long]()).add(rd)
-        }
-      }
-    })
-
-    def ctr(m: ConcurrentHashMap[String, AtomicLong], k: String): Long =
-      Option(m.get(k)).map(_.get()).getOrElse(0L)
-    // (p50, max, n) over the group's per-task shuffle-read bytes —
-    // shuffle-reading tasks only, so scan-only tasks don't dilute
-    def taskStats(k: String): (Long, Long, Int) = {
-      val q = taskShRd.get(k)
-      if (q == null || q.isEmpty) (0L, 0L, 0)
-      else {
-        val arr = q.toArray(Array.empty[java.lang.Long]).map(_.longValue).sorted
-        (arr(arr.length / 2), arr.last, arr.length)
-      }
-    }
+    // per-job-group cpu and shuffle, and per-task shuffle reads for
+    // the skew legs' straggler diagnostic (max ≫ p50 = one task ate
+    // the hot key)
+    val metrics = JobGroupMetrics.attach(spark.sparkContext)
+    // legs that threw: they print no row, and the run exits 1
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
 
     val t = Tables(spark, sfDir)
 
@@ -635,9 +600,11 @@ object ScaleRehearsal {
         }
         val t0 = System.nanoTime()
         val rows =
-          try { val n = leg.fn().count(); n }
-          catch { case e: Throwable =>
-            System.err.println(s"[scale] $g failed: ${e.getMessage}"); -1L
+          try Some(leg.fn().count())
+          catch { case NonFatal(e) =>
+            System.err.println(s"[scale] $g failed: ${e.getClass.getName}: ${e.getMessage}")
+            failed += g
+            None
           } finally {
             spark.sparkContext.clearJobGroup()
             if (leg.noBroadcast) {
@@ -655,17 +622,20 @@ object ScaleRehearsal {
         // its own signatures/shingles); operator-internal persists
         // unpersist themselves
         val wall = (System.nanoTime() - t0) / 1e9
-        // let the async bus drain so the per-task stats are complete
-        Thread.sleep(300)
-        val (p50, mx, nTasks) = taskStats(g)
-        val legDocs = if (leg.needsSkewDocs) nSkew else nd
-        println(f"""{"factor":$f,"query":"${leg.name}","rows":$rows,""" +
-          f""""docs":$legDocs,"vecs":$ne,"wall_sec":$wall%.2f,""" +
-          f""""cpu_sec":${ctr(cpuNs, g) / 1e9}%.2f,""" +
-          f""""shuffle_write_mb":${ctr(shWr, g) / 1e6}%.1f,""" +
-          f""""shuffle_read_mb":${ctr(shRd, g) / 1e6}%.1f,""" +
-          f""""task_shrd_p50_mb":${p50 / 1e6}%.2f,""" +
-          f""""task_shrd_max_mb":${mx / 1e6}%.2f,"sh_tasks":$nTasks}""")
+        rows.foreach { n =>
+          metrics.drain()
+          val m = metrics(g)
+          val sh = m.taskShuffleReads.sorted
+          val (p50, mx) = if (sh.isEmpty) (0L, 0L) else (sh(sh.size / 2), sh.last)
+          val legDocs = if (leg.needsSkewDocs) nSkew else nd
+          println(f"""{"factor":$f,"query":"${leg.name}","rows":$n,""" +
+            f""""docs":$legDocs,"vecs":$ne,"wall_sec":$wall%.2f,""" +
+            f""""cpu_sec":${m.cpuNs / 1e9}%.2f,""" +
+            f""""shuffle_write_mb":${m.shuffleWriteBytes / 1e6}%.1f,""" +
+            f""""shuffle_read_mb":${m.shuffleReadBytes / 1e6}%.1f,""" +
+            f""""task_shrd_p50_mb":${p50 / 1e6}%.2f,""" +
+            f""""task_shrd_max_mb":${mx / 1e6}%.2f,"sh_tasks":${sh.size}}""")
+        }
       }
       // ---- end-to-end IngestDemo rehearsal (select "ingest_e2e") ----
       // the WHOLE boot + one-delivery path — artifact IO included,
@@ -721,7 +691,7 @@ object ScaleRehearsal {
           try fn() finally spark.sparkContext.clearJobGroup()
           wallBy(phase) += (System.nanoTime() - t0) / 1e9
         }
-        Thread.sleep(1000) // let the async listener bus drain
+        metrics.drain()
         // rows = the phase's own work unit: the fixed delivery for
         // delivery, the removal slice (~1/7th of v1) for takedown,
         // the corpus for boot/recal — so per-row normalization reads
@@ -732,12 +702,13 @@ object ScaleRehearsal {
           val n = if (phase == "delivery") nDel
             else if (phase == "takedown") nRemoved
             else nBase
+          val m = metrics(g)
           println(f"""{"factor":$f,"query":"ingest_e2e_$phase",""" +
             f""""rows":$n,"docs":$nBase,"vecs":0,""" +
             f""""wall_sec":${wallBy(phase)}%.2f,""" +
-            f""""cpu_sec":${ctr(cpuNs, g) / 1e9}%.2f,""" +
-            f""""shuffle_write_mb":${ctr(shWr, g) / 1e6}%.1f,""" +
-            f""""shuffle_read_mb":${ctr(shRd, g) / 1e6}%.1f}""")
+            f""""cpu_sec":${m.cpuNs / 1e9}%.2f,""" +
+            f""""shuffle_write_mb":${m.shuffleWriteBytes / 1e6}%.1f,""" +
+            f""""shuffle_read_mb":${m.shuffleReadBytes / 1e6}%.1f}""")
         }
         FsUtil.rmTree(new java.io.File(work))
         iBase.unpersist(false); iDelivery.unpersist(false)
@@ -757,5 +728,10 @@ object ScaleRehearsal {
       if (sel.exists(_.needsGateIdx)) gateIdx._3.unpersist(false)
     }
     spark.stop()
+    if (failed.nonEmpty) {
+      println(failed.map(Verify.jsonString).mkString(
+        s"""{"failed_n":${failed.size},"failed":[""", ",", "]}"))
+      sys.exit(1)
+    }
   }
 }

@@ -17,8 +17,8 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * allocates a lambda frame per element and boxes every long — and
   * the ANN family evaluates one fold per (vector × centroid/codeword)
   * probe, which made the interpreted fold the family's dominant
-  * executor-cpu cost (StageProbe: assignment legs spent 12-20
-  * cpu-s at sf0.1 with shuffle near zero). As native expressions the
+  * executor-cpu cost (the assignment legs spent 12-20 cpu-s at
+  * sf0.1 with shuffle near zero). As native expressions the
   * loop runs on unboxed primitives inside whole-stage codegen.
   *
   * Semantics are bit-identical to the composed form on the family's

@@ -5,8 +5,7 @@ import java.nio.file.Files
 /** IngestDemo end-to-end at sf0.001: every stage runs, the delivery
   * funnel is a monotone non-empty chain, and every fold/invariant
   * check passes — the incremental-delivery pipeline's
-  * fold==from-scratch contract as part of `sbt test`, not just the
-  * runnable demo.
+  * fold==from-scratch contract as part of `sbt test`.
   */
 class IngestSpec extends SparkSpec {
   private val sfDir = "/root/testdata/sf0.001"

@@ -245,34 +245,19 @@ class SuffixArraySpec extends SparkSpec {
     }.toDF("doc_id", "text")
     // jobs are counted by job group, so events still queued from
     // earlier work never leak into a count
+    val sc = spark.sparkContext
+    val metrics = JobGroupMetrics.attach(sc)
     def jobsFor(docs: org.apache.spark.sql.DataFrame, group: String): Int = {
-      val sc = spark.sparkContext
-      val jobs = new java.util.concurrent.atomic.AtomicInteger()
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          if (Option(e.properties).exists(
-              _.getProperty("spark.jobGroup.id") == group))
-            jobs.incrementAndGet()
-      }
       val in = docs.localCheckpoint(true)
-      sc.addSparkListener(l)
       sc.setJobGroup(group, "suffix array job count")
-      try {
-        SuffixArray.suffixArrayWithLcp(in).count()
-        // the bus delivers asynchronously: wait until the count settles
-        val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
-        var last = -1; var stable = 0
-        while (stable < 3 && System.nanoTime() < deadline) {
-          Thread.sleep(100)
-          val c = jobs.get()
-          if (c == last) stable += 1 else { stable = 0; last = c }
-        }
-      } finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
-      jobs.get
+      try SuffixArray.suffixArrayWithLcp(in).count()
+      finally sc.clearJobGroup()
+      metrics.drain()
+      metrics(group).jobs
     }
-    val short = jobsFor(docsOf(20), "sa-short")
-    val long = jobsFor(docsOf(400), "sa-long")
+    val (short, long) =
+      try (jobsFor(docsOf(20), "sa-short"), jobsFor(docsOf(400), "sa-long"))
+      finally sc.removeSparkListener(metrics)
     assert(short > 0)
     assert(long === short, s"$long jobs at ~400 tokens vs $short at ~20")
     info(s"$short suffix-array jobs at both lengths")

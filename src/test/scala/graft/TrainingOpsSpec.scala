@@ -366,34 +366,25 @@ class TrainingOpsSpec extends SparkSpec {
 
   test("ivf training is materialized once, eagerly, at construction") {
     val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    sc.addSparkListener(l)
+    val metrics = JobGroupMetrics.attach(sc)
     try {
       val emb = graft.sources.Tables(spark, "/root/testdata/sf0.001").embeddings
       // constructing the DataFrame must run the Lloyd collects (seed
       // localize + one per iteration) — training happens HERE, once,
       // not inside every downstream action
-      val df = Similarity.ivfTopK(emb, maxQueryId = 5, k = 3)
-      val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
-      var last = -1; var stable = 0
-      while (stable < 3 && System.nanoTime() < deadline) {
-        Thread.sleep(100)
-        val c = jobs.get()
-        if (c == last) stable += 1 else { stable = 0; last = c }
-      }
-      assert(jobs.get() >= 3,
-        s"expected eager training jobs at construction, saw ${jobs.get()}")
+      sc.setJobGroup("ivf-construct", "ivf construction")
+      val df =
+        try Similarity.ivfTopK(emb, maxQueryId = 5, k = 3)
+        finally sc.clearJobGroup()
+      metrics.drain()
+      val jobs = metrics("ivf-construct").jobs
+      assert(jobs >= 3,
+        s"expected eager training jobs at construction, saw $jobs")
       // and the nprobe assignment, which fans into both join legs, is
       // persisted so those legs replan from the cache
       assert(df.queryExecution.optimizedPlan.toString.contains("InMemoryRelation"),
         "assigned must be persisted before fanning into corpus+queries")
-    } finally sc.removeSparkListener(l)
+    } finally sc.removeSparkListener(metrics)
   }
 
   test("vocabulary counts term and document frequency, minCount filters") {
