@@ -75,7 +75,7 @@ object AirlineEntries {
     * rows), NULL delays and DepTimes (per-query guards), hour ≥ 24
     * DepTimes (F3 repair), leap-day, and out-of-2008 dates (P3).
     */
-  val csvFixtureGlob = "/root/repo/src/test/resources/flights_dirty/*.csv"
+  val csvFixtureGlob: String = fixtureGlob("flights_dirty/*.csv")
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Group 1 Q1 (R:143-165): top-10 airports by total traffic
@@ -161,7 +161,7 @@ object AirlineEntries {
             "request_date"))
         // read-back fully materialized so the temp dir can be removed
         // in the finally below without invalidating the returned frame
-        val out = s.read.parquet(dir).select(
+        val out = graft.engine.ParquetRead.parquet(s, dir).select(
           $("request_origin"), $("request_stop"), $("request_dest"),
           $("request_date"), $("id"),
           $("leg_num").cast("long").as("leg_num"),
@@ -189,7 +189,14 @@ object AirlineEntries {
   /** Committed toms_legs text fixture — the reference's own golden
     * loader input (R:553-571).
     */
-  val tomsLegsGlob = "/root/repo/src/test/resources/toms_legs/*.txt"
+  val tomsLegsGlob: String = fixtureGlob("toms_legs/*.txt")
+
+  /** A committed test fixture glob, absolute against the working
+    * directory (the checkout root under sbt and Verify), so the Spark
+    * read and the DuckDB SQL both read this checkout's files.
+    */
+  private def fixtureGlob(rel: String): String =
+    new java.io.File(s"src/test/resources/$rel").getAbsolutePath
 
   // ---------------------------------------------------------------
   // DuckDB twins — shared CTEs mirror syntheticFlights/legCandidates/

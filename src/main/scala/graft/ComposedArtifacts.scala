@@ -7,6 +7,7 @@ import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
+import graft.engine.ParquetRead
 import graft.operators.{Curation, Dedup, Similarity, TextAnalysis}
 import graft.sources.Tables
 
@@ -257,7 +258,7 @@ object ComposedArtifacts {
         // the family's durable integrity receipt, hashed from the
         // just-written stores so it describes exactly what publishes
         Curation.artifactManifest(names.map { case (n, p) =>
-          n -> spark.read.parquet(s"$tmp/$p") })
+          n -> ParquetRead.parquet(spark, s"$tmp/$p") })
           .write.mode("overwrite").parquet(s"$tmp/receipt")
         if (!tmp.toFile.renameTo(published)) {
           // lost the publish race (or a stale dir appeared): keep the
@@ -274,7 +275,7 @@ object ComposedArtifacts {
   private def pairDir(spark: SparkSession, sfDir: String): String =
     obtain(spark, "pair", sfDir, Seq("documents.parquet")) { work =>
       val docs = Tables(spark, sfDir).documents
-      def rd(p: String) = spark.read.parquet(s"$work/$p")
+      def rd(p: String) = ParquetRead.parquet(spark, s"$work/$p")
       val sigs = Dedup.minhashSignatures(docs)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
@@ -323,7 +324,7 @@ object ComposedArtifacts {
       Seq("documents.parquet", "embeddings.parquet")) { work =>
       val t = Tables(spark, sfDir)
       val emb = t.embeddings
-      def rd(p: String) = spark.read.parquet(s"$work/$p")
+      def rd(p: String) = ParquetRead.parquet(spark, s"$work/$p")
       Similarity.cellAssignments(emb)
         .hint("rebalance")
         .write.mode("overwrite").parquet(s"$work/cells")
@@ -356,7 +357,7 @@ object ComposedArtifacts {
 
   private def annRead(spark: SparkSession, sfDir: String,
       name: String): DataFrame =
-    spark.read.parquet(s"${annDir(spark, sfDir)}/$name")
+    ParquetRead.parquet(spark, s"${annDir(spark, sfDir)}/$name")
 
   def cells(spark: SparkSession, sfDir: String): DataFrame =
     annRead(spark, sfDir, "cells")
@@ -393,7 +394,7 @@ object ComposedArtifacts {
       val docs = Tables(spark, sfDir).documents
       Bpe.bpeTrain(docs)
         .write.mode("overwrite").parquet(s"$work/bpe_merges")
-      val merges = spark.read.parquet(s"$work/bpe_merges")
+      val merges = ParquetRead.parquet(spark, s"$work/bpe_merges")
         .orderBy("rank").as[(Long, String, String, Long)].collect()
         .map(r => (r._2, r._3)).toSeq
       Bpe.segmentSymbols(docs, merges)
@@ -403,19 +404,19 @@ object ComposedArtifacts {
 
   /** The trained BPE merge table (rank, lhs, rhs, pair_count). */
   def bpeMerges(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"${tokDir(spark, sfDir)}/bpe_merges")
+    ParquetRead.parquet(spark, s"${tokDir(spark, sfDir)}/bpe_merges")
 
   /** The vocabulary segmented under the trained merges
     * (word, n, pos, sym).
     */
   def bpeVocab(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"${tokDir(spark, sfDir)}/bpe_vocab")
+    ParquetRead.parquet(spark, s"${tokDir(spark, sfDir)}/bpe_vocab")
 
   /** The near-dup pair graph — a threshold filter view of the scored
     * candidate artifact (minhashDupPairs' semantics, off parquet).
     */
   def pairs(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"${pairDir(spark, sfDir)}/scored")
+    ParquetRead.parquet(spark, s"${pairDir(spark, sfDir)}/scored")
       .filter(col("jaccard") >= JaccardThreshold)
       .select("id1", "id2")
 
@@ -423,19 +424,19 @@ object ComposedArtifacts {
     * containment) — ngramContainmentPairs' output, off parquet.
     */
   def contPairs(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"${pairDir(spark, sfDir)}/cont_pairs")
+    ParquetRead.parquet(spark, s"${pairDir(spark, sfDir)}/cont_pairs")
 
   /** The distinct 5-gram shingle index (doc_id, shingle). */
   def shingles(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"${pairDir(spark, sfDir)}/shingles")
+    ParquetRead.parquet(spark, s"${pairDir(spark, sfDir)}/shingles")
 
   /** The MinHash signature store (doc_id, sig00..sig15). */
   def sigs(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"${pairDir(spark, sfDir)}/sigs")
+    ParquetRead.parquet(spark, s"${pairDir(spark, sfDir)}/sigs")
 
   /** The full scored LSH candidate table (pre-threshold). */
   def scored(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"${pairDir(spark, sfDir)}/scored")
+    ParquetRead.parquet(spark, s"${pairDir(spark, sfDir)}/scored")
 
   /** The DECONTAMINATION artifact family: the distinct 8-gram
     * shingle index every decontam/boilerplate consumer shares
@@ -453,7 +454,7 @@ object ComposedArtifacts {
 
   /** The distinct 8-gram shingle index (doc_id, shingle). */
   def shingles8(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"${deconDir(spark, sfDir)}/shingles8")
+    ParquetRead.parquet(spark, s"${deconDir(spark, sfDir)}/shingles8")
 
   /** The LOGISTIC-QUALITY artifact family: the surface and extended
     * integer feature tables and the trained weight vectors (32
@@ -469,7 +470,7 @@ object ComposedArtifacts {
       val docs = Tables(spark, sfDir).documents
       val pos = Seq("src0", "src1", "src2")
       val neg = Seq("src3", "src4", "src5")
-      def rd(p: String) = spark.read.parquet(s"$work/$p")
+      def rd(p: String) = ParquetRead.parquet(spark, s"$work/$p")
       Logistic.features(docs, pos, neg)
         .hint("rebalance")
         .write.mode("overwrite").parquet(s"$work/lr_feats")
@@ -487,32 +488,32 @@ object ComposedArtifacts {
 
   /** Surface integer feature table (doc_id, cls, b, f0..f4). */
   def lrFeats(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"${lrDir(spark, sfDir)}/lr_feats")
+    ParquetRead.parquet(spark, s"${lrDir(spark, sfDir)}/lr_feats")
 
   /** Extended feature table (doc_id, cls, b, f0..f7). */
   def lrxFeats(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"${lrDir(spark, sfDir)}/lrx_feats")
+    ParquetRead.parquet(spark, s"${lrDir(spark, sfDir)}/lrx_feats")
 
   /** Trained surface weights (j, feature, w_micro). */
   def lrWeights(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"${lrDir(spark, sfDir)}/lr_weights")
+    ParquetRead.parquet(spark, s"${lrDir(spark, sfDir)}/lr_weights")
 
   /** Trained extended weights (j, feature, w_micro). */
   def lrxWeights(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"${lrDir(spark, sfDir)}/lrx_weights")
+    ParquetRead.parquet(spark, s"${lrDir(spark, sfDir)}/lrx_weights")
 
   /** The exact n-gram Jaccard verified-pair store over the FULL
     * corpus ([[graft.operators.Dedup.ngramJaccardFromShingles]]'
     * output, off parquet — q27's semantics).
     */
   def jacPairs(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"${pairDir(spark, sfDir)}/jac_pairs")
+    ParquetRead.parquet(spark, s"${pairDir(spark, sfDir)}/jac_pairs")
 
   /** The exact n-gram Jaccard verified-pair store over the EVEN
     * docs — the fold rehearsal's "before" state (q186's base).
     */
   def jacBasePairs(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"${pairDir(spark, sfDir)}/jac_base_pairs")
+    ParquetRead.parquet(spark, s"${pairDir(spark, sfDir)}/jac_base_pairs")
 
   /** The SUFFIX-family artifacts (round-18, verdict #8): the full
     * SA+LCP arrays (q232's output IS the artifact), the span-group
@@ -531,7 +532,7 @@ object ComposedArtifacts {
     obtain(spark, "suffix", sfDir, Seq("documents.parquet")) { work =>
       import graft.operators.SuffixArray
       val docs = Tables(spark, sfDir).documents
-      def rd(p: String) = spark.read.parquet(s"$work/$p")
+      def rd(p: String) = ParquetRead.parquet(spark, s"$work/$p")
       def write(df: DataFrame, name: String): Unit =
         df.hint("rebalance").write.mode("overwrite").parquet(s"$work/$name")
       def storeThenPairs(corpus: DataFrame, name: String): () => Unit =
@@ -567,7 +568,7 @@ object ComposedArtifacts {
 
   private def suffixRead(spark: SparkSession, sfDir: String,
       name: String): DataFrame =
-    spark.read.parquet(s"${suffixDir(spark, sfDir)}/$name")
+    ParquetRead.parquet(spark, s"${suffixDir(spark, sfDir)}/$name")
 
   /** The full (idx, doc_id, pos, lcp_prev) SA+LCP arrays. */
   def saLcp(spark: SparkSession, sfDir: String): DataFrame =
@@ -630,6 +631,6 @@ object ComposedArtifacts {
         s"unknown artifact family '$other' " +
           "(expected pair|ann|suffix|lr|decon|tok)")
     }
-    spark.read.parquet(s"$dir/receipt")
+    ParquetRead.parquet(spark, s"$dir/receipt")
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 import graft.Overlap.inParallel
+import graft.engine.ParquetRead
 import graft.operators.{Curation, Dedup, NgramLm, Similarity, SubstringDedup, SuffixArray, TextAnalysis}
 import graft.sources.Tables
 
@@ -201,7 +202,7 @@ object IngestDemo {
       embBase: DataFrame, embDelivery: DataFrame,
       work: String, posSources: Seq[String] = Pos,
       negSources: Seq[String] = Neg): Seq[(String, () => Unit)] = {
-    def rd(p: String) = spark.read.parquet(s"$work/$p")
+    def rd(p: String) = ParquetRead.parquet(spark, s"$work/$p")
     // the unit store round-trips through a (split, sub)-PARTITIONED
     // parquet layout: partition columns come back via type inference
     // ('sub' as int — or string with inference disabled) while every
@@ -605,7 +606,7 @@ object IngestDemo {
       delivery: DataFrame, embBase: DataFrame, embDelivery: DataFrame,
       work: String, posSources: Seq[String] = Pos,
       negSources: Seq[String] = Neg): Seq[(String, () => Unit)] = {
-    def rd(p: String) = spark.read.parquet(s"$work/$p")
+    def rd(p: String) = ParquetRead.parquet(spark, s"$work/$p")
     // partition-typed unit-store read: see stagesOver's rdUnits
     def rdUnits(p: String) = rd(p).withColumn("sub", col("sub").cast("long"))
     def wr(df: DataFrame, p: String): Unit =
@@ -788,7 +789,7 @@ object IngestDemo {
       delivery: DataFrame, embBase: DataFrame, embDelivery: DataFrame,
       work: String, posSources: Seq[String] = Pos,
       negSources: Seq[String] = Neg): Seq[(String, () => Unit)] = {
-    def rd(p: String) = spark.read.parquet(s"$work/$p")
+    def rd(p: String) = ParquetRead.parquet(spark, s"$work/$p")
     def rdUnits(p: String) = rd(p).withColumn("sub", col("sub").cast("long"))
     def docsOf(ids: DataFrame): DataFrame =
       delivery.join(ids.select("doc_id"), Seq("doc_id"))
@@ -1010,7 +1011,7 @@ object IngestDemo {
       embBase: DataFrame, embDelivery: DataFrame,
       work: String, posSources: Seq[String] = Pos,
       negSources: Seq[String] = Neg): Seq[(String, () => Unit)] = {
-    def rd(p: String) = spark.read.parquet(s"$work/$p")
+    def rd(p: String) = ParquetRead.parquet(spark, s"$work/$p")
     def docsOf(ids: DataFrame): DataFrame =
       delivery.join(ids.select("doc_id"), Seq("doc_id"))
     def rdUnits(p: String) = rd(p).withColumn("sub", col("sub").cast("long"))

@@ -5,6 +5,7 @@ import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.engine.ParquetRead
 import graft.operators.{Curation, Dedup, NgramLm, Similarity, SkewJoin, SubstringDedup, SuffixArray, TextAnalysis}
 import graft.sources.Tables
 
@@ -292,7 +293,7 @@ object ScaleRehearsal {
         val touched = SuffixArray
           .spanGroupStore(docs.filter(col("doc_id") % 10 === 0))
           .select(col("fp")).distinct().localCheckpoint(true)
-        (spark.read.parquet(s"$tmp/pairs_plain"),
+        (ParquetRead.parquet(spark, s"$tmp/pairs_plain"),
           graft.engine.Bucketing.table(spark, s"rehearsal_sg_pairs_x$f"),
           touched)
       }
@@ -696,7 +697,7 @@ object ScaleRehearsal {
         // delivery, the removal slice (~1/7th of v1) for takedown,
         // the corpus for boot/recal — so per-row normalization reads
         // the measured work, not a constant-factor-off proxy
-        val nRemoved = spark.read.parquet(s"$work/removed_docs").count()
+        val nRemoved = ParquetRead.parquet(spark, s"$work/removed_docs").count()
         for (phase <- Seq("boot", "delivery", "recal", "takedown")) {
           val g = s"x$f:ingest_$phase"
           val n = if (phase == "delivery") nDel

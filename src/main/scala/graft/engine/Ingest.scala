@@ -72,5 +72,5 @@ object Ingest {
 
   def readWarehouse(spark: SparkSession, path: String,
       format: String = "parquet"): DataFrame =
-    spark.read.format(format).load(path)
+    ParquetRead.load(spark, path, format)
 }

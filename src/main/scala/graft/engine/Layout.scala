@@ -64,7 +64,7 @@ object Layout {
       .map(_.length).sum
     val nFiles = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes)
     val tmp = path.stripSuffix("/") + ".compact-tmp"
-    spark.read.parquet(path)
+    ParquetRead.parquet(spark, path)
       .repartition(nFiles.toInt)
       .write.mode("overwrite").parquet(tmp)
     graft.FsUtil.rmTree(dir)

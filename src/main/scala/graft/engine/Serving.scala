@@ -118,7 +118,7 @@ object Serving {
     // instead of betting on dynamic partition pruning firing
     val affected = boundedDistinct(updates.select(keyCols.map(col): _*), "updates")
     require(affected.nonEmpty, "updates are empty")
-    val existing = spark.read.format(format).load(path)
+    val existing = ParquetRead.load(spark, path, format)
       .filter(footprintPredicate(keyCols, affected))
     val survivors = existing
       .join(updates.select(idCols.map(col): _*).distinct(), idCols,
@@ -186,7 +186,7 @@ object Serving {
     // be decoded via java.net.URI before building a Path, or fs.delete
     // resolves a different, non-existent directory.
     val srcFile = "__graft_src_file"
-    val existing = spark.read.format(format).load(path).filter(pred)
+    val existing = ParquetRead.load(spark, path, format).filter(pred)
       .withColumn(srcFile,
         org.apache.spark.sql.functions.input_file_name())
     def dirOf(f: String): org.apache.hadoop.fs.Path = {
@@ -302,14 +302,16 @@ object Serving {
 
   /** S9 (R:274, R:615) — point lookup: filters on the partition columns
     * prune to the matching directories; only non-key predicates touch
-    * row data. `format` must match the [[writeKeyed]] that produced
-    * `path` ("parquet" default, "orc" for ORC warehouses — same
-    * pruning behavior, see Ingest.writeWarehouse).
+    * row data. A parquet lookup is one scan job: the schema comes from
+    * one footer read on the driver ([[ParquetRead]]), not from a
+    * schema-inference job. `format` must match the [[writeKeyed]]
+    * that produced `path` ("parquet" default, "orc" for ORC
+    * warehouses — same pruning behavior, see Ingest.writeWarehouse).
     */
   def lookup(spark: SparkSession, path: String,
       key: Map[String, Any], format: String = "parquet"): DataFrame = {
     val pred = key.map { case (k, v) => col(k) === v }
       .reduce((a: Column, b: Column) => a && b)
-    spark.read.format(format).load(path).filter(pred)
+    ParquetRead.load(spark, path, format).filter(pred)
   }
 }

@@ -1631,14 +1631,18 @@ object Curation {
     // canonical empty receipt is (0, 0, md5("")) — the value a
     // zero-cell fold would hash — so empty <-> non-empty transitions
     // diff as "changed", never as a phantom membership event.
+    // `computed` appears once in the plan: each reference to it scans
+    // and hashes every store again (column pruning keeps two
+    // references from sharing a scan)
     val spark0 = artifacts.head._2.sparkSession
     import spark0.implicits._
-    val emptyRows = artifacts.map(_._1).toDF("artifact")
-      .join(computed.select("artifact"), Seq("artifact"), "left_anti")
-      .select($("artifact"), lit(0L).as("n_docs"), lit(0L).as("n_tok"),
-        md5(lit("")).as("content_md5"),
+    artifacts.map(_._1).distinct.toDF("artifact")
+      .join(computed, Seq("artifact"), "left")
+      .select($("artifact"),
+        coalesce($("n_docs"), lit(0L)).as("n_docs"),
+        coalesce($("n_tok"), lit(0L)).as("n_tok"),
+        coalesce($("content_md5"), md5(lit(""))).as("content_md5"),
         // the empty multiset's modular sum
-        lit(0L).as("content_dig61"))
-    computed.unionByName(emptyRows)
+        coalesce($("content_dig61"), lit(0L)).as("content_dig61"))
   }
 }

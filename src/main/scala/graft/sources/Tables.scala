@@ -2,16 +2,18 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.engine.ParquetRead
+
 /** Typed access to the driver's star-schema testdata (TESTDATA.md).
   *
   * One parquet file per table under `dir`. At 100 TB these would be
-  * multi-file partitioned datasets; `spark.read.parquet` handles both
-  * transparently (a directory of files splits into one task per
+  * multi-file partitioned datasets; [[ParquetRead.parquet]] handles
+  * both transparently (a directory of files splits into one task per
   * row-group/128MB split), so nothing here is local-mode-specific.
   */
 final case class Tables(spark: SparkSession, dir: String) {
   private def t(name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    ParquetRead.parquet(spark, s"$dir/$name.parquet")
 
   // lazy vals (not defs): column references like `lineitem("l_orderkey")`
   // must resolve against the SAME plan instance used in a join, or

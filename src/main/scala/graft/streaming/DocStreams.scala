@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
+import graft.engine.ParquetRead
 import graft.operators.{BloomDecontam, Curation, SubstringDedup, TextAnalysis}
 
 /** Structured Streaming over the documents table: the incremental twin
@@ -446,7 +447,7 @@ object DocStreams extends Serializable {
     if (gens.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], labelSchema)
-    else spark.read.parquet(s"$storeDir/gen-${gens.max}")
+    else ParquetRead.parquet(spark, s"$storeDir/gen-${gens.max}")
   }
 
   /** MICRO-BATCH maintenance of the dup-cluster label store — the

@@ -882,6 +882,27 @@ class CurationSpec extends SparkSpec {
     assert(diffE === Map("a" -> "changed", "b" -> "unchanged"))
   }
 
+  test("artifactManifest: one scan per artifact store; an empty store keeps its row") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val dir = java.nio.file.Files.createTempDirectory("graft-receipt").toString
+    Seq((1L, "x"), (2L, "y")).toDF("doc_id", "fp").write.parquet(s"$dir/a")
+    Seq.empty[(Long, String)].toDF("doc_id", "fp").write.parquet(s"$dir/e")
+    val m = Curation.artifactManifest(Seq(
+      "a" -> graft.engine.ParquetRead.parquet(spark, s"$dir/a"),
+      "e" -> graft.engine.ParquetRead.parquet(spark, s"$dir/e")))
+    val scans = m.queryExecution.sparkPlan
+      .collect { case f: FileSourceScanExec => f }
+    assert(scans.size === 2, s"${scans.size} file scans for 2 artifacts")
+    val rows = m.select("artifact", "n_docs", "n_tok", "content_md5",
+        "content_dig61")
+      .as[(String, Long, Long, String, Long)].collect()
+      .map(r => r._1 -> r).toMap
+    assert(rows.keySet === Set("a", "e"))
+    assert(rows("a")._2 === 2L)
+    assert(rows("e") === (("e", 0L, 0L, "d41d8cd98f00b204e9800998ecf8427e", 0L)))
+  }
+
   test("clusterAwareSplit: a near-dup family never straddles splits") {
     import spark.implicits._
     val d = (1L to 40L).map(i => (i, s"text $i")).toDF("doc_id", "text")

@@ -28,10 +28,12 @@ class SimHashExpressionSpec extends SparkSpec {
       (3L, Seq("hello"))
     ).toDF("id", "toks")
       .select($"id", SimHash32Expression.simhash32($"toks").as("h"))
+    // every row gets a hash: no NULL for empty tokens
+    assert(df.filter($"h".isNull).count() === 0)
     val m = df.as[(Long, Long)].collect().toMap
-    // doc 3 has only "hello"; doc 2's empties are skipped, so doc 2 =
-    // simhash(hello, hello-free world...) — at minimum all defined
-    assert(m.values.forall(_ != null))
+    assert(m.keySet === Set(1L, 2L, 3L))
+    // doc 2's empty tokens are skipped, leaving doc 3's one "hello"
+    assert(m(2L) === m(3L))
     val single = Seq((9L, Seq("hello"))).toDF("id", "toks")
       .select(SimHash32Expression.simhash32($"toks")).as[Long].head()
     // single token: simhash == its own 32 hash bits
