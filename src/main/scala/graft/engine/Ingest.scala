@@ -52,25 +52,21 @@ object Ingest {
     * At 100 TB this is the one full-data pass; everything after reads
     * pruned column chunks.
     *
-    * `format` is any columnar file source — "parquet" (default) or
-    * "orc". Both run the same DataSource-v1 scan path
-    * (FileSourceScanExec): identical directory-level partition
-    * pruning, min/max predicate pushdown into stripe/row-group
-    * metadata, and column pruning; the choice is an ecosystem call
-    * (Hive/ORC ACID shops vs everything else), not a plan change —
-    * ServingSpec asserts pruning parity by scan metric.
+    * The warehouse is parquet, read back through [[ParquetRead]]: the
+    * DataSource-v1 scan (FileSourceScanExec) gives directory-level
+    * partition pruning, min/max predicate pushdown into row-group
+    * metadata, and column pruning; ServingSpec asserts the pruning by
+    * scan metric.
     */
-  def writeWarehouse(df: DataFrame, path: String,
-      format: String = "parquet"): Unit = {
+  def writeWarehouse(df: DataFrame, path: String): Unit = {
     import org.apache.spark.sql.functions._
     df.withColumn("year", year(col("FlightDate")))
       .withColumn("month", month(col("FlightDate")))
       .write.mode("overwrite")
       .partitionBy("year", "month")
-      .format(format).save(path)
+      .parquet(path)
   }
 
-  def readWarehouse(spark: SparkSession, path: String,
-      format: String = "parquet"): DataFrame =
-    ParquetRead.load(spark, path, format)
+  def readWarehouse(spark: SparkSession, path: String): DataFrame =
+    ParquetRead.parquet(spark, path)
 }

@@ -50,13 +50,6 @@ object ParquetRead {
     }
   }
 
-  /** A columnar file-source read: [[parquet]] for "parquet", Spark's
-    * own reader for any other format ("orc").
-    */
-  def load(spark: SparkSession, path: String, format: String): DataFrame =
-    if (format == "parquet") parquet(spark, path)
-    else spark.read.format(format).load(path)
-
   /** Spark's hidden-file rule for file-index listings. */
   private def hidden(name: String): Boolean =
     (name.startsWith("_") && !name.contains("=")) ||

@@ -47,10 +47,8 @@ object Serving {
     * (airport, carrier, date) — the same constraint Cassandra's
     * partition-key design imposes.
     */
-  def writeKeyed(df: DataFrame, path: String, keyCols: Seq[String],
-      format: String = "parquet"): Unit =
-    df.write.mode("overwrite").partitionBy(keyCols: _*)
-      .format(format).save(path)
+  def writeKeyed(df: DataFrame, path: String, keyCols: Seq[String]): Unit =
+    df.write.mode("overwrite").partitionBy(keyCols: _*).parquet(path)
 
   /** Partition-aware upsert into a [[writeKeyed]] table: rows in
     * `updates` replace existing rows with the same `idCols` identity;
@@ -106,8 +104,7 @@ object Serving {
     }.reduce((a: Column, b: Column) => a || b)
 
   def upsertKeyed(spark: SparkSession, path: String, updates: DataFrame,
-      keyCols: Seq[String], idCols: Seq[String],
-      format: String = "parquet"): Unit = {
+      keyCols: Seq[String], idCols: Seq[String]): Unit = {
     require(idCols.nonEmpty, "idCols must identify rows")
     val cols = updates.columns.toSeq
     // affected partition keys, localized: bounded by the update's
@@ -118,7 +115,7 @@ object Serving {
     // instead of betting on dynamic partition pruning firing
     val affected = boundedDistinct(updates.select(keyCols.map(col): _*), "updates")
     require(affected.nonEmpty, "updates are empty")
-    val existing = ParquetRead.load(spark, path, format)
+    val existing = ParquetRead.parquet(spark, path)
       .filter(footprintPredicate(keyCols, affected))
     val survivors = existing
       .join(updates.select(idCols.map(col): _*).distinct(), idCols,
@@ -126,15 +123,17 @@ object Serving {
       .select(cols.map(col): _*)
     val merged = survivors.unionByName(updates.select(cols.map(col): _*))
       .localCheckpoint(true)
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try merged.write.mode("overwrite").partitionBy(keyCols: _*)
-      .format(format).save(path)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    overwritePartitions(merged, path, keyCols)
   }
+
+  /** Dynamic partition overwrite as a per-write option, so no other
+    * write sharing the session sees it: only the partitions present in
+    * `df` are replaced, every other directory keeps its files.
+    */
+  private def overwritePartitions(df: DataFrame, path: String,
+      keyCols: Seq[String]): Unit =
+    df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy(keyCols: _*).parquet(path)
 
   /** The audit evidence a [[deleteKeyed]] call returns: row counts
     * before/after over the affected partitions and the partition-
@@ -163,8 +162,7 @@ object Serving {
     * rowsAfter is one count over the checkpointed survivors.
     */
   def deleteKeyed(spark: SparkSession, path: String, tombstones: DataFrame,
-      keyCols: Seq[String], idCols: Seq[String],
-      format: String = "parquet"): DeleteReceipt = {
+      keyCols: Seq[String], idCols: Seq[String]): DeleteReceipt = {
     require(idCols.nonEmpty, "idCols must identify rows")
     val affected =
       boundedDistinct(tombstones.select(keyCols.map(col): _*), "tombstones")
@@ -186,7 +184,7 @@ object Serving {
     // be decoded via java.net.URI before building a Path, or fs.delete
     // resolves a different, non-existent directory.
     val srcFile = "__graft_src_file"
-    val existing = ParquetRead.load(spark, path, format).filter(pred)
+    val existing = ParquetRead.parquet(spark, path).filter(pred)
       .withColumn(srcFile,
         org.apache.spark.sql.functions.input_file_name())
     def dirOf(f: String): org.apache.hadoop.fs.Path = {
@@ -215,17 +213,8 @@ object Serving {
     // and FAIL if the filesystem reports a miss: a silent false from
     // fs.delete would leave "forgotten" rows on disk.
     val emptied = (affectedDirs -- survivedDirs).toSeq.sortBy(_.toString)
-    if (survivedDirs.nonEmpty) {
-      val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try survivors.drop(srcFile).write.mode("overwrite")
-        .partitionBy(keyCols: _*)
-        .format(format).save(path)
-      finally prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
+    if (survivedDirs.nonEmpty)
+      overwritePartitions(survivors.drop(srcFile), path, keyCols)
     if (emptied.nonEmpty) {
       val fs = new org.apache.hadoop.fs.Path(path)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -302,16 +291,14 @@ object Serving {
 
   /** S9 (R:274, R:615) — point lookup: filters on the partition columns
     * prune to the matching directories; only non-key predicates touch
-    * row data. A parquet lookup is one scan job: the schema comes from
-    * one footer read on the driver ([[ParquetRead]]), not from a
-    * schema-inference job. `format` must match the [[writeKeyed]]
-    * that produced `path` ("parquet" default, "orc" for ORC
-    * warehouses — same pruning behavior, see Ingest.writeWarehouse).
+    * row data. A lookup is one scan job: the schema comes from one
+    * footer read on the driver ([[ParquetRead]]), not from a
+    * schema-inference job.
     */
   def lookup(spark: SparkSession, path: String,
-      key: Map[String, Any], format: String = "parquet"): DataFrame = {
+      key: Map[String, Any]): DataFrame = {
     val pred = key.map { case (k, v) => col(k) === v }
       .reduce((a: Column, b: Column) => a && b)
-    ParquetRead.load(spark, path, format).filter(pred)
+    ParquetRead.parquet(spark, path).filter(pred)
   }
 }

@@ -84,31 +84,6 @@ object Airline {
         .agg(avg($("DepDelay")).as("avg_dep_delay")),
       Seq("Origin"), "avg_dep_delay", Seq("UniqueCarrier"), k)
 
-  /** Aggregator-based variant of top10CarriersPerAirport: same result
-    * via the bounded-heap [[graft.functions.TopKAggregator]] instead
-    * of a window sort. The scalable form when groups are huge; the
-    * window form wins when per-group input is already small.
-    * Differential-tested against the window version (AirlineSpec).
-    */
-  def top10CarriersPerAirportAgg(flights: DataFrame, k: Int = 10): DataFrame = {
-    import graft.functions.TopKAggregator
-    val spark = flights.sparkSession
-    import spark.implicits._
-    val agg = flights.where($("DepDelay").isNotNull)
-      .groupBy($("Origin"), $("UniqueCarrier"))
-      .agg(avg($("DepDelay")).as("avg_dep_delay"))
-    agg.select($("Origin").as("origin"),
-        struct($("UniqueCarrier").as("label"), $("avg_dep_delay").as("value")).as("e"))
-      .as[(String, TopKAggregator.Entry)]
-      .groupByKey(_._1)
-      .mapValues(_._2)
-      .agg(TopKAggregator.topKAsc(k).toColumn)
-      .flatMap { case (origin, entries) =>
-        entries.zipWithIndex.map { case (e, i) => (origin, e.label, e.value, i + 1) }
-      }
-      .toDF("Origin", "UniqueCarrier", "avg_dep_delay", "rank")
-  }
-
   /** Group 2 Q2 / A3+T3 (R:285-331) — top-10 destination airports by
     * avg DepDelay per origin.
     */
@@ -198,26 +173,20 @@ object Airline {
     *   R:549), tiebreak (carrier, flightNum, sched_dep) for a total
     *   order.
     *
-    * Requests are typically tiny vs flights → broadcast joins; the
-    * argmin is `min_by` (hash-agg, partial-combinable, no sort).
+    * Requests are a planner's batch of trips, tiny vs flights, so the
+    * request side is always broadcast; the argmin is `min_by`
+    * (hash-agg, partial-combinable, no sort).
     * Noon boundary pinned: leg1 strictly before 720 min, leg2 at/after
     * 720 (README says "before"/"after 12:00" without fixing 12:00
     * itself; AirlineSpec pins this).
-    *
-    * `broadcastRequests = false` drops the broadcast hint for a
-    * GENERATED request table (the q13 full cross × date-dim shape) too
-    * large to ship to every executor — the joins then fall back to
-    * Catalyst's choice (shuffle joins on the equi-keys), same rows.
     */
-  def bestLegs(requests: DataFrame, legs: DataFrame,
-      broadcastRequests: Boolean = true): DataFrame = {
+  def bestLegs(requests: DataFrame, legs: DataFrame): DataFrame = {
     // Request columns are renamed req_* internally: Spark resolves
     // column names case-insensitively by default, so `origin` (request)
     // vs `Origin` (leg) would be ambiguous after the join.
-    val projected = requests.select(
+    val reqs = broadcast(requests.select(
       $("origin").as("req_origin"), $("stop").as("req_stop"),
-      $("dest").as("req_dest"), $("request_date").as("req_date"))
-    val reqs = if (broadcastRequests) broadcast(projected) else projected
+      $("dest").as("req_dest"), $("request_date").as("req_date")))
 
     val reqKey = Seq("req_origin", "req_stop", "req_dest", "req_date")
     val ord = struct($("ArrDelay"), $("UniqueCarrier"), $("FlightNum"), $("sched_dep"))

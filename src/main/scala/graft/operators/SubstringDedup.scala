@@ -22,11 +22,16 @@ import graft.operators.OrderedOut._
   * Portability design: tokens are the whitespace split of
   * [[TextAnalysis.normText]]; the DuckDB oracles key windows on `md5`
   * of the space-joined window (identical hex in both engines). The
-  * coverage/rewrite consumers DEFAULT to the O(n) rolling-hash window
-  * source — their outputs are fingerprint-agnostic (the fp only
-  * groups duplicated hits), so the md5-keyed oracles still gate them
-  * exactly, and any fp-visible contract (q135) gates the
-  * fingerprint-agnostic (n_occ, n_docs) histogram instead.
+  * coverage/rewrite consumers and the window index read the O(n)
+  * rolling-hash window source ([[windowOccurrencesRolling]]) only.
+  * Their outputs carry no fingerprint (the fp only groups duplicated
+  * hits), so the md5-keyed oracles gate them exactly, equal output
+  * unless either hash family collides (~2^-64 per pair); any
+  * fp-visible contract (q135) gates the fingerprint-agnostic (n_occ,
+  * n_docs) histogram instead. The md5 source [[windowOccurrences]]
+  * stays for the bloom family (its false-positive identity IS the md5
+  * bit pattern) and [[duplicatedWindows]]; [[topDuplicatedSpans]]
+  * keys on md5 too, as it carries the span text anyway.
   *
   * Scale design (100 TB):
   *  - window derivation is pure narrow expressions (split + sequence +
@@ -45,22 +50,6 @@ import graft.operators.OrderedOut._
 object SubstringDedup {
 
   private def $(name: String): Column = col(name)
-
-  /** Window-source dispatcher for the coverage/rewrite consumers:
-    * `rolling = true` (the DEFAULT since round 11) derives the O(n)
-    * 64-bit rolling-hash fingerprints ([[windowOccurrencesRolling]]);
-    * `false` the md5 path. The consumers' outputs carry NO
-    * fingerprint — the fp only partitions the duplicated-hit
-    * detection — so the md5-keyed DuckDB oracles gate the rolling
-    * path EXACTLY (equal output unless either hash family collides,
-    * ~2^-64 per pair). The bloom family and [[topDuplicatedSpans]]
-    * stay on md5: the bloom's false-positive identity IS the md5 bit
-    * pattern, and the audit report needs the span text anyway.
-    */
-  private def windows(documents: DataFrame, k: Int,
-      rolling: Boolean): DataFrame =
-    if (rolling) windowOccurrencesRolling(documents, k)
-    else windowOccurrences(documents, k)
 
   /** All `k`-window fingerprints of one text as an array column —
     * empty when the document has fewer than `k` tokens. Pure
@@ -238,10 +227,9 @@ object SubstringDedup {
     * corpus text moves through ONE doc-keyed join and never explodes
     * to token rows.
     */
-  def removeSpans(documents: DataFrame, k: Int = 8,
-      rolling: Boolean = true): DataFrame =
+  def removeSpans(documents: DataFrame, k: Int = 8): DataFrame =
     rewriteByIntervals(documents,
-      dupIntervals(windows(documents, k, rolling), k))
+      dupIntervals(windowOccurrencesRolling(documents, k), k))
 
   /** [[removeSpans]] with the Lee et al. keep-ONE-copy rule: per
     * repeated span, the globally first occurrence — min (doc_id, pos),
@@ -260,10 +248,8 @@ object SubstringDedup {
     * by fingerprint (hit-width rows) to [[removeSpans]]'s plan; the
     * election needs no extra join — rank 1 IS the owner.
     */
-  def removeSpansKeepOne(documents: DataFrame, k: Int = 8,
-      rolling: Boolean = true): DataFrame = {
-    val wins = windows(documents, k, rolling)
-    val nonOwnerHits = wins
+  def removeSpansKeepOne(documents: DataFrame, k: Int = 8): DataFrame = {
+    val nonOwnerHits = windowOccurrencesRolling(documents, k)
       .withColumn("n_occ", count(lit(1)).over(Window.partitionBy("fp")))
       .where($("n_occ") >= 2)
       .withColumn("rn", row_number().over(
@@ -305,9 +291,9 @@ object SubstringDedup {
     * fingerprint-count table and checks each batch against it
     * ([[incrementalSpanStats]]), then folds the batch in
     * ([[updatedWindowIndex]]) — [[Dedup.incrementalDedup]]'s
-    * span-level sibling. Rolling fingerprints by default (8-byte
-    * index keys at corpus scale); both sides of the incremental pair
-    * must use the SAME hash family.
+    * span-level sibling. Keyed by rolling fingerprints (8-byte index
+    * keys at corpus scale), the family every probe and fold here
+    * uses.
     *
     * Scale: the index is corpus-window-sized, so persist it BUCKETED
     * by `fp` ([[graft.engine.Bucketing]]) — the per-delivery probe
@@ -315,9 +301,8 @@ object SubstringDedup {
     * instead of re-exchanging the whole index per delivery, and
     * [[updatedWindowIndex]]'s fold aggregates bucket-local.
     */
-  def windowIndex(documents: DataFrame, k: Int = 8,
-      rolling: Boolean = true): DataFrame =
-    windows(documents, k, rolling)
+  def windowIndex(documents: DataFrame, k: Int = 8): DataFrame =
+    windowOccurrencesRolling(documents, k)
       .groupBy("fp").agg(count(lit(1)).as("n_occ"))
 
   /** [[dupSpanStats]] of a NEW batch against an accumulated
@@ -333,9 +318,8 @@ object SubstringDedup {
     * index, never a corpus re-scan.
     */
   def incrementalSpanStats(index: DataFrame, batch: DataFrame,
-      k: Int = 8, rolling: Boolean = true): DataFrame = {
-    val wins = windows(batch, k, rolling)
-    val hits = wins
+      k: Int = 8): DataFrame = {
+    val hits = windowOccurrencesRolling(batch, k)
       .withColumn("n_batch", count(lit(1)).over(Window.partitionBy("fp")))
       .join(index.select($("fp"), $("n_occ").as("n_index")), Seq("fp"),
         "left")
@@ -357,8 +341,8 @@ object SubstringDedup {
     * fingerprint-keyed aggregate over index ∪ batch windows.
     */
   def updatedWindowIndex(index: DataFrame, batch: DataFrame,
-      k: Int = 8, rolling: Boolean = true): DataFrame =
-    index.unionByName(windowIndex(batch, k, rolling))
+      k: Int = 8): DataFrame =
+    index.unionByName(windowIndex(batch, k))
       .groupBy("fp").agg(sum($("n_occ")).as("n_occ"))
 
   /** Retract removed documents from the window index —
@@ -376,9 +360,9 @@ object SubstringDedup {
     * the subtraction joins on fp and aggregates bucket-local.
     */
   def retractedWindowIndex(index: DataFrame, removed: DataFrame,
-      k: Int = 8, rolling: Boolean = true): DataFrame =
+      k: Int = 8): DataFrame =
     index
-      .join(windowIndex(removed, k, rolling)
+      .join(windowIndex(removed, k)
         .select($("fp"), $("n_occ").as("r_occ")), Seq("fp"), "full_outer")
       .select($("fp"),
         (coalesce($("n_occ"), lit(0L)) - coalesce($("r_occ"), lit(0L)))
@@ -400,9 +384,8 @@ object SubstringDedup {
       .select($("doc_id"), size(split($("norm"), " ")).cast("long").as("n_tokens"))
       .where($("n_tokens") >= k)
 
-  def dupSpanStats(documents: DataFrame, k: Int = 8,
-      rolling: Boolean = true): DataFrame = {
-    val covered = coverageFromWindows(windows(documents, k, rolling), k)
+  def dupSpanStats(documents: DataFrame, k: Int = 8): DataFrame = {
+    val covered = coverageFromWindows(windowOccurrencesRolling(documents, k), k)
     val lens = docTokenLengths(documents, k)
     lens.join(covered, Seq("doc_id"), "left")
       .select($("doc_id"), $("n_tokens"),
@@ -419,9 +402,8 @@ object SubstringDedup {
     * stats aggregate to one row per source; only (doc_id, source) and
     * the counters shuffle.
     */
-  def sourceSpanProfile(documents: DataFrame, k: Int = 8,
-      rolling: Boolean = true): DataFrame =
-    dupSpanStats(documents, k, rolling)
+  def sourceSpanProfile(documents: DataFrame, k: Int = 8): DataFrame =
+    dupSpanStats(documents, k)
       .join(documents.select($("doc_id"), $("source")), Seq("doc_id"))
       .groupBy("source")
       .agg(

@@ -51,15 +51,6 @@ class AirlineSpec extends SparkSpec {
     assert(got.contains(("SFO", "HA", 1)) && got.contains(("SFO", "UA", 2)))
   }
 
-  test("T3: bounded-heap aggregator top-k == window top-k") {
-    val viaWindow = Airline.top10CarriersPerAirport(flights)
-      .select("Origin", "UniqueCarrier", "avg_dep_delay", "rank")
-      .as[(String, String, Double, Int)].collect().toSet
-    val viaAgg = Airline.top10CarriersPerAirportAgg(flights)
-      .as[(String, String, Double, Int)].collect().toSet
-    assert(viaAgg === viaWindow)
-  }
-
   test("T4: sorted frequencies are descending, one column") {
     val freqs = Airline.sortedFrequencies(flights).as[Long].collect().toSeq
     assert(freqs === freqs.sorted.reverse)
@@ -149,39 +140,6 @@ class AirlineSpec extends SparkSpec {
       .split("\n").toSeq.filter(_.nonEmpty)
     assert(lines === golden,
       "formatted best-legs output drifted from the golden fixture")
-  }
-
-  test("G3Q2: broadcastRequests=false yields identical rows via shuffle joins") {
-    val legsFlights = Seq(
-      row("2008-08-16", "AA", 10, "ORD", "SEA", "0700", 0.0, 17.0),
-      row("2008-08-16", "UA", 11, "ORD", "SEA", "0800", 0.0, 3.0),
-      row("2008-08-18", "AS", 20, "SEA", "JFK", "1400", 0.0, -5.0),
-      row("2008-08-18", "B6", 21, "SEA", "JFK", "1500", 0.0, 4.0),
-      row("2008-08-16", "UA", 40, "ORD", "LAX", "0900", 0.0, 1.0),
-      row("2008-08-18", "DL", 41, "LAX", "JFK", "1300", 0.0, 2.0)
-    ).toDF("FlightDate", "UniqueCarrier", "FlightNum", "Origin", "Dest",
-      "DepTime", "DepDelay", "ArrDelay")
-    val requests = Seq(
-      ("ORD", "SEA", "JFK", Date.valueOf("2008-08-16")),
-      ("ORD", "LAX", "JFK", Date.valueOf("2008-08-16")))
-      .toDF("origin", "stop", "dest", "request_date")
-    val legs = Airline.legCandidates(legsFlights)
-    val key = (df: org.apache.spark.sql.DataFrame) => df.select(
-      $"origin", $"stop", $"dest", $"request_date",
-      $"leg1.UniqueCarrier", $"leg1.FlightNum", $"leg2.UniqueCarrier",
-      $"leg2.FlightNum").collect().toSet
-    val hinted = key(Airline.bestLegs(requests, legs))
-    // disable auto-broadcast so the no-hint path really exercises the
-    // shuffle-join shape a huge generated request table would take
-    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val plain = Airline.bestLegs(requests, legs, broadcastRequests = false)
-      assert(!plain.queryExecution.executedPlan.toString
-        .contains("BroadcastHashJoin"),
-        "no-hint path must not broadcast when auto-broadcast is off")
-      assert(key(plain) === hinted)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
   }
 
   test("G3Q2: request with no candidate legs is dropped (inner semantics, R:549)") {

@@ -174,6 +174,32 @@ class ScaleToolsSpec extends SparkSpec {
       Set((1L, 2L)))
   }
 
+  test("ScaleRehearsal.rehearse leaves no persisted RDD or bucketed table behind") {
+    // q26 reads the cached corpus, hot_span_refine the cached hot
+    // corpus and its checkpointed store, sg_carried_plain the
+    // checkpointed span-group pair artifact, its parquet copy in a
+    // scratch dir and its bucketed catalog table
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val failed = ScaleRehearsal.rehearse(spark, "/root/testdata/sf0.001",
+      Seq(1), Some(Seq("q26_minhash_dups", "hot_span_refine", "sg_carried_plain")))
+    assert(failed.isEmpty, s"legs failed: $failed")
+    // the SparkContext holds persisted RDDs weakly: a localCheckpoint
+    // (the rehearsal's stores, the operators' own) leaves once its
+    // frame is garbage, while a cached frame stays pinned by the
+    // CacheManager until someone unpersists it
+    def left = spark.sparkContext.getPersistentRDDs.keySet -- rddsBefore
+    val deadline = System.nanoTime() + 30000000000L
+    while (left.nonEmpty && System.nanoTime() < deadline) {
+      System.gc(); Thread.sleep(200)
+    }
+    assert(left.isEmpty, s"rehearse left persisted RDDs behind: " +
+      spark.sparkContext.getPersistentRDDs.filter(r => left(r._1))
+        .map(_._2.toDebugString).mkString("\n"))
+    val tables = spark.catalog.listTables().collect().map(_.name)
+    assert(!tables.exists(_.startsWith("rehearsal_sg_pairs_")),
+      s"rehearse left a bucketed table: ${tables.mkString(", ")}")
+  }
+
   test("freshStatsView stops iterative-checkpoint stats compounding") {
     import org.apache.spark.sql.graft.ColumnBridge
     // localCheckpoint CARRIES the origin plan's size estimate into

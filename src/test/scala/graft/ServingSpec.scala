@@ -59,14 +59,13 @@ class ServingSpec extends SparkSpec {
       s"pruned scan read $scanned of $total files - pruning did not happen")
   }
 
-  // shared by the parquet and ORC pruning tests: execute the pruned
-  // read and return (files scanned, total data files, partition
-  // filters present)
+  // execute the pruned read and return (files scanned, total parquet
+  // files under dir, partition filters present)
   private def prunedScanStats(df: org.apache.spark.sql.DataFrame,
-      dir: String, ext: String): (Long, Int, Boolean) = {
+      dir: String): (Long, Int, Boolean) = {
     def dataFiles(f: java.io.File): Int =
       if (f.isDirectory) f.listFiles().map(dataFiles).sum
-      else if (f.getName.endsWith(ext)) 1 else 0
+      else if (f.getName.endsWith(".parquet")) 1 else 0
     df.collect()
     val plan = df.queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.executedPlan
@@ -75,56 +74,6 @@ class ServingSpec extends SparkSpec {
     val scan = plan.collect { case f: FileSourceScanExec => f }.head
     (scan.metrics("numFiles").value, dataFiles(new java.io.File(dir)),
       scan.partitionFilters.nonEmpty)
-  }
-
-  test("ORC warehouse: write/read round-trips with identical pruning behavior") {
-    val base = Files.createTempDirectory("graft-orc").toString
-    val flights = AirlineEntries.syntheticFlights(
-      Tables(spark, "/root/testdata/sf0.001"))
-    Ingest.writeWarehouse(flights, s"$base/pq", "parquet")
-    Ingest.writeWarehouse(flights, s"$base/orc", "orc")
-
-    // same rows both formats (modulo the derived partition columns)
-    val cols = flights.columns.map(col).toIndexedSeq
-    val pq = Ingest.readWarehouse(spark, s"$base/pq").select(cols: _*)
-    val orc = Ingest.readWarehouse(spark, s"$base/orc", "orc").select(cols: _*)
-    assert(orc.count() === pq.count())
-    assert(orc.exceptAll(pq).isEmpty && pq.exceptAll(orc).isEmpty,
-      "ORC and parquet warehouses must round-trip identical rows")
-
-    // identical partition pruning: both formats run the v1
-    // FileSourceScanExec path, so the year/month predicate must reach
-    // partitionFilters and cut the scanned file count in both
-    val filt = (df: org.apache.spark.sql.DataFrame) =>
-      df.filter(col("year") === 2008 && col("month") === 1)
-    val (pqScanned, pqTotal, pqPart) =
-      prunedScanStats(filt(Ingest.readWarehouse(spark, s"$base/pq")),
-        s"$base/pq", ".parquet")
-    val (orcScanned, orcTotal, orcPart) =
-      prunedScanStats(filt(Ingest.readWarehouse(spark, s"$base/orc", "orc")),
-        s"$base/orc", ".orc")
-    assert(pqPart && orcPart, "partition filters missing from a scan")
-    assert(pqScanned > 0 && pqScanned < pqTotal)
-    assert(orcScanned > 0 && orcScanned < orcTotal,
-      s"ORC pruned scan read $orcScanned of $orcTotal files")
-    assert(orcScanned === pqScanned,
-      "ORC and parquet must prune to the same file count on the same layout")
-  }
-
-  test("S8/S9 over ORC: keyed write + point lookup") {
-    val dir = Files.createTempDirectory("graft-serving-orc").toString + "/t"
-    val df = Seq(
-      ("CMI", "MQ", 1L, 0.61), ("CMI", "OH", 2L, 0.97),
-      ("BWI", "F9", 3L, 0.16), ("BWI", "MQ", 4L, 1.45)
-    ).toDF("airport", "carrier", "id", "avg_dep_delay")
-    Serving.writeKeyed(df, dir, Seq("airport", "carrier"), "orc")
-    assert(Serving.lookup(spark, dir, Map("airport" -> "CMI"), "orc")
-      .count() === 2)
-    val one = Serving.lookup(spark, dir,
-      Map("airport" -> "BWI", "carrier" -> "F9"), "orc")
-      .select("id").as[Long].collect().toSeq
-    assert(one === Seq(3L))
-    assert(new java.io.File(s"$dir/airport=CMI/carrier=OH").exists())
   }
 
   test("S1/S3 at reference shape: 24-file nested CSV ingest -> pruned warehouse") {
@@ -162,8 +111,7 @@ class ServingSpec extends SparkSpec {
     val wh = s"$base/wh"
     Ingest.writeWarehouse(df, wh)
     val (scanned, total, hasPart) = prunedScanStats(
-      Ingest.readWarehouse(spark, wh).filter(col("year") === 2009),
-      wh, ".parquet")
+      Ingest.readWarehouse(spark, wh).filter(col("year") === 2009), wh)
     assert(hasPart)
     assert(total >= 24, s"expected >= 24 partition dirs' files, got $total")
     assert(scanned > 0 && scanned * 2 <= total,

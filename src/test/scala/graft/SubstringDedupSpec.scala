@@ -135,21 +135,23 @@ class SubstringDedupSpec extends SparkSpec {
   }
 
   test("consumers on the rolling default equal their md5 twins on real data") {
-    // the coverage/rewrite consumers now DEFAULT to the rolling
-    // source; their outputs are fingerprint-agnostic, so the md5 path
-    // (what the DuckDB oracles replay) must match row-for-row
+    // the coverage/rewrite consumers read the rolling source only;
+    // their outputs are fingerprint-agnostic, so the interval set they
+    // cut by must equal the md5 path's (what the DuckDB oracles
+    // replay) row-for-row
     val real = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val rwR = SubstringDedup.removeSpans(real)
-      .as[(Long, Long, Long, String)].collect().toSet
-    val rwM = SubstringDedup.removeSpans(real, rolling = false)
-      .as[(Long, Long, Long, String)].collect().toSet
-    assert(rwR === rwM, "removeSpans rolling default diverged from md5 twin")
-    assert(rwR.exists(_._3 > 0), "fixture must actually contain repeated spans")
-    val koR = SubstringDedup.removeSpansKeepOne(real)
-      .as[(Long, Long, Long, String)].collect().toSet
-    val koM = SubstringDedup.removeSpansKeepOne(real, rolling = false)
-      .as[(Long, Long, Long, String)].collect().toSet
-    assert(koR === koM, "removeSpansKeepOne rolling default diverged from md5 twin")
+    def intervals(wins: DataFrame): Set[(Long, Long, Long)] =
+      SubstringDedup.dupIntervals(wins, 8)
+        .select($"doc_id", $"start".cast("long"), $"end".cast("long"))
+        .as[(Long, Long, Long)].collect().toSet
+    val ivM = intervals(SubstringDedup.windowOccurrences(real, 8))
+    val ivR = intervals(SubstringDedup.windowOccurrencesRolling(real, 8))
+    assert(ivR === ivM, "rolling duplicated intervals diverged from md5")
+    val removed = SubstringDedup.removeSpans(real)
+      .as[(Long, Long, Long, String)].collect()
+    assert(removed.exists(_._3 > 0), "fixture must actually contain repeated spans")
+    assert(removed.map(_._3).sum === ivR.toSeq.map { case (_, s, e) => e - s + 1 }.sum,
+      "removeSpans must cut exactly the duplicated intervals")
   }
 
   test("incremental span dedup == full-corpus stats restricted to the batch") {
