@@ -50,8 +50,9 @@ import graft.sources.Tables
   *    only an unpublished `.build-*` dir (bounded garbage, never
   *    read);
   *  - every family carries its own INTEGRITY RECEIPT
-  *    ([[Curation.artifactManifest]] over the family's tables,
-  *    written as `receipt` inside the family dir before publish) —
+  *    ([[Curation.artifactManifest]] over every store the build
+  *    wrote, written as `receipt` inside the family dir before
+  *    publish) —
   *    "which artifact version did this query serve from" is
   *    answerable from the warehouse itself, the IngestDemo receipt
   *    discipline applied to the composed-path stores;
@@ -232,7 +233,7 @@ object ComposedArtifacts {
     * instead of holding a resolved path across long sessions.
     */
   private def obtain(spark: SparkSession, family: String, sfDir: String,
-      inputs: Seq[String])(build: String => Seq[(String, String)]): String = {
+      inputs: Seq[String])(build: String => Unit): String = {
     val dir = obtainOnce(spark, family, sfDir, inputs)(build)
     val f = new java.io.File(dir)
     if (f.isDirectory) { f.setLastModified(System.currentTimeMillis()); dir }
@@ -243,7 +244,7 @@ object ComposedArtifacts {
   }
 
   private def obtainOnce(spark: SparkSession, family: String, sfDir: String,
-      inputs: Seq[String])(build: String => Seq[(String, String)]): String = {
+      inputs: Seq[String])(build: String => Unit): String = {
     val key = s"$family-v$LayoutVersion-${corpusFp(sfDir, inputs)}"
     dirs.getOrElseUpdate(key, new Holder(() => {
       val root = warehouseRoot
@@ -254,11 +255,15 @@ object ComposedArtifacts {
       if (published.isDirectory) published.toString
       else {
         val tmp = Files.createTempDirectory(root.toPath, s".build-$family-")
-        val names = build(tmp.toString)
-        // the family's durable integrity receipt, hashed from the
-        // just-written stores so it describes exactly what publishes
-        Curation.artifactManifest(names.map { case (n, p) =>
-          n -> ParquetRead.parquet(spark, s"$tmp/$p") })
+        build(tmp.toString)
+        // the family's durable integrity receipt over every store the
+        // build wrote, so it describes exactly what publishes
+        val stores = Option(tmp.toFile.listFiles).toSeq.flatten
+          .filter(f => f.isDirectory && !f.getName.startsWith("_") &&
+            !f.getName.startsWith("."))
+          .map(_.getName).sorted
+        Curation.artifactManifest(stores.map(n =>
+          n -> ParquetRead.parquet(spark, s"$tmp/$n")))
           .write.mode("overwrite").parquet(s"$tmp/receipt")
         if (!tmp.toFile.renameTo(published)) {
           // lost the publish race (or a stale dir appeared): keep the
@@ -308,9 +313,6 @@ object ComposedArtifacts {
           .hint("rebalance")
           .write.mode("overwrite").parquet(s"$work/jac_base_pairs")
       } finally sigs.unpersist(false)
-      Seq("sigs" -> "sigs", "shingles" -> "shingles",
-        "scored" -> "scored", "cont_pairs" -> "cont_pairs",
-        "jac_pairs" -> "jac_pairs", "jac_base_pairs" -> "jac_base_pairs")
     }
 
   /** The ANN/model artifact family (built separately from the pair
@@ -348,11 +350,6 @@ object ComposedArtifacts {
         negSources = Seq("src3", "src4", "src5"))
       lm.write.mode("overwrite").parquet(s"$work/nb_lm")
       consts.write.mode("overwrite").parquet(s"$work/nb_consts")
-      Seq("cells" -> "cells", "ivf_centroids" -> "ivf_centroids",
-        "ivf_cells" -> "ivf_cells", "pq_codebook" -> "pq_codebook",
-        "pq_codes" -> "pq_codes", "sq_stats" -> "sq_stats",
-        "sq_codes" -> "sq_codes", "nb_lm" -> "nb_lm",
-        "nb_consts" -> "nb_consts")
     }
 
   private def annRead(spark: SparkSession, sfDir: String,
@@ -399,7 +396,6 @@ object ComposedArtifacts {
         .map(r => (r._2, r._3)).toSeq
       Bpe.segmentSymbols(docs, merges)
         .write.mode("overwrite").parquet(s"$work/bpe_vocab")
-      Seq("bpe_merges" -> "bpe_merges", "bpe_vocab" -> "bpe_vocab")
     }
 
   /** The trained BPE merge table (rank, lhs, rhs, pair_count). */
@@ -449,7 +445,6 @@ object ComposedArtifacts {
       Dedup.shingles(Tables(spark, sfDir).documents, 8)
         .hint("rebalance")
         .write.mode("overwrite").parquet(s"$work/shingles8")
-      Seq("shingles8" -> "shingles8")
     }
 
   /** The distinct 8-gram shingle index (doc_id, shingle). */
@@ -482,8 +477,6 @@ object ComposedArtifacts {
       Logistic.weightsDfFor(rd("lrx_feats"),
           Logistic.FeatureNamesExtended)
         .write.mode("overwrite").parquet(s"$work/lrx_weights")
-      Seq("lr_feats" -> "lr_feats", "lrx_feats" -> "lrx_feats",
-        "lr_weights" -> "lr_weights", "lrx_weights" -> "lrx_weights")
     }
 
   /** Surface integer feature table (doc_id, cls, b, f0..f4). */
@@ -557,13 +550,6 @@ object ComposedArtifacts {
         () => (1 to 4).foreach { k =>
           write(SuffixArray.spanGroupStore(docs, k), s"win_k$k")
         })
-      Seq("sa_lcp" -> "sa_lcp", "sg_base_store" -> "sg_base_store",
-        "sg_base_pairs" -> "sg_base_pairs",
-        "sg_full_store" -> "sg_full_store",
-        "sg_full_pairs" -> "sg_full_pairs",
-        "hot_base_store" -> "hot_base_store",
-        "hot_base_pairs" -> "hot_base_pairs") ++
-        (1 to 4).map(k => s"win_k$k" -> s"win_k$k")
     }
 
   private def suffixRead(spark: SparkSession, sfDir: String,

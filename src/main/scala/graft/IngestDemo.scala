@@ -13,7 +13,9 @@ import graft.sources.Tables
   * continuously-crawled corpus actually grows. [[ComposedArtifacts]]
   * is the batch story (build artifacts once, consumers collapse);
   * this is the per-delivery story its incremental family
-  * (q92/q96/q154/q161/q163 + the streaming twins) was built for:
+  * (q92/q96/q154/q161/q163; the live form of its count tables is the
+  * batch operator over `readStream`, see [[graft.streaming.DocStreams]])
+  * was built for:
   *
   *   bootstrap (once per warehouse): fingerprint store, MinHash
   *     signature store, span window index, NB count + serve
@@ -152,8 +154,8 @@ object IngestDemo {
       t.embeddings.filter(bucket >= baseBuckets))
   }
 
-  /** The artifacts covered by the integrity receipts, as
-    * (name, path-under-work) — v1 paths are `<path>_v1`. Covers the
+  /** The artifacts covered by the integrity receipts, by store name
+    * under the work dir — v1 stores are `<name>_v1`. Covers the
     * six SERVE artifacts plus the two NB count tables: the counts are
     * training state rather than gating state, but they are the fold
     * the serve model re-derives from, so a warehouse that ever
@@ -162,36 +164,32 @@ object IngestDemo {
     * artifacts get (ADVICE round-13).
     */
   private val ReceiptedArtifacts = Seq(
-    "fp_store" -> "fp_store", "sig_store" -> "sig_store",
+    "fp_store", "sig_store",
     // the LSH bucket-stats table (round-15): the store-side
     // aggregation both per-delivery near-dup probes consume, kept as
     // its own foldable artifact so the delivery path never
     // re-aggregates the signature store
-    "bucket_store" -> "bucket_store",
-    "span_index" -> "span_index", "nb_vt" -> "nb_vt",
-    "nb_dc" -> "nb_dc", "nb_lm" -> "nb_lm",
-    "nb_consts" -> "nb_consts", "gate_thr" -> "gate_thr",
+    "bucket_store",
+    "span_index", "nb_vt", "nb_dc", "nb_lm", "nb_consts", "gate_thr",
     // the narrow scoring projections (round-14): per-doc token
     // profiles, the (doc_id, source) table, and the per-doc score
     // table whose generation suffix IS the model version that scored
     // it — "which scores calibrated this cut table" is a receipt row
-    "tok_profiles" -> "tok_profiles", "doc_src" -> "doc_src",
-    "nb_scores" -> "nb_scores",
+    "tok_profiles", "doc_src", "nb_scores",
     // the EMBEDDING-side serve artifacts (round-14: the takedown
     // lifecycle reaches the vector stores too): IVF index pair +
     // PQ codebook/code table
-    "ivf_centroids" -> "ivf_centroids", "ivf_cells" -> "ivf_cells",
-    "pq_codebook" -> "pq_codebook", "pq_codes" -> "pq_codes",
+    "ivf_centroids", "ivf_cells", "pq_codebook", "pq_codes",
     // the SQ8 pair (round-15): per-dim extrema model + code table —
     // the scalar sibling of the PQ codebook/codes split
-    "sq_stats" -> "sq_stats", "sq_codes" -> "sq_codes",
+    "sq_stats", "sq_codes",
     // the bigram-LM artifacts (round-15): the count state plus the
     // two serve tables lmFromCounts derives from it
-    "lm_bi" -> "lm_bi", "lm_uni" -> "lm_uni", "lm_consts" -> "lm_consts",
+    "lm_bi", "lm_uni", "lm_consts",
     // the suffix-repeat span-group pair (round-17): the doc-local
     // group store plus the maintained maximal-repeat pair table —
     // the last store family to join the fold/retract lifecycle
-    "sg_store" -> "sg_store", "sg_pairs" -> "sg_pairs")
+    "sg_store", "sg_pairs")
 
   /** [[stages]] with the corpus-v0/delivery split supplied as
     * DataFrames — the rehearsal entry point (ScaleRehearsal inflates
@@ -218,8 +216,8 @@ object IngestDemo {
     def withSplit(d: DataFrame): DataFrame =
       d.join(Curation.hashSplit(d).select("doc_id", "split"), Seq("doc_id"))
     def receipts(suffix: String): DataFrame =
-      Curation.artifactManifest(ReceiptedArtifacts.map { case (n, p) =>
-        n -> rd(p + suffix) })
+      Curation.artifactManifest(ReceiptedArtifacts.map(n =>
+        n -> rd(n + suffix)))
     Seq(
       "boot_fp_store" -> (() =>
         wr(TextAnalysis.fingerprints(base), "fp_store")),
@@ -620,8 +618,8 @@ object IngestDemo {
       df.join(rd("removed_docs").select("doc_id"), Seq("doc_id"),
         "left_anti")
     def receipts(suffix: String): DataFrame =
-      Curation.artifactManifest(ReceiptedArtifacts.map { case (n, p) =>
-        n -> rd(p + suffix) })
+      Curation.artifactManifest(ReceiptedArtifacts.map(n =>
+        n -> rd(n + suffix)))
     Seq(
       "tdn_removal_set" -> (() =>
         // an md5 bucket of corpus v1 (~1/7th), not a doc_id range —
@@ -1231,8 +1229,8 @@ object IngestDemo {
         // (a) determinism: re-hashing the SAME v0 artifacts must
         // reproduce the stored receipt bit-for-bit
         same("artifact_manifest_v0(redo)",
-          Curation.artifactManifest(ReceiptedArtifacts.map { case (n, p) =>
-            n -> rd(p) }),
+          Curation.artifactManifest(ReceiptedArtifacts.map(n =>
+            n -> rd(n))),
           rd("artifact_manifest_v0"))
         // (b) the diff covers exactly the receipted artifacts, with
         // no added/removed rows (refresh rewrites every store)

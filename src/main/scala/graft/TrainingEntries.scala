@@ -3223,7 +3223,8 @@ object TrainingEntries {
          |FROM slcp WHERE l >= 5 AND (SELECT ok FROM sguard) = 0
          |ORDER BY doc1, pos1, doc2, pos2""".stripMargin,
 
-    // Mirrors Logistic.weightsDfExtended: the 8-feature gradient
+    // Mirrors Logistic.weightsDfFor(featuresExtended(…),
+    // FeatureNamesExtended): the 8-feature gradient
     // replay with the engine-signal features regenerated from their
     // own oracle families (lmsc / gopher / span coverage)
     "q238_lrx_weights" ->

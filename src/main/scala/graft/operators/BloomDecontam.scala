@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Encoder, Encoders}
 
+import graft.operators.OrderedOut._
+
 /** Bloom-filter benchmark decontamination over token windows — the
   * shape a 100 TB pipeline actually runs: build a fixed-size bit array
   * from the EVAL set's span fingerprints once, broadcast it, and probe
@@ -25,11 +27,13 @@ import org.apache.spark.sql.{Encoder, Encoders}
   *  - [[buildFilter]] + [[decontaminateWithFilter]]: the production
   *    path — a byte-array `Aggregator` (map-side partial ORs, one
   *    m/8-byte blob per partition crosses the shuffle), the blob
-  *    broadcast, membership probed by a 2-bit-test UDF. The UDF is
-  *    justified the mapPartitions way: probing a broadcast bit array
-  *    has no Column-expression equivalent (no binary bit-get), and the
-  *    alternative — the relational join — shuffles every train-window
-  *    bit. Spec-pinned equal to the relational form (BloomDecontamSpec).
+  *    broadcast, each document's windows probed per row by one
+  *    bit-test UDF. The UDF is justified the mapPartitions way:
+  *    probing a broadcast bit array has no Column-expression
+  *    equivalent (no binary bit-get), and the alternative — the
+  *    relational join — shuffles every train-window bit. The probe is
+  *    row-local, so it runs over `readStream` unchanged. Spec-pinned
+  *    equal to the relational form (BloomDecontamSpec).
   *
   * Bloom semantics: no false negatives ever (the bloom hit set is a
   * superset of the exact shared-window set); false-positive rate
@@ -192,26 +196,36 @@ object BloomDecontam {
       .head()
   }
 
-  /** Probe side: flag training documents against a built filter.
-    * Bit indices are computed by the same codegen'd expressions; only
-    * the final all-bits-set test is a UDF over the broadcast blob
-    * (see object doc for why no expression can do this). Output
-    * matches [[decontaminateRelational]] exactly — spec-pinned.
+  /** Probe side: flag training documents against a built filter —
+    * (doc_id, n_hit_windows) for train docs with >= 1 hit, the
+    * [[decontaminateRelational]] contract exactly (spec-pinned). Per
+    * row: the distinct window fingerprints
+    * ([[SubstringDedup.windowFpArray]] + `array_distinct`) map to
+    * their bit indices through the same codegen'd expressions, and one
+    * UDF counts the windows whose every bit is set in the broadcast
+    * blob (see object doc for why no expression can do this). No
+    * shuffle and no keyed state, so the same operator runs over
+    * `readStream`: a filter built offline flags a training firehose
+    * on arrival, in bounded memory — the property the bloom exists to
+    * buy. Refreshing the filter (a new eval release) is a stream
+    * restart with a new broadcast.
     */
   def decontaminateWithFilter(documents: DataFrame, filter: Array[Byte],
       k: Int = 8, m: Int = DefaultM, seeds: Int = DefaultSeeds,
       evalMod: Long = DefaultEvalMod): DataFrame = {
     require(filter.length == m / 8, "filter/m mismatch")
     val bc = documents.sparkSession.sparkContext.broadcast(filter)
-    val mightContain = udf { bits: Seq[Long] =>
+    val hitCount = udf { fpBits: Seq[Seq[Long]] =>
       val a = bc.value
-      bits.forall(b => (a((b / 8).toInt) & (1 << (b % 8).toInt)) != 0)
+      fpBits.count(_.forall(b =>
+        (a((b / 8).toInt) & (1 << (b % 8).toInt)) != 0)).toLong
     }
-    SubstringDedup.windowOccurrences(documents, k)
+    documents.spread()
       .filter($("doc_id") % evalMod =!= 0)
-      .select($("doc_id"), $("fp")).distinct()
-      .where(mightContain(bitArray($("fp"), m, seeds)))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_hit_windows"))
+      .select($("doc_id"),
+        hitCount(transform(
+          array_distinct(SubstringDedup.windowFpArray($("text"), k)),
+          fp => bitArray(fp, m, seeds))).as("n_hit_windows"))
+      .filter($("n_hit_windows") >= 1)
   }
 }

@@ -206,12 +206,6 @@ object Logistic {
     weightsDfFor(features(documents, posSources, negSources),
       FeatureNames, steps)
 
-  /** [[weightsDf]] on the engine-signal vector (q238). */
-  def weightsDfExtended(documents: DataFrame, posSources: Seq[String],
-      negSources: Seq[String], steps: Int = Steps): DataFrame =
-    weightsDfFor(featuresExtended(documents, posSources, negSources),
-      FeatureNamesExtended, steps)
-
   /** Held-out scoring (b ≥ 8) under weights trained on b ≤ 7:
     * (doc_id, margin_micro, p_micro, pred_pos) — the discriminative
     * twin of the q157/q214 held-out NB protocol.

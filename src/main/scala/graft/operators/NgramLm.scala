@@ -54,14 +54,15 @@ object NgramLm {
   private def $(c: String): Column = col(c)
 
   /** Array of (w1, w2) bigram structs over an ALREADY-SPLIT token
-    * array — the row-local core, a pure Column expression so the
-    * streaming twins run it over a firehose unchanged (the
-    * SimHash/WindowHashes discipline). Callers bind the tokenization
-    * to a column FIRST (`split(normText(text), " ").as("toks")` in
-    * one select, this in the next): inlining the split into every
-    * element access re-evaluates it per token inside Generate, where
-    * codegen subexpression elimination is not guaranteed — binding
-    * makes one-split-per-row structural. Empty array when the doc
+    * array — the row-local core, a pure Column expression so
+    * [[bigramCounts]] and the LM streams run it over a firehose
+    * unchanged (the SimHash/WindowHashes discipline). Callers bind the
+    * tokenization to a column FIRST (`split(normText(text), " ")
+    * .as("toks")` in one select, this in the next): inlining the
+    * split into every element access re-evaluates it per token inside
+    * Generate, where codegen subexpression elimination is not
+    * guaranteed — binding makes one-split-per-row structural. Empty
+    * array when the doc
     * has fewer than two tokens; normText collapses whitespace runs,
     * so adjacent tokens are non-empty by construction.
     */

@@ -1009,11 +1009,15 @@ object TextAnalysis {
       coalesce(sum(when($("cls") === 0L, 1L).otherwise(0L)), lit(0L))
         .cast("long").as("n0"))
 
-  /** Per-token-type class counts (tf1, tf0) over the labeled slice —
-    * one map-side-combined aggregate; only (token, partial-count)
-    * pairs shuffle.
+  /** Per-token-type class counts (token, tf1, tf0) over a labeled
+    * slice (`cls` 1L/0L precomputed) — one map-side-combined
+    * aggregate; only (token, partial-count) pairs shuffle. A single
+    * aggregation, so it also runs over `readStream`: on a labeled
+    * firehose in complete/update mode the running state IS the
+    * [[nbCountsUpdate]] fold, vocabulary-sized, and a serve model
+    * derives from it via [[nbLmFromCounts]] at any cadence.
     */
-  private def nbTypeCounts(labeled: DataFrame): DataFrame =
+  def nbTypeCounts(labeled: DataFrame): DataFrame =
     labeled.spread()
       .select($("cls"), explode(split(normText($("text")), " ")).as("token"))
       .filter(length($("token")) > 0)
@@ -1059,11 +1063,11 @@ object TextAnalysis {
   /** Train the NB classifier ONCE and return its two serve-time
     * artifacts — the vocabulary-sized LM table (token, lnp1, lnp0)
     * and the one-row constants (oov1, oov0, prior_diff). Persist
-    * both and every future delivery is scored by [[nbScoreFrom]] (or
-    * the streaming twin) without touching the training corpus again:
-    * the [[bm25TermTable]] / IVF-index artifact discipline, applied
-    * to quality filtering at ingest. Both outputs are materialized
-    * eagerly (vocab-sized and one row — cheap).
+    * both and every future delivery is scored by [[nbScoreFrom]] (in
+    * batch or over `readStream`) without touching the training
+    * corpus again: the [[bm25TermTable]] / IVF-index artifact
+    * discipline, applied to quality filtering at ingest. Both outputs
+    * are materialized eagerly (vocab-sized and one row — cheap).
     */
   def nbModel(documents: DataFrame, posSources: Seq[String],
       negSources: Seq[String]): (DataFrame, DataFrame) = {
@@ -1182,13 +1186,16 @@ object TextAnalysis {
     * (doc_id, n_tok, llr_micro, pred_pos), identical to
     * [[nbClassifierScores]] run end-to-end (spec-pinned). The LM is
     * vocabulary-sized (heavy-tailed-small next to the corpus) and
-    * joins the (doc, token, count) stream on the token key — AQE
-    * broadcasts it when it fits; corpus text never shuffles either
-    * way.
+    * joins the token stream on the token key — AQE broadcasts it
+    * when it fits; corpus text never shuffles either way. Each token
+    * occurrence enters [[nbScoreFromProfiles]] as a count-1 profile
+    * row: the one per-doc aggregation is the only one, so the same
+    * scorer runs over `readStream` (complete/update mode) and a live
+    * crawl is quality-scored without re-touching the training corpus.
     */
   def nbScoreFrom(lm: DataFrame, consts: DataFrame,
       toScore: DataFrame): DataFrame =
-    nbScoreFromProfiles(lm, consts, tokenProfiles(toScore))
+    nbScoreFromProfiles(lm, consts, tokens(toScore).withColumn("c", lit(1L)))
 
   /** Per-doc TOKEN PROFILES — (doc_id, token, c) counts of the
     * normalized tokenization: the persistable NARROW PROJECTION that

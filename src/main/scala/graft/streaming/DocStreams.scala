@@ -6,24 +6,52 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import org.apache.spark.sql.types._
 
 import graft.engine.ParquetRead
-import graft.operators.{BloomDecontam, Curation, SubstringDedup, TextAnalysis}
+import graft.operators.{Curation, SubstringDedup, TextAnalysis}
 
-/** Structured Streaming over the documents table: the incremental twin
-  * of the batch dedup pillar (graft.operators.Dedup), for pipelines
-  * that ingest a document firehose and must emit each canonical text
-  * exactly once.
+/** Structured Streaming over the documents table: the incremental
+  * side of the document pillars, for pipelines that ingest a document
+  * firehose.
+  *
+  * The rule: a batch operator runs over `readStream` UNCHANGED when
+  * its plan is row-local work plus at most one aggregation
+  * ([[graft.operators.OrderedOut]]'s `spread()` is a no-op on a
+  * stream so that this holds), and such an operator has no copy here —
+  * the stream calls the batch operator. Examples:
+  * [[graft.operators.TextAnalysis.nbTypeCounts]],
+  * [[graft.operators.TextAnalysis.nbScoreFrom]],
+  * [[graft.operators.NgramLm.bigramCounts]],
+  * [[graft.operators.SubstringDedup.windowIndex]],
+  * [[graft.operators.Curation.clusterAwareSplit]] and
+  * [[graft.operators.BloomDecontam.decontaminateWithFilter]].
+  * What stays here is what no batch operator expresses:
+  *  - stateful semantics batch has no operator for: emit-once keyed
+  *    state ([[dedupedDocs]], [[repeatedSpans]], [[nearDupPairs]]),
+  *    signed retraction folds kept live (the `*Signed` twins,
+  *    [[manifestDigestStreamSigned]]) and the micro-batch label-store
+  *    fold ([[componentsFoldSink]]);
+  *  - gates whose row-local signals ride the token rows as grouping
+  *    columns, because a streaming aggregate cannot join a second
+  *    derivative of its own stream ([[compositeGateStream]],
+  *    [[lmGateStream]]);
+  *  - [[cmsCells]], whose ×depth expansion rides token occurrences
+  *    where the batch `cmsTable` hashes token types (two chained
+  *    aggregations);
+  *  - [[bm25ScoreStream]], which streams QUERIES against the
+  *    persisted impact index (the batch scorer ranks a top-k per query
+  *    over a window, which a stream cannot), and the sources.
   *
   * Same twin-checking scheme as [[EventStreams]]: the streaming result
   * over a static input is compared with the batch operator the DuckDB
   * oracle already arbitrates (StreamingSpec).
   *
-  * Scale: state is one (fingerprint → keep_id) entry per DISTINCT
-  * document ever seen — the inherent floor for exact streaming dedup
-  * (you cannot forget a fingerprint without risking a re-emit). The
-  * state store shards by fingerprint across executors like any keyed
-  * state; for bounded-memory deployments compose with a
-  * processing-time TTL upstream (accepting re-emits past the horizon)
-  * or periodically compact state to a bloom-filter side input.
+  * Scale: exact dedup state is one (fingerprint → keep_id) entry per
+  * DISTINCT document ever seen — the inherent floor for exact
+  * streaming dedup (you cannot forget a fingerprint without risking a
+  * re-emit). The state store shards by fingerprint across executors
+  * like any keyed state; for bounded-memory deployments compose with
+  * a processing-time TTL upstream (accepting re-emits past the
+  * horizon) or periodically compact state to a bloom-filter side
+  * input.
   */
 object DocStreams extends Serializable {
 
@@ -119,49 +147,6 @@ object DocStreams extends Serializable {
       }
   }
 
-  /** Streaming bloom decontamination — the firehose twin of the batch
-    * probe side ([[BloomDecontam.decontaminateWithFilter]]): a filter
-    * built OFFLINE from the eval set ([[BloomDecontam.buildFilter]])
-    * is broadcast once, and every arriving training document is
-    * flagged in place with the count of its distinct `k`-token
-    * windows the filter claims to have seen. Same output contract as
-    * the batch probe: (doc_id, n_hit_windows), training docs with ≥ 1
-    * hit only — StreamingSpec pins the equality over a static input.
-    *
-    * Unlike every other op in this module this one is STATELESS: the
-    * window fingerprints, their bit indices, and the distinct-count
-    * are per-row expressions ([[SubstringDedup.windowFpArray]] +
-    * `array_distinct` + a lambda filter over the broadcast blob), so
-    * there is no keyed state store at all — bounded memory by
-    * construction, the property the bloom exists to buy. The filter
-    * is a config-sized side input; refreshing it (a new eval release)
-    * is a stream restart with a new broadcast, the standard
-    * slowly-changing-side-input pattern.
-    */
-  def bloomFlagged(docs: DataFrame, filter: Array[Byte], k: Int = 8,
-      m: Int = BloomDecontam.DefaultM,
-      seeds: Int = BloomDecontam.DefaultSeeds,
-      evalMod: Long = BloomDecontam.DefaultEvalMod): DataFrame = {
-    require(filter.length == m / 8, "filter/m mismatch")
-    val bc = docs.sparkSession.sparkContext.broadcast(filter)
-    // the per-window bit indices are pure codegen'd expressions; the
-    // single UDF per row only tests the broadcast blob (the batch
-    // probe's justification applies: no Column expression can index a
-    // broadcast byte array)
-    val hitCount = udf { fpBits: Seq[Seq[Long]] =>
-      val a = bc.value
-      fpBits.count(_.forall(b =>
-        (a((b / 8).toInt) & (1 << (b % 8).toInt)) != 0)).toLong
-    }
-    docs
-      .filter(col("doc_id") % evalMod =!= 0)
-      .select(col("doc_id"),
-        hitCount(transform(
-          array_distinct(SubstringDedup.windowFpArray(col("text"), k)),
-          fp => BloomDecontam.bitArray(fp, m, seeds))).as("n_hit_windows"))
-      .filter(col("n_hit_windows") >= 1)
-  }
-
   final case class BandDoc(band: Int, chunk: Long, doc_id: Long, sim: Long)
   final case class SimPair(id1: Long, id2: Long, hamming: Long)
 
@@ -252,40 +237,17 @@ object DocStreams extends Serializable {
       .groupBy(col("query_id"), col("doc_id"))
       .agg(sum(col("ts_micro")).as("score_micro"))
 
-  /** Streaming NB quality-filter inference: the document firehose
-    * scored as it arrives against the OFFLINE-trained classifier
-    * ([[graft.operators.TextAnalysis.nbModel]]'s LM artifact; the
-    * three scalar constants ship as literals — the model/data split
-    * of the pqCodes twin). The stream-static token join is STATELESS;
-    * the per-doc sum is an update-mode streaming aggregation — this
-    * is how the quality gate runs on a live crawl without ever
-    * re-touching the training corpus.
-    *
-    * Structural twin note: the batch scorer pre-aggregates (doc,
-    * token) counts then multiplies; chained aggregations are
-    * unsupported in streaming, so `dl` is summed per token OCCURRENCE
-    * here — identical totals, more pre-agg rows (the micro-batch
-    * map-side combine still collapses them before the shuffle).
-    *
-    * Twin contract (StreamingSpec): final (doc_id, n_tok, llr_micro,
-    * pred_pos) rows equal [[graft.operators.TextAnalysis
-    * .nbClassifierScores]]'s.
+  /** A per-source threshold cut shipped as a literal map, looked up
+    * by the row's `source`. An EMPTY cut table (a gate whose every
+    * source has keep quota zero) must match the batch gates' contract,
+    * not throw: their left join yields a NULL threshold, so every doc
+    * drops. A zero-arg map() literal has no value type, so the empty
+    * case is a typed NULL column instead.
     */
-  def nbScoreStream(docs: DataFrame, lm: DataFrame, oov1: Long,
-      oov0: Long, priorDiff: Long): DataFrame =
-    docs
-      .select(col("doc_id"),
-        explode(split(TextAnalysis.normText(col("text")), " ")).as("token"))
-      .where(length(col("token")) > 0)
-      .join(lm, Seq("token"), "left")
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).cast("long").as("n_tok"),
-        sum(coalesce(col("lnp1"), lit(oov1)) -
-          coalesce(col("lnp0"), lit(oov0))).cast("long").as("tok_llr"))
-      .select(col("doc_id"), col("n_tok"),
-        (col("tok_llr") + lit(priorDiff)).as("llr_micro"),
-        when(col("tok_llr") + lit(priorDiff) > 0, 1L).otherwise(0L)
-          .as("pred_pos"))
+  private def sourceLookup(entries: Seq[(String, Long)]): Column =
+    if (entries.isEmpty) lit(null).cast("long")
+    else element_at(map(entries.flatMap { case (s, v) =>
+      Seq(lit(s), lit(v)) }: _*), col("source"))
 
   /** Streaming composite keep/drop gate — [[graft.operators.Curation
     * .compositeGateFrom]]'s firehose twin: every arriving document is
@@ -310,17 +272,8 @@ object DocStreams extends Serializable {
       minEntropyMilli: Long = graft.operators.Curation.MinEntropyMilli,
       maxEntropyMilli: Long = graft.operators.Curation.MaxEntropyMilli): DataFrame = {
     import graft.plans.CharEntropyExpression.charEntropyMilli
-    // EMPTY threshold table (a gate whose every source has keep quota
-    // zero) must match the batch twin's contract, not throw:
-    // compositeGateFrom's left join yields NULL thr → ok_nb false for
-    // every doc. A zero-arg map() literal has no value type, so the
-    // empty case ships typed NULL lookup columns instead.
-    def lookup(entries: Seq[(String, Long)]): Column =
-      if (entries.isEmpty) lit(null).cast("long")
-      else element_at(map(entries.flatMap { case (s, v) =>
-        Seq(lit(s), lit(v)) }: _*), col("source"))
-    val thrLlr = lookup(thresholds.map { case (s, t, _) => (s, t) })
-    val thrId = lookup(thresholds.map { case (s, _, i) => (s, i) })
+    val thrLlr = sourceLookup(thresholds.map { case (s, t, _) => (s, t) })
+    val thrId = sourceLookup(thresholds.map { case (s, _, i) => (s, i) })
     docs
       .select(col("doc_id"), col("source"),
         TextAnalysis.gopherKeepCol(col("text")).as("ok_gopher"),
@@ -348,31 +301,9 @@ object DocStreams extends Serializable {
         col("ok_nb") && col("ok_gopher") && col("ok_entropy"))
   }
 
-  /** Streaming NB count maintenance: the running (token, tf1, tf0)
-    * class-count table over a LABELED document firehose — the
-    * incremental-model state [[graft.operators.TextAnalysis
-    * .nbCountsUpdate]] folds in batch, kept live as a plain streaming
-    * aggregation instead (counts are additive, so the running state
-    * IS the fold). Ship a model by deriving the LM from the current
-    * state (`nbLmFromCounts`) whenever retraining cadence demands.
-    * State is vocabulary-sized — the inherent floor for any count
-    * model — and constant per token regardless of corpus size.
-    *
-    * `cls` must be precomputed on the stream (1L/0L; the source
-    * labeling rule runs at ingest). Twin contract (StreamingSpec):
-    * final cells equal the batch `nbCounts` type table.
-    */
-  def nbCountStream(labeled: DataFrame): DataFrame =
-    labeled
-      .select(col("cls"),
-        explode(split(TextAnalysis.normText(col("text")), " ")).as("token"))
-      .where(length(col("token")) > 0)
-      .groupBy(col("token"))
-      .agg(sum(when(col("cls") === 1L, 1L).otherwise(0L)).as("tf1"),
-        sum(when(col("cls") === 0L, 1L).otherwise(0L)).as("tf0"))
-
   /** RETRACTION-AWARE NB count maintenance: the signed sibling of
-    * [[nbCountStream]] over a labeled ingest/takedown event stream
+    * [[graft.operators.TextAnalysis.nbTypeCounts]] (which runs over
+    * `readStream` as is) over a labeled ingest/takedown event stream
     * (`cls` 1L/0L precomputed as there, `op` +1/-1 per
     * [[signedDocSchema]]). Class counts are additive both ways, so a
     * takedown event subtracts its token occurrences from the running
@@ -395,31 +326,6 @@ object DocStreams extends Serializable {
       .groupBy(col("token"))
       .agg(sum(when(col("cls") === 1L, col("op")).otherwise(0L)).as("tf1"),
         sum(when(col("cls") === 0L, col("op")).otherwise(0L)).as("tf0"))
-
-  /** Streaming bigram-LM count maintenance: the running (w1, w2, c12)
-    * state over a reference-document firehose — bigram counts are
-    * additive, so the live state is a plain streaming aggregation and
-    * a fresh serve model derives from it via
-    * [[graft.operators.NgramLm.lmFromCounts]] at any cadence. The
-    * bigram derivation is [[graft.operators.NgramLm.bigramsOfToks]]
-    * — a pure row-local Column expression (toks bound in its own
-    * projection, one split per row), so it runs over `readStream`
-    * unchanged (the SimHash discipline). State is one entry per
-    * DISTINCT reference bigram — the same floor the batch count
-    * table pays on disk.
-    *
-    * Twin contract (StreamingSpec): run over the static reference and
-    * the final cells equal the batch
-    * [[graft.operators.NgramLm.bigramCounts]].
-    */
-  def lmCountStream(docs: DataFrame): DataFrame =
-    docs
-      .select(graft.operators.NgramLm.toksOf(col("text")).as("toks"))
-      .select(explode(graft.operators.NgramLm.bigramsOfToks(col("toks")))
-        .as("bg"))
-      .select(col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-      .groupBy(col("w1"), col("w2"))
-      .agg(count(lit(1)).as("c12"))
 
   /** Dup-pair stream schema for the label-store fold sink. */
   val pairSchema: StructType = StructType(Seq(
@@ -454,7 +360,8 @@ object DocStreams extends Serializable {
     * streaming twin of [[graft.operators.Dedup.componentsFold]]
     * (q207): each arriving pair micro-batch folds into the persisted
     * store via foreachBatch, publishing a new `gen-<batchId>`
-    * parquet generation that [[clusterSplitStream]]-style consumers
+    * parquet generation that stream consumers such as
+    * [[graft.operators.Curation.clusterAwareSplit]] over `readStream`
     * pick up on their next restart. componentsFold is an iterative
     * connected-components recompute of the TOUCHED components only —
     * not expressible as a streaming aggregation — so the store rides
@@ -488,35 +395,11 @@ object DocStreams extends Serializable {
       .start()
   }
 
-  /** Streaming split assignment — the serve twin of
-    * [[graft.operators.Curation.clusterAwareSplit]] (q213): each
-    * arriving doc joins the STATIC cluster-label store (stream-static
-    * left join) and takes the md5 split rule row-locally, so a
-    * near-dup of an already-clustered doc is routed into its family's
-    * split the moment it arrives. Stateless — no keyed state at all;
-    * a label-store refresh is a stream restart against the new
-    * parquet. Twin contract (StreamingSpec): rows == the batch split
-    * on the same corpus and labels.
-    */
-  def clusterSplitStream(docs: DataFrame, labels: DataFrame,
-      trainPct: Int = 80, valPct: Int = 10): DataFrame =
-    docs.select(col("doc_id"))
-      .join(labels.select(col("doc_id"), col("component")),
-        Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("component"), col("doc_id")).as("split_key"))
-      .withColumn("bucket",
-        graft.operators.Curation.hashBucket(col("split_key"), 100))
-      .select(col("doc_id"), col("split_key"), col("bucket"),
-        when(col("bucket") < trainPct, "train")
-          .when(col("bucket") < trainPct + valPct, "val")
-          .otherwise("test").as("split"))
-
   /** Streaming perplexity gate: the served per-source LM cut
     * ([[graft.operators.NgramLm.lmGateFrom]]) over a document
     * firehose — the LM model (bigram + context count tables) joins
     * STREAM-STATIC, the one-row constants and the K-row threshold
-    * cut ship as literals (the compositeGateStream model/data split),
+    * cut ship as literals (the [[compositeGateStream]] model/data split),
     * and the only keyed state is the per-doc score aggregation.
     * Emits (doc_id, source, avg_nll_micro, keep) per scored doc —
     * docs with fewer than two tokens produce no bigrams and are
@@ -528,14 +411,8 @@ object DocStreams extends Serializable {
   def lmGateStream(docs: DataFrame, bi: DataFrame, uni: DataFrame,
       v: Long, thresholds: Seq[(String, Long, Long)]): DataFrame = {
     import graft.operators.NgramLm
-    // empty cut table (all quotas zero): typed NULL lookups, keep
-    // false everywhere — compositeGateStream's empty-map discipline
-    def lookup(entries: Seq[(String, Long)]): Column =
-      if (entries.isEmpty) lit(null).cast("long")
-      else element_at(map(entries.flatMap { case (s, x) =>
-        Seq(lit(s), lit(x)) }: _*), col("source"))
-    val thrNll = lookup(thresholds.map { case (s, t, _) => (s, t) })
-    val thrId = lookup(thresholds.map { case (s, _, i) => (s, i) })
+    val thrNll = sourceLookup(thresholds.map { case (s, t, _) => (s, t) })
+    val thrId = sourceLookup(thresholds.map { case (s, _, i) => (s, i) })
     docs
       .select(col("doc_id"), col("source"),
         NgramLm.toksOf(col("text")).as("toks"))
@@ -562,7 +439,8 @@ object DocStreams extends Serializable {
   }
 
   /** RETRACTION-AWARE bigram-LM counts: the signed sibling of
-    * [[lmCountStream]] over an ingest/takedown event stream
+    * [[graft.operators.NgramLm.bigramCounts]] (which runs over
+    * `readStream` as is) over an ingest/takedown event stream
     * ([[signedDocSchema]], `op` +1/-1). A takedown event carrying the
     * same text subtracts its bigram occurrences from the running
     * state — [[graft.operators.NgramLm.bigramCountsRetract]]'s fold,
@@ -588,30 +466,9 @@ object DocStreams extends Serializable {
       .groupBy(col("w1"), col("w2"))
       .agg(sum(col("op")).as("c12"))
 
-  /** Streaming window-index maintenance: the running (fp, n_occ)
-    * span-dedup index over the document firehose — the accumulated
-    * state [[graft.operators.SubstringDedup.incrementalSpanStats]]
-    * probes per delivery, kept live as a plain streaming aggregation
-    * (window counts are additive). Uses the O(n) rolling-hash window
-    * source ([[graft.plans.WindowHashesExpression]] — a pure codegen
-    * expression, so it runs in a stream unchanged). State is one
-    * entry per DISTINCT window fingerprint — the same floor the
-    * batch index pays on disk.
-    *
-    * Twin contract (StreamingSpec): final cells equal the batch
-    * [[graft.operators.SubstringDedup.windowIndex]].
-    */
-  def windowIndexStream(docs: DataFrame, k: Int = 8): DataFrame =
-    docs
-      .select(col("doc_id"), TextAnalysis.normText(col("text")).as("norm"))
-      .where(length(col("norm")) > 0)
-      .select(posexplode(graft.plans.WindowHashesExpression
-        .windowHashes(split(col("norm"), " "), k)).as(Seq("pos0", "fp")))
-      .groupBy(col("fp"))
-      .agg(count(lit(1)).as("n_occ"))
-
   /** RETRACTION-AWARE window-index maintenance: the signed sibling of
-    * [[windowIndexStream]] over an ingest/takedown event stream
+    * [[graft.operators.SubstringDedup.windowIndex]] (which runs over
+    * `readStream` as is) over an ingest/takedown event stream
     * ([[signedDocSchema]] — `op` +1/-1). Window counts are additive
     * both ways, so the live state is a plain signed sum per
     * fingerprint: an ingest event adds its windows, a takedown event

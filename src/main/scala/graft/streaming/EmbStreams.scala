@@ -6,11 +6,22 @@ import org.apache.spark.sql.types._
 
 import graft.operators.Similarity
 
-/** Structured Streaming over the embeddings table: the firehose side
-  * of the similarity pillar. An embedding producer (encoder service)
-  * streams vectors; the pipeline compresses them to PQ codes ON
-  * ARRIVAL with the codebook trained offline by the batch tier —
-  * codes land in the serving store, raw vectors can be archived cold.
+/** Structured Streaming over the embeddings and media tables: the
+  * firehose side of the similarity pillar. An embedding producer
+  * (encoder service) streams vectors; the pipeline compresses them to
+  * PQ codes ON ARRIVAL with the codebook trained offline by the batch
+  * tier — codes land in the serving store, raw vectors can be
+  * archived cold.
+  *
+  * The [[DocStreams]] rule holds here too: a batch operator that runs
+  * over `readStream` unchanged has no copy in this object. The media
+  * path is such an operator — decode, features and perceptual hashes
+  * are narrow maps with no keyed state, so
+  * [[graft.operators.Multimodal.extractFeatures]] and
+  * [[graft.operators.Multimodal.imageDHashes]] run directly on
+  * [[readMedia]]. What stays is what ships a model as literals: the
+  * PQ/SQ/centroid encoders (the batch forms read their models from
+  * tables) and [[semanticGateFlags]].
   *
   * Same twin discipline as [[DocStreams]]: streaming output over a
   * static input equals the oracle-gated batch operator
@@ -50,45 +61,17 @@ object EmbStreams {
       .as[graft.operators.Multimodal.MediaRow]
   }
 
-  /** Streaming media decode + feature extraction: the REAL codec path
-    * ([[graft.operators.Multimodal.extractFeatures]] — WAV/BMP/
-    * BMP-container decode, stripe features, pseudo-feature fallback)
-    * over an asset firehose, UNCHANGED: decode is a narrow
-    * mapPartitions transform with no keyed state, so the batch
-    * operator runs on readStream as-is (the SimHash discipline) and
-    * an arriving asset is embedded the moment it lands. Twin
-    * contract (StreamingSpec): rows == batch extractFeatures on the
-    * same assets.
-    */
-  def mediaFeatureStream(
-      media: Dataset[graft.operators.Multimodal.MediaRow],
-      dim: Int = 64): DataFrame =
-    graft.operators.Multimodal.extractFeatures(media, dim).toDF()
-
-  /** Streaming perceptual hashing: (media_id, dhash_lo, dhash_hi)
-    * per arriving image — [[graft.operators.Multimodal.imageDHashes]]
-    * UNCHANGED over the asset firehose (decode + 9x8 luma grid + bit
-    * packing are a narrow stateless map, the [[mediaFeatureStream]]
-    * discipline), so every landed image is banded-dedup-ready the
-    * moment it arrives; the bucket join itself stays a batch/
-    * micro-batch consumer of the accumulated hash store. Twin
-    * contract (StreamingSpec): rows == batch imageDHashes on the same
-    * assets.
-    */
-  def imageDHashStream(
-      media: Dataset[graft.operators.Multimodal.MediaRow]): DataFrame =
-    graft.operators.Multimodal.imageDHashes(media)
-
   /** Streaming PQ encoding: (vec_id, codes) per arriving vector,
     * against the OFFLINE-trained codebook
     * ([[Similarity.pqCodebookLocal]] — the model artifact, shipped
     * like the bloom filter blob). STATELESS like
-    * [[DocStreams.bloomFlagged]]: [[Similarity.pqAssignExpr]] is a
-    * pure per-row expression chain (least-over-structs argmin, no
-    * join/window/UDF), so there is no state store and a codebook
-    * refresh is a stream restart with the new literal. Vectors of
-    * the wrong width are dropped — [[Similarity.vectorHealth]] is
-    * the batch preflight that counts them.
+    * [[graft.operators.BloomDecontam.decontaminateWithFilter]]:
+    * [[Similarity.pqAssignExpr]] is a pure per-row expression chain
+    * (least-over-structs argmin, no join/window/UDF), so there is no
+    * state store and a codebook refresh is a stream restart with the
+    * new literal. Vectors of the wrong width are dropped —
+    * [[Similarity.vectorHealth]] is the batch preflight that counts
+    * them.
     */
   def pqCodes(emb: DataFrame, codebook: Seq[(Int, Long, Seq[Long])],
       m: Int = 4, dim: Int = 64): DataFrame =

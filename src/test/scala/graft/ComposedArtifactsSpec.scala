@@ -47,6 +47,18 @@ class ComposedArtifactsSpec extends SparkSpec {
     assert(ComposedArtifacts.bpeVocab(spark, sfDir).count() > 0)
     assert(ComposedArtifacts.hotBaseStore(spark, sfDir).count() > 0)
     assert(ComposedArtifacts.hotBasePairs(spark, sfDir).count() >= 0)
+    // every family's receipt lists exactly the stores its build wrote
+    Seq("pair", "ann", "tok", "decon", "lr", "suffix").foreach { family =>
+      val r = ComposedArtifacts.receipt(spark, sfDir, family)
+      val published = new java.io.File(new java.net.URI(r.inputFiles.head))
+        .getParentFile.getParentFile
+      val stores = published.listFiles.toSeq
+        .filter(f => f.isDirectory && f.getName != "receipt")
+        .map(_.getName).toSet
+      val listed = r.select("artifact").collect().map(_.getString(0)).toSet
+      assert(listed === stores,
+        s"$family receipt does not list the stores in $published")
+    }
   }
 
   test("warehouse sweep: TTL-bounded, keeps recent fps, never the resolving key") {

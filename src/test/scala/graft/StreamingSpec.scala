@@ -444,17 +444,17 @@ class StreamingSpec extends SparkSpec {
     // the filter is built OFFLINE from the (static) eval set, then
     // broadcast into the stream — the slowly-changing-side-input shape
     val filter = BloomDecontam.buildFilter(tables.documents)
-    val flagged = DocStreams.bloomFlagged(
+    val flagged = BloomDecontam.decontaminateWithFilter(
       DocStreams.readDocs(spark, docDir), filter)
     val q = flagged.writeStream.outputMode("append")
       .format("memory").queryName("bloom_stream").start()
     try q.processAllAvailable() finally q.stop()
     val got = spark.table("bloom_stream")
       .as[(Long, Long)].collect().toSet
-    val want = BloomDecontam.decontaminateWithFilter(tables.documents, filter)
+    val want = BloomDecontam.decontaminateRelational(tables.documents)
       .as[(Long, Long)].collect().toSet
     assert(got === want,
-      "streaming bloom flags must equal the batch probe exactly")
+      "streaming bloom flags must equal the oracle-gated relational bloom")
     assert(got.nonEmpty)
   }
 
@@ -474,7 +474,7 @@ class StreamingSpec extends SparkSpec {
     val docs = in.toDF().toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("mem"))
       .withColumn("n_chars", length($"text").cast("long"))
-    val q = DocStreams.bloomFlagged(docs, filter).writeStream
+    val q = BloomDecontam.decontaminateWithFilter(docs, filter).writeStream
       .outputMode("append").format("memory").queryName("bloom_rebatch").start()
     try {
       in.addData((1L, leak), (2L, "totally different words in this body here now"))
@@ -526,15 +526,13 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.DocStreams
     val docsT = graft.sources.Tables(spark, dir).documents
     val (pos, neg) = (Seq("src0", "src1", "src2"), Seq("src3", "src4", "src5"))
-    // model trained OFFLINE by the batch tier; lm ships as the static
-    // join side, the three constants as literals
+    // model trained OFFLINE by the batch tier; lm and the one-row
+    // constants join the stream as static sides
     val (lm, consts) = TextAnalysis.nbModel(docsT, pos, neg)
-    val (o1, o0, pd) = consts.select($"oov1", $"oov0", $"prior_diff")
-      .as[(Long, Long, Long)].head()
     val nbDir = java.nio.file.Files.createTempDirectory("graft-nb-stream").toString
     docsT.filter($"doc_id" % 2 === 0).write.mode("append").parquet(nbDir)
-    val q = DocStreams.nbScoreStream(DocStreams.readDocs(spark, nbDir),
-        lm, o1, o0, pd)
+    val q = TextAnalysis.nbScoreFrom(lm, consts,
+        DocStreams.readDocs(spark, nbDir))
       .writeStream.outputMode("complete")
       .format("memory").queryName("nb_stream").start()
     try {
@@ -658,7 +656,7 @@ class StreamingSpec extends SparkSpec {
     val docsT = graft.sources.Tables(spark, dir).documents
     val wDir = java.nio.file.Files.createTempDirectory("graft-widx-stream").toString
     docsT.filter($"doc_id" % 2 === 0).write.mode("append").parquet(wDir)
-    val q = DocStreams.windowIndexStream(DocStreams.readDocs(spark, wDir))
+    val q = SubstringDedup.windowIndex(DocStreams.readDocs(spark, wDir))
       .writeStream.outputMode("complete")
       .format("memory").queryName("widx_stream").start()
     try {
@@ -684,7 +682,7 @@ class StreamingSpec extends SparkSpec {
     val wDir = java.nio.file.Files
       .createTempDirectory("graft-lm-stream").toString
     ref.filter($"doc_id" % 2 === 0).write.mode("append").parquet(wDir)
-    val q = DocStreams.lmCountStream(DocStreams.readDocs(spark, wDir))
+    val q = NgramLm.bigramCounts(DocStreams.readDocs(spark, wDir))
       .writeStream.outputMode("complete")
       .format("memory").queryName("lm_stream").start()
     try {
@@ -713,7 +711,7 @@ class StreamingSpec extends SparkSpec {
     val sDir = java.nio.file.Files
       .createTempDirectory("graft-split-stream").toString
     docsT.filter($"doc_id" % 2 === 0).write.mode("append").parquet(sDir)
-    val q = DocStreams.clusterSplitStream(
+    val q = Curation.clusterAwareSplit(
         DocStreams.readDocs(spark, sDir), labels)
       .writeStream.outputMode("append")
       .format("memory").queryName("split_stream").start()
@@ -739,7 +737,7 @@ class StreamingSpec extends SparkSpec {
     val mDir = java.nio.file.Files
       .createTempDirectory("graft-media-stream").toString
     assets.filter($"media_id" % 2 === 0).write.mode("append").parquet(mDir)
-    val q = EmbStreams.mediaFeatureStream(EmbStreams.readMedia(spark, mDir))
+    val q = Multimodal.extractFeatures(EmbStreams.readMedia(spark, mDir)).toDF()
       .writeStream.outputMode("append")
       .format("memory").queryName("media_stream").start()
     try {
@@ -765,7 +763,7 @@ class StreamingSpec extends SparkSpec {
     val mDir = java.nio.file.Files
       .createTempDirectory("graft-dhash-stream").toString
     assets.filter($"media_id" % 2 === 0).write.mode("append").parquet(mDir)
-    val q = EmbStreams.imageDHashStream(EmbStreams.readMedia(spark, mDir))
+    val q = Multimodal.imageDHashes(EmbStreams.readMedia(spark, mDir))
       .writeStream.outputMode("append")
       .format("memory").queryName("dhash_stream").start()
     try {
@@ -930,7 +928,7 @@ class StreamingSpec extends SparkSpec {
     val odd = docsT.filter($"doc_id" % 2 === 1)
     val wDir = java.nio.file.Files.createTempDirectory("graft-widx-glue").toString
     even.write.mode("append").parquet(wDir)
-    val q = DocStreams.windowIndexStream(DocStreams.readDocs(spark, wDir))
+    val q = SubstringDedup.windowIndex(DocStreams.readDocs(spark, wDir))
       .writeStream.outputMode("complete")
       .format("memory").queryName("widx_glue").start()
     try q.processAllAvailable() finally q.stop()
@@ -963,7 +961,7 @@ class StreamingSpec extends SparkSpec {
         org.apache.spark.sql.types.StringType),
       org.apache.spark.sql.types.StructField("cls",
         org.apache.spark.sql.types.LongType)))
-    val q = DocStreams.nbCountStream(
+    val q = TextAnalysis.nbTypeCounts(
         spark.readStream.schema(schema).parquet(nbDir))
       .writeStream.outputMode("complete")
       .format("memory").queryName("nbc_stream").start()

@@ -318,6 +318,14 @@ class TextSignalsSpec extends SparkSpec {
     assert(served === direct,
       "scoring off the persisted model must equal retraining end-to-end")
     assert(served.nonEmpty)
+    // the per-occurrence text path and the per-(doc, token) profile
+    // path sum the same integers
+    val fromProfiles = TextAnalysis.nbScoreFromProfiles(lm, consts,
+        TextAnalysis.tokenProfiles(docs))
+      .as[(Long, Long, Long, Long)].collect().toSet
+    assert(fromProfiles === TextAnalysis.nbScoreFrom(lm, consts, docs)
+      .as[(Long, Long, Long, Long)].collect().toSet,
+      "profile-path scores diverged from the text path")
   }
 
   test("nb incremental count fold == from-scratch training exactly") {
