@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.json4s._
 import org.json4s.jackson.JsonMethods.parse
 
@@ -95,7 +95,13 @@ object Bench {
     legs.collect { case Leg(n, Left(m)) => n -> m }.distinctBy(_._1)
 
   /** The warehouse families, in build order. */
-  private val Families = Seq("pair", "ann", "tok", "decon", "lr", "suffix")
+  private[graft] val Families = Seq("pair", "ann", "tok", "decon", "lr", "suffix")
+
+  /** Runs `df` in full, final sorts included (a bare count() lets
+    * Catalyst elide orderBys), into the sink that writes nothing.
+    */
+  private[graft] def noop(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
 
   /** One query's min and median wall over its successful passes, and
     * its executor cpu and GC seconds per successful pass.
@@ -165,7 +171,7 @@ object Bench {
       "SPARK_GRAFT_WAREHOUSE is set: a durable warehouse would turn the " +
         "<family>_build legs into timed cache hits; unset it to bench")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val repeats = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "bench_detail.json")
     // a prior run at this SF that yields no wall dict would silently
@@ -221,23 +227,11 @@ object Bench {
           wrappedHeadline(parse(Files.readString(f.toPath))), "cpu")
       }
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("graft-bench", cpus)
 
     val metrics = JobGroupMetrics.attach(spark.sparkContext)
 
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-
-    def noop(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
 
     val warmDir = "/root/testdata/sf0.001"
     if (new java.io.File(warmDir).isDirectory && warmDir != sfDir)
@@ -268,24 +262,21 @@ object Bench {
     // inc_* legs price ONE delivery (a content-stable 20% of the
     // corpus) processed entirely against the persisted indexes — the
     // marginal-cost number a continuously-crawled corpus cares about.
-    // Fold==from-scratch equality is asserted by IngestDemo.checks /
-    // IngestSpec, not re-paid here. Disable with
-    // SPARK_GRAFT_BENCH_INCREMENTAL=0.
-    val incremental: Seq[Leg] =
-      if (sys.env.getOrElse("SPARK_GRAFT_BENCH_INCREMENTAL", "1") == "0") Nil
-      else {
-        val tmp = Files.createTempDirectory("graft-bench-ingest")
-        val out = IngestDemo.stages(spark, sfDir, tmp.toString)
-          .map { case (n, f) => timed(spark, n)(f()) }
-        // tdn_* legs price ONE takedown (a content-stable ~1/7th of
-        // corpus v1 retracted from every persisted store) — the
-        // compliance-removal marginal cost, priced against the _v1
-        // generation the stages above produced
-        val tdn = IngestDemo.takedownStages(spark, sfDir, tmp.toString)
-          .map { case (n, f) => timed(spark, n)(f()) }
-        FsUtil.rmTree(tmp.toFile)
-        out ++ tdn
-      }
+    // Fold==from-scratch equality is asserted by IngestDemo.checksOver
+    // in IngestSpec, not re-paid here.
+    val incremental: Seq[Leg] = {
+      val tmp = Files.createTempDirectory("graft-bench-ingest").toString
+      val (base, dlv, embBase, embDlv) = IngestDemo.fixtureSplit(spark, sfDir)
+      // tdn_* legs price ONE takedown (a content-stable ~1/7th of
+      // corpus v1 retracted from every persisted store) — the
+      // compliance-removal marginal cost, priced against the _v1
+      // generation the stages produced
+      val out = (IngestDemo.stagesOver(spark, base, dlv, embBase, embDlv, tmp) ++
+        IngestDemo.takedownStagesOver(spark, base, dlv, embBase, embDlv, tmp))
+        .map { case (n, f) => timed(spark, n)(f()) }
+      FsUtil.rmTree(new java.io.File(tmp))
+      out
+    }
     val failed = failures(composed ++ passes ++ incremental)
 
     metrics.drain()
@@ -370,12 +361,10 @@ object Bench {
     // they get their own scalar instead of inflating the marginal
     // delivery number; tdn_* = one compliance takedown retracted from
     // every store
-    val ingestTag =
-      if (incremental.isEmpty) ""
-      else s""","ingest_boot_sec":${ingestSec("boot_")}""" +
-        s""","ingest_delivery_sec":${ingestSec("inc_")}""" +
-        s""","ingest_recal_sec":${ingestSec("cal_")}""" +
-        s""","ingest_takedown_sec":${ingestSec("tdn_")}"""
+    val ingestTag = s""","ingest_boot_sec":${ingestSec("boot_")}""" +
+      s""","ingest_delivery_sec":${ingestSec("inc_")}""" +
+      s""","ingest_recal_sec":${ingestSec("cal_")}""" +
+      s""","ingest_takedown_sec":${ingestSec("tdn_")}"""
     // every failure by name (messages in the detail file)
     val failedTag = s""","failed_n":${failed.size}""" +
       (if (failed.isEmpty) ""

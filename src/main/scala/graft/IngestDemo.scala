@@ -86,14 +86,13 @@ import graft.sources.Tables
   * persisted artifacts exactly as a scheduled production job would,
   * so the measured marginal cost includes the artifact IO.
   *
-  * Bench runs [[stages]] (not [[checks]]) at the bench SF and
-  * reports the marginal delivery cost under "incremental";
-  * `IngestSpec` runs the stages and every check.
+  * Bench runs [[stagesOver]] and [[takedownStagesOver]] (not the
+  * checks) over [[fixtureSplit]] at the bench SF and reports the
+  * marginal delivery cost under "incremental"; `IngestSpec` runs the
+  * stages and every check.
   */
 object IngestDemo {
-  /** Fixture defaults for the NB supervision labels — parameters of
-    * [[stages]]/[[checks]], so another warehouse passes its own.
-    */
+  /** The fixture's NB supervision labels. */
   private val Pos = Seq("src0", "src1", "src2")
   private val Neg = Seq("src3", "src4", "src5")
 
@@ -131,27 +130,69 @@ object IngestDemo {
     */
   private val SubShards = 4
 
-  /** Corpus v0 = md5 buckets 0..baseBuckets-1 of `documents`; the
-    * delivery = the rest — a content-stable split (80/20 by default)
-    * standing in for "yesterday's warehouse" and "today's crawl".
+  /** Corpus v0 = md5 buckets 0..BaseBuckets-1 of 10; the delivery =
+    * the rest — a content-stable 80/20 split standing in for
+    * "yesterday's warehouse" and "today's crawl".
     */
-  private def baseAndDelivery(t: Tables,
-      baseBuckets: Int): (DataFrame, DataFrame) = {
-    val bucket = Curation.hashBucket(col("doc_id"), 10)
-    (t.documents.filter(bucket < baseBuckets),
-      t.documents.filter(bucket >= baseBuckets))
+  private val BaseBuckets = 8
+
+  /** The fixture's (corpus v0, delivery, vector base, vector delivery)
+    * at `sfDir`: the [[BaseBuckets]] split of `documents` by doc_id
+    * and of `embeddings` by vec_id (the fixture's vector and document
+    * tables are independent; a production warehouse would resolve its
+    * doc→vector mapping and deliver both sides of the same crawl
+    * together). Every `*Over` entry point takes these four frames.
+    */
+  def fixtureSplit(spark: SparkSession,
+      sfDir: String): (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    val t = Tables(spark, sfDir)
+    val doc = Curation.hashBucket(col("doc_id"), 10)
+    val vec = Curation.hashBucket(col("vec_id"), 10)
+    (t.documents.filter(doc < BaseBuckets),
+      t.documents.filter(doc >= BaseBuckets),
+      t.embeddings.filter(vec < BaseBuckets),
+      t.embeddings.filter(vec >= BaseBuckets))
   }
 
-  /** The EMBEDDING side of the same warehouse split, keyed on vec_id
-    * (the fixture's vector and document tables are independent; a
-    * production warehouse would resolve its doc→vector mapping and
-    * deliver both sides of the same crawl together).
+  /** The work-dir helpers every stage and check body shares: stages
+    * hand off through parquet under `work`, and `delivery` is the
+    * frame the admitted ids resolve against.
     */
-  private def embBaseAndDelivery(t: Tables,
-      baseBuckets: Int): (DataFrame, DataFrame) = {
-    val bucket = Curation.hashBucket(col("vec_id"), 10)
-    (t.embeddings.filter(bucket < baseBuckets),
-      t.embeddings.filter(bucket >= baseBuckets))
+  private final class Work(spark: SparkSession, work: String,
+      delivery: DataFrame) {
+    def rd(p: String): DataFrame = ParquetRead.parquet(spark, s"$work/$p")
+    // the unit store round-trips through a (split, sub)-PARTITIONED
+    // parquet layout: partition columns come back via type inference
+    // ('sub' as int — or string with inference disabled) while every
+    // other unit table carries long, and the receipt fold must not
+    // depend on set-operation widening or, worse, a string coercion
+    // ordering '10' before '2' inside the sorted unit hash — so the
+    // store read re-asserts the schema explicitly
+    def rdUnits(p: String): DataFrame =
+      rd(p).withColumn("sub", col("sub").cast("long"))
+    def wr(df: DataFrame, p: String): Unit =
+      df.write.mode("overwrite").parquet(s"$work/$p")
+    def docsOf(ids: DataFrame): DataFrame =
+      delivery.join(ids.select("doc_id"), Seq("doc_id"))
+    def withSplit(d: DataFrame): DataFrame =
+      d.join(Curation.hashSplit(d).select("doc_id", "split"), Seq("doc_id"))
+    def receipts(suffix: String): DataFrame =
+      Curation.artifactManifest(ReceiptedArtifacts.map(n =>
+        n -> rd(n + suffix)))
+  }
+
+  /** MULTISET equality via two-sided exceptAll — fully distributed (no
+    * driver collect, so the check itself survives warehouse scale),
+    * and duplicate-sensitive: a fold duplicating one row while losing
+    * another must NOT pass. The failure names the store `label` and
+    * says how it `diverged`.
+    */
+  private def sameRows(diverged: String)(label: String, got: DataFrame,
+      want: DataFrame): Unit = {
+    val extra = got.exceptAll(want).count()
+    val missing = want.exceptAll(got).count()
+    require(extra == 0 && missing == 0,
+      s"$label: $diverged ($extra extra, $missing missing rows)")
   }
 
   /** The artifacts covered by the integrity receipts, by store name
@@ -191,33 +232,20 @@ object IngestDemo {
     // the last store family to join the fold/retract lifecycle
     "sg_store", "sg_pairs")
 
-  /** [[stages]] with the corpus-v0/delivery split supplied as
-    * DataFrames — the rehearsal entry point (ScaleRehearsal inflates
-    * the base while holding the delivery fixed); [[stages]] itself
-    * applies the fixture's content-stable 80/20 md5 split.
+  /** The ordered stage list: `boot_*` once per warehouse, `inc_*`
+    * once per delivery, `cal_*` on recalibration cadence (corpus-
+    * version-proportional — see the object scaladoc), over a
+    * corpus-v0/delivery split ([[fixtureSplit]] for the fixture's;
+    * ScaleRehearsal inflates the base while holding the delivery
+    * fixed). Stages hand off through parquet under `work`, so each
+    * stage's cost is what a scheduled job would pay (artifact reads
+    * included).
     */
   def stagesOver(spark: SparkSession, base: DataFrame, delivery: DataFrame,
       embBase: DataFrame, embDelivery: DataFrame,
-      work: String, posSources: Seq[String] = Pos,
-      negSources: Seq[String] = Neg): Seq[(String, () => Unit)] = {
-    def rd(p: String) = ParquetRead.parquet(spark, s"$work/$p")
-    // the unit store round-trips through a (split, sub)-PARTITIONED
-    // parquet layout: partition columns come back via type inference
-    // ('sub' as int — or string with inference disabled) while every
-    // other unit table carries long, and the receipt fold must not
-    // depend on set-operation widening or, worse, a string coercion
-    // ordering '10' before '2' inside the sorted unit hash — so the
-    // store read re-asserts the schema explicitly
-    def rdUnits(p: String) = rd(p).withColumn("sub", col("sub").cast("long"))
-    def wr(df: DataFrame, p: String): Unit =
-      df.write.mode("overwrite").parquet(s"$work/$p")
-    def docsOf(ids: DataFrame): DataFrame =
-      delivery.join(ids.select("doc_id"), Seq("doc_id"))
-    def withSplit(d: DataFrame): DataFrame =
-      d.join(Curation.hashSplit(d).select("doc_id", "split"), Seq("doc_id"))
-    def receipts(suffix: String): DataFrame =
-      Curation.artifactManifest(ReceiptedArtifacts.map(n =>
-        n -> rd(n + suffix)))
+      work: String): Seq[(String, () => Unit)] = {
+    val w = new Work(spark, work, delivery)
+    import w._
     Seq(
       "boot_fp_store" -> (() =>
         wr(TextAnalysis.fingerprints(base), "fp_store")),
@@ -234,7 +262,7 @@ object IngestDemo {
         // the count table is the incremental state; the context
         // table + constants re-derive from it with vocab-sized work
         wr(NgramLm.bigramCounts(
-          base.filter(col("source").isin(posSources: _*))), "lm_bi")
+          base.filter(col("source").isin(Pos: _*))), "lm_bi")
         val (uni, consts) = NgramLm.lmFromCounts(rd("lm_bi"))
         wr(uni, "lm_uni"); wr(consts, "lm_consts")
       },
@@ -249,7 +277,7 @@ object IngestDemo {
           "sg_pairs")
       },
       "boot_nb_model" -> { () =>
-        val (vt, dc) = TextAnalysis.nbCounts(base, posSources, negSources)
+        val (vt, dc) = TextAnalysis.nbCounts(base, Pos, Neg)
         wr(vt, "nb_vt"); wr(dc, "nb_dc")
         val (lm, consts) = TextAnalysis.nbLmFromCounts(rd("nb_vt"), rd("nb_dc"))
         wr(lm, "nb_lm"); wr(consts, "nb_consts")
@@ -448,7 +476,7 @@ object IngestDemo {
         // state by keyed merge; the serve pair re-derives vocab-sized
         wr(NgramLm.bigramCountsUpdate(rd("lm_bi"),
           docsOf(rd("admitted"))
-            .filter(col("source").isin(posSources: _*))), "lm_bi_v1")
+            .filter(col("source").isin(Pos: _*))), "lm_bi_v1")
         val (uni1, consts1) = NgramLm.lmFromCounts(rd("lm_bi_v1"))
         wr(uni1, "lm_uni_v1"); wr(consts1, "lm_consts_v1")
       },
@@ -469,7 +497,7 @@ object IngestDemo {
       },
       "inc_fold_nb" -> { () =>
         val (vt1, dc1) = TextAnalysis.nbCountsUpdate(rd("nb_vt"),
-          rd("nb_dc"), docsOf(rd("admitted")), posSources, negSources)
+          rd("nb_dc"), docsOf(rd("admitted")), Pos, Neg)
         wr(vt1, "nb_vt_v1"); wr(dc1, "nb_dc_v1")
         val (lm1, consts1) =
           TextAnalysis.nbLmFromCounts(rd("nb_vt_v1"), rd("nb_dc_v1"))
@@ -602,24 +630,13 @@ object IngestDemo {
     */
   def takedownStagesOver(spark: SparkSession, base: DataFrame,
       delivery: DataFrame, embBase: DataFrame, embDelivery: DataFrame,
-      work: String, posSources: Seq[String] = Pos,
-      negSources: Seq[String] = Neg): Seq[(String, () => Unit)] = {
-    def rd(p: String) = ParquetRead.parquet(spark, s"$work/$p")
-    // partition-typed unit-store read: see stagesOver's rdUnits
-    def rdUnits(p: String) = rd(p).withColumn("sub", col("sub").cast("long"))
-    def wr(df: DataFrame, p: String): Unit =
-      df.write.mode("overwrite").parquet(s"$work/$p")
-    def docsOf(ids: DataFrame): DataFrame =
-      delivery.join(ids.select("doc_id"), Seq("doc_id"))
+      work: String): Seq[(String, () => Unit)] = {
+    val w = new Work(spark, work, delivery)
+    import w._
     def v1Docs: DataFrame = base.unionByName(docsOf(rd("admitted")))
-    def withSplit(d: DataFrame): DataFrame =
-      d.join(Curation.hashSplit(d).select("doc_id", "split"), Seq("doc_id"))
     def minusRemoved(df: DataFrame): DataFrame =
       df.join(rd("removed_docs").select("doc_id"), Seq("doc_id"),
         "left_anti")
-    def receipts(suffix: String): DataFrame =
-      Curation.artifactManifest(ReceiptedArtifacts.map(n =>
-        n -> rd(n + suffix)))
     Seq(
       "tdn_removal_set" -> (() =>
         // an md5 bucket of corpus v1 (~1/7th), not a doc_id range —
@@ -658,7 +675,7 @@ object IngestDemo {
         // state (signed keyed merge, corruption guards); a compliant
         // serve model re-derives from the retracted counts
         wr(NgramLm.bigramCountsRetract(rd("lm_bi_v1"),
-          rd("removed_docs").filter(col("source").isin(posSources: _*))),
+          rd("removed_docs").filter(col("source").isin(Pos: _*))),
           "lm_bi_v2")
         val (uni2, consts2) = NgramLm.lmFromCounts(rd("lm_bi_v2"))
         wr(uni2, "lm_uni_v2"); wr(consts2, "lm_consts_v2")
@@ -668,7 +685,7 @@ object IngestDemo {
           rd("removed_docs")), "span_index_v2")),
       "tdn_nb" -> { () =>
         val (vt2, dc2) = TextAnalysis.nbCountsRetract(rd("nb_vt_v1"),
-          rd("nb_dc_v1"), rd("removed_docs"), posSources, negSources)
+          rd("nb_dc_v1"), rd("removed_docs"), Pos, Neg)
         wr(vt2, "nb_vt_v2"); wr(dc2, "nb_dc_v2")
         val (lm2, consts2) =
           TextAnalysis.nbLmFromCounts(rd("nb_vt_v2"), rd("nb_dc_v2"))
@@ -785,23 +802,12 @@ object IngestDemo {
     */
   def takedownChecksOver(spark: SparkSession, base: DataFrame,
       delivery: DataFrame, embBase: DataFrame, embDelivery: DataFrame,
-      work: String, posSources: Seq[String] = Pos,
-      negSources: Seq[String] = Neg): Seq[(String, () => Unit)] = {
-    def rd(p: String) = ParquetRead.parquet(spark, s"$work/$p")
-    def rdUnits(p: String) = rd(p).withColumn("sub", col("sub").cast("long"))
-    def docsOf(ids: DataFrame): DataFrame =
-      delivery.join(ids.select("doc_id"), Seq("doc_id"))
+      work: String): Seq[(String, () => Unit)] = {
+    val w = new Work(spark, work, delivery)
+    import w._
+    val same = sameRows("takedown diverged from rebuild") _
     def v2: DataFrame = base.unionByName(docsOf(rd("admitted")))
       .join(rd("removed_docs").select("doc_id"), Seq("doc_id"), "left_anti")
-    def withSplit(d: DataFrame): DataFrame =
-      d.join(Curation.hashSplit(d).select("doc_id", "split"), Seq("doc_id"))
-    def same(label: String, got: DataFrame, want: DataFrame): Unit = {
-      val extra = got.exceptAll(want).count()
-      val missing = want.exceptAll(got).count()
-      require(extra == 0 && missing == 0,
-        s"$label: takedown diverged from rebuild " +
-          s"($extra extra, $missing missing rows)")
-    }
     Seq(
       "takedown removal set non-empty" -> (() =>
         require(rd("removed_docs").count() > 0,
@@ -818,7 +824,7 @@ object IngestDemo {
         same("bucket_store_v2", rd("bucket_store_v2"),
           Dedup.bucketStats(Dedup.minhashSignatures(v2)))),
       "lm counts takedown == re-train" -> { () =>
-        val refV2 = v2.filter(col("source").isin(posSources: _*))
+        val refV2 = v2.filter(col("source").isin(Pos: _*))
           .localCheckpoint(true)
         same("lm_bi_v2", rd("lm_bi_v2"), NgramLm.bigramCounts(refV2))
         val (uni, consts) = NgramLm.lmFromCounts(
@@ -837,18 +843,18 @@ object IngestDemo {
             SuffixArray.spanGroupStore(v2), v2))
       },
       "nb counts takedown == re-train" -> { () =>
-        val (vt, dc) = TextAnalysis.nbCounts(v2, posSources, negSources)
+        val (vt, dc) = TextAnalysis.nbCounts(v2, Pos, Neg)
         same("nb_vt_v2", rd("nb_vt_v2"), vt)
         same("nb_dc_v2", rd("nb_dc_v2"), dc)
       },
       "nb serve model takedown == re-train" -> { () =>
-        val (lm, consts) = TextAnalysis.nbModel(v2, posSources, negSources)
+        val (lm, consts) = TextAnalysis.nbModel(v2, Pos, Neg)
         same("nb_lm_v2", rd("nb_lm_v2"), lm)
         same("nb_consts_v2", rd("nb_consts_v2"), consts)
       },
       "gate thresholds takedown == from-scratch calibration" -> (() =>
         same("gate_thr_v2", rd("gate_thr_v2"),
-          Curation.gateThresholds(v2, posSources, negSources))),
+          Curation.gateThresholds(v2, Pos, Neg))),
       "manifest takedown == from-scratch hierarchical" -> { () =>
         same("manifest_v2", rd("manifest_v2"),
           Curation.shardManifest(withSplit(v2), subShards = SubShards))
@@ -947,84 +953,17 @@ object IngestDemo {
       })
   }
 
-  /** The ordered stage list: `boot_*` once per warehouse, `inc_*`
-    * once per delivery, `cal_*` on recalibration cadence (corpus-
-    * version-proportional — see the object scaladoc). Stages hand
-    * off through parquet under `work`, so each stage's cost is what
-    * a scheduled job would pay (artifact reads included).
-    * `posSources`/`negSources` supervise the NB quality model;
-    * `baseBuckets` (of 10) sets the corpus-v0/delivery split —
-    * defaults are the fixture corpus'.
-    */
-  def stages(spark: SparkSession, sfDir: String, work: String,
-      posSources: Seq[String] = Pos, negSources: Seq[String] = Neg,
-      baseBuckets: Int = 8): Seq[(String, () => Unit)] = {
-    val t = Tables(spark, sfDir)
-    val (base, delivery) = baseAndDelivery(t, baseBuckets)
-    val (embBase, embDelivery) = embBaseAndDelivery(t, baseBuckets)
-    stagesOver(spark, base, delivery, embBase, embDelivery, work,
-      posSources, negSources)
-  }
-
   /** Fold-vs-from-scratch equality per maintained artifact (over
-    * corpus v1 = base ∪ admitted) plus the gate invariants. Run
-    * AFTER [[stages]] against the same `work`.
-    */
-  def checks(spark: SparkSession, sfDir: String, work: String,
-      posSources: Seq[String] = Pos, negSources: Seq[String] = Neg,
-      baseBuckets: Int = 8): Seq[(String, () => Unit)] = {
-    val t = Tables(spark, sfDir)
-    val (base, delivery) = baseAndDelivery(t, baseBuckets)
-    val (embBase, embDelivery) = embBaseAndDelivery(t, baseBuckets)
-    checksOver(spark, base, delivery, embBase, embDelivery, work,
-      posSources, negSources)
-  }
-
-  /** [[takedownStagesOver]] with the fixture's corpus split. */
-  def takedownStages(spark: SparkSession, sfDir: String, work: String,
-      posSources: Seq[String] = Pos, negSources: Seq[String] = Neg,
-      baseBuckets: Int = 8): Seq[(String, () => Unit)] = {
-    val t = Tables(spark, sfDir)
-    val (base, delivery) = baseAndDelivery(t, baseBuckets)
-    val (embBase, embDelivery) = embBaseAndDelivery(t, baseBuckets)
-    takedownStagesOver(spark, base, delivery, embBase, embDelivery, work,
-      posSources, negSources)
-  }
-
-  /** [[takedownChecksOver]] with the fixture's corpus split. */
-  def takedownChecks(spark: SparkSession, sfDir: String, work: String,
-      posSources: Seq[String] = Pos, negSources: Seq[String] = Neg,
-      baseBuckets: Int = 8): Seq[(String, () => Unit)] = {
-    val t = Tables(spark, sfDir)
-    val (base, delivery) = baseAndDelivery(t, baseBuckets)
-    val (embBase, embDelivery) = embBaseAndDelivery(t, baseBuckets)
-    takedownChecksOver(spark, base, delivery, embBase, embDelivery, work,
-      posSources, negSources)
-  }
-
-  /** [[checks]] over supplied base/delivery frames (the [[stagesOver]]
-    * counterpart).
+    * corpus v1 = base ∪ admitted) plus the gate invariants. Run AFTER
+    * [[stagesOver]] against the same `work` and frames.
     */
   def checksOver(spark: SparkSession, base: DataFrame, delivery: DataFrame,
       embBase: DataFrame, embDelivery: DataFrame,
-      work: String, posSources: Seq[String] = Pos,
-      negSources: Seq[String] = Neg): Seq[(String, () => Unit)] = {
-    def rd(p: String) = ParquetRead.parquet(spark, s"$work/$p")
-    def docsOf(ids: DataFrame): DataFrame =
-      delivery.join(ids.select("doc_id"), Seq("doc_id"))
-    def rdUnits(p: String) = rd(p).withColumn("sub", col("sub").cast("long"))
+      work: String): Seq[(String, () => Unit)] = {
+    val w = new Work(spark, work, delivery)
+    import w._
+    val same = sameRows("fold diverged from from-scratch") _
     def v1: DataFrame = base.unionByName(docsOf(rd("admitted")))
-    // MULTISET equality via two-sided exceptAll — fully distributed
-    // (no driver collect, so the check itself survives warehouse
-    // scale), and duplicate-sensitive: a fold duplicating one row
-    // while losing another must NOT pass
-    def same(label: String, got: DataFrame, want: DataFrame): Unit = {
-      val extra = got.exceptAll(want).count()
-      val missing = want.exceptAll(got).count()
-      require(extra == 0 && missing == 0,
-        s"$label: fold diverged from from-scratch " +
-          s"($extra extra, $missing missing rows)")
-    }
     Seq(
       "fp store fold == from-scratch" -> (() =>
         same("fp_store_v1", rd("fp_store_v1"),
@@ -1038,7 +977,7 @@ object IngestDemo {
         same("bucket_store_v1", rd("bucket_store_v1"),
           Dedup.bucketStats(Dedup.minhashSignatures(v1)))),
       "lm counts fold == from-scratch" -> { () =>
-        val refV1 = v1.filter(col("source").isin(posSources: _*))
+        val refV1 = v1.filter(col("source").isin(Pos: _*))
           .localCheckpoint(true)
         same("lm_bi_v1", rd("lm_bi_v1"), NgramLm.bigramCounts(refV1))
         val (uni, consts) = NgramLm.lmFromCounts(
@@ -1051,7 +990,7 @@ object IngestDemo {
         // docs exactly as a from-scratch train+score over the v0
         // reference slice would
         same("delivery_lm_scores", rd("delivery_lm_scores"),
-          NgramLm.lmScore(base.filter(col("source").isin(posSources: _*)),
+          NgramLm.lmScore(base.filter(col("source").isin(Pos: _*)),
             docsOf(rd("admitted"))))),
       "span index fold == from-scratch" -> (() =>
         same("span_index_v1", rd("span_index_v1"),
@@ -1064,12 +1003,12 @@ object IngestDemo {
             SuffixArray.spanGroupStore(v1), v1))
       },
       "nb counts fold == from-scratch" -> { () =>
-        val (vt, dc) = TextAnalysis.nbCounts(v1, posSources, negSources)
+        val (vt, dc) = TextAnalysis.nbCounts(v1, Pos, Neg)
         same("nb_vt_v1", rd("nb_vt_v1"), vt)
         same("nb_dc_v1", rd("nb_dc_v1"), dc)
       },
       "nb serve model fold == from-scratch" -> { () =>
-        val (lm, consts) = TextAnalysis.nbModel(v1, posSources, negSources)
+        val (lm, consts) = TextAnalysis.nbModel(v1, Pos, Neg)
         same("nb_lm_v1", rd("nb_lm_v1"), lm)
         same("nb_consts_v1", rd("nb_consts_v1"), consts)
       },
@@ -1079,7 +1018,7 @@ object IngestDemo {
         // gateThresholds retrains NB internally, so this transitively
         // re-proves the model fold through the gate's own artifact
         same("gate_thr_v1", rd("gate_thr_v1"),
-          Curation.gateThresholds(v1, posSources, negSources))),
+          Curation.gateThresholds(v1, Pos, Neg))),
       "served gate (v1 artifacts) == windowed composite gate over v1" -> (() =>
         // the CurationSpec served==windowed equality at the DEMO
         // boundary: the refreshed artifacts, served window-free over
@@ -1087,7 +1026,7 @@ object IngestDemo {
         same("served_gate_v1",
           Curation.compositeGateFrom(rd("gate_thr_v1"), rd("nb_lm_v1"),
             rd("nb_consts_v1"), v1),
-          Curation.compositeGate(v1, posSources, negSources))),
+          Curation.compositeGate(v1, Pos, Neg))),
       "incremental span stats == from-scratch" -> (() =>
         // the gate scored admit_near docs against the v0 index; the
         // batch twin is dupSpanStats over v0 ∪ that same batch,
@@ -1208,13 +1147,10 @@ object IngestDemo {
       },
       "incremental manifest == from-scratch hierarchical" -> (() =>
         same("manifest_v1", rd("manifest_v1"),
-          Curation.shardManifest(
-            v1.join(Curation.hashSplit(v1).select("doc_id", "split"),
-              Seq("doc_id")), subShards = SubShards))),
+          Curation.shardManifest(withSplit(v1), subShards = SubShards))),
       "sub-manifest fold == from-scratch cells" -> { () =>
-        val v1Units = Curation.manifestUnits(
-          v1.join(Curation.hashSplit(v1).select("doc_id", "split"),
-            Seq("doc_id")), subShards = SubShards)
+        val v1Units = Curation.manifestUnits(withSplit(v1),
+          subShards = SubShards)
         same("sub_manifest_v1",
           rd("sub_manifest_v1").select("split", "sub", "n_docs", "n_tok",
             "sub_md5"),

@@ -1,21 +1,43 @@
 package graft
 
-import scala.collection.mutable.ArrayBuffer
-import scala.util.control.NonFatal
+import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.engine.{Bucketing, ParquetRead}
-import graft.operators.{Curation, Dedup, NgramLm, Similarity, SkewJoin, SubstringDedup, SuffixArray, TextAnalysis}
+import graft.operators.{Curation, Dedup, NgramLm, SkewJoin, SubstringDedup, SuffixArray, TextAnalysis}
 import graft.sources.Tables
 
-/** Scale rehearsal: run the heavy dedup/ANN family on a ~K× inflated
-  * corpus and print wall + executor-cpu + shuffle bytes per query at
-  * each factor — the measured datapoint behind the operators' "linear
+/** Scale rehearsal: run the code that serves on a ~K× inflated corpus
+  * and print wall + executor-cpu + shuffle bytes per leg at each
+  * factor — the measured datapoint behind the operators' "linear
   * worst case" scale claims (a quadratic leak shows up as a >>K×
   * shuffle-bytes jump between factors).
+  *
+  * An entry is rehearsed as it serves. Each factor writes one scratch
+  * sf directory — `documents` and `embeddings` inflated ×K, the other
+  * tables linked from `sfDir` — and deletes it when the factor ends.
+  * An entry leg is `SparkEntry.queries(q)(spark, scratch)`; a
+  * `<family>_build` leg is [[ComposedArtifacts.receipt]], the build
+  * Bench times, and runs before the entries that consume the family.
+  * The other legs are the ones no entry covers:
+  *  - the fold-vs-rebuild pairs (q154, q161, q178, q186, q195, q199,
+  *    q207, q241): a 10% delivery folded into a 90% state built
+  *    outside the timed span, head to head with the rebuild (q186's
+  *    rebuild is the `q27_ngram_jaccard` entry leg);
+  *  - the hot-group (`hot_span_*`) and bucketed-layout
+  *    (`sg_carried_*`) head-to-heads;
+  *  - the adversarial-skew legs (`skew_*`);
+  *  - `ingest_e2e`: the IngestDemo stages over a ×K base and a
+  *    fixed-size delivery, one row per phase.
+  * Every leg and ingest stage is timed by [[Bench.timed]] and runs to
+  * the noop sink ([[Bench.noop]]), the run Bench times; a leg's `rows`
+  * is an `Observation` count on that same run. [[Bench.timed]] clears
+  * the cache after each leg, so every input a leg reads lives in the
+  * scratch directory or in a checkpoint.
   *
   * Inflation design: the corpus unions K copies with disjoint id
   * spaces. Document TEXT is passed through a per-copy Caesar shift
@@ -28,18 +50,50 @@ import graft.sources.Tables
   *    blowup a plain copy would create via exact duplicates).
   * Embeddings inflate by id-shift alone: ANN cost is row-linear in
   * corpus size regardless of duplicate geometry (same cells, same
-  * top-k heap work), so copies measure the right thing there.
+  * top-k heap work), so copies measure the right thing there. At
+  * K = 1 the scratch directory holds the rows of `sfDir`.
   *
   * Usage: `runMain graft.ScaleRehearsal [sfDir] [factors] [only]` —
-  * factors default "1,10"; `only` is an optional comma-separated list
-  * of query-name substrings to rehearse a single family member fast.
-  * Each factor runs the selection once (cold plans, no warmup: the
+  * sfDir defaults to the sf0.1 fixture and factors to "1,10";
+  * `only` is an optional comma-separated list of leg-name substrings
+  * (any `<family>_build`, any `SparkEntry.queries` name, any other
+  * leg, `ingest_e2e`); without it the run takes [[Default]]. Each
+  * factor runs the selection once (cold plans, no warmup: the
   * comparison is factor-vs-factor under identical conditions, not
-  * absolute). A leg that throws prints no row; the run then ends with
-  * one `{"failed_n":…,"failed":[…]}` line naming every failed leg and
-  * exits 1. [[rehearse]] is the same run on a caller's session.
+  * absolute). A leg that throws prints no row, nor does an ingest
+  * phase with a failed stage; the run then ends with one
+  * `{"failed_n":…,"failed":[…]}` line naming every failed leg and
+  * exits 1. [[rehearse]] is the same run on a caller's session. It
+  * refuses to run with SPARK_GRAFT_WAREHOUSE set: the ×K family builds
+  * belong in the per-JVM warehouse.
   */
 object ScaleRehearsal {
+
+  /** The legs a run without `only` rehearses: the pair and ann family
+    * builds, the entries of the heavy dedup/ANN/classifier families,
+    * every leg no entry covers, and the ingest rehearsal.
+    */
+  val Default: Seq[String] = Seq(
+    "pair_build", "ann_build",
+    "q26_minhash_dups", "q27_ngram_jaccard", "q51_dup_clusters",
+    "q34_knn_ivf", "q111_dup_spans", "q135_rolling_span_profile",
+    "q117_pq_encode", "q132_span_rewrite", "q128_pagerank",
+    "q141_hard_negatives", "q156_nb_classifier",
+    "q158_centroid_classifier", "q164_composite_gate",
+    "q179_gate_served", "q140_containment", "q147_source_containment",
+    "q198_lm_score", "q204_sq_encode", "q205_sq_ann", "q209_edit_dups",
+    "q154_incremental_batch", "q154_full_rerun",
+    "q161_fold_delivery", "q161_full_retrain",
+    "q178_manifest_fold", "q178_full_rehash", "q186_fold_delivery",
+    "q195_fold_delivery", "q195_bucket_reagg",
+    "q199_fold_delivery", "q199_lm_retrain",
+    "q207_fold_labels", "q207_rebuild_labels",
+    "q241_fold_delivery", "q241_suffix_rebuild",
+    "hot_span_window", "hot_span_refine",
+    "sg_carried_plain", "sg_carried_bucketed",
+    "skew_sig_store", "skew_span_store", "skew_star_probe",
+    "skew_agg_plain", "skew_agg_salted", "skew_key_profile",
+    "ingest_e2e")
 
   private val Common = "etaoinshrd"
   private def shifted(i: Int): String = {
@@ -99,41 +153,32 @@ object ScaleRehearsal {
     skewedSrc.unionByName(copies)
   }
 
-  /** The shared inputs a leg may read. Each is built at most once per
-    * factor, and only when a selected leg uses it.
+  /** The shared state a leg no entry covers may read. Each is built
+    * at most once per factor, outside the timed legs, and only when a
+    * selected leg uses it.
     */
   object Shared extends Enumeration {
-    val Docs, Emb, SkewDocs, SpanIdx, NbIdx, ContPairs, ManifestIdx, GateIdx,
-      JacIdx, LmIdx, BktIdx, CompIdx, SgIdx, HotDocs, SgDisk = Value
+    val SkewDocs, SpanIdx, NbIdx, ManifestIdx, JacIdx, LmIdx, BktIdx,
+      CompIdx, SgIdx, HotDocs, SgDisk = Value
   }
   type Shared = Shared.Value
   import Shared._
 
-  /** One rehearsed query: `fn` builds the frame whose count() is timed;
+  /** One rehearsed leg: `fn` builds the frame whose run is timed;
     * `noBroadcast` runs it under a disabled broadcast threshold.
     */
-  final case class Leg(name: String, uses: Seq[Shared],
+  final case class Leg(name: String, uses: Seq[Shared] = Nil,
       noBroadcast: Boolean = false)(val fn: () => DataFrame)
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factors = args.lift(1).getOrElse("1,10").split(",").map(_.trim.toInt)
     val only: Option[Seq[String]] = args.lift(2).map(_.split(',').toSeq)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // bucketed-table scratch for the sg_carried_* legs — never the
     // repo working dir
-    val warehouse = java.nio.file.Files.createTempDirectory("graft-rehearsal-wh")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-rehearsal")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", warehouse.toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val warehouse = Files.createTempDirectory("graft-rehearsal-wh")
+    val spark = LocalSession("graft-scale-rehearsal",
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, Some(warehouse.toString))
     val failed =
       try rehearse(spark, sfDir, factors.toSeq, only)
       finally { spark.stop(); FsUtil.rmTree(warehouse.toFile) }
@@ -144,17 +189,45 @@ object ScaleRehearsal {
     }
   }
 
+  /** Runs `body` with broadcast joins off when `off` — the at-scale
+    * join regime, where the touched set outgrows a broadcast — and
+    * restores the session's thresholds after.
+    */
+  private def broadcastOff(spark: SparkSession, off: Boolean)(body: => Unit): Unit =
+    if (!off) body
+    else {
+      val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold")
+      val saved = keys.map(k => k -> spark.conf.getOption(k))
+      keys.foreach(spark.conf.set(_, "-1"))
+      try body
+      finally saved.foreach { case (k, v) =>
+        v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
+
+  /** A row's fields up to the shuffle totals; the caller closes it. */
+  private def rowHead(f: Int, query: String, rows: Long, docs: Long,
+      vecs: Long, wall: Double, m: JobGroupMetrics.Stats): String =
+    f"""{"factor":$f,"query":"$query","rows":$rows,""" +
+      f""""docs":$docs,"vecs":$vecs,""" +
+      f""""wall_sec":$wall%.2f,"cpu_sec":${m.cpuNs / 1e9}%.2f,""" +
+      f""""shuffle_write_mb":${m.shuffleWriteBytes / 1e6}%.1f,""" +
+      f""""shuffle_read_mb":${m.shuffleReadBytes / 1e6}%.1f"""
+
   /** Run the selected legs at each factor, printing one JSON row per
     * leg that ran, and return the job groups of the legs that threw.
-    * The caches, scratch dirs and catalog tables a factor builds are
-    * released before the next factor starts; its `localCheckpoint`
-    * blocks go once their frames are garbage (Spark's ContextCleaner),
-    * since `unpersist` cannot reach them.
+    * The scratch directory, checkpoints and catalog tables a factor
+    * builds are released before the next factor starts; its
+    * `localCheckpoint` blocks go once their frames are garbage
+    * (Spark's ContextCleaner), since `unpersist` cannot reach them.
     */
   def rehearse(spark: SparkSession, sfDir: String, factors: Seq[Int],
       only: Option[Seq[String]]): Seq[String] = {
+    require(sys.env.get("SPARK_GRAFT_WAREHOUSE").isEmpty,
+      "SPARK_GRAFT_WAREHOUSE is set: the ×K family builds belong in the " +
+        "per-JVM warehouse; unset it to rehearse")
     def selected(name: String): Boolean =
-      only.forall(_.exists(name.contains))
+      only.fold(Default.contains(name))(_.exists(name.contains))
     // per-job-group cpu and shuffle, and per-task shuffle reads for
     // the skew legs' straggler diagnostic (max ≫ p50 = one task ate
     // the hot key)
@@ -166,435 +239,283 @@ object ScaleRehearsal {
     val nbNeg = Seq("src3", "src4", "src5")
 
     try for (f <- factors) {
-      // each cache, scratch dir and table registers its release as it
-      // is built; the factor's finally runs them all
+      // each scratch dir and table registers its release as it is
+      // built; the factor's finally runs them all
       val releases = ArrayBuffer.empty[() => Unit]
-      def cached(df: DataFrame): DataFrame = {
-        releases += (() => df.unpersist(false))
-        df.persist(StorageLevel.MEMORY_AND_DISK)
-      }
+      try {
+        val dir = Files.createTempDirectory(s"graft-rehearsal-x$f-").toString
+        releases += (() => FsUtil.rmTree(new java.io.File(dir)))
+        def written(name: String, df: DataFrame): DataFrame = {
+          df.write.parquet(s"$dir/$name.parquet")
+          ParquetRead.parquet(spark, s"$dir/$name.parquet")
+        }
+        val docs = written("documents", inflateDocuments(t.documents, f))
+        val nVecs = written("embeddings", inflateEmbeddings(t.embeddings, f)).count()
+        for (table <- Option(new java.io.File(sfDir).listFiles).toSeq.flatten
+            if table.getName.endsWith(".parquet") &&
+              !new java.io.File(dir, table.getName).exists)
+          Files.createSymbolicLink(Paths.get(dir, table.getName),
+            table.toPath.toAbsolutePath)
+        val nDocs = docs.count()
 
-      lazy val docs = cached(inflateDocuments(t.documents, f))
-      lazy val skewDocs = cached(inflateSkewedDocuments(t.documents, f))
-      lazy val emb = cached(inflateEmbeddings(t.embeddings, f))
-      // the incremental span index (90% of the corpus) is built ONCE
-      // outside the timed legs — the ingest claim under test is the
-      // marginal delivery cost (10% batch probed against the index)
-      // vs re-running the full-corpus rule
-      lazy val spanIdx: DataFrame =
-        SubstringDedup.windowIndex(docs.filter(col("doc_id") % 10 =!= 0))
+        lazy val skewDocs =
+          written("skew_documents", inflateSkewedDocuments(t.documents, f))
+        // the incremental span index (90% of the corpus) — the ingest
+        // claim under test is the marginal delivery cost (10% batch
+        // probed against the index) vs re-running the full-corpus rule
+        lazy val spanIdx: DataFrame =
+          SubstringDedup.windowIndex(docs.filter(col("doc_id") % 10 =!= 0))
+            .localCheckpoint(true)
+        // accumulated NB count artifacts over 90% of the corpus (eager
+        // inside nbCounts) — the q161 fold leg probes a 10% delivery
+        // against them
+        lazy val nbIdx: (DataFrame, DataFrame) = TextAnalysis.nbCounts(
+          docs.filter(col("doc_id") % 10 =!= 0), nbPos, nbNeg)
+        // the incremental manifest's persisted state. Shards are
+        // APPEND-SHAPED (crawl chunk = doc_id div 500): a delivery
+        // lands in its own shard, so the fold touches only the new
+        // cells and every old receipt carries over — the warehouse
+        // shape the artifact exists for. (A hash-split smears every
+        // delivery across ALL cells — the measured worst case where
+        // folding degenerates to a full re-aggregate; IngestDemo
+        // documents that shape, this leg measures the append case.)
+        // The 500-doc delivery is FIXED-SIZE across factors — the
+        // production constant — so the fold leg's cost should stay
+        // flat while the re-hash leg grows with the corpus.
+        def crawlOf(d: DataFrame): DataFrame =
+          d.withColumn("split", expr("doc_id div 500").cast("string"))
+        lazy val manifestIdx: (DataFrame, DataFrame) = {
+          val units = Curation.manifestUnits(
+            crawlOf(docs.filter(col("doc_id") >= 500)), subShards = 4)
+            .localCheckpoint(true)
+          (units, Curation.subManifestFromUnits(units).localCheckpoint(true))
+        }
+        // the VERIFIED-PAIR STORE's persisted state (shingle index +
+        // pair table over 90% of the corpus) — the q186 fold leg
+        // probes a fixed-size 10% delivery against it; the
+        // q27_ngram_jaccard entry leg is the full-rebuild baseline it
+        // must undercut
+        lazy val jacIdx: (DataFrame, DataFrame) = {
+          val sh90 = Dedup.shingles(docs.filter(col("doc_id") % 10 =!= 0))
+            .localCheckpoint(true)
+          (sh90, Dedup.ngramJaccardFromShingles(sh90).localCheckpoint(true))
+        }
+        // the bigram-LM count state over 90% of the trusted slice —
+        // the q199 fold leg merges a 10% delivery into it; the
+        // full-retrain leg is the baseline it must undercut
+        lazy val lmIdx: DataFrame = NgramLm.bigramCounts(
+          docs.filter(col("doc_id") % 10 =!= 0 &&
+            col("source").isin(nbPos: _*))).localCheckpoint(true)
+        // the LSH bucket-stats store over 90% of the corpus — the
+        // q195 fold leg merges a 10% delivery's stats into it; the
+        // re-agg leg is the per-delivery cost the persisted store
+        // eliminates (ADVICE round-14)
+        lazy val bktIdx: DataFrame = Dedup.bucketStats(
+          Dedup.minhashSignatures(docs.filter(col("doc_id") % 10 =!= 0)))
           .localCheckpoint(true)
-      // accumulated NB count artifacts over 90% of the corpus (eager
-      // inside nbCounts) — the q161 fold leg probes a 10% delivery
-      // against them
-      lazy val nbIdx: (DataFrame, DataFrame) = TextAnalysis.nbCounts(
-        docs.filter(col("doc_id") % 10 =!= 0), nbPos, nbNeg)
-      // the materialized containment pair table (shingle index →
-      // ngramContainmentFromShingles), built ONCE outside the timed
-      // spans — the from-pairs leg measures the composed consumer's
-      // marginal cost the way the warehouse serves q147
-      lazy val contPairs: DataFrame =
-        Dedup.ngramContainmentFromShingles(Dedup.shingles(docs))
-          .localCheckpoint(true)
-      // the incremental manifest's persisted state, built ONCE outside
-      // the timed legs. Shards are APPEND-SHAPED (crawl chunk =
-      // doc_id div 500): a delivery lands in its own shard, so the
-      // fold touches only the new cells and every old receipt carries
-      // over — the warehouse shape the artifact exists for. (A
-      // hash-split smears every delivery across ALL cells — the
-      // measured worst case where folding degenerates to a full
-      // re-aggregate; IngestDemo documents that shape, this leg
-      // measures the append case.) The 500-doc delivery is FIXED-SIZE
-      // across factors — the production constant — so the fold leg's
-      // cost should stay flat while the re-hash leg grows with the
-      // corpus.
-      def crawlOf(d: DataFrame): DataFrame =
-        d.withColumn("split", expr("doc_id div 500").cast("string"))
-      lazy val manifestIdx: (DataFrame, DataFrame) = {
-        val units = Curation.manifestUnits(
-          crawlOf(docs.filter(col("doc_id") >= 500)), subShards = 4)
-          .localCheckpoint(true)
-        (units, Curation.subManifestFromUnits(units).localCheckpoint(true))
-      }
-      // the VERIFIED-PAIR STORE's persisted state (shingle index +
-      // pair table over 90% of the corpus), built ONCE outside the
-      // timed legs — the q186 fold leg probes a fixed-size 10%
-      // delivery against it; the q27 leg above is the full-rebuild
-      // baseline it must undercut (the marginal-vs-total claim that
-      // retires the exact-verify family's standalone-rebuild weak)
-      lazy val jacIdx: (DataFrame, DataFrame) = {
-        val sh90 = Dedup.shingles(docs.filter(col("doc_id") % 10 =!= 0))
-          .localCheckpoint(true)
-        (sh90, Dedup.ngramJaccardFromShingles(sh90).localCheckpoint(true))
-      }
-      // the bigram-LM count state over 90% of the trusted slice,
-      // built ONCE outside the timed legs — the q199 fold leg merges
-      // a 10% delivery into it; the full-retrain leg is the baseline
-      // it must undercut
-      lazy val lmIdx: DataFrame = NgramLm.bigramCounts(
-        docs.filter(col("doc_id") % 10 =!= 0 &&
-          col("source").isin(nbPos: _*))).localCheckpoint(true)
-      // the LSH bucket-stats store over 90% of the corpus, built ONCE
-      // outside the timed legs — the q195 fold leg merges a 10%
-      // delivery's stats into it; the re-agg leg is the per-delivery
-      // cost the persisted store eliminates (ADVICE round-14)
-      lazy val bktIdx: DataFrame = Dedup.bucketStats(
-        Dedup.minhashSignatures(docs.filter(col("doc_id") % 10 =!= 0)))
-        .localCheckpoint(true)
-      // the cluster-label store's inputs, built ONCE outside the
-      // timed legs: the full pair table (the expensive corpus-version
-      // artifact BOTH legs get for free — this head-to-head prices
-      // the LABEL maintenance itself), its 90/10 split, and the
-      // labels over the 90% slice. The fold leg recomputes only the
-      // components the delivery's pairs touch; the rebuild leg runs
-      // componentsOf over every pair — the gap is the q207 scale
-      // claim (label cost ∝ delivery-touched components, not corpus)
-      lazy val compIdx: (DataFrame, DataFrame, DataFrame) = {
-        val pairs = Dedup.minhashDupPairs(docs, threshold = 0.7)
-          .select(col("id1"), col("id2")).localCheckpoint(true)
-        val oldP = pairs
-          .filter(col("id1") % 10 =!= 0 && col("id2") % 10 =!= 0)
-        val newP = pairs
-          .filter(col("id1") % 10 === 0 || col("id2") % 10 === 0)
-          .localCheckpoint(true)
-        (Dedup.componentsOf(oldP).localCheckpoint(true), newP, pairs)
-      }
-      // the span-GROUP store + pair artifact over 90% of the corpus,
-      // built ONCE outside the timed legs — the q241 fold leg folds a
-      // 10% delivery at touched-group cost; the rebuild leg runs the
-      // full suffix-array construction (log-rounds of corpus-sized
-      // dense ranks), the cost the maintained store retires
-      lazy val sgIdx: (DataFrame, DataFrame) = {
-        val base = docs.filter(col("doc_id") % 10 =!= 0)
-        val store = SuffixArray.spanGroupStore(base).localCheckpoint(true)
-        (store,
-          SuffixArray.repeatedSpansWithKey(store, base).localCheckpoint(true))
-      }
-      // the PATHOLOGICAL-GROUP corpus (round-18, verdict #2): one
-      // 5-token boilerplate span opening 2000·f IDENTICAL 125-token
-      // docs (every window of a duplicated doc is a duplicated
-      // group — the license-header case) plus 2000·f docs sharing
-      // only the opening span before distinct tails. The hot_span_*
-      // head-to-head runs the SAME store through the window-sort
-      // path (threshold maxed) and the bounded-slice refinement
-      // (threshold 256) — the refinement must keep per-task shuffle
-      // flat where the window path funnels whole member suffixes
-      // into single group partitions
-      lazy val hotDocs: DataFrame = {
+        // the cluster-label store's inputs: the full pair table (the
+        // expensive corpus-version artifact BOTH legs get for free —
+        // this head-to-head prices the LABEL maintenance itself), its
+        // 90/10 split, and the labels over the 90% slice. The fold leg
+        // recomputes only the components the delivery's pairs touch;
+        // the rebuild leg runs componentsOf over every pair — the gap
+        // is the q207 scale claim (label cost ∝ delivery-touched
+        // components, not corpus)
+        lazy val compIdx: (DataFrame, DataFrame, DataFrame) = {
+          val pairs = Dedup.minhashDupPairs(docs, threshold = 0.7)
+            .select(col("id1"), col("id2")).localCheckpoint(true)
+          val oldP = pairs
+            .filter(col("id1") % 10 =!= 0 && col("id2") % 10 =!= 0)
+          val newP = pairs
+            .filter(col("id1") % 10 === 0 || col("id2") % 10 === 0)
+            .localCheckpoint(true)
+          (Dedup.componentsOf(oldP).localCheckpoint(true), newP, pairs)
+        }
+        // the span-GROUP store + pair artifact over 90% of the corpus
+        // — the q241 fold leg folds a 10% delivery at touched-group
+        // cost; the rebuild leg runs the full suffix-array
+        // construction, the cost the maintained store retires
+        lazy val sgIdx: (DataFrame, DataFrame) = {
+          val base = docs.filter(col("doc_id") % 10 =!= 0)
+          val store = SuffixArray.spanGroupStore(base).localCheckpoint(true)
+          (store,
+            SuffixArray.repeatedSpansWithKey(store, base).localCheckpoint(true))
+        }
+        // the PATHOLOGICAL-GROUP corpus (round-18, verdict #2):
         // 20,000·f docs sharing ONLY their opening 5-token span; the
         // following 41 tokens all carry the doc id, so EVERY later
         // window is doc-unique: exactly ONE span group of 20,000·f
         // members (200,000 at f=10), each member a 46-token suffix —
         // the license-header pathology in its purest shape. The
-        // window path funnels every member's full suffix into a
-        // single sort partition; the refinement path resolves the
-        // group in one bounded-slice level.
-        val n = 20000L * f
-        cached(spark.range(0, n).select(
-            (col("id") + 600000000L).as("doc_id"),
-            concat(lit("hot span head token five "),
-              expr("array_join(transform(sequence(0, 40), " +
-                "j -> concat('t', j, 'x', id)), ' ')")).as("text"),
-            lit("en").as("lang"), lit("src0").as("source"),
-            lit(0L).as("n_chars"))
-          .withColumn("n_chars", length(col("text")).cast("long")))
-      }
-      lazy val hotStore: DataFrame =
-        SuffixArray.spanGroupStore(hotDocs).localCheckpoint(true)
-      // DISK-backed span-group pair twins for the bucketed-layout
-      // head-to-head (round-18, verdict #6): the SAME pair table as
-      // plain parquet vs bucketed-by-fp (32 buckets, per-bucket
-      // sorted). Under a disabled broadcast threshold — the 100 TB
-      // regime where the touched-fp set outgrows a broadcast — the
-      // carried-leg anti-join must leave the bucketed store side
-      // UNSHUFFLED (exchange on the delivery side only)
-      lazy val sgDisk: (DataFrame, DataFrame, DataFrame) = {
-        val tmp = java.nio.file.Files
-          .createTempDirectory("graft-rehearsal-sg")
-        val table = s"rehearsal_sg_pairs_x$f"
-        releases += (() => FsUtil.rmTree(tmp.toFile))
-        releases += (() => Bucketing.drop(spark, table))
-        sgIdx._2.write.mode("overwrite").parquet(s"$tmp/pairs_plain")
-        Bucketing.writeBucketed(sgIdx._2, table, "fp",
-          spark.sessionState.conf.numShufflePartitions)
-        val touched = SuffixArray
-          .spanGroupStore(docs.filter(col("doc_id") % 10 === 0))
-          .select(col("fp")).distinct().localCheckpoint(true)
-        (ParquetRead.parquet(spark, s"$tmp/pairs_plain"),
-          Bucketing.table(spark, table), touched)
-      }
-      // the composite gate's serve artifacts (NB model + per-source
-      // cut table), trained ONCE outside the timed legs — the served
-      // leg gates the corpus windowless against them
-      lazy val gateIdx: (DataFrame, DataFrame, DataFrame) = {
-        val (lm, consts) = TextAnalysis.nbModel(docs, nbPos, nbNeg)
-        (lm, consts,
-          Curation.gateThresholdsFrom(lm, consts, docs).localCheckpoint(true))
-      }
-      val family: Seq[Leg] = Seq(
-        Leg("q26_minhash_dups", Seq(Docs))(() =>
-          Dedup.minhashDupPairs(docs, threshold = 0.7)),
-        Leg("q27_ngram_jaccard", Seq(Docs))(() =>
-          Dedup.ngramJaccardPairs(docs, n = 5, threshold = 0.5)),
-        Leg("q51_dup_clusters", Seq(Docs))(() =>
-          Dedup.dupClusters(docs, threshold = 0.7)),
-        Leg("q34_knn_ivf", Seq(Emb))(() =>
-          Similarity.ivfTopK(emb, trainFraction = 0.1)),
-        // round-9 heavies: span-dedup's window aggregate (linear in
-        // corpus tokens) and PQ training+encode (linear in m·N folds).
-        // duplicatedWindows, not dupSpanStats: the latter's row count
-        // equals its left side, so a count() action lets Catalyst
-        // eliminate the join AND the span derivation (measured as a
-        // 0-shuffle no-op) — the fp aggregate is elimination-proof
-        Leg("q111_dup_windows", Seq(Docs))(() =>
-          SubstringDedup.duplicatedWindows(docs)),
-        // the rolling-hash twin right after its md5 sibling: same
-        // aggregate, O(n) derivation + 8-byte keys — the rehearsal
-        // prints the head-to-head wall/cpu/shuffle-bytes at each factor
-        Leg("q135_dup_windows_rolling", Seq(Docs))(() =>
-          SubstringDedup.duplicatedWindowsRolling(docs)),
-        Leg("q117_pq_encode", Seq(Emb))(() =>
-          Similarity.pqEncode(emb)),
-        // round-9 session-2 heavies: the span REWRITE (coverage legs +
-        // the doc-keyed interval join; the removed_tokens filter keeps
-        // count() from eliminating the rewrite work — the output row
-        // count would otherwise equal the left side) and the 3-round
-        // integer PageRank over the pair graph
-        Leg("q132_span_rewrite", Seq(Docs))(() =>
-          SubstringDedup.removeSpans(docs).filter(col("removed_tokens") > 0)),
-        // incremental ingest vs full re-run: the 10% delivery probed
-        // against the prebuilt index vs the whole-corpus >= 2 rule —
-        // the marginal-vs-total cost gap is the q154 scale claim
-        // the dup_tokens > 0 filter makes the coverage join
-        // elimination-proof under count() (same trap as q111's note
-        // above: both stats outputs are row-equal to their left side)
-        Leg("q154_incremental_batch", Seq(Docs, SpanIdx))(() =>
-          SubstringDedup.incrementalSpanStats(spanIdx,
-            docs.filter(col("doc_id") % 10 === 0))
-            .filter(col("dup_tokens") > 0)),
-        Leg("q154_full_rerun", Seq(Docs))(() =>
-          SubstringDedup.dupSpanStats(docs)
-            .filter(col("doc_id") % 10 === 0 && col("dup_tokens") > 0)),
-        Leg("q128_pagerank", Seq(Docs))(() =>
-          Dedup.pairPageRank(Dedup.minhashDupPairs(docs, threshold = 0.7))),
-        // the within-cell ANN family (q141/q146 share this join
-        // budget): maxCell caps the quadratic leg, which means
-        // nCentroids MUST grow with the corpus (cells ≈ N/cap) — a
-        // fixed 16 cells at x10 put every cell over the cap and the
-        // first rehearsal run returned ZERO rows. Scaling cells with
-        // the factor holds per-cell size constant: the correct
-        // deployment, and the measured cost stays ~linear.
-        Leg("q141_hard_negatives", Seq(Emb))(() =>
-          Similarity.hardNegatives(emb, nCentroids = 16 * f)),
-        // the NB classifier (q156): two token-type aggregates + a
-        // vocab-sized join against per-doc counts — expected linear
-        // in corpus tokens. The Caesar copies also multiply the
-        // vocabulary, so the lm join side grows with the corpus the
-        // way a real crawl's type table does
-        Leg("q156_nb_classifier", Seq(Docs))(() =>
-          TextAnalysis.nbClassifierScores(docs,
-            posSources = Seq("src0", "src1", "src2"),
-            negSources = Seq("src3", "src4", "src5"))),
-        // the centroid classifier (q158): one (label, dim, Σv)
-        // aggregate + a K-row broadcast crossJoin and a max_by —
-        // expected linear in vectors with a constant K·dims term
-        Leg("q158_centroid_classifier", Seq(Emb))(() =>
-          Similarity.centroidClassifier(emb)),
-        // incremental NB model update vs full retrain: fold a 10%
-        // delivery's counts into the prebuilt 90% artifacts (one
-        // delivery tokenization + a vocab-sized merge) vs
-        // re-tokenizing the whole corpus — q161's marginal-cost claim
-        // (nbCounts checkpoints eagerly, so both legs are
-        // elimination-proof under count())
-        Leg("q161_fold_delivery", Seq(Docs, NbIdx))(
-          () => TextAnalysis.nbCountsUpdate(nbIdx._1, nbIdx._2,
-            docs.filter(col("doc_id") % 10 === 0), nbPos, nbNeg)._1),
-        Leg("q161_full_retrain", Seq(Docs))(() =>
-          TextAnalysis.nbCounts(docs, nbPos, nbNeg)._1),
-        // the containment family (q140/q147): q27's inverted shingle
-        // index with the df<=100 cut bounding pair generation
-        // linearly, PLUS two id->source joins and a sources²-bounded
-        // aggregate for the directed matrix — the standalone legs
-        // prove the whole chain linear; the from-pairs leg prices the
-        // composed consumer off the materialized pair artifact
-        // the composite gate (q164): the NB scorer's two token-level
-        // aggregates + ONE fused row-local signal scan + a per-source
-        // rank window — expected linear in corpus tokens (the keep
-        // filter makes the join+window chain elimination-proof under
-        // count(): kept rows are data-dependent)
-        Leg("q164_composite_gate", Seq(Docs))(() =>
-          graft.operators.Curation.compositeGate(docs)
-            .filter(col("keep"))),
-        // the SERVED gate (q179): same decision, zero windows — one
-        // scoring pass + the fused signal scan + a broadcast join
-        // against the K-row cut table; head-to-head with q164's
-        // windowed form above (keep filter: same elimination-proofing)
-        Leg("q179_gate_served", Seq(Docs, GateIdx))(
-          () => Curation.compositeGateFrom(gateIdx._3, gateIdx._1,
-            gateIdx._2, docs).filter(col("keep"))),
-        Leg("q140_containment", Seq(Docs))(() =>
-          Dedup.ngramContainmentPairs(docs)),
-        Leg("q147_containment_matrix", Seq(Docs))(() =>
-          Dedup.sourceContainmentMatrix(docs)),
-        Leg("q147_from_pairs", Seq(Docs, ContPairs))(
-          () => Dedup.sourceContainmentMatrixFromPairs(contPairs, docs)),
-        // incremental manifest fold vs full re-hash: the fold pays the
-        // fixed-size delivery's text hashing + its own cells' fold;
-        // the re-run fingerprints every document's TEXT again — the
-        // q154 marginal-vs-total story for integrity receipts
-        Leg("q178_manifest_fold", Seq(Docs, ManifestIdx))(
-          () => Curation.manifestFromSub(Curation.updatedSubManifest(
-            manifestIdx._2, manifestIdx._1,
-            Curation.manifestUnits(
-              crawlOf(docs.filter(col("doc_id") < 500)),
-              subShards = 4)))),
-        Leg("q178_full_rehash", Seq(Docs))(() =>
-          Curation.shardManifest(crawlOf(docs), subShards = 4)),
-        // verified-pair store fold vs full rebuild: the 10% delivery's
-        // shingles fold into the prebuilt 90% store (new-candidate
-        // probe + crossing repair + sliver verify) — head-to-head with
-        // the q27 full-rebuild leg above. The jaccard > 0 filter keeps
-        // count() from eliminating nothing here (output is the pair
-        // table, data-dependent), but guards against future rewrites
-        Leg("q186_fold_delivery", Seq(Docs, JacIdx))(
-          () => Dedup.jaccardPairsFold(jacIdx._2, jacIdx._1,
-            Dedup.shingles(docs.filter(col("doc_id") % 10 === 0)))
-            .filter(col("jaccard") > 0)),
-        // the bigram-LM scorer (q198): one row-local bigram explode
-        // over the reference + corpus, two token-keyed joins against
-        // the count/context tables, one per-doc aggregate — expected
-        // linear in corpus tokens (the nll filter is data-dependent,
-        // keeping the model joins elimination-proof under count())
-        Leg("q198_lm_score", Seq(Docs))(() =>
-          NgramLm.lmScore(docs.filter(col("source").isin(nbPos: _*)),
-            docs).filter(col("nll_micro") > 0)),
-        // incremental LM count fold vs full retrain: a 10% trusted
-        // delivery's bigrams merge into the prebuilt 90% state (one
-        // delivery derivation + a vocab-sized keyed merge) vs
-        // re-deriving every reference bigram — the q161 marginal-cost
-        // claim for the LM family (c12 filter: elimination-proofing)
-        Leg("q199_lm_fold", Seq(Docs, LmIdx))(() =>
-          NgramLm.bigramCountsUpdate(lmIdx,
-            docs.filter(col("doc_id") % 10 === 0 &&
-              col("source").isin(nbPos: _*)))
-            .filter(col("c12") > 0)),
-        Leg("q199_lm_retrain", Seq(Docs))(() =>
-          NgramLm.bigramCounts(docs.filter(col("source").isin(nbPos: _*)))
-            .filter(col("c12") > 0)),
-        // bucket-store fold vs per-delivery re-aggregation: a 10%
-        // delivery's signatures + their bucket stats merge into the
-        // prebuilt 90% store vs re-deriving band hashes and
-        // re-aggregating EVERY signature — the cost the persisted
-        // store removes from the near-dup delivery path (both
-        // filters reference both aggregates: elimination-proofing)
-        Leg("q195_bucket_fold", Seq(Docs, BktIdx))(() =>
-          Dedup.bucketStatsFold(bktIdx, Dedup.minhashSignatures(
-            docs.filter(col("doc_id") % 10 === 0)))
-            .filter(col("bsz") > 0 && col("id1") >= 0)),
-        Leg("q195_bucket_reagg", Seq(Docs))(() =>
-          Dedup.bucketStats(Dedup.minhashSignatures(docs))
-            .filter(col("bsz") > 0 && col("id1") >= 0)),
-        // SQ8 (q204/q205): ONE dims-bounded extrema aggregate + a
-        // row-local encode, then the asymmetric search's single
-        // corpus-side fold per broadcast query — both expected linear
-        // in vectors (the rerr filter is data-dependent,
-        // elimination-proofing the encode under count())
-        Leg("q204_sq_encode", Seq(Emb))(() =>
-          Similarity.sqEncode(emb).filter(col("rerr") >= 0)),
-        Leg("q205_sq_ann", Seq(Emb))(() =>
-          Similarity.sqTopK(emb)),
-        // cluster-label fold vs rebuild (q207): both legs read the
-        // SAME precomputed pair table — the head-to-head isolates the
-        // label maintenance (touched-component star recompute vs
-        // whole-graph contraction)
-        Leg("q207_fold_labels", Seq(Docs, CompIdx))(() =>
-          Dedup.componentsFold(compIdx._1, compIdx._2)
-            .filter(col("cluster_size") > 0)),
-        Leg("q207_rebuild_labels", Seq(Docs, CompIdx))(() =>
-          Dedup.componentsOf(compIdx._3)
-            .filter(col("cluster_size") > 0)),
-        // suffix-repeat fold vs full array rebuild (q241 vs q230):
-        // the fold pays the delivery's windows + touched groups'
-        // member re-sort; the rebuild pays log(maxDocLen) corpus-wide
-        // dense-rank rounds — the marginal-vs-total story for the
-        // last rebuild-only store family (lcp filter: both outputs
-        // are data-dependent, elimination-proofing under count())
-        Leg("q241_suffix_fold", Seq(Docs, SgIdx))(() => {
-          val delivery = docs.filter(col("doc_id") % 10 === 0)
-          SuffixArray.repeatedSpansFold(sgIdx._2,
-            sgIdx._1.unionByName(SuffixArray.spanGroupStore(delivery)),
-            delivery, docs).filter(col("lcp") >= 5)
-        }),
-        Leg("q241_suffix_rebuild", Seq(Docs))(() =>
-          SuffixArray.repeatedSpans(docs).filter(col("lcp") >= 5)),
-        // hot-group head-to-head (round-18 verdict #2): identical
-        // store, window-sort path vs bounded-slice refinement over
-        // the planted pathological corpus — compare wall/cpu/shuffle
-        // AND task_shrd_max (the window path's single-partition
-        // funnel shows up there)
-        Leg("hot_span_window", Seq(HotDocs))(() =>
-          SuffixArray.repeatedSpansWithKey(hotStore, hotDocs, 5L,
-            Int.MaxValue).filter(col("lcp") >= 5)),
-        Leg("hot_span_refine", Seq(HotDocs))(() =>
-          SuffixArray.repeatedSpansWithKey(hotStore, hotDocs, 5L, 256)
-            .filter(col("lcp") >= 5)),
-        // bucketed-layout head-to-head (round-18 verdict #6), both
-        // under a disabled broadcast threshold (the regime where the
-        // touched set outgrows a broadcast): the carried anti-join
-        // against the plain parquet store shuffles BOTH sides; the
-        // bucketed-by-fp store must not move
-        Leg("sg_carried_plain", Seq(Docs, SgIdx, SgDisk),
-            noBroadcast = true)(() =>
-          sgDisk._1.join(sgDisk._3, Seq("fp"), "left_anti")),
-        Leg("sg_carried_bucketed", Seq(Docs, SgIdx, SgDisk),
-            noBroadcast = true)(() =>
-          sgDisk._2.join(sgDisk._3, Seq("fp"), "left_anti")),
-        // edit-distance verify (q209): the q26 candidate front + the
-        // banded thresholded levenshtein over 500-char prefixes —
-        // candidate-proportional like every verifier here
-        Leg("q209_edit_dups", Seq(Docs))(() =>
-          Dedup.editDistanceDupPairs(docs)),
-        // ---- adversarial-skew legs (round-14): power-law sources +
-        // one 300·f-copy template (see inflateSkewedDocuments). The
-        // claims under test: the sig/span STORE builds stay balanced
-        // (map-side partial aggregation absorbs the hot fingerprint
-        // before the shuffle), the star probe stays O(members), and
-        // the salted aggregate keeps per-task shuffle flat where the
-        // plain one concentrates the hot key — read the
-        // task_shrd_p50/max columns, not just the totals
-        Leg("skew_sig_store", Seq(SkewDocs))(() =>
-          Dedup.minhashSignatures(skewDocs)),
-        Leg("skew_span_store", Seq(SkewDocs))(() =>
-          SubstringDedup.windowIndex(skewDocs)),
-        Leg("skew_star_probe", Seq(SkewDocs))(() =>
-          Dedup.hotBucketPairs(Dedup.minhashSignatures(skewDocs))),
-        Leg("skew_agg_plain", Seq(SkewDocs))(() =>
-          skewDocs.groupBy(col("source"))
-            .agg(count(lit(1)).as("n"),
-              sum(col("n_chars")).as("chars"))),
-        Leg("skew_agg_salted", Seq(SkewDocs))(() =>
-          SkewJoin.saltedAgg(skewDocs.select("source", "n_chars"),
-            Seq("source"), salt = 32)(
-            _.agg(count(lit(1)).as("c"), sum(col("n_chars")).as("s")),
-            _.agg(sum(col("c")).as("n"), sum(col("s")).as("chars")))),
-        // the diagnostic a pipeline reads BEFORE choosing a strategy:
-        // the top key's share under the power law (src0 ≈ 50%)
-        Leg("skew_key_profile", Seq(SkewDocs))(() =>
-          SkewJoin.keySkewProfile(skewDocs, "source")))
-      val sel = family.filter(l => selected(l.name))
-      try {
-        // force the shared inputs OUTSIDE the timed spans; the counts
-        // fill the rows' docs and vecs columns
+        // hot_span_* head-to-head runs the SAME store through the
+        // window-sort path (threshold maxed) and the bounded-slice
+        // refinement (threshold 256) — the refinement must keep
+        // per-task shuffle flat where the window path funnels every
+        // member's full suffix into a single sort partition
+        lazy val hotDocs: DataFrame = written("hot_documents",
+          spark.range(0, 20000L * f).select(
+              (col("id") + 600000000L).as("doc_id"),
+              concat(lit("hot span head token five "),
+                expr("array_join(transform(sequence(0, 40), " +
+                  "j -> concat('t', j, 'x', id)), ' ')")).as("text"),
+              lit("en").as("lang"), lit("src0").as("source"),
+              lit(0L).as("n_chars"))
+            .withColumn("n_chars", length(col("text")).cast("long")))
+        lazy val hotStore: DataFrame =
+          SuffixArray.spanGroupStore(hotDocs).localCheckpoint(true)
+        // DISK-backed span-group pair twins for the bucketed-layout
+        // head-to-head (round-18, verdict #6): the SAME pair table as
+        // plain parquet vs bucketed-by-fp (per-bucket sorted). Under a
+        // disabled broadcast threshold — the 100 TB regime where the
+        // touched-fp set outgrows a broadcast — the carried-leg
+        // anti-join must leave the bucketed store side UNSHUFFLED
+        // (exchange on the delivery side only)
+        lazy val sgDisk: (DataFrame, DataFrame, DataFrame) = {
+          val table = s"rehearsal_sg_pairs_x$f"
+          releases += (() => Bucketing.drop(spark, table))
+          val plain = written("sg_pairs_plain", sgIdx._2)
+          Bucketing.writeBucketed(sgIdx._2, table, "fp",
+            spark.sessionState.conf.numShufflePartitions)
+          val touched = SuffixArray
+            .spanGroupStore(docs.filter(col("doc_id") % 10 === 0))
+            .select(col("fp")).distinct().localCheckpoint(true)
+          (plain, Bucketing.table(spark, table), touched)
+        }
+
+        val builds = Bench.Families.map(fam =>
+          Leg(s"${fam}_build")(() => ComposedArtifacts.receipt(spark, dir, fam)))
+        val entries = SparkEntry.queries.toSeq.sortBy(_._1).map {
+          case (q, fn) => Leg(q)(() => fn(spark, dir)) }
+        val uncovered: Seq[Leg] = Seq(
+          // incremental ingest vs full re-run: the 10% delivery probed
+          // against the prebuilt index vs the whole-corpus >= 2 rule —
+          // the marginal-vs-total cost gap is the q154 scale claim
+          Leg("q154_incremental_batch", Seq(SpanIdx))(() =>
+            SubstringDedup.incrementalSpanStats(spanIdx,
+              docs.filter(col("doc_id") % 10 === 0))),
+          Leg("q154_full_rerun")(() =>
+            SubstringDedup.dupSpanStats(docs).filter(col("doc_id") % 10 === 0)),
+          // incremental NB model update vs full retrain: fold a 10%
+          // delivery's counts into the prebuilt 90% artifacts (one
+          // delivery tokenization + a vocab-sized merge) vs
+          // re-tokenizing the whole corpus — q161's marginal-cost claim
+          Leg("q161_fold_delivery", Seq(NbIdx))(
+            () => TextAnalysis.nbCountsUpdate(nbIdx._1, nbIdx._2,
+              docs.filter(col("doc_id") % 10 === 0), nbPos, nbNeg)._1),
+          Leg("q161_full_retrain")(() =>
+            TextAnalysis.nbCounts(docs, nbPos, nbNeg)._1),
+          // incremental manifest fold vs full re-hash: the fold pays
+          // the fixed-size delivery's text hashing + its own cells'
+          // fold; the re-run fingerprints every document's TEXT again
+          Leg("q178_manifest_fold", Seq(ManifestIdx))(
+            () => Curation.manifestFromSub(Curation.updatedSubManifest(
+              manifestIdx._2, manifestIdx._1,
+              Curation.manifestUnits(
+                crawlOf(docs.filter(col("doc_id") < 500)),
+                subShards = 4)))),
+          Leg("q178_full_rehash")(() =>
+            Curation.shardManifest(crawlOf(docs), subShards = 4)),
+          // verified-pair store fold vs full rebuild: the 10%
+          // delivery's shingles fold into the prebuilt 90% store
+          // (new-candidate probe + crossing repair + sliver verify) —
+          // head-to-head with the q27_ngram_jaccard entry leg
+          Leg("q186_fold_delivery", Seq(JacIdx))(
+            () => Dedup.jaccardPairsFold(jacIdx._2, jacIdx._1,
+              Dedup.shingles(docs.filter(col("doc_id") % 10 === 0)))),
+          // bucket-store fold vs per-delivery re-aggregation: a 10%
+          // delivery's signatures + their bucket stats merge into the
+          // prebuilt 90% store vs re-deriving band hashes and
+          // re-aggregating EVERY signature — the cost the persisted
+          // store removes from the near-dup delivery path
+          Leg("q195_fold_delivery", Seq(BktIdx))(() =>
+            Dedup.bucketStatsFold(bktIdx, Dedup.minhashSignatures(
+              docs.filter(col("doc_id") % 10 === 0)))),
+          Leg("q195_bucket_reagg")(() =>
+            Dedup.bucketStats(Dedup.minhashSignatures(docs))),
+          // incremental LM count fold vs full retrain: a 10% trusted
+          // delivery's bigrams merge into the prebuilt 90% state (one
+          // delivery derivation + a vocab-sized keyed merge) vs
+          // re-deriving every reference bigram
+          Leg("q199_fold_delivery", Seq(LmIdx))(() =>
+            NgramLm.bigramCountsUpdate(lmIdx,
+              docs.filter(col("doc_id") % 10 === 0 &&
+                col("source").isin(nbPos: _*)))),
+          Leg("q199_lm_retrain")(() =>
+            NgramLm.bigramCounts(docs.filter(col("source").isin(nbPos: _*)))),
+          // cluster-label fold vs rebuild (q207): both legs read the
+          // SAME precomputed pair table — the head-to-head isolates
+          // the label maintenance (touched-component star recompute vs
+          // whole-graph contraction)
+          Leg("q207_fold_labels", Seq(CompIdx))(() =>
+            Dedup.componentsFold(compIdx._1, compIdx._2)),
+          Leg("q207_rebuild_labels", Seq(CompIdx))(() =>
+            Dedup.componentsOf(compIdx._3)),
+          // suffix-repeat fold vs full array rebuild: the fold pays the
+          // delivery's windows + touched groups' member re-sort; the
+          // rebuild pays the corpus-wide span-group sort — the
+          // marginal-vs-total story for the suffix store family
+          Leg("q241_fold_delivery", Seq(SgIdx))(() => {
+            val delivery = docs.filter(col("doc_id") % 10 === 0)
+            SuffixArray.repeatedSpansFold(sgIdx._2,
+              sgIdx._1.unionByName(SuffixArray.spanGroupStore(delivery)),
+              delivery, docs)
+          }),
+          Leg("q241_suffix_rebuild")(() => SuffixArray.repeatedSpans(docs)),
+          // hot-group head-to-head (round-18 verdict #2): identical
+          // store, window-sort path vs bounded-slice refinement over
+          // the planted pathological corpus — compare wall/cpu/shuffle
+          // AND task_shrd_max (the window path's single-partition
+          // funnel shows up there)
+          Leg("hot_span_window", Seq(HotDocs))(() =>
+            SuffixArray.repeatedSpansWithKey(hotStore, hotDocs, 5L,
+              Int.MaxValue)),
+          Leg("hot_span_refine", Seq(HotDocs))(() =>
+            SuffixArray.repeatedSpansWithKey(hotStore, hotDocs, 5L, 256)),
+          // bucketed-layout head-to-head (round-18 verdict #6), both
+          // under a disabled broadcast threshold: the carried anti-join
+          // against the plain parquet store shuffles BOTH sides; the
+          // bucketed-by-fp store must not move
+          Leg("sg_carried_plain", Seq(SgIdx, SgDisk), noBroadcast = true)(() =>
+            sgDisk._1.join(sgDisk._3, Seq("fp"), "left_anti")),
+          Leg("sg_carried_bucketed", Seq(SgIdx, SgDisk), noBroadcast = true)(() =>
+            sgDisk._2.join(sgDisk._3, Seq("fp"), "left_anti")),
+          // ---- adversarial-skew legs (round-14): power-law sources +
+          // one 300·f-copy template (see inflateSkewedDocuments). The
+          // claims under test: the sig/span STORE builds stay balanced
+          // (map-side partial aggregation absorbs the hot fingerprint
+          // before the shuffle), the star probe stays O(members), and
+          // the salted aggregate keeps per-task shuffle flat where the
+          // plain one concentrates the hot key — read the
+          // task_shrd_p50/max columns, not just the totals
+          Leg("skew_sig_store", Seq(SkewDocs))(() =>
+            Dedup.minhashSignatures(skewDocs)),
+          Leg("skew_span_store", Seq(SkewDocs))(() =>
+            SubstringDedup.windowIndex(skewDocs)),
+          Leg("skew_star_probe", Seq(SkewDocs))(() =>
+            Dedup.hotBucketPairs(Dedup.minhashSignatures(skewDocs))),
+          Leg("skew_agg_plain", Seq(SkewDocs))(() =>
+            skewDocs.groupBy(col("source"))
+              .agg(count(lit(1)).as("n"),
+                sum(col("n_chars")).as("chars"))),
+          Leg("skew_agg_salted", Seq(SkewDocs))(() =>
+            SkewJoin.saltedAgg(skewDocs.select("source", "n_chars"),
+              Seq("source"), salt = 32)(
+              _.agg(count(lit(1)).as("c"), sum(col("n_chars")).as("s")),
+              _.agg(sum(col("c")).as("n"), sum(col("s")).as("chars")))),
+          // the diagnostic a pipeline reads BEFORE choosing a strategy:
+          // the top key's share under the power law (src0 ≈ 50%)
+          Leg("skew_key_profile", Seq(SkewDocs))(() =>
+            SkewJoin.keySkewProfile(skewDocs, "source")))
+        val sel = (builds ++ entries ++ uncovered).filter(l => selected(l.name))
+
+        // build the shared state OUTSIDE the timed spans; the skew
+        // corpus' size fills the skew legs' docs column
         val counts = sel.flatMap(_.uses).distinct.sorted.map { s =>
           s -> (s match {
-            case Docs => docs.count()
-            case Emb => emb.count()
             case SkewDocs => skewDocs.count()
             case SpanIdx => spanIdx.count()
             case NbIdx => nbIdx._1.count()
-            case ContPairs => contPairs.count()
             case ManifestIdx => manifestIdx._1.count() + manifestIdx._2.count()
-            case GateIdx => gateIdx._3.count()
             case JacIdx => jacIdx._1.count() + jacIdx._2.count()
             case LmIdx => lmIdx.count()
             case BktIdx => bktIdx.count()
@@ -607,54 +528,20 @@ object ScaleRehearsal {
         }.toMap
         for (leg <- sel) {
           val g = s"x$f:${leg.name}"
-          spark.sparkContext.setJobGroup(g, g)
-          // noBroadcast legs run under a disabled broadcast threshold
-          // (restored after the leg) — the at-scale join regime
-          val savedBcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-          val savedAqeBcast = spark.conf
-            .getOption("spark.sql.adaptive.autoBroadcastJoinThreshold")
-          if (leg.noBroadcast) {
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-          }
-          val t0 = System.nanoTime()
-          val rows =
-            try Some(leg.fn().count())
-            catch { case NonFatal(e) =>
-              System.err.println(
-                s"[scale] $g failed: ${e.getClass.getName}: ${e.getMessage}")
-              failed += g
-              None
-            } finally {
-              spark.sparkContext.clearJobGroup()
-              if (leg.noBroadcast) {
-                spark.conf.set("spark.sql.autoBroadcastJoinThreshold", savedBcast)
-                savedAqeBcast match {
-                  case Some(v) => spark.conf
-                    .set("spark.sql.adaptive.autoBroadcastJoinThreshold", v)
-                  case None => spark.conf
-                    .unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-                }
-              }
-            }
-          // deliberately NO cache clear between family members: the
-          // shared corpus cache is the point (each query still derives
-          // its own signatures/shingles); operator-internal persists
-          // unpersist themselves
-          val wall = (System.nanoTime() - t0) / 1e9
-          rows.foreach { n =>
+          val rows = Observation()
+          val run = Bench.timed(spark, g)(broadcastOff(spark, leg.noBroadcast)(
+            Bench.noop(leg.fn().observe(rows, count(lit(1)).as("rows")))))
+          if (run.sec.isLeft) failed += g
+          run.sec.foreach { wall =>
             metrics.drain()
             val m = metrics(g)
             val sh = m.taskShuffleReads.sorted
             val (p50, mx) = if (sh.isEmpty) (0L, 0L) else (sh(sh.size / 2), sh.last)
+            val n = rows.get("rows").asInstanceOf[Long]
             val legDocs =
-              counts.getOrElse(if (leg.uses.contains(SkewDocs)) SkewDocs else Docs, 0L)
-            println(f"""{"factor":$f,"query":"${leg.name}","rows":$n,""" +
-              f""""docs":$legDocs,"vecs":${counts.getOrElse(Emb, 0L)},""" +
-              f""""wall_sec":$wall%.2f,"cpu_sec":${m.cpuNs / 1e9}%.2f,""" +
-              f""""shuffle_write_mb":${m.shuffleWriteBytes / 1e6}%.1f,""" +
-              f""""shuffle_read_mb":${m.shuffleReadBytes / 1e6}%.1f,""" +
-              f""""task_shrd_p50_mb":${p50 / 1e6}%.2f,""" +
+              if (leg.uses.contains(SkewDocs)) counts(SkewDocs) else nDocs
+            println(rowHead(f, leg.name, n, legDocs, nVecs, wall, m) +
+              f""","task_shrd_p50_mb":${p50 / 1e6}%.2f,""" +
               f""""task_shrd_max_mb":${mx / 1e6}%.2f,"sh_tasks":${sh.size}}""")
           }
         }
@@ -664,70 +551,53 @@ object ScaleRehearsal {
         // jobs would — with the base corpus inflated ×f and the
         // DELIVERY FIXED-SIZE (the production constant): boot cost may
         // grow with the corpus, but the marginal delivery cost must
-        // stay ~flat or the incremental-ingest claim fails end-to-end
-        // (the per-stage rehearsals q92/q96/q154/q161/q178 prove each
-        // fold alone; this row prices the composed path). Caesar
-        // caveat: shifted base copies lose English stopwords, so the
-        // gate admits delivery docs against a base whose NB/gopher
-        // statistics dilute with f — cost still covers the full
-        // corpus, which is what the row measures (BASELINE.md notes
-        // the fixture effect).
+        // stay ~flat or the incremental-ingest claim fails end-to-end.
+        // Takedown runs against the _v1 generation the stages
+        // produce; its removal slice is a bucket of corpus v1, so it
+        // scales WITH the corpus — the claim under rehearsal is
+        // store-linear cost with the surviving text never re-read,
+        // not delivery-flatness. Caesar caveat: shifted base copies
+        // lose English stopwords, so the gate admits delivery docs
+        // against a base whose NB/gopher statistics dilute with f —
+        // cost still covers the full corpus, which is what the row
+        // measures (BASELINE.md notes the fixture effect).
         if (selected("ingest_e2e")) {
-          val bucket = Curation.hashBucket(col("doc_id"), 10)
-          val iBase = cached(inflateDocuments(t.documents.filter(bucket < 8), f))
-          val iDelivery = cached(t.documents.filter(bucket >= 8))
-          // the embedding side rides the same shape: inflated vector
-          // base, fixed-size vector delivery (id-shift inflation — ANN
-          // cost is row-linear regardless of duplicate geometry)
-          val vBucket = Curation.hashBucket(col("vec_id"), 10)
-          val iEmbBase =
-            cached(inflateEmbeddings(t.embeddings.filter(vBucket < 8), f))
-          val iEmbDelivery = cached(t.embeddings.filter(vBucket >= 8))
-          iEmbBase.count(); iEmbDelivery.count()
-          val nBase = iBase.count(); val nDel = iDelivery.count()
-          val work = java.nio.file.Files
-            .createTempDirectory("graft-rehearse-ingest").toString
-          releases += (() => FsUtil.rmTree(new java.io.File(work)))
-          val wallBy = scala.collection.mutable.Map(
-            "boot" -> 0.0, "delivery" -> 0.0, "recal" -> 0.0,
-            "takedown" -> 0.0)
-          // takedown runs against the _v1 generation the stages
-          // produce; its removal slice is a bucket of corpus v1, so it
-          // scales WITH the corpus — the claim under rehearsal is
-          // store-linear cost with the surviving text never re-read,
-          // not delivery-flatness
-          for ((name, fn) <- IngestDemo.stagesOver(spark, iBase, iDelivery,
-              iEmbBase, iEmbDelivery, work) ++ IngestDemo.takedownStagesOver(
-              spark, iBase, iDelivery, iEmbBase, iEmbDelivery, work)) {
-            val phase =
-              if (name.startsWith("boot_")) "boot"
-              else if (name.startsWith("cal_")) "recal"
-              else if (name.startsWith("tdn_")) "takedown"
-              else "delivery"
-            val g = s"x$f:ingest_$phase"
-            spark.sparkContext.setJobGroup(g, g)
-            val t0 = System.nanoTime()
-            try fn() finally spark.sparkContext.clearJobGroup()
-            wallBy(phase) += (System.nanoTime() - t0) / 1e9
+          val (base, delivery, embBase, embDelivery) =
+            IngestDemo.fixtureSplit(spark, sfDir)
+          val iBase = written("ingest_base", inflateDocuments(base, f))
+          val iEmbBase = written("ingest_emb_base", inflateEmbeddings(embBase, f))
+          val work = s"$dir/ingest_work"
+          def phaseOf(stage: String): String =
+            if (stage.startsWith("boot_")) "boot"
+            else if (stage.startsWith("cal_")) "recal"
+            else if (stage.startsWith("tdn_")) "takedown"
+            else "delivery"
+          val secs = (IngestDemo.stagesOver(spark, iBase, delivery, iEmbBase,
+              embDelivery, work) ++ IngestDemo.takedownStagesOver(spark, iBase,
+              delivery, iEmbBase, embDelivery, work)).map { case (name, fn) =>
+            val run = Bench.timed(spark, s"x$f:ingest_${phaseOf(name)}")(fn())
+            if (run.sec.isLeft) failed += s"x$f:ingest_e2e:$name"
+            phaseOf(name) -> run.sec
           }
           metrics.drain()
           // rows = the phase's own work unit: the fixed delivery for
           // delivery, the removal slice (~1/7th of v1) for takedown,
           // the corpus for boot/recal — so per-row normalization reads
           // the measured work, not a constant-factor-off proxy
-          val nRemoved = ParquetRead.parquet(spark, s"$work/removed_docs").count()
+          val nBase = iBase.count()
+          val nVecBase = iEmbBase.count()
           for (phase <- Seq("boot", "delivery", "recal", "takedown")) {
-            val g = s"x$f:ingest_$phase"
-            val n = if (phase == "delivery") nDel
-              else if (phase == "takedown") nRemoved
-              else nBase
-            val m = metrics(g)
-            println(f"""{"factor":$f,"query":"ingest_e2e_$phase",""" +
-              f""""rows":$n,"docs":$nBase,"vecs":0,""" +
-              f""""wall_sec":${wallBy(phase)}%.2f,""" +
-              f""""cpu_sec":${m.cpuNs / 1e9}%.2f,""" +
-              f""""shuffle_write_mb":${m.shuffleWriteBytes / 1e6}%.1f,""" +
-              f""""shuffle_read_mb":${m.shuffleReadBytes / 1e6}%.1f}""")
+            val ran = secs.collect { case (`phase`, s) => s }
+            if (ran.forall(_.isRight)) {
+              val n = phase match {
+                case "delivery" => delivery.count()
+                case "takedown" =>
+                  ParquetRead.parquet(spark, s"$work/removed_docs").count()
+                case _ => nBase
+              }
+              println(rowHead(f, s"ingest_e2e_$phase", n, nBase, nVecBase,
+                ran.flatMap(_.toOption).sum, metrics(s"x$f:ingest_$phase")) + "}")
+            }
           }
         }
       } finally releases.reverseIterator.foreach(_())

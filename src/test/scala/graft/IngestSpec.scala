@@ -12,8 +12,9 @@ class IngestSpec extends SparkSpec {
 
   test("ingest pipeline: stages run, folds == from-scratch, funnel monotone") {
     val work = Files.createTempDirectory("graft-ingest-spec").toString
+    val (base, dlv, embBase, embDlv) = IngestDemo.fixtureSplit(spark, sfDir)
     try {
-      for ((name, fn) <- IngestDemo.stages(spark, sfDir, work)) {
+      for ((name, fn) <- IngestDemo.stagesOver(spark, base, dlv, embBase, embDlv, work)) {
         withClue(s"stage $name: ") { fn() }
         spark.sharedState.cacheManager.clearCache()
       }
@@ -25,17 +26,19 @@ class IngestSpec extends SparkSpec {
       assert(total >= exact && exact >= near && near >= span &&
         span >= admitted, s"non-monotone funnel: $total/$exact/$near/$span/$admitted")
       assert(admitted > 0, "gate chain admitted nothing — thresholds degenerate")
-      for ((name, fn) <- IngestDemo.checks(spark, sfDir, work)) {
+      for ((name, fn) <- IngestDemo.checksOver(spark, base, dlv, embBase, embDlv, work)) {
         withClue(s"check $name: ") { fn() }
         spark.sharedState.cacheManager.clearCache()
       }
       // takedown generation: retract a removal slice from every
       // store, then every _v2 artifact == rebuild over the survivors
-      for ((name, fn) <- IngestDemo.takedownStages(spark, sfDir, work)) {
+      for ((name, fn) <- IngestDemo.takedownStagesOver(spark, base, dlv, embBase, embDlv,
+          work)) {
         withClue(s"stage $name: ") { fn() }
         spark.sharedState.cacheManager.clearCache()
       }
-      for ((name, fn) <- IngestDemo.takedownChecks(spark, sfDir, work)) {
+      for ((name, fn) <- IngestDemo.takedownChecksOver(spark, base, dlv, embBase, embDlv,
+          work)) {
         withClue(s"check $name: ") { fn() }
         spark.sharedState.cacheManager.clearCache()
       }

@@ -200,6 +200,31 @@ class ScaleToolsSpec extends SparkSpec {
       s"rehearse left a bucketed table: ${tables.mkString(", ")}")
   }
 
+  test("ScaleRehearsal entry legs serve the entry and leave no scratch dir") {
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods.parse
+    val sf = "/root/testdata/sf0.001"
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def scratch: Set[String] = Option(tmp.list).toSeq.flatten
+      .filter(_.startsWith("graft-rehearsal-")).toSet
+    val before = scratch
+    val out = new java.io.ByteArrayOutputStream
+    val failed = Console.withOut(out)(ScaleRehearsal.rehearse(spark, sf,
+      Seq(1), Some(Seq("pair_build", "q51_dup_clusters", "q147_source_containment"))))
+    assert(failed.isEmpty, s"legs failed: $failed")
+    val rows = out.toString("UTF-8").linesIterator.filter(_.startsWith("{"))
+      .map(parse(_)).map(j => (j \ "query", j \ "rows")).collect {
+        case (JString(q), JInt(n)) => q -> n.toLong }.toMap
+    assert(rows.keySet === Set("pair_build", "q51_dup_clusters",
+      "q147_source_containment"), out.toString("UTF-8"))
+    // at ×1 the scratch directory holds the rows of sf0.001, so an
+    // entry leg's observed rows are the entry's own
+    for (q <- Seq("q51_dup_clusters", "q147_source_containment"))
+      assert(rows(q) === SparkEntry.queries(q)(spark, sf).count(), q)
+    assert((scratch -- before).isEmpty,
+      s"rehearse left scratch dirs behind: ${scratch -- before}")
+  }
+
   test("freshStatsView stops iterative-checkpoint stats compounding") {
     import org.apache.spark.sql.graft.ColumnBridge
     // localCheckpoint CARRIES the origin plan's size estimate into

@@ -4,26 +4,14 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Base for suites needing a SparkSession: one session per JVM (forked
-  * sbt test JVM), local[4], UTC, AQE on — mirrors Verify/Bench config.
+  * sbt test JVM), the engine's [[LocalSession]] at local[4].
   */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // bucketed-table scratch (LayoutSpec) — never the repo cwd
-      .config("spark.sql.warehouse.dir", java.nio.file.Files
-        .createTempDirectory("graft-test-wh").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // bucketed-table scratch (LayoutSpec) — never the repo cwd
+  lazy val session: SparkSession = LocalSession("graft-test", 4,
+    Some(java.nio.file.Files.createTempDirectory("graft-test-wh").toString))
 }
