@@ -8,17 +8,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 import graft.engine.ParquetRead
-import graft.operators.{Curation, Dedup, Similarity, TextAnalysis}
+import graft.operators.{Curation, Dedup, NgramLm, Similarity, SuffixArray, TextAnalysis}
 import graft.sources.Tables
 
 /** The VERSIONED WAREHOUSE: the one definition of each artifact
   * family build — `pair` (signatures, shingle index, scored LSH
   * candidates, containment and exact-Jaccard pair stores), `ann`
-  * (cell assignment, IVF index, PQ and SQ8 codes, NB model), `tok`,
-  * `decon`, `lr` and `suffix`. Each family is built ONCE per CORPUS
-  * VERSION, persisted as parquet, and every consumer entry in
+  * (IVF centroids + cells, the cell assignment under those centroids,
+  * PQ codebook + codes, SQ8 stats + codes, NB counts `nb_vt`/`nb_dc`
+  * + LM + constants; each model trained once), `tok`, `decon`, `lr`
+  * and `suffix`. Each family is built ONCE per CORPUS VERSION,
+  * persisted as parquet, and every consumer entry in
   * [[TrainingEntries]] reads it through the accessors below and the
   * operators' `*From` APIs.
+  *
+  * The store chains ([[vectorIndex]], [[nbModelStores]],
+  * [[nbServe]], [[lmServe]], [[spanGroups]]) are defined once here
+  * and shared: the family builds call them with the warehouse's
+  * rebalancing writer, and [[IngestDemo]]'s `boot_*`, `cal_*`,
+  * `inc_fold_*` and `tdn_*` stages call them with their own.
   *
   * Why this exists: a consumer entry's oracle SQL derives its answer
   * from the raw tables, so a hash match puts the production path
@@ -90,10 +98,18 @@ object ComposedArtifacts {
   // sort) instead of prefix doubling — output-identical by the
   // prefix-interval property, but a doubling-built sa_lcp must not
   // serve unaudited
-  private val LayoutVersion = 6
+  // v7: the ann family adds the NB count stores (nb_vt, nb_dc) and
+  // derives cells and pq_codes from its written models
+  private val LayoutVersion = 7
 
   /** The q26-family near-dup threshold shared by every pair consumer. */
   private val JaccardThreshold = 0.7
+
+  /** The fixture's supervision labels: the NB and logistic models'
+    * positive and negative sources, pinned by the entries' oracle SQL.
+    */
+  private[graft] val PosSources = Seq("src0", "src1", "src2")
+  private[graft] val NegSources = Seq("src3", "src4", "src5")
 
   /** Warehouse root: `$SPARK_GRAFT_WAREHOUSE` when set (the operator
     * owns that choice — a production deployment points this at the
@@ -315,11 +331,97 @@ object ComposedArtifacts {
       } finally sigs.unpersist(false)
     }
 
+  /** The warehouse's write policy: every store writes through a
+    * REBALANCE hint (see [[pairDir]]).
+    */
+  private def writeTo(work: String)(df: DataFrame, name: String): Unit =
+    df.hint("rebalance").write.mode("overwrite").parquet(s"$work/$name")
+
+  // ---- The store chains. Each derivation is written once here; the
+  // family builds below and IngestDemo's stages call it. A chain takes
+  // its input frame, the caller's store reader `rd` and writer `wr`
+  // (so each caller keeps its own write policy), a store-name affix
+  // and, where it trains a model, the train fraction. A chain writes
+  // its model or counts first and derives the next store from the
+  // written copy, so a published (model, store) pair is consistent.
+
+  /** The three vector-index chains, each store name + `sfx`: IVF
+    * centroids → flat cell table (`ivf_centroids`, `ivf_cells`), PQ
+    * codebook → code table (`pq_codebook`, `pq_codes`), SQ8 extrema →
+    * code table (`sq_stats`, `sq_codes`). Models train once; the
+    * stores are row-local derivations under them, which is what makes
+    * their fold/retract exact. The chains share no data, so callers
+    * overlap them ([[Overlap.inParallel]]). Lloyd passes run on the
+    * `trainFraction` md5 sample; assignment and encoding scan every
+    * vector, and the SQ extrema are always a full scan.
+    */
+  private[graft] def vectorIndex(emb: DataFrame, trainFraction: Double,
+      rd: String => DataFrame, wr: (DataFrame, String) => Unit,
+      sfx: String): Seq[() => Unit] = Seq(
+    () => {
+      wr(Similarity.ivfCentroidsDf(emb, trainFraction = trainFraction),
+        s"ivf_centroids$sfx")
+      wr(Similarity.cellsFromCentroids(rd(s"ivf_centroids$sfx"), emb),
+        s"ivf_cells$sfx")
+    },
+    () => {
+      wr(Similarity.pqCodebookDf(emb, trainFraction = trainFraction),
+        s"pq_codebook$sfx")
+      wr(Similarity.pqEncodeFrom(rd(s"pq_codebook$sfx"), emb),
+        s"pq_codes$sfx")
+    },
+    () => {
+      wr(Similarity.sqStats(emb), s"sq_stats$sfx")
+      wr(Similarity.sqEncodeFrom(rd(s"sq_stats$sfx"), emb), s"sq_codes$sfx")
+    })
+
+  /** The NB quality model over `docs` ([[PosSources]] vs
+    * [[NegSources]]): the count stores `nb_vt`/`nb_dc` + `sfx`, then
+    * the serve pair derived from them ([[nbServe]]).
+    */
+  private[graft] def nbModelStores(docs: DataFrame, rd: String => DataFrame,
+      wr: (DataFrame, String) => Unit, sfx: String): Unit = {
+    val (vt, dc) = TextAnalysis.nbCounts(docs, PosSources, NegSources)
+    wr(vt, s"nb_vt$sfx"); wr(dc, s"nb_dc$sfx")
+    nbServe(rd, wr, sfx)
+  }
+
+  /** The NB serve pair `nb_lm`/`nb_consts` + `sfx`, derived from the
+    * written count stores `nb_vt`/`nb_dc` + `sfx` (vocabulary-sized).
+    */
+  private[graft] def nbServe(rd: String => DataFrame,
+      wr: (DataFrame, String) => Unit, sfx: String): Unit = {
+    val (lm, consts) =
+      TextAnalysis.nbLmFromCounts(rd(s"nb_vt$sfx"), rd(s"nb_dc$sfx"))
+    wr(lm, s"nb_lm$sfx"); wr(consts, s"nb_consts$sfx")
+  }
+
+  /** The bigram-LM serve pair `lm_uni`/`lm_consts` + `sfx`, derived
+    * from the written count store `lm_bi` + `sfx` (vocabulary-sized).
+    */
+  private[graft] def lmServe(rd: String => DataFrame,
+      wr: (DataFrame, String) => Unit, sfx: String): Unit = {
+    val (uni, consts) = NgramLm.lmFromCounts(rd(s"lm_bi$sfx"))
+    wr(uni, s"lm_uni$sfx"); wr(consts, s"lm_consts$sfx")
+  }
+
+  /** The span-group chain over `corpus`: the doc-local group store
+    * `<prefix>_store`, then the maximal-repeat pair table
+    * `<prefix>_pairs` from the written store.
+    */
+  private[graft] def spanGroups(corpus: DataFrame, rd: String => DataFrame,
+      wr: (DataFrame, String) => Unit, prefix: String): Unit = {
+    wr(SuffixArray.spanGroupStore(corpus), s"${prefix}_store")
+    wr(SuffixArray.repeatedSpansWithKey(rd(s"${prefix}_store"), corpus),
+      s"${prefix}_pairs")
+  }
+
   /** The ANN/model artifact family (built separately from the pair
     * graph so each consumer group pays only its own build): the
-    * (vec_id, cell) assignment, the IVF serve index (centroids +
-    * cells), the PQ codebook + code table, the SQ8 stats + code
-    * table, and the NB quality model (LM + constants).
+    * [[vectorIndex]] stores (IVF centroids + cells, PQ codebook +
+    * codes, SQ8 stats + codes), the (vec_id, cell) assignment under
+    * the written IVF centroids, and the NB model stores (counts, LM,
+    * constants). Each model trains once; the chains overlap.
     */
   private def annDir(spark: SparkSession, sfDir: String): String =
     obtain(spark, "ann", sfDir,
@@ -327,29 +429,16 @@ object ComposedArtifacts {
       val t = Tables(spark, sfDir)
       val emb = t.embeddings
       def rd(p: String) = ParquetRead.parquet(spark, s"$work/$p")
-      Similarity.cellAssignments(emb)
-        .hint("rebalance")
-        .write.mode("overwrite").parquet(s"$work/cells")
-      Similarity.ivfCentroidsDf(emb)
-        .write.mode("overwrite").parquet(s"$work/ivf_centroids")
-      Similarity.cellsFromCentroids(rd("ivf_centroids"), emb)
-        .hint("rebalance")
-        .write.mode("overwrite").parquet(s"$work/ivf_cells")
-      Similarity.pqCodebookDf(emb)
-        .write.mode("overwrite").parquet(s"$work/pq_codebook")
-      Similarity.pqEncode(emb)
-        .hint("rebalance")
-        .write.mode("overwrite").parquet(s"$work/pq_codes")
-      Similarity.sqStats(emb)
-        .write.mode("overwrite").parquet(s"$work/sq_stats")
-      Similarity.sqEncodeFrom(rd("sq_stats"), emb)
-        .hint("rebalance")
-        .write.mode("overwrite").parquet(s"$work/sq_codes")
-      val (lm, consts) = TextAnalysis.nbModel(t.documents,
-        posSources = Seq("src0", "src1", "src2"),
-        negSources = Seq("src3", "src4", "src5"))
-      lm.write.mode("overwrite").parquet(s"$work/nb_lm")
-      consts.write.mode("overwrite").parquet(s"$work/nb_consts")
+      val write = writeTo(work) _
+      val Seq(ivf, pq, sq) = vectorIndex(emb, 1.0, rd, write, "")
+      Overlap.inParallel(
+        () => {
+          ivf()
+          write(Similarity.cellAssignmentsFrom(rd("ivf_centroids"), emb),
+            "cells")
+        },
+        pq, sq,
+        () => nbModelStores(t.documents, rd, write, ""))
     }
 
   private def annRead(spark: SparkSession, sfDir: String,
@@ -463,13 +552,11 @@ object ComposedArtifacts {
     obtain(spark, "lr", sfDir, Seq("documents.parquet")) { work =>
       import graft.operators.Logistic
       val docs = Tables(spark, sfDir).documents
-      val pos = Seq("src0", "src1", "src2")
-      val neg = Seq("src3", "src4", "src5")
       def rd(p: String) = ParquetRead.parquet(spark, s"$work/$p")
-      Logistic.features(docs, pos, neg)
+      Logistic.features(docs, PosSources, NegSources)
         .hint("rebalance")
         .write.mode("overwrite").parquet(s"$work/lr_feats")
-      Logistic.featuresExtended(docs, pos, neg)
+      Logistic.featuresExtended(docs, PosSources, NegSources)
         .hint("rebalance")
         .write.mode("overwrite").parquet(s"$work/lrx_feats")
       Logistic.weightsDfFor(rd("lr_feats"), Logistic.FeatureNames)
@@ -523,17 +610,9 @@ object ComposedArtifacts {
     */
   private def suffixDir(spark: SparkSession, sfDir: String): String =
     obtain(spark, "suffix", sfDir, Seq("documents.parquet")) { work =>
-      import graft.operators.SuffixArray
       val docs = Tables(spark, sfDir).documents
       def rd(p: String) = ParquetRead.parquet(spark, s"$work/$p")
-      def write(df: DataFrame, name: String): Unit =
-        df.hint("rebalance").write.mode("overwrite").parquet(s"$work/$name")
-      def storeThenPairs(corpus: DataFrame, name: String): () => Unit =
-        () => {
-          write(SuffixArray.spanGroupStore(corpus), s"${name}_store")
-          write(SuffixArray.repeatedSpansWithKey(rd(s"${name}_store"),
-            corpus), s"${name}_pairs")
-        }
+      val write = writeTo(work) _
       val baseDocs = docs.filter(Curation.hashBucket(col("doc_id"), 10) =!= 3)
       // the q248 hot-group gate's "before" state (the persisted
       // warehouse a delivery folds into, like sg_base_* for q241):
@@ -544,9 +623,9 @@ object ComposedArtifacts {
       // the chains share no data: overlapped, each one sequential
       Overlap.inParallel(
         () => write(SuffixArray.suffixArrayWithLcp(docs), "sa_lcp"),
-        storeThenPairs(baseDocs, "sg_base"),
-        storeThenPairs(docs, "sg_full"),
-        storeThenPairs(hotBase, "hot_base"),
+        () => spanGroups(baseDocs, rd, write, "sg_base"),
+        () => spanGroups(docs, rd, write, "sg_full"),
+        () => spanGroups(hotBase, rd, write, "hot_base"),
         () => (1 to 4).foreach { k =>
           write(SuffixArray.spanGroupStore(docs, k), s"win_k$k")
         })

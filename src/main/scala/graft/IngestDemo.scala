@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
+import graft.ComposedArtifacts.{NegSources, PosSources, lmServe, nbModelStores, nbServe, spanGroups, vectorIndex}
 import graft.Overlap.inParallel
 import graft.engine.ParquetRead
 import graft.operators.{Curation, Dedup, NgramLm, Similarity, SubstringDedup, SuffixArray, TextAnalysis}
@@ -86,16 +87,23 @@ import graft.sources.Tables
   * persisted artifacts exactly as a scheduled production job would,
   * so the measured marginal cost includes the artifact IO.
   *
+  * The model stages call the store-chain definitions the warehouse
+  * family builds also call ([[ComposedArtifacts]]): `boot_ann_index`,
+  * `cal_ann_model` and `tdn_ann_model` run [[ComposedArtifacts
+  * .vectorIndex]] with suffix "", "_v1" and "_v2"; `boot_nb_model`
+  * runs [[ComposedArtifacts.nbModelStores]]; `boot_sg_store` runs
+  * [[ComposedArtifacts.spanGroups]]; and every counts → serve step
+  * (`boot_lm_model`, `inc_fold_lm`/`_nb`, `tdn_lm`/`_nb`) ends in
+  * [[ComposedArtifacts.lmServe]] or [[ComposedArtifacts.nbServe]].
+  * The stages pass their own plain writer; the warehouse passes its
+  * rebalancing one.
+  *
   * Bench runs [[stagesOver]] and [[takedownStagesOver]] (not the
   * checks) over [[fixtureSplit]] at the bench SF and reports the
   * marginal delivery cost under "incremental"; `IngestSpec` runs the
   * stages and every check.
   */
 object IngestDemo {
-  /** The fixture's NB supervision labels. */
-  private val Pos = Seq("src0", "src1", "src2")
-  private val Neg = Seq("src3", "src4", "src5")
-
   /** Near-dup drop threshold on the estimated Jaccard (matches the
     * q26/q51 family's 0.7).
     */
@@ -155,11 +163,13 @@ object IngestDemo {
   }
 
   /** The work-dir helpers every stage and check body shares: stages
-    * hand off through parquet under `work`, and `delivery` is the
-    * frame the admitted ids resolve against.
+    * hand off through parquet under `work`, `delivery` is the frame
+    * the admitted ids resolve against, and the corpus and vector sets
+    * of each generation are spelled once here.
     */
   private final class Work(spark: SparkSession, work: String,
-      delivery: DataFrame) {
+      base: DataFrame, delivery: DataFrame, embBase: DataFrame,
+      embDelivery: DataFrame) {
     def rd(p: String): DataFrame = ParquetRead.parquet(spark, s"$work/$p")
     // the unit store round-trips through a (split, sub)-PARTITIONED
     // parquet layout: partition columns come back via type inference
@@ -179,6 +189,22 @@ object IngestDemo {
     def receipts(suffix: String): DataFrame =
       Curation.artifactManifest(ReceiptedArtifacts.map(n =>
         n -> rd(n + suffix)))
+    def minusRemoved(df: DataFrame): DataFrame =
+      df.join(rd("removed_docs").select("doc_id"), Seq("doc_id"),
+        "left_anti")
+    /** Corpus v1 (base ∪ admitted delivery docs) and v2 (v1 minus the
+      * takedown's removal slice).
+      */
+    def v1: DataFrame = base.unionByName(docsOf(rd("admitted")))
+    def v2: DataFrame = minusRemoved(v1)
+    /** The gate-admitted delivery vectors, the v1 vector corpus (base
+      * ∪ admitted) and the v2 one (v1 minus the removed vectors).
+      */
+    def admittedVecs: DataFrame =
+      embDelivery.join(rd("admitted_vecs"), Seq("vec_id"))
+    def v1Vecs: DataFrame = embBase.unionByName(admittedVecs)
+    def v2Vecs: DataFrame =
+      v1Vecs.join(rd("removed_vecs"), Seq("vec_id"), "left_anti")
   }
 
   /** MULTISET equality via two-sided exceptAll — fully distributed (no
@@ -187,7 +213,7 @@ object IngestDemo {
     * another must NOT pass. The failure names the store `label` and
     * says how it `diverged`.
     */
-  private def sameRows(diverged: String)(label: String, got: DataFrame,
+  private[graft] def sameRows(diverged: String)(label: String, got: DataFrame,
       want: DataFrame): Unit = {
     val extra = got.exceptAll(want).count()
     val missing = want.exceptAll(got).count()
@@ -244,7 +270,7 @@ object IngestDemo {
   def stagesOver(spark: SparkSession, base: DataFrame, delivery: DataFrame,
       embBase: DataFrame, embDelivery: DataFrame,
       work: String): Seq[(String, () => Unit)] = {
-    val w = new Work(spark, work, delivery)
+    val w = new Work(spark, work, base, delivery, embBase, embDelivery)
     import w._
     Seq(
       "boot_fp_store" -> (() =>
@@ -262,26 +288,18 @@ object IngestDemo {
         // the count table is the incremental state; the context
         // table + constants re-derive from it with vocab-sized work
         wr(NgramLm.bigramCounts(
-          base.filter(col("source").isin(Pos: _*))), "lm_bi")
-        val (uni, consts) = NgramLm.lmFromCounts(rd("lm_bi"))
-        wr(uni, "lm_uni"); wr(consts, "lm_consts")
+          base.filter(col("source").isin(PosSources: _*))), "lm_bi")
+        lmServe(rd, wr, "")
       },
       "boot_span_index" -> (() =>
         wr(SubstringDedup.windowIndex(base), "span_index")),
-      "boot_sg_store" -> { () =>
+      "boot_sg_store" -> (() =>
         // span-group store (doc-local rows) + the maintained
         // maximal-repeat pair table it powers — built once per
         // corpus version, folded/retracted at touched-group cost
-        wr(SuffixArray.spanGroupStore(base), "sg_store")
-        wr(SuffixArray.repeatedSpansWithKey(rd("sg_store"), base),
-          "sg_pairs")
-      },
-      "boot_nb_model" -> { () =>
-        val (vt, dc) = TextAnalysis.nbCounts(base, Pos, Neg)
-        wr(vt, "nb_vt"); wr(dc, "nb_dc")
-        val (lm, consts) = TextAnalysis.nbLmFromCounts(rd("nb_vt"), rd("nb_dc"))
-        wr(lm, "nb_lm"); wr(consts, "nb_consts")
-      },
+        spanGroups(base, rd, wr, "sg")),
+      "boot_nb_model" -> (() =>
+        nbModelStores(base, rd, wr, "")),
       "boot_profiles" -> { () =>
         // per-doc TOKEN PROFILES + the narrow (doc_id, source)
         // projection — tokenization is paid HERE, once per doc at
@@ -316,34 +334,12 @@ object IngestDemo {
           "sub_manifest")
         wr(Curation.manifestFromSub(rd("sub_manifest")), "manifest_v0")
       },
-      "boot_ann_index" -> { () =>
+      "boot_ann_index" -> (() =>
         // the vector side of the warehouse: IVF centroid model +
-        // flat cell assignment, PQ codebook + code table — FAISS's
-        // write-index, relationally. Models train once per corpus
-        // version; the stores are row-local derivations under them,
-        // which is what makes their fold/retract exact. The three
-        // chains are independent — they overlap via [[Overlap.inParallel]]
-        inParallel(
-          () => {
-            wr(Similarity.ivfCentroidsDf(embBase), "ivf_centroids")
-            wr(Similarity.cellsFromCentroids(rd("ivf_centroids"), embBase),
-              "ivf_cells")
-          },
-          () => {
-            wr(Similarity.pqCodebookDf(embBase), "pq_codebook")
-            wr(Similarity.pqEncodeFrom(rd("pq_codebook"), embBase),
-              "pq_codes")
-          },
-          () => {
-            // SQ8: the extrema model trains in ONE dims-bounded
-            // aggregate; codes are row-local under it (same
-            // fold/retract exactness argument as the PQ pair,
-            // cheaper on both ends)
-            wr(Similarity.sqStats(embBase), "sq_stats")
-            wr(Similarity.sqEncodeFrom(rd("sq_stats"), embBase),
-              "sq_codes")
-          })
-      },
+        // flat cell assignment, PQ codebook + code table, SQ8 extrema
+        // + code table — FAISS's write-index, relationally, trained
+        // once per corpus version on the full base
+        inParallel(vectorIndex(embBase, 1.0, rd, wr, ""): _*)),
       "boot_artifact_receipts" -> (() =>
         wr(receipts(""), "artifact_manifest_v0")),
 
@@ -476,9 +472,8 @@ object IngestDemo {
         // state by keyed merge; the serve pair re-derives vocab-sized
         wr(NgramLm.bigramCountsUpdate(rd("lm_bi"),
           docsOf(rd("admitted"))
-            .filter(col("source").isin(Pos: _*))), "lm_bi_v1")
-        val (uni1, consts1) = NgramLm.lmFromCounts(rd("lm_bi_v1"))
-        wr(uni1, "lm_uni_v1"); wr(consts1, "lm_consts_v1")
+            .filter(col("source").isin(PosSources: _*))), "lm_bi_v1")
+        lmServe(rd, wr, "_v1")
       },
       "inc_fold_span_index" -> (() =>
         wr(SubstringDedup.updatedWindowIndex(rd("span_index"),
@@ -497,11 +492,9 @@ object IngestDemo {
       },
       "inc_fold_nb" -> { () =>
         val (vt1, dc1) = TextAnalysis.nbCountsUpdate(rd("nb_vt"),
-          rd("nb_dc"), docsOf(rd("admitted")), Pos, Neg)
+          rd("nb_dc"), docsOf(rd("admitted")), PosSources, NegSources)
         wr(vt1, "nb_vt_v1"); wr(dc1, "nb_dc_v1")
-        val (lm1, consts1) =
-          TextAnalysis.nbLmFromCounts(rd("nb_vt_v1"), rd("nb_dc_v1"))
-        wr(lm1, "nb_lm_v1"); wr(consts1, "nb_consts_v1")
+        nbServe(rd, wr, "_v1")
       },
       "inc_fold_profiles" -> { () =>
         // the admitted docs' profiles append (doc-keyed, row-local —
@@ -537,15 +530,14 @@ object IngestDemo {
         // from-scratch pass under the same model (checksOver). The
         // serve pair between recals is (v0 model, folded stores) —
         // always consistent
-        val admitted = embDelivery.join(rd("admitted_vecs"), Seq("vec_id"))
         wr(rd("ivf_cells").unionByName(
-          Similarity.cellsFromCentroids(rd("ivf_centroids"), admitted)),
+          Similarity.cellsFromCentroids(rd("ivf_centroids"), admittedVecs)),
           "ivf_cells_fold")
         wr(rd("pq_codes").unionByName(
-          Similarity.pqEncodeFrom(rd("pq_codebook"), admitted)),
+          Similarity.pqEncodeFrom(rd("pq_codebook"), admittedVecs)),
           "pq_codes_fold")
         wr(rd("sq_codes").unionByName(
-          Similarity.sqEncodeFrom(rd("sq_stats"), admitted)),
+          Similarity.sqEncodeFrom(rd("sq_stats"), admittedVecs)),
           "sq_codes_fold")
       },
       "cal_gate_thr" -> { () =>
@@ -572,28 +564,8 @@ object IngestDemo {
         // a CONSISTENT (model, store) pair. Between recals, serving
         // rides the v0 model + folded stores above
         // Lloyd passes on the md5 half-sample ([[CalTrainFraction]]);
-        // assignment and encoding below still scan every v1 vector
-        val embV1 = embBase.unionByName(
-          embDelivery.join(rd("admitted_vecs"), Seq("vec_id")))
-        // independent IVF/PQ/SQ chains — overlapped (see inParallel)
-        inParallel(
-          () => {
-            wr(Similarity.ivfCentroidsDf(embV1,
-              trainFraction = CalTrainFraction), "ivf_centroids_v1")
-            wr(Similarity.cellsFromCentroids(rd("ivf_centroids_v1"),
-              embV1), "ivf_cells_v1")
-          },
-          () => {
-            wr(Similarity.pqCodebookDf(embV1,
-              trainFraction = CalTrainFraction), "pq_codebook_v1")
-            wr(Similarity.pqEncodeFrom(rd("pq_codebook_v1"), embV1),
-              "pq_codes_v1")
-          },
-          () => {
-            wr(Similarity.sqStats(embV1), "sq_stats_v1")
-            wr(Similarity.sqEncodeFrom(rd("sq_stats_v1"), embV1),
-              "sq_codes_v1")
-          })
+        // assignment and encoding still scan every v1 vector
+        inParallel(vectorIndex(v1Vecs, CalTrainFraction, rd, wr, "_v1"): _*)
       },
       "cal_artifact_receipts" -> { () =>
         // receipts over the REFRESHED artifact stores + the diff:
@@ -631,17 +603,13 @@ object IngestDemo {
   def takedownStagesOver(spark: SparkSession, base: DataFrame,
       delivery: DataFrame, embBase: DataFrame, embDelivery: DataFrame,
       work: String): Seq[(String, () => Unit)] = {
-    val w = new Work(spark, work, delivery)
+    val w = new Work(spark, work, base, delivery, embBase, embDelivery)
     import w._
-    def v1Docs: DataFrame = base.unionByName(docsOf(rd("admitted")))
-    def minusRemoved(df: DataFrame): DataFrame =
-      df.join(rd("removed_docs").select("doc_id"), Seq("doc_id"),
-        "left_anti")
     Seq(
       "tdn_removal_set" -> (() =>
         // an md5 bucket of corpus v1 (~1/7th), not a doc_id range —
         // takedowns arrive by content/ownership, not by ingest order
-        wr(v1Docs.filter(Curation.hashBucket(col("doc_id"), 7) === 3),
+        wr(v1.filter(Curation.hashBucket(col("doc_id"), 7) === 3),
           "removed_docs")),
       "tdn_fp_store" -> (() =>
         wr(minusRemoved(rd("fp_store_v1")), "fp_store_v2")),
@@ -667,29 +635,25 @@ object IngestDemo {
         inParallel(
           () => wr(store2, "sg_store_v2"),
           () => wr(SuffixArray.repeatedSpansRetract(rd("sg_pairs_v1"),
-            store2, rd("removed_docs"),
-            minusRemoved(v1Docs)), "sg_pairs_v2"))
+            store2, rd("removed_docs"), v2), "sg_pairs_v2"))
       },
       "tdn_lm" -> { () =>
         // removed trusted-source docs retract from the bigram count
         // state (signed keyed merge, corruption guards); a compliant
         // serve model re-derives from the retracted counts
         wr(NgramLm.bigramCountsRetract(rd("lm_bi_v1"),
-          rd("removed_docs").filter(col("source").isin(Pos: _*))),
+          rd("removed_docs").filter(col("source").isin(PosSources: _*))),
           "lm_bi_v2")
-        val (uni2, consts2) = NgramLm.lmFromCounts(rd("lm_bi_v2"))
-        wr(uni2, "lm_uni_v2"); wr(consts2, "lm_consts_v2")
+        lmServe(rd, wr, "_v2")
       },
       "tdn_span_index" -> (() =>
         wr(SubstringDedup.retractedWindowIndex(rd("span_index_v1"),
           rd("removed_docs")), "span_index_v2")),
       "tdn_nb" -> { () =>
         val (vt2, dc2) = TextAnalysis.nbCountsRetract(rd("nb_vt_v1"),
-          rd("nb_dc_v1"), rd("removed_docs"), Pos, Neg)
+          rd("nb_dc_v1"), rd("removed_docs"), PosSources, NegSources)
         wr(vt2, "nb_vt_v2"); wr(dc2, "nb_dc_v2")
-        val (lm2, consts2) =
-          TextAnalysis.nbLmFromCounts(rd("nb_vt_v2"), rd("nb_dc_v2"))
-        wr(lm2, "nb_lm_v2"); wr(consts2, "nb_consts_v2")
+        nbServe(rd, wr, "_v2")
       },
       "tdn_manifest" -> { () =>
         // the manifest chain and the surviving-units rewrite share
@@ -737,9 +701,7 @@ object IngestDemo {
         // warehouse resolves removed doc_ids to their vectors — the
         // fixture tables are independent, so the slice is drawn
         // directly)
-        wr(embBase.unionByName(
-            embDelivery.join(rd("admitted_vecs"), Seq("vec_id")))
-          .filter(Curation.hashBucket(col("vec_id"), 7) === 3)
+        wr(v1Vecs.filter(Curation.hashBucket(col("vec_id"), 7) === 3)
           .select("vec_id"), "removed_vecs")),
       "tdn_ann_stores" -> { () =>
         // IMMEDIATE right-to-be-forgotten on the id-keyed vector
@@ -764,30 +726,9 @@ object IngestDemo {
         // what a takedown must not leave behind) — then one row-local
         // scan publishes the consistent v2 (model, store) pair
         // sampled Lloyd passes ([[CalTrainFraction]]) over the
-        // SURVIVORS only — the md5 sample is drawn from `surv`, so no
-        // removed vector influences the v2 model even statistically
-        val surv = embBase.unionByName(
-            embDelivery.join(rd("admitted_vecs"), Seq("vec_id")))
-          .join(rd("removed_vecs"), Seq("vec_id"), "left_anti")
-        // independent IVF/PQ/SQ chains — overlapped (see inParallel)
-        inParallel(
-          () => {
-            wr(Similarity.ivfCentroidsDf(surv,
-              trainFraction = CalTrainFraction), "ivf_centroids_v2")
-            wr(Similarity.cellsFromCentroids(rd("ivf_centroids_v2"),
-              surv), "ivf_cells_v2")
-          },
-          () => {
-            wr(Similarity.pqCodebookDf(surv,
-              trainFraction = CalTrainFraction), "pq_codebook_v2")
-            wr(Similarity.pqEncodeFrom(rd("pq_codebook_v2"), surv),
-              "pq_codes_v2")
-          },
-          () => {
-            wr(Similarity.sqStats(surv), "sq_stats_v2")
-            wr(Similarity.sqEncodeFrom(rd("sq_stats_v2"), surv),
-              "sq_codes_v2")
-          })
+        // SURVIVORS only — the md5 sample is drawn from `v2Vecs`, so
+        // no removed vector influences the v2 model even statistically
+        inParallel(vectorIndex(v2Vecs, CalTrainFraction, rd, wr, "_v2"): _*)
       },
       "tdn_receipts" -> { () =>
         wr(receipts("_v2"), "artifact_manifest_v2")
@@ -803,11 +744,9 @@ object IngestDemo {
   def takedownChecksOver(spark: SparkSession, base: DataFrame,
       delivery: DataFrame, embBase: DataFrame, embDelivery: DataFrame,
       work: String): Seq[(String, () => Unit)] = {
-    val w = new Work(spark, work, delivery)
+    val w = new Work(spark, work, base, delivery, embBase, embDelivery)
     import w._
     val same = sameRows("takedown diverged from rebuild") _
-    def v2: DataFrame = base.unionByName(docsOf(rd("admitted")))
-      .join(rd("removed_docs").select("doc_id"), Seq("doc_id"), "left_anti")
     Seq(
       "takedown removal set non-empty" -> (() =>
         require(rd("removed_docs").count() > 0,
@@ -824,7 +763,7 @@ object IngestDemo {
         same("bucket_store_v2", rd("bucket_store_v2"),
           Dedup.bucketStats(Dedup.minhashSignatures(v2)))),
       "lm counts takedown == re-train" -> { () =>
-        val refV2 = v2.filter(col("source").isin(Pos: _*))
+        val refV2 = v2.filter(col("source").isin(PosSources: _*))
           .localCheckpoint(true)
         same("lm_bi_v2", rd("lm_bi_v2"), NgramLm.bigramCounts(refV2))
         val (uni, consts) = NgramLm.lmFromCounts(
@@ -843,18 +782,18 @@ object IngestDemo {
             SuffixArray.spanGroupStore(v2), v2))
       },
       "nb counts takedown == re-train" -> { () =>
-        val (vt, dc) = TextAnalysis.nbCounts(v2, Pos, Neg)
+        val (vt, dc) = TextAnalysis.nbCounts(v2, PosSources, NegSources)
         same("nb_vt_v2", rd("nb_vt_v2"), vt)
         same("nb_dc_v2", rd("nb_dc_v2"), dc)
       },
       "nb serve model takedown == re-train" -> { () =>
-        val (lm, consts) = TextAnalysis.nbModel(v2, Pos, Neg)
+        val (lm, consts) = TextAnalysis.nbModel(v2, PosSources, NegSources)
         same("nb_lm_v2", rd("nb_lm_v2"), lm)
         same("nb_consts_v2", rd("nb_consts_v2"), consts)
       },
       "gate thresholds takedown == from-scratch calibration" -> (() =>
         same("gate_thr_v2", rd("gate_thr_v2"),
-          Curation.gateThresholds(v2, Pos, Neg))),
+          Curation.gateThresholds(v2, PosSources, NegSources))),
       "manifest takedown == from-scratch hierarchical" -> { () =>
         same("manifest_v2", rd("manifest_v2"),
           Curation.shardManifest(withSplit(v2), subShards = SubShards))
@@ -900,25 +839,19 @@ object IngestDemo {
         // bit-identical to assigning/encoding the survivors from
         // scratch under that SAME model — the row-locality property
         // that makes the vector-store takedown exact
-        val surv = embBase.unionByName(
-            embDelivery.join(rd("admitted_vecs"), Seq("vec_id")))
-          .join(rd("removed_vecs"), Seq("vec_id"), "left_anti")
         same("ivf_cells_tdn", rd("ivf_cells_tdn"),
-          Similarity.cellsFromCentroids(rd("ivf_centroids_v1"), surv))
+          Similarity.cellsFromCentroids(rd("ivf_centroids_v1"), v2Vecs))
         same("pq_codes_tdn", rd("pq_codes_tdn"),
-          Similarity.pqEncodeFrom(rd("pq_codebook_v1"), surv))
+          Similarity.pqEncodeFrom(rd("pq_codebook_v1"), v2Vecs))
         same("sq_codes_tdn", rd("sq_codes_tdn"),
-          Similarity.sqEncodeFrom(rd("sq_stats_v1"), surv))
+          Similarity.sqEncodeFrom(rd("sq_stats_v1"), v2Vecs))
       },
       "ann v2 serve == from-scratch index over survivors" -> { () =>
         // the retrained v2 (model, store) pair must SERVE exactly what
         // a from-scratch index build over the survivors serves — the
         // composed==standalone discipline at the takedown boundary
         // (non-vacuous: the persisted pair round-trips parquet)
-        val surv = embBase.unionByName(
-            embDelivery.join(rd("admitted_vecs"), Seq("vec_id")))
-          .join(rd("removed_vecs"), Seq("vec_id"), "left_anti")
-          .localCheckpoint(true)
+        val surv = v2Vecs.localCheckpoint(true)
         same("ivf_v2_serve",
           Similarity.ivfTopKFrom(rd("ivf_centroids_v2"), rd("ivf_cells_v2"),
             surv),
@@ -960,10 +893,9 @@ object IngestDemo {
   def checksOver(spark: SparkSession, base: DataFrame, delivery: DataFrame,
       embBase: DataFrame, embDelivery: DataFrame,
       work: String): Seq[(String, () => Unit)] = {
-    val w = new Work(spark, work, delivery)
+    val w = new Work(spark, work, base, delivery, embBase, embDelivery)
     import w._
     val same = sameRows("fold diverged from from-scratch") _
-    def v1: DataFrame = base.unionByName(docsOf(rd("admitted")))
     Seq(
       "fp store fold == from-scratch" -> (() =>
         same("fp_store_v1", rd("fp_store_v1"),
@@ -977,7 +909,7 @@ object IngestDemo {
         same("bucket_store_v1", rd("bucket_store_v1"),
           Dedup.bucketStats(Dedup.minhashSignatures(v1)))),
       "lm counts fold == from-scratch" -> { () =>
-        val refV1 = v1.filter(col("source").isin(Pos: _*))
+        val refV1 = v1.filter(col("source").isin(PosSources: _*))
           .localCheckpoint(true)
         same("lm_bi_v1", rd("lm_bi_v1"), NgramLm.bigramCounts(refV1))
         val (uni, consts) = NgramLm.lmFromCounts(
@@ -990,7 +922,7 @@ object IngestDemo {
         // docs exactly as a from-scratch train+score over the v0
         // reference slice would
         same("delivery_lm_scores", rd("delivery_lm_scores"),
-          NgramLm.lmScore(base.filter(col("source").isin(Pos: _*)),
+          NgramLm.lmScore(base.filter(col("source").isin(PosSources: _*)),
             docsOf(rd("admitted"))))),
       "span index fold == from-scratch" -> (() =>
         same("span_index_v1", rd("span_index_v1"),
@@ -1003,12 +935,12 @@ object IngestDemo {
             SuffixArray.spanGroupStore(v1), v1))
       },
       "nb counts fold == from-scratch" -> { () =>
-        val (vt, dc) = TextAnalysis.nbCounts(v1, Pos, Neg)
+        val (vt, dc) = TextAnalysis.nbCounts(v1, PosSources, NegSources)
         same("nb_vt_v1", rd("nb_vt_v1"), vt)
         same("nb_dc_v1", rd("nb_dc_v1"), dc)
       },
       "nb serve model fold == from-scratch" -> { () =>
-        val (lm, consts) = TextAnalysis.nbModel(v1, Pos, Neg)
+        val (lm, consts) = TextAnalysis.nbModel(v1, PosSources, NegSources)
         same("nb_lm_v1", rd("nb_lm_v1"), lm)
         same("nb_consts_v1", rd("nb_consts_v1"), consts)
       },
@@ -1018,7 +950,7 @@ object IngestDemo {
         // gateThresholds retrains NB internally, so this transitively
         // re-proves the model fold through the gate's own artifact
         same("gate_thr_v1", rd("gate_thr_v1"),
-          Curation.gateThresholds(v1, Pos, Neg))),
+          Curation.gateThresholds(v1, PosSources, NegSources))),
       "served gate (v1 artifacts) == windowed composite gate over v1" -> (() =>
         // the CurationSpec served==windowed equality at the DEMO
         // boundary: the refreshed artifacts, served window-free over
@@ -1026,7 +958,7 @@ object IngestDemo {
         same("served_gate_v1",
           Curation.compositeGateFrom(rd("gate_thr_v1"), rd("nb_lm_v1"),
             rd("nb_consts_v1"), v1),
-          Curation.compositeGate(v1, Pos, Neg))),
+          Curation.compositeGate(v1, PosSources, NegSources))),
       "incremental span stats == from-scratch" -> (() =>
         // the gate scored admit_near docs against the v0 index; the
         // batch twin is dupSpanStats over v0 ∪ that same batch,
@@ -1107,23 +1039,19 @@ object IngestDemo {
         // row-local assignment/encoding commute with row subsets:
         // store ∪ admitted-derived rows must equal one from-scratch
         // pass over corpus v1 under the SAME (v0) model, bit for bit
-        val embV1 = embBase.unionByName(
-          embDelivery.join(rd("admitted_vecs"), Seq("vec_id")))
         same("ivf_cells_fold", rd("ivf_cells_fold"),
-          Similarity.cellsFromCentroids(rd("ivf_centroids"), embV1))
+          Similarity.cellsFromCentroids(rd("ivf_centroids"), v1Vecs))
         same("pq_codes_fold", rd("pq_codes_fold"),
-          Similarity.pqEncodeFrom(rd("pq_codebook"), embV1))
+          Similarity.pqEncodeFrom(rd("pq_codebook"), v1Vecs))
         same("sq_codes_fold", rd("sq_codes_fold"),
-          Similarity.sqEncodeFrom(rd("sq_stats"), embV1))
+          Similarity.sqEncodeFrom(rd("sq_stats"), v1Vecs))
       },
       "ann v1 serve == from-scratch index over v1" -> { () =>
         // the recalibrated (model, store) pair, read back off parquet,
         // must serve exactly what a from-scratch index build over
         // corpus v1 serves — the q34/q118 served==retrained
         // equality at the ingest boundary
-        val embV1 = embBase.unionByName(
-            embDelivery.join(rd("admitted_vecs"), Seq("vec_id")))
-          .localCheckpoint(true)
+        val embV1 = v1Vecs.localCheckpoint(true)
         // from-scratch twins train at the SAME CalTrainFraction the
         // recal stage published with — the equality gates the
         // (model, store) pair consistency, not the fraction choice

@@ -6,8 +6,9 @@ import org.apache.spark.sql.SparkSession
   * task slots and as many shuffle partitions, UTC session time,
   * nanosecond parquet timestamps read as longs (normalized in
   * [[graft.sources.Tables]]), no UI, WARN logging. `warehouseDir`
-  * puts the catalog's managed tables (bucketed scratch) outside the
-  * working dir. AQE is Spark's default.
+  * puts the session catalog's directory outside the working dir:
+  * Spark creates it there once anything reads the catalog (the test
+  * suite's `spark.catalog.listTables()` does). AQE is Spark's default.
   */
 object LocalSession {
   def apply(appName: String, cpus: Int,

@@ -7,7 +7,8 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.engine.{Bucketing, ParquetRead}
+import graft.ComposedArtifacts.{NegSources, PosSources}
+import graft.engine.ParquetRead
 import graft.operators.{Curation, Dedup, NgramLm, SkewJoin, SubstringDedup, SuffixArray, TextAnalysis}
 import graft.sources.Tables
 
@@ -28,8 +29,7 @@ import graft.sources.Tables
   *    q207, q241): a 10% delivery folded into a 90% state built
   *    outside the timed span, head to head with the rebuild (q186's
   *    rebuild is the `q27_ngram_jaccard` entry leg);
-  *  - the hot-group (`hot_span_*`) and bucketed-layout
-  *    (`sg_carried_*`) head-to-heads;
+  *  - the hot-group head-to-head (`hot_span_*`);
   *  - the adversarial-skew legs (`skew_*`);
   *  - `ingest_e2e`: the IngestDemo stages over a ×K base and a
   *    fixed-size delivery, one row per phase.
@@ -90,7 +90,6 @@ object ScaleRehearsal {
     "q207_fold_labels", "q207_rebuild_labels",
     "q241_fold_delivery", "q241_suffix_rebuild",
     "hot_span_window", "hot_span_refine",
-    "sg_carried_plain", "sg_carried_bucketed",
     "skew_sig_store", "skew_span_store", "skew_star_probe",
     "skew_agg_plain", "skew_agg_salted", "skew_key_profile",
     "ingest_e2e")
@@ -159,51 +158,30 @@ object ScaleRehearsal {
     */
   object Shared extends Enumeration {
     val SkewDocs, SpanIdx, NbIdx, ManifestIdx, JacIdx, LmIdx, BktIdx,
-      CompIdx, SgIdx, HotDocs, SgDisk = Value
+      CompIdx, SgIdx, HotDocs = Value
   }
   type Shared = Shared.Value
   import Shared._
 
-  /** One rehearsed leg: `fn` builds the frame whose run is timed;
-    * `noBroadcast` runs it under a disabled broadcast threshold.
-    */
-  final case class Leg(name: String, uses: Seq[Shared] = Nil,
-      noBroadcast: Boolean = false)(val fn: () => DataFrame)
+  /** One rehearsed leg: `fn` builds the frame whose run is timed. */
+  final case class Leg(name: String, uses: Seq[Shared] = Nil)(
+      val fn: () => DataFrame)
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factors = args.lift(1).getOrElse("1,10").split(",").map(_.trim.toInt)
     val only: Option[Seq[String]] = args.lift(2).map(_.split(',').toSeq)
-    // bucketed-table scratch for the sg_carried_* legs — never the
-    // repo working dir
-    val warehouse = Files.createTempDirectory("graft-rehearsal-wh")
     val spark = LocalSession("graft-scale-rehearsal",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, Some(warehouse.toString))
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     val failed =
       try rehearse(spark, sfDir, factors.toSeq, only)
-      finally { spark.stop(); FsUtil.rmTree(warehouse.toFile) }
+      finally spark.stop()
     if (failed.nonEmpty) {
       println(failed.map(Verify.jsonString).mkString(
         s"""{"failed_n":${failed.size},"failed":[""", ",", "]}"))
       sys.exit(1)
     }
   }
-
-  /** Runs `body` with broadcast joins off when `off` — the at-scale
-    * join regime, where the touched set outgrows a broadcast — and
-    * restores the session's thresholds after.
-    */
-  private def broadcastOff(spark: SparkSession, off: Boolean)(body: => Unit): Unit =
-    if (!off) body
-    else {
-      val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
-        "spark.sql.adaptive.autoBroadcastJoinThreshold")
-      val saved = keys.map(k => k -> spark.conf.getOption(k))
-      keys.foreach(spark.conf.set(_, "-1"))
-      try body
-      finally saved.foreach { case (k, v) =>
-        v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-    }
 
   /** A row's fields up to the shuffle totals; the caller closes it. */
   private def rowHead(f: Int, query: String, rows: Long, docs: Long,
@@ -216,8 +194,8 @@ object ScaleRehearsal {
 
   /** Run the selected legs at each factor, printing one JSON row per
     * leg that ran, and return the job groups of the legs that threw.
-    * The scratch directory, checkpoints and catalog tables a factor
-    * builds are released before the next factor starts; its
+    * The scratch directory and checkpoints a factor builds are
+    * released before the next factor starts; its
     * `localCheckpoint` blocks go once their frames are garbage
     * (Spark's ContextCleaner), since `unpersist` cannot reach them.
     */
@@ -235,16 +213,10 @@ object ScaleRehearsal {
     // legs that threw: they print no row
     val failed = ArrayBuffer.empty[String]
     val t = Tables(spark, sfDir)
-    val nbPos = Seq("src0", "src1", "src2")
-    val nbNeg = Seq("src3", "src4", "src5")
 
     try for (f <- factors) {
-      // each scratch dir and table registers its release as it is
-      // built; the factor's finally runs them all
-      val releases = ArrayBuffer.empty[() => Unit]
+      val dir = Files.createTempDirectory(s"graft-rehearsal-x$f-").toString
       try {
-        val dir = Files.createTempDirectory(s"graft-rehearsal-x$f-").toString
-        releases += (() => FsUtil.rmTree(new java.io.File(dir)))
         def written(name: String, df: DataFrame): DataFrame = {
           df.write.parquet(s"$dir/$name.parquet")
           ParquetRead.parquet(spark, s"$dir/$name.parquet")
@@ -270,7 +242,7 @@ object ScaleRehearsal {
         // inside nbCounts) — the q161 fold leg probes a 10% delivery
         // against them
         lazy val nbIdx: (DataFrame, DataFrame) = TextAnalysis.nbCounts(
-          docs.filter(col("doc_id") % 10 =!= 0), nbPos, nbNeg)
+          docs.filter(col("doc_id") % 10 =!= 0), PosSources, NegSources)
         // the incremental manifest's persisted state. Shards are
         // APPEND-SHAPED (crawl chunk = doc_id div 500): a delivery
         // lands in its own shard, so the fold touches only the new
@@ -305,7 +277,7 @@ object ScaleRehearsal {
         // full-retrain leg is the baseline it must undercut
         lazy val lmIdx: DataFrame = NgramLm.bigramCounts(
           docs.filter(col("doc_id") % 10 =!= 0 &&
-            col("source").isin(nbPos: _*))).localCheckpoint(true)
+            col("source").isin(PosSources: _*))).localCheckpoint(true)
         // the LSH bucket-stats store over 90% of the corpus — the
         // q195 fold leg merges a 10% delivery's stats into it; the
         // re-agg leg is the per-delivery cost the persisted store
@@ -363,25 +335,6 @@ object ScaleRehearsal {
             .withColumn("n_chars", length(col("text")).cast("long")))
         lazy val hotStore: DataFrame =
           SuffixArray.spanGroupStore(hotDocs).localCheckpoint(true)
-        // DISK-backed span-group pair twins for the bucketed-layout
-        // head-to-head (round-18, verdict #6): the SAME pair table as
-        // plain parquet vs bucketed-by-fp (per-bucket sorted). Under a
-        // disabled broadcast threshold — the 100 TB regime where the
-        // touched-fp set outgrows a broadcast — the carried-leg
-        // anti-join must leave the bucketed store side UNSHUFFLED
-        // (exchange on the delivery side only)
-        lazy val sgDisk: (DataFrame, DataFrame, DataFrame) = {
-          val table = s"rehearsal_sg_pairs_x$f"
-          releases += (() => Bucketing.drop(spark, table))
-          val plain = written("sg_pairs_plain", sgIdx._2)
-          Bucketing.writeBucketed(sgIdx._2, table, "fp",
-            spark.sessionState.conf.numShufflePartitions)
-          val touched = SuffixArray
-            .spanGroupStore(docs.filter(col("doc_id") % 10 === 0))
-            .select(col("fp")).distinct().localCheckpoint(true)
-          (plain, Bucketing.table(spark, table), touched)
-        }
-
         val builds = Bench.Families.map(fam =>
           Leg(s"${fam}_build")(() => ComposedArtifacts.receipt(spark, dir, fam)))
         val entries = SparkEntry.queries.toSeq.sortBy(_._1).map {
@@ -401,9 +354,9 @@ object ScaleRehearsal {
           // re-tokenizing the whole corpus — q161's marginal-cost claim
           Leg("q161_fold_delivery", Seq(NbIdx))(
             () => TextAnalysis.nbCountsUpdate(nbIdx._1, nbIdx._2,
-              docs.filter(col("doc_id") % 10 === 0), nbPos, nbNeg)._1),
+              docs.filter(col("doc_id") % 10 === 0), PosSources, NegSources)._1),
           Leg("q161_full_retrain")(() =>
-            TextAnalysis.nbCounts(docs, nbPos, nbNeg)._1),
+            TextAnalysis.nbCounts(docs, PosSources, NegSources)._1),
           // incremental manifest fold vs full re-hash: the fold pays
           // the fixed-size delivery's text hashing + its own cells'
           // fold; the re-run fingerprints every document's TEXT again
@@ -439,9 +392,9 @@ object ScaleRehearsal {
           Leg("q199_fold_delivery", Seq(LmIdx))(() =>
             NgramLm.bigramCountsUpdate(lmIdx,
               docs.filter(col("doc_id") % 10 === 0 &&
-                col("source").isin(nbPos: _*)))),
+                col("source").isin(PosSources: _*)))),
           Leg("q199_lm_retrain")(() =>
-            NgramLm.bigramCounts(docs.filter(col("source").isin(nbPos: _*)))),
+            NgramLm.bigramCounts(docs.filter(col("source").isin(PosSources: _*)))),
           // cluster-label fold vs rebuild (q207): both legs read the
           // SAME precomputed pair table — the head-to-head isolates
           // the label maintenance (touched-component star recompute vs
@@ -471,14 +424,6 @@ object ScaleRehearsal {
               Int.MaxValue)),
           Leg("hot_span_refine", Seq(HotDocs))(() =>
             SuffixArray.repeatedSpansWithKey(hotStore, hotDocs, 5L, 256)),
-          // bucketed-layout head-to-head (round-18 verdict #6), both
-          // under a disabled broadcast threshold: the carried anti-join
-          // against the plain parquet store shuffles BOTH sides; the
-          // bucketed-by-fp store must not move
-          Leg("sg_carried_plain", Seq(SgIdx, SgDisk), noBroadcast = true)(() =>
-            sgDisk._1.join(sgDisk._3, Seq("fp"), "left_anti")),
-          Leg("sg_carried_bucketed", Seq(SgIdx, SgDisk), noBroadcast = true)(() =>
-            sgDisk._2.join(sgDisk._3, Seq("fp"), "left_anti")),
           // ---- adversarial-skew legs (round-14): power-law sources +
           // one 300·f-copy template (see inflateSkewedDocuments). The
           // claims under test: the sig/span STORE builds stay balanced
@@ -523,14 +468,13 @@ object ScaleRehearsal {
               compIdx._1.count() + compIdx._2.count() + compIdx._3.count()
             case SgIdx => sgIdx._1.count() + sgIdx._2.count()
             case HotDocs => hotDocs.count() + hotStore.count()
-            case SgDisk => sgDisk._1.count() + sgDisk._3.count()
           })
         }.toMap
         for (leg <- sel) {
           val g = s"x$f:${leg.name}"
           val rows = Observation()
-          val run = Bench.timed(spark, g)(broadcastOff(spark, leg.noBroadcast)(
-            Bench.noop(leg.fn().observe(rows, count(lit(1)).as("rows")))))
+          val run = Bench.timed(spark, g)(
+            Bench.noop(leg.fn().observe(rows, count(lit(1)).as("rows"))))
           if (run.sec.isLeft) failed += g
           run.sec.foreach { wall =>
             metrics.drain()
@@ -600,7 +544,7 @@ object ScaleRehearsal {
             }
           }
         }
-      } finally releases.reverseIterator.foreach(_())
+      } finally FsUtil.rmTree(new java.io.File(dir))
     } finally spark.sparkContext.removeSparkListener(metrics)
     failed.toSeq
   }

@@ -894,9 +894,8 @@ object Curation {
     * a release changed.
     *
     * Scale: the join carries only (doc_id, fp) — never the text — so
-    * the shuffle is key-width at any corpus size; with both snapshots
-    * bucketed by doc_id ([[graft.engine.Bucketing]]) it is
-    * exchange-free. Full outer is required: semi/anti formulations
+    * the shuffle is key-width at any corpus size. Full outer is
+    * required: semi/anti formulations
     * would need two extra passes to recover both exclusive sides.
     */
   def snapshotDiff(oldSnap: DataFrame, newSnap: DataFrame): DataFrame = {

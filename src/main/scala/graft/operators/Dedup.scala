@@ -1362,10 +1362,9 @@ object Dedup {
     *
     * Scale: the within-batch first-occurrence is a map-side-combined
     * `min`; the index probe is one equi-join on fp. In production the
-    * index is the accumulated fingerprint store — bucketed parquet on
-    * fp ([[graft.engine.Bucketing]]) makes the probe a co-located
-    * join with no index-side shuffle, and batch-vs-index size means
-    * AQE broadcasts the batch side when deliveries are small. The
+    * index is the accumulated fingerprint store, and batch-vs-index
+    * size means AQE broadcasts the batch side when deliveries are
+    * small. The
     * streaming twin of the same decision is
     * [[graft.streaming.DocStreams]]' dropDuplicates state.
     */

@@ -416,11 +416,23 @@ object Similarity {
     */
   def cellAssignments(embeddings: DataFrame, nCentroids: Int = 16,
       lloydIters: Int = 2, trainFraction: Double = 1.0,
-      coarse: Int = -1, coarseProbe: Int = 2): DataFrame = {
-    val quant = quantized(embeddings)
-    val centroids = trainCentroids(quant, nCentroids, lloydIters, trainFraction)
-    singleCell(quant, centroids, coarse, coarseProbe, nCentroids)
-  }
+      coarse: Int = -1, coarseProbe: Int = 2): DataFrame =
+    cellAssignmentsFrom(
+      ivfCentroidsDf(embeddings, nCentroids, lloydIters, trainFraction),
+      embeddings, nCentroids, coarse, coarseProbe)
+
+  /** [[cellAssignments]]' assignment pass under a PERSISTED centroid
+    * table ([[ivfCentroidsDf]] shape) — no training. `nCentroids` is
+    * the count the table was trained with; it sizes the auto coarse
+    * level exactly as in [[cellAssignments]]. Equal to
+    * [[cellAssignments]] when the centroids came from the same corpus
+    * and parameters.
+    */
+  def cellAssignmentsFrom(centroids: DataFrame, embeddings: DataFrame,
+      nCentroids: Int = 16, coarse: Int = -1,
+      coarseProbe: Int = 2): DataFrame =
+    singleCell(quantized(embeddings), centroids, coarse, coarseProbe,
+      nCentroids)
 
   /** [[semanticDupPairs]] over a PRECOMPUTED (vec_id, cell) table —
     * no training, no assignment; the embeddings are re-quantized

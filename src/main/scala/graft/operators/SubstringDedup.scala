@@ -294,12 +294,6 @@ object SubstringDedup {
     * span-level sibling. Keyed by rolling fingerprints (8-byte index
     * keys at corpus scale), the family every probe and fold here
     * uses.
-    *
-    * Scale: the index is corpus-window-sized, so persist it BUCKETED
-    * by `fp` ([[graft.engine.Bucketing]]) — the per-delivery probe
-    * then shuffles only the batch's windows into the index's buckets
-    * instead of re-exchanging the whole index per delivery, and
-    * [[updatedWindowIndex]]'s fold aggregates bucket-local.
     */
   def windowIndex(documents: DataFrame, k: Int = 8): DataFrame =
     windowOccurrencesRolling(documents, k)

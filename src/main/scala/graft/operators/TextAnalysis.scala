@@ -959,9 +959,7 @@ object TextAnalysis {
     *
     * Scale: both token streams partial-aggregate/filter before any
     * join; the vocabulary is type-level (heavy-tailed-small) and the
-    * probe is a left join on the token key — at warehouse scale
-    * bucket both sides by token to co-locate ([[graft.engine
-    * .Bucketing]]).
+    * probe is a left join on the token key.
     */
   def oovReport(documents: DataFrame, minCount: Long = 1): DataFrame = {
     val bucket = Curation.hashBucket($("doc_id"), 10)

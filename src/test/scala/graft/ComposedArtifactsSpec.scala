@@ -1,6 +1,7 @@
 package graft
 
-import graft.operators.Curation
+import graft.operators.{Curation, Similarity, TextAnalysis}
+import graft.sources.Tables
 
 /** Pins the versioned-warehouse behavior of [[ComposedArtifacts]]:
   * the published family directory carries an integrity receipt that
@@ -59,6 +60,22 @@ class ComposedArtifactsSpec extends SparkSpec {
       assert(listed === stores,
         s"$family receipt does not list the stores in $published")
     }
+  }
+
+  test("ann family serves rows identical to the retraining forms") {
+    // the family trains each model once and derives `cells` and
+    // `pq_codes` from its written centroids and codebook; the forms
+    // that train in-call must give the same multisets
+    val t = Tables(spark, sfDir)
+    val same = IngestDemo.sameRows("warehouse diverged from retraining") _
+    same("cells", ComposedArtifacts.cells(spark, sfDir),
+      Similarity.cellAssignments(t.embeddings))
+    same("pq_codes", ComposedArtifacts.pqCodes(spark, sfDir),
+      Similarity.pqEncode(t.embeddings))
+    val (lm, consts) = TextAnalysis.nbModel(t.documents,
+      ComposedArtifacts.PosSources, ComposedArtifacts.NegSources)
+    same("nb_lm", ComposedArtifacts.nbLm(spark, sfDir), lm)
+    same("nb_consts", ComposedArtifacts.nbConsts(spark, sfDir), consts)
   }
 
   test("warehouse sweep: TTL-bounded, keeps recent fps, never the resolving key") {

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.col
 
 import graft.engine.Layout
 
@@ -76,45 +76,6 @@ class LayoutSpec extends SparkSpec {
     val back = spark.read.parquet(dir).filter(col("zkey") < 64)
       .select("a", "b").as[(Long, Long)].collect().toSet
     assert(back === (for (a <- 0L until 8L; b <- 0L until 8L) yield (a, b)).toSet)
-  }
-
-  test("bucketed-by-fp pair store: carried anti-join leaves the store " +
-      "side unshuffled") {
-    // the round-18 physical claim behind writing span-group stores
-    // bucketed (verdict #6): under a disabled broadcast threshold
-    // (the regime where the touched-fp set outgrows a broadcast),
-    // the plain-parquet store shuffles on fp for the sort-merge
-    // anti-join (2 exchanges: store + touched) while the
-    // bucketed-by-fp table joins in place (1 exchange: touched only)
-    import graft.engine.Bucketing
-    val pairs = (1 to 400)
-      .map(i => (s"fp$i", i.toLong, 1L, i.toLong + 1, 2L, 7L))
-      .toDF("fp", "doc1", "pos1", "doc2", "pos2", "lcp")
-    val tmp = Files.createTempDirectory("layoutspec-sg").toString
-    pairs.write.mode("overwrite").parquet(s"$tmp/plain")
-    Bucketing.writeBucketed(pairs, "layoutspec_sg_pairs", "fp", 4)
-    val touched = (1 to 50).map(i => s"fp${i * 7}").toDF("fp")
-    def nExchanges(df: org.apache.spark.sql.DataFrame): Int =
-      "Exchange".r.findAllIn(df.queryExecution.executedPlan.toString)
-        .length
-    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val plainJoin = spark.read.parquet(s"$tmp/plain")
-        .join(touched, Seq("fp"), "left_anti")
-      val bucketedJoin = Bucketing.table(spark, "layoutspec_sg_pairs")
-        .join(touched, Seq("fp"), "left_anti")
-      assert(nExchanges(plainJoin) === 2,
-        s"plain store must shuffle both sides:\n${plainJoin.queryExecution.executedPlan}")
-      assert(nExchanges(bucketedJoin) === 1,
-        s"bucketed store side must not move:\n${bucketedJoin.queryExecution.executedPlan}")
-      // same rows either way
-      assert(bucketedJoin.collect().map(_.getString(0)).sorted.toSeq
-        === plainJoin.collect().map(_.getString(0)).sorted.toSeq)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
-      Bucketing.drop(spark, "layoutspec_sg_pairs")
-    }
   }
 
   test("compact: collapses a sprayed dataset, preserves rows, idempotent") {

@@ -2,35 +2,14 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.engine.Bucketing
 import graft.operators.{Dedup, SkewJoin}
 import graft.sources.Tables
 
-/** The co-located-join and skew-handling primitives: semantics AND
-  * physical-plan assertions (the plan property IS the feature).
+/** The skew-handling primitives and the scale rehearsal: semantics
+  * AND physical-plan assertions (the plan property IS the feature).
   */
 class ScaleToolsSpec extends SparkSpec {
   import spark.implicits._
-
-  test("bucketed tables join with no exchange on either side") {
-    val t = Tables(spark, "/root/testdata/sf0.001")
-    Bucketing.writeBucketed(t.lineitem, "li_bkt", "l_orderkey", 4)
-    Bucketing.writeBucketed(
-      t.orders.select($"o_orderkey", $"o_totalprice"), "ord_bkt", "o_orderkey", 4)
-    try {
-      val li = Bucketing.table(spark, "li_bkt")
-      val o = Bucketing.table(spark, "ord_bkt")
-      // merge hint: at this fixture size Catalyst would broadcast,
-      // hiding the property under test (bucket-co-located SMJ)
-      val j = li.join(o.hint("merge"), li("l_orderkey") === o("o_orderkey"))
-      val plan = j.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin"), s"expected SMJ:\n$plan")
-      assert(!plan.contains("Exchange"), s"bucketed join should not shuffle:\n$plan")
-      assert(j.count() === t.lineitem.count()) // FK: every lineitem matches
-    } finally {
-      Bucketing.drop(spark, "li_bkt"); Bucketing.drop(spark, "ord_bkt")
-    }
-  }
 
   test("salted join == plain join on a skewed fixture") {
     val hot = (1 to 5000).map(_ => (1L, "hot")) ++
@@ -176,12 +155,10 @@ class ScaleToolsSpec extends SparkSpec {
 
   test("ScaleRehearsal.rehearse leaves no persisted RDD or bucketed table behind") {
     // q26 reads the cached corpus, hot_span_refine the cached hot
-    // corpus and its checkpointed store, sg_carried_plain the
-    // checkpointed span-group pair artifact, its parquet copy in a
-    // scratch dir and its bucketed catalog table
+    // corpus and its checkpointed store
     val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
     val failed = ScaleRehearsal.rehearse(spark, "/root/testdata/sf0.001",
-      Seq(1), Some(Seq("q26_minhash_dups", "hot_span_refine", "sg_carried_plain")))
+      Seq(1), Some(Seq("q26_minhash_dups", "hot_span_refine")))
     assert(failed.isEmpty, s"legs failed: $failed")
     // the SparkContext holds persisted RDDs weakly: a localCheckpoint
     // (the rehearsal's stores, the operators' own) leaves once its

@@ -11,7 +11,8 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  // bucketed-table scratch (LayoutSpec) — never the repo cwd
+  // the catalog directory Spark creates on first catalog access —
+  // never the repo cwd
   lazy val session: SparkSession = LocalSession("graft-test", 4,
     Some(java.nio.file.Files.createTempDirectory("graft-test-wh").toString))
 }

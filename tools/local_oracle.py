@@ -57,14 +57,17 @@ def main():
     # Bound DuckDB so the heavy oracle SQL (the shingle self-join /
     # PageRank families at sf0.1) spills to disk instead of taking the
     # host down: an unbounded run was observed at >100 GB RSS.
+    # The defaults size it from the host: every core, half of physical
+    # memory. GRAFT_DUCKDB_MEM / GRAFT_DUCKDB_THREADS override them.
     import os
-    mem = os.environ.get("GRAFT_DUCKDB_MEM", "48GB")
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    mem = os.environ.get("GRAFT_DUCKDB_MEM", f"{phys // 2 // 10**6}MB")
     spill = os.environ.get("GRAFT_DUCKDB_SPILL", "/tmp/duckdb_spill")
     os.makedirs(spill, exist_ok=True)
     con.execute(f"SET memory_limit='{mem}'")
     con.execute(f"SET temp_directory='{spill}'")
     con.execute(
-        f"SET threads={os.environ.get('GRAFT_DUCKDB_THREADS', '16')}")
+        f"SET threads={os.environ.get('GRAFT_DUCKDB_THREADS', os.cpu_count())}")
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
